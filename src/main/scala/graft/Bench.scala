@@ -1,330 +1,217 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
 
-/** Per-round benchmark harness (driver contract): runs the headline
-  * queries on SPARK_GRAFT_SF_DIR and prints ONE JSON line.
+import scala.sys.process.{Process, ProcessLogger}
+import scala.util.Try
+import scala.util.control.NonFatal
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
+import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+import org.apache.spark.sql.util.QueryExecutionListener
+
+/** Headline benchmark: times the headline queries on SPARK_GRAFT_SF_DIR
+  * (default: the sf0.1 fixture; `local[SPARK_GRAFT_CPUS]`) and prints
+  * ONE JSON line, last, also written to `bench_details_<sf>.json`.
   *
-  * Each query gets two warm-up executions (JIT + codegen + classload,
-  * then steady-state caches) and three timed executions; the published
-  * number is the median, with the min→max spread and a >20% median-drift
-  * flag against the previous round's BENCH file alongside — steady-state
-  * numbers with an explicit noise floor, not JVM cold start or single-run
-  * scheduler luck. Between queries the DataFrame cache and leftover
-  * checkpoint blocks are cleared, so no query's number depends on bench
-  * ordering. The serde/uuid throughput metrics (full envelope
-  * encode → pack → unpack → decode, the BASELINE.md ~90k rows/s/core
-  * gate) are medians of 5 with their own spreads and drift flags.
+  * Every timing goes through [[measure]]: the frame is written to the
+  * `noop` sink (every column of every row is computed — a `count()` would
+  * let the optimizer prune projection-only work), 2 warm-ups, 3 timed
+  * runs, median + spread + the work the median run did (jobs, stages,
+  * tasks, shuffle bytes, spill, and the Exchange count of the final plan).
+  * The work counters are deterministic, so they are the primary signal;
+  * the medians are the secondary read.
   *
-  * A fixed single-thread calibration probe runs before and after the
-  * bench (committed idle reference ~0.80 s): readings stretched > 1.3×
-  * mark the run `"contended": true` and suppress the drift flags, so an
-  * environmental shift (other tenants on the machine) reads as exactly
-  * that instead of a wall of phantom regressions. A contended pass
-  * additionally triggers a full re-run on a fresh session (bounded at 3
-  * attempts when the retry is itself flagged) — the final pass is what
-  * gets published, each burned attempt written to its own
-  * `bench_burned_r<N>_a<k>_<sf>.json` file and referenced by name
-  * (never embedded: the driver's ~2k stdout tail truncated an embedded
-  * attempt's clean/dirty flags into the published record's) — and the
-  * drift baseline skips contended BENCH files in favor of the newest
-  * clean one (including `BENCH_r<N>_clean.json` re-runs).
+  * The record carries:
+  *  - `queries` (median seconds per headline key) and `work` (per key);
+  *    a key that throws reads −1, drops out of `total` and is listed in
+  *    `failed_queries`;
+  *  - drift flags from [[drift]] against the committed
+  *    `bench_details_<sf>.json` (`git show HEAD:…`, never the working
+  *    tree, which every run overwrites);
+  *  - the Spark envelope round-trip rate and the single-thread uuid4
+  *    codec chain against the BASELINE.md ≥90k rows/s/core gate;
+  *  - portable (HOF) vs native rates for six kernel expressions;
+  *  - recall@10 of every approximate search path against exact search.
   *
-  * Beyond throughput, the bench publishes ANN retrieval QUALITY:
-  * recall@10 of ivf (nprobe sweep), PQ/ADC, and int8 search against the
-  * exact brute-force neighborhood — the oracles gate deterministic
-  * replay, this gates how much of the true neighborhood the
-  * approximations actually find.
+  * SPARK_GRAFT_BENCH_ONLY=a,b times only the named headline keys and
+  * leaves `bench_details_<sf>.json` untouched.
   */
 object Bench {
 
   /** Heavier representative subset of SparkEntry.queries. */
   private val headline = Seq(
-    "q1_pricing_summary",
-    "q_region_revenue",
-    "q_top_revenue",
-    "q_priority_head",
-    "q_monitor_windows",
-    "q_field_diff",
-    "d_ngram_near_dups",
-    "d_minhash_lsh",
-    "t_doc_stats",
-    "sim_knn_cosine",
-    "sim_ivf_topk",
-    "d_contamination",
-    "d_dup_clusters",
-    "t_boilerplate",
-    "q_sessionize",
-    "q_asof_join",
-    "sim_bm25_topk",
-    "sim_bm25_multi",
-    "d_substring_dedup",
-    "sim_pq_topk",
-    "q_range_join",
-    "t_top_tokens",
-    "q_bloom_semi",
-    "q_cdc_apply",
-    "sim_jl_topk",
-    "d_incr_exact",
-    "d_incr_lsh",
-    "q_salted_join",
-    "t_linear_score",
-    "sim_ivfpq_res_topk",
-    "sim_hybrid_rrf",
-    "sim_hybrid_mmr",
-    "sim_mmr_select",
-    "sim_outliers",
-    "t_fertility",
-    "d_fuzzy_pairs",
-    "env_roundtrip",
-    // r12 additions (r11 verdict #5): the keyed-window hybrid→MMR chain
-    // at 2 queries — the scaling claim the keyed-window work was made
-    // for — and the dead-letter split, the newest oracle gates
-    "sim_hybrid_mmr_multi",
-    "env_dead_letter",
-    // r19 additions (r18 verdict #3, additions-only): the heaviest
-    // queries that had oracle coverage but no timing series — the
-    // optimization rounds were steering by a 36% sample of the surface.
-    // Purely additive: every pre-r19 key and its drift series is
-    // untouched; these names have no baseline until r19's record exists,
-    // so the drift logic simply skips them this round and they join the
-    // series from the next record on. `total` grows by their sum —
-    // round-over-round total comparisons must use the common-key set
-    // (the drift machinery already does).
-    "d_semantic_dedup",
-    "sim_ivfpq_topk",
-    "sim_opq_topk",
-    "t_bpe_train",
-    "t_pack_batches",
-    "q_skew_stats",
-    "q_latest_per_user",
+    "q1_pricing_summary", "q_region_revenue", "q_top_revenue",
+    "q_priority_head", "q_monitor_windows", "q_field_diff",
+    "d_ngram_near_dups", "d_minhash_lsh", "t_doc_stats", "sim_knn_cosine",
+    "sim_ivf_topk", "d_contamination", "d_dup_clusters", "t_boilerplate",
+    "q_sessionize", "q_asof_join", "sim_bm25_topk", "sim_bm25_multi",
+    "d_substring_dedup", "sim_pq_topk", "q_range_join", "t_top_tokens",
+    "q_bloom_semi", "q_cdc_apply", "sim_jl_topk", "d_incr_exact",
+    "d_incr_lsh", "q_salted_join", "t_linear_score", "sim_ivfpq_res_topk",
+    "sim_hybrid_rrf", "sim_hybrid_mmr", "sim_mmr_select", "sim_outliers",
+    "t_fertility", "d_fuzzy_pairs", "env_roundtrip", "sim_hybrid_mmr_multi",
+    "env_dead_letter", "d_semantic_dedup", "sim_ivfpq_topk", "sim_opq_topk",
+    "t_bpe_train", "t_pack_batches", "q_skew_stats", "q_latest_per_user",
     "m_media_embed")
 
-  /** count()-pruned queries ALSO timed under the noop sink (guide §1.4;
-    * r18 verdict #4): a count() lets the optimizer prune pure-projection
-    * subtrees, so env_roundtrip's serde chain and t_linear_score's
-    * scoring never execute under the count()-timed column — those
-    * medians measure a count, not the operator. Each entry here
-    * publishes a SECOND timed key `<name>_noop` whose action is
-    * `df.write.format("noop")` (computes every column of every row)
-    * ALONGSIDE — never replacing — the count() column; the drift series
-    * and every historical comparison stay keyed on the old columns. */
-  private val noopDualOf = Map(
-    "env_roundtrip_noop" -> "env_roundtrip",
-    "t_linear_score_noop" -> "t_linear_score",
-    "t_doc_stats_noop" -> "t_doc_stats")
+  /** Work one run did. Exchanges are counted in the final (post-AQE)
+    * physical plan of the run's noop write; a reused exchange moves no
+    * data again and is not counted; −1 = unknown. */
+  final case class Work(jobs: Long, stages: Long, tasks: Long,
+                        shuffleReadBytes: Long, shuffleWriteBytes: Long,
+                        spillBytes: Long, exchanges: Int) {
+    def toJson: String =
+      s"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,"shuffle_read_bytes":$shuffleReadBytes,"shuffle_write_bytes":$shuffleWriteBytes,"spill_bytes":$spillBytes,"exchanges":$exchanges}"""
+  }
 
-  private val slopeQueries = Seq("sim_ivfpq_res_topk", "d_dup_clusters",
-    "d_minhash_lsh", "sim_pq_topk", "d_fuzzy_pairs",
-    "d_ngram_near_dups", "d_incr_lsh", "sim_ivf_topk",
-    "sim_hybrid_rrf", "sim_hybrid_mmr", "sim_hybrid_mmr_multi")
+  /** Median and min→max spread (% of the median) of the timed runs, and
+    * the work of the median run. */
+  final case class Measured(median: Double, spreadPct: Double, work: Work)
 
-  /** Committed reference times measured warm on an IDLE bench machine:
-    * single-thread probe ~0.77 s (spread ~10%), 32-thread parallel probe
-    * ~0.22 s (spread ~12% — all 32 vCPUs run the 32×100M rounds truly
-    * concurrently when the box is quiet). A reading past its factor
-    * marks the run "contended". The parallel probe exists because
-    * single-thread readings MISS multi-core contention: an external
-    * tenant eating most cores makes every local[32] query uniformly
-    * 2–3× slower while one probe thread still finds a free core —
-    * observed live (queries 2–3× slower and the parallel probe at
-    * 1.7–2.5 s ≈ 8–11× its idle reference, while the single probes read
-    * 0.89/0.98 s — under their threshold). Aggregate capacity is what
-    * Spark actually runs on, so the parallel probe is the one that
-    * guards the query medians; its factor is looser (2×) because a
-    * 0.2 s sampling window sees more scheduler jitter. */
-  private val CalibrationRefSec = 0.80
-  private val ContentionFactor = 1.3
-  private val CalibrationParRefSec32 = 0.22
-  // the 0.22 s reference was measured with the probe's 32 threads on the
-  // 32-vCPU bench box; on a smaller machine the SAME fixed-thread probe
-  // legitimately takes ~32/cores as long even when perfectly idle, so
-  // the reference scales with the deficit (cores beyond 32 don't speed a
-  // 32-thread probe up — the factor floors at 1). Without this an
-  // 8-core host read "contended" on every pass forever, burning 3 full
-  // ~25-minute attempts per bench with no way to distinguish "smaller
-  // machine" from actual contention.
-  private def calibrationParRefSec: Double =
-    CalibrationParRefSec32 * math.max(1.0,
-      32.0 / Runtime.getRuntime.availableProcessors())
-  private val ParContentionFactor = 2.0
-  private val ParProbeThreads = 32
+  /** The −1 failure sentinel. */
+  val Failed: Measured = Measured(-1.0, -1.0, Work(0, 0, 0, 0, 0, 0, -1))
 
-  // probes shared with Soak via [[Calibration]] (one definition — the
-  // idle references above are pinned to those exact loop shapes);
-  // timed before AND after the bench so contention arriving mid-run
-  // shows in at least one reading
-  private def calibrationSecs(): Double = Calibration.calibrationSecs()
-  private def calibrationParallelSecs(): Double =
-    Calibration.calibrationParallelSecs(ParProbeThreads)
+  private def exchanges(plan: SparkPlan): Int = plan match {
+    case a: AdaptiveSparkPlanExec => exchanges(a.executedPlan)
+    case s: QueryStageExec => exchanges(s.plan)
+    case _: ReusedExchangeExec => 0
+    case c: CommandResultExec => exchanges(c.commandPhysicalPlan)
+    case p =>
+      val own = p match { case _: Exchange => 1; case _ => 0 }
+      own + p.children.map(exchanges).sum + p.subqueries.map(exchanges).sum
+  }
 
-  /** Driver per-round BENCH record names; shared by the round counter
-    * and the drift-baseline candidate scan so the two can never
-    * partition rounds differently. */
-  private val BenchFileRe = "^BENCH_r(\\d+)(_clean)?\\.json$".r
+  /** Counts the scheduler's work and reports each finished noop write's
+    * exchanges. Both listener kinds run on Spark's shared listener queue,
+    * one event at a time in posting order, so when a write's end arrives
+    * every job, stage and task event of that run has already been
+    * counted. */
+  private final class WorkListener extends SparkListener with QueryExecutionListener {
+    private val jobs, stages, tasks, shuffleRead, shuffleWrite, spill = new AtomicLong
+    private val writes = new LinkedBlockingQueue[Integer]
 
-  /** The round currently in progress: newest driver-written
-    * `BENCH_r<k>.json` + 1. The driver writes that file from a round's
-    * FINAL bench run only after the round ends, so while a round runs,
-    * only completed rounds have files — which makes this derivable
-    * without any side channel. One exception needs the override: a
-    * clean RE-run of a completed round N (the BENCH_rN_clean.json
-    * workflow) happens while BENCH_rN.json already exists and would
-    * self-label as round N+1 — set SPARK_GRAFT_ROUND=N there. */
-  private def roundInProgress(files: Array[java.io.File]): Int =
-    sys.env.get("SPARK_GRAFT_ROUND").flatMap(_.toIntOption).getOrElse(
-      files.flatMap(f => BenchFileRe
-        .findFirstMatchIn(f.getName).map(_.group(1).toInt))
-        .foldLeft(0)(math.max) + 1)
+    def snapshot: Work = Work(jobs.get, stages.get, tasks.get,
+      shuffleRead.get, shuffleWrite.get, spill.get, -1)
+
+    /** Exchanges of the next finished noop write; −1 if it failed or its
+      * end event does not arrive within a minute. */
+    def awaitWrite(): Int =
+      Option(writes.poll(60, TimeUnit.SECONDS)).map(_.intValue).getOrElse(-1)
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      stages.incrementAndGet(); tasks.addAndGet(e.stageInfo.numTasks)
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      Option(e.taskMetrics).foreach { m =>
+        shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        spill.addAndGet(m.diskBytesSpilled)
+      }
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      if (qe.logical.isInstanceOf[V2WriteCommand]) writes.put(exchanges(qe.executedPlan))
+    override def onFailure(funcName: String, qe: QueryExecution, error: Exception): Unit =
+      if (qe.logical.isInstanceOf[V2WriteCommand]) writes.put(-1)
+  }
+
+  /** Times `df` through the noop sink: 2 warm-ups, then 3 timed runs.
+    * `df` is by-name and rebuilt for every run, so whatever the query
+    * does while building its plan (e.g. fitting centroids) is part of
+    * its cost. Throws what the query throws. */
+  def measure(spark: SparkSession)(df: => DataFrame): Measured = {
+    val listener = new WorkListener
+    spark.sparkContext.addSparkListener(listener)
+    spark.listenerManager.register(listener)
+    def run(): (Double, Work) = {
+      val before = listener.snapshot
+      val t0 = System.nanoTime()
+      df.write.format("noop").mode("overwrite").save()
+      val secs = (System.nanoTime() - t0) / 1e9
+      val x = listener.awaitWrite()
+      val after = listener.snapshot
+      (secs, Work(after.jobs - before.jobs, after.stages - before.stages,
+        after.tasks - before.tasks, after.shuffleReadBytes - before.shuffleReadBytes,
+        after.shuffleWriteBytes - before.shuffleWriteBytes,
+        after.spillBytes - before.spillBytes, x))
+    }
+    try {
+      run(); run()
+      val runs = Seq.fill(3)(run()).sortBy(_._1)
+      val (median, work) = runs(1)
+      val spread = if (median > 0) 100.0 * (runs(2)._1 - runs(0)._1) / median else -1.0
+      Measured(median, spread, work)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  /** Outcome of comparing a run against a baseline record. */
+  final case class Drift(total: Double, failed: Seq[String], flagged: Seq[String],
+                         comparable: Int, warning: Option[String])
+
+  /** Flags every key whose median moved more than 20% either way, or
+    * whose Exchange count changed, against `baseline` (a record's JSON
+    * text; None = no baseline). Failed (−1) keys are listed and excluded
+    * from `total` and from comparison. A baseline that exists but against
+    * which no key compares — unreadable, or sharing no key — yields a
+    * warning instead of a silently clean record. */
+  def drift(results: Seq[(String, Measured)], baseline: Option[String]): Drift = {
+    val prior: Option[JsonNode] = baseline.flatMap(c => Try(new ObjectMapper().readTree(c)).toOption)
+    def prevMedian(k: String): Option[Double] = prior.map(_.path("queries").path(k))
+      .filter(_.isNumber).map(_.asDouble).filter(_ > 0)
+    def prevExchanges(k: String): Option[Int] = prior.map(_.path("work").path(k).path("exchanges"))
+      .filter(_.isInt).map(_.asInt).filter(_ >= 0)
+    val ok = results.filter(_._2.median >= 0)
+    val compared = ok.flatMap { case (k, m) =>
+      val moved = prevMedian(k).map(p => m.median > 0 && math.abs(m.median - p) / p > 0.20)
+      val reshaped = prevExchanges(k).map(x => m.work.exchanges >= 0 && m.work.exchanges != x)
+      if (moved.isEmpty && reshaped.isEmpty) None
+      else Some(k -> (moved.contains(true) || reshaped.contains(true)))
+    }
+    Drift(
+      total = ok.map(_._2.median).sum,
+      failed = results.collect { case (k, m) if m.median < 0 => k },
+      flagged = compared.collect { case (k, true) => k },
+      comparable = compared.size,
+      warning =
+        if (baseline.isDefined && compared.isEmpty)
+          Some("vacuous drift check: a baseline record exists but no key compared against it")
+        else None)
+  }
+
+  /** The committed copy of `file` at HEAD, if the working directory is a
+    * git checkout that has one. */
+  private def committed(file: String): Option[String] =
+    Try(Process(Seq("git", "show", s"HEAD:$file")).!!(ProcessLogger(_ => ()))).toOption
+
+  private def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    calibrationSecs() // JIT warm-up for the probe loop (shared mix method)
-    val (json, compact, suspect) = runBench(sfDir, cpus)
-    if (!suspect) {
-      // attempt provenance is emitted on EVERY record, not just retries:
-      // the r14 verdict leaned on "attempt-1 on a cold JVM" to explain a
-      // +106% over-best flag, and the r14 record — a clean attempt-1 —
-      // carried no bench_attempt field to verify it against (ADVICE r15)
-      val tail = ",\"bench_attempt\":1,\"burned_attempt_files\":[]}"
-      publish(sfDir, json.dropRight(1) + tail, compact.dropRight(1) + tail)
-    } else {
-      // the probes saw external load, so every median in this pass is
-      // low-trust and a round-over-round comparison against it would
-      // burn (the r7 lesson: a contended BENCH file poisons the next
-      // round's drift baseline). Re-run on a fresh session — and if the
-      // retry ITSELF is flagged, once more (bounded at 3 attempts
-      // total; r11 published a mass-flagged retry after one burned
-      // attempt and the whole round's perf record was low-trust). A
-      // still-dirty final record carries an explicit
-      // baseline_skipped_reason: the next round's baseline filter
-      // rejects flagged records BY DESIGN, and the record should say so
-      // itself instead of leaving the reader to infer it.
-      // EVERY burned attempt goes to its OWN file, never embedded in the
-      // published line: the driver captures only stdout's last ~2k
-      // chars, so an embedded attempt's tail — including its
-      // "mass_drift_suspected":true — survived truncation while the
-      // retry's own clean flags (early in the line) scrolled away, and
-      // the next round's clean-baseline filter misread the CLEAN record
-      // as dirty (confirmed against BENCH_r11.json). Files also keep
-      // attempt 2's evidence when a third attempt runs (the singular
-      // embedded field silently dropped it).
-      val burned1 = writeBurned(sfDir, 1, json)
-      val (retryJson, retryCompact, retrySuspect) = runBench(sfDir, cpus)
-      val (finJson, finCompact, finSuspect, attempt, burnedFiles) =
-        if (!retrySuspect) (retryJson, retryCompact, false, 2, burned1.toSeq)
-        else {
-          val burned2 = writeBurned(sfDir, 2, retryJson)
-          val (j3, c3, s3) = runBench(sfDir, cpus)
-          (j3, c3, s3, 3, burned1.toSeq ++ burned2.toSeq)
-        }
-      val skippedNote =
-        if (finSuspect)
-          ",\"baseline_skipped_reason\":\"contended_or_mass_drift_after_" +
-            attempt + "_attempts; next round's drift baseline filter " +
-            "rejects this record\""
-        else ""
-      val tail = ",\"bench_attempt\":" + attempt + skippedNote +
-        ",\"burned_attempt_files\":[" +
-        burnedFiles.map("\"" + _ + "\"").mkString(",") + "]}"
-      publish(sfDir, finJson.dropRight(1) + tail,
-        finCompact.dropRight(1) + tail)
-    }
-  }
+    val cpusN = cpus.toIntOption.getOrElse(Runtime.getRuntime.availableProcessors())
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
+    // a renamed or mistyped key must fail the bench up front, not vanish
+    // from the suite and read as a speedup
+    val unknown = headline.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, "bench names not in SparkEntry.queries: " + unknown.mkString(", "))
 
-  /** Persist a burned (contention/mass-drift-flagged) attempt's full
-    * line to its own per-round file and return the file name; the
-    * published record references it by name only. Best-effort — a write
-    * failure must never take down the bench — but a SILENT failure must
-    * not publish the name either: burned_attempt_files exists to
-    * preserve the attempt's evidence, and a record pointing at a file
-    * that was never written loses it invisibly. On failure the name is
-    * omitted (None) and the failure goes to stderr. */
-  private def writeBurned(sfDir: String, attempt: Int, json: String): Option[String] = {
-    val sfName = new java.io.File(sfDir).getName
-    val round = roundInProgress(
-      Option(new java.io.File(".").listFiles()).getOrElse(Array.empty))
-    val name = s"bench_burned_r${round}_a${attempt}_$sfName.json"
-    try {
-      val w = new java.io.PrintWriter(name)
-      try w.println(json) finally w.close()
-      Some(name)
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] failed to write burned attempt $name: $e")
-      None
-    }
-  }
+    // the BASELINE.md gate: the single-thread encode → pack → unpack →
+    // decode chain with a fresh uuid4 per message, ≥ 90k rows/s/core;
+    // run before Spark starts so nothing else competes for the core
+    val serdeUuidPerCore =
+      try median(Seq.fill(3)(SerdeMicroBench.chainWithUuidRowsPerSecCore(1500000)))
+      catch { case NonFatal(e) => System.err.println(s"[bench] serde gate failed: $e"); -1.0 }
 
-  /** Publication order matters: the per-round harness keeps only the LAST
-    * ~2k chars of stdout and parses the JSON line it finds there, so the
-    * full diagnostics line (spreads, recall sweep, micro-throughputs —
-    * ~3k chars, which overflowed that window and made two rounds'
-    * published bench unparseable) prints FIRST and scrolls out, while a
-    * compact line carrying the contract fields (total, per-query medians,
-    * the BASELINE.md gate ratio, contention flags) prints LAST and fits.
-    *
-    * The full line is also persisted to bench_details_<sf>.json as the
-    * next round's drift baseline — but ONLY for full-headline runs. A
-    * SPARK_GRAFT_BENCH_ONLY subset run publishing its few-query line
-    * would shrink the baseline to those queries, and the next full run's
-    * mass-drift contention detector (which needs a third of the suite
-    * flagged) could then never reach its threshold — observed live: a
-    * 3-query baseline let a visibly contended full run (every median
-    * +25–55%, one query 12×) publish with just 2 drift flags and
-    * mass_drift_suspected=false. */
-  private def publish(sfDir: String, full: String, compact: String): Unit = {
-    val sfName = new java.io.File(sfDir).getName
-    if (sys.env.get("SPARK_GRAFT_BENCH_ONLY").isEmpty) {
-      // two copies: the rolling latest (what the judge reads) and a
-      // per-round record — the drift baseline reads ONLY prior-round
-      // records, so a mid-round iteration run can never become its own
-      // baseline (the r10 failure mode: the intra-round record flagged
-      // six within-round improvements and masked the one real
-      // round-over-round move)
-      val round = roundInProgress(
-        Option(new java.io.File(".").listFiles()).getOrElse(Array.empty))
-      Seq(s"bench_details_$sfName.json",
-          s"bench_details_r${round}_$sfName.json").foreach { name =>
-        try {
-          val w = new java.io.PrintWriter(name)
-          try w.println(full) finally w.close()
-        } catch { case _: Throwable => () }
-      }
-    }
-    println(full)
-    println(compact)
-  }
-
-  /** One full bench pass on a fresh SparkSession; returns the full
-    * diagnostics JSON line, the compact contract line, and whether the
-    * calibration probes flagged contention. */
-  private def runBench(sfDir: String, cpus: String): (String, String, Boolean) = {
-    // parse ONCE with a fallback: SPARK_GRAFT_CPUS="*" is a valid master
-    // string, and the lone bare cpusN used to sit in the final
-    // JSON-assembly line OUTSIDE any try — a 25-minute run completed all
-    // measurement and then crashed publishing NOTHING
-    val cpusN = cpus.toIntOption.getOrElse(
-      Runtime.getRuntime.availableProcessors())
-    // a renamed/mistyped query must FAIL the bench UP FRONT, not silently
-    // vanish from the suite (flatMap over queries.get dropped it, total
-    // read as a round-over-round speedup, and failed_queries stayed empty)
-    locally {
-      val unknown = (headline ++ slopeQueries ++ noopDualOf.values)
-        .filterNot(SparkEntry.queries.contains)
-      require(unknown.isEmpty,
-        s"bench names not in SparkEntry.queries: " + unknown.mkString(", "))
-      // a _noop key colliding with a real query or headline name would
-      // time the same JSON key twice under two different actions and the
-      // duplicate would silently shadow one of them on parse — the same
-      // silent-vanish class this guard exists to fail loudly on
-      val collide = noopDualOf.keySet.filter(k =>
-        SparkEntry.queries.contains(k) || headline.contains(k))
-      require(collide.isEmpty,
-        s"noop-dual keys collide with real query names: " + collide.mkString(", "))
-    }
-    val calStartSec = calibrationSecs()
-    val calParStartSec = calibrationParallelSecs()
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -333,1194 +220,320 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    def timed(fn: () => Unit): Double = {
-      val t0 = System.nanoTime()
-      fn()
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    // 3 timed runs per query after two warm-ups: a single run sits below
-    // the scheduler-noise floor at sf0.1 (observed ±80% swings on
-    // unchanged code round-over-round), so the reported number is the
-    // MEDIAN and the min→max spread is published alongside it — a real
-    // regression moves the median, noise only widens the spread. Two
-    // warm-ups because the first also pays one-time codegen/classload for
-    // the query's operators; the second leaves every intentional cache hot
-    // so the timed three start from the same state.
-    val runsPerQuery = 3
-    // local-iteration subset (unset in the driver's runs → full headline)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-
-    // Session-level warm-up BEFORE the first timed query (r14 verdict #3):
-    // per-query warm-ups pay that query's codegen, but on a COLD JVM the
-    // C2 JIT is still compiling Spark's scan/shuffle/agg internals through
-    // the first ~dozen jobs — the r13/r14 zero-diff pair showed attempt-1
-    // records penalize exactly the short fixed-overhead-dominated queries
-    // (q1_pricing_summary, first in the suite, read +106% over best while
-    // the ≥1 s CPU-bound queries tracked the machine's calibration). A
-    // few seconds of representative untimed work before q1's own warm-ups
-    // kills that flag class structurally.
+    def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+    // JIT-warm Spark's scan/shuffle/aggregate paths before the first timed
+    // key, so the first keys do not pay for a cold JVM
     for (n <- Seq("q1_pricing_summary", "q_region_revenue", "env_roundtrip",
-                  "q_monitor_windows", "q_asof_join");
-         fn <- SparkEntry.queries.get(n); _ <- 1 to 3)
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
+                  "q_monitor_windows", "q_asof_join"); _ <- 1 to 3)
+      Try(noop(SparkEntry.queries(n)(spark, sfDir)))
 
-    // the noop-dual keys run LAST so the shared headline prefix keeps its
-    // historical within-run ordering (the drift baselines were measured
-    // in that order)
-    val timedNames = headline ++ noopDualOf.keys.toSeq.sorted
-    val results = timedNames.filter(n => only.forall(_.contains(n))).flatMap { name =>
-      SparkEntry.queries.get(noopDualOf.getOrElse(name, name)).map { fn =>
-        // the timed action: count() for the historical keys (series
-        // continuity — see the r18-verdict note at [[noopDualOf]]),
-        // the noop sink for the `_noop` duals
-        val act: () => Unit =
-          if (noopDualOf.contains(name))
-            () => fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          else
-            () => { fn(spark, sfDir).count(); () }
-        val r = try {
-          act() // warm-up 1: codegen + JIT + classload
-          act() // warm-up 2: steady-state caches
-          def attempt(): Seq[Double] =
-            Seq.fill(runsPerQuery)(timed(act)).sorted
-          def spreadOf(ts: Seq[Double]): Double = {
-            val med = ts(ts.size / 2)
-            if (med > 0) 100.0 * (ts.last - ts.head) / med else -1.0
-          }
-          // spread-bounded attempts (r14 verdict #3, the serde-gate
-          // policy applied to queries): this machine takes short
-          // (~20–60 s) external load bursts that the start/end
-          // calibration probes straddle — observed live as ONE different
-          // query per full-suite pass spiking 4–14× (d_minhash_lsh
-          // 20 s+, q_salted_join 12 s on back-to-back runs, each ~0.8 s
-          // normally), and the r14 record carried a 65% spread on
-          // d_minhash_lsh with an unmoved median. A burst inside the
-          // three timed runs widens the spread, so any attempt wider
-          // than the 20% goal re-measures once the burst has passed
-          // (bounded at 3 attempts). Selection is TIGHT-FIRST: among
-          // ≤20%-spread attempts the LOWEST median wins (noise only ever
-          // drags times UP); only if no attempt is tight does the
-          // lowest-median wide attempt publish, with its honest spread.
-          // Code-caused slowness reproduces in every retry and still
-          // gets published.
-          var attempts = List(attempt())
-          while (spreadOf(attempts.head) > 20.0 && attempts.size < 3)
-            attempts = attempt() :: attempts
-          val tight = attempts.filter(a => {
-            val sp = spreadOf(a); sp >= 0 && sp <= 20.0
-          })
-          val pool = if (tight.nonEmpty) tight else attempts
-          val times = pool.minBy(a => a(a.size / 2))
-          val median = times(times.size / 2)
-          val spreadPct = spreadOf(times)
-          (name, median, spreadPct)
-        } catch { case _: Throwable => (name, -1.0, -1.0) }
-        // clean slate between queries: clear the DataFrame cache THROUGH
-        // the catalog (removing the CacheManager entries — unpersisting
-        // the underlying RDDs directly would leave stale entries whose
-        // blocks never re-store, silently uncaching every later identical
-        // plan) and then drop what remains in the block store, i.e. the
-        // per-round localCheckpoints of the label-propagation queries,
-        // which otherwise only free on driver GC and leak memory pressure
-        // into the next query's spread.
+    val results: Seq[(String, Measured)] =
+      headline.filter(n => only.forall(_.contains(n))).map { name =>
+        val m =
+          try measure(spark)(SparkEntry.queries(name)(spark, sfDir))
+          catch { case NonFatal(e) => System.err.println(s"[bench] $name failed: $e"); Failed }
+        // clean slate between keys: the DataFrame cache through the
+        // catalog, then whatever the query left in the block store
         spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.valuesIterator
-          .foreach(_.unpersist(blocking = false))
-        r
+        spark.sparkContext.getPersistentRDDs.valuesIterator.foreach(_.unpersist(blocking = false))
+        name -> m
       }
-    }
 
-    // Scale-slope probe — the closest in-sandbox proxy for the 100×
-    // question: time the 5 most expensive operators at sf0.01 (10× fewer
-    // rows than the main sf0.1 run above) and publish the scaling
-    // exponent log10(t_sf0.1 / t_sf0.01). 1.0 = linear; exponents well
-    // below 1 mean fixed costs (training, planning) still dominate at
-    // these sizes; anything above the 1.3 flag line is super-linear
-    // growth that would NOT survive a 100× scale-up and lands in
-    // scale_slope_flags. Medians of 3 after one warm-up, same
-    // cache-clearing discipline as the main loop.
-    // the 5 most expensive ops + the next tier (r11: d_ngram_near_dups,
-    // d_incr_lsh) + sim_ivf_topk, which r10 read as a +39% regression.
-    // The r11 bisect cleared that read: nothing in the ivfTopK path
-    // changed r9→r10 (git-verified), and alternating A/B sessions of
-    // both trees on one machine gave overlapping medians (r9 0.73–2.06,
-    // r10 0.70–1.28 — r10 marginally FASTER) with successive same-JVM
-    // sessions monotonically speeding up 1.3→0.7 s. The query's level is
-    // set by JVM warm-up depth and machine state, which the
-    // within-session spread (3.7% that round) cannot see — a
-    // between-session level shift, not code. Probing it at two sfs each
-    // round keeps such shifts separable from a genuine complexity change
-    // (a level shift moves both sf readings together; the exponent
-    // stays put).
-    // + the hybrid-retrieval chain (r11 verdict #1): 1-query and 2-query
-    // forms probed at both sfs so the multi-query scaffolding's cost is
-    // separable into fixed overhead (low exponent, level shift) vs
-    // corpus-proportional work — the question the r11 regression left open
-
-    // r13 (verdict #1): THREE-point fits. A single sf0.01→sf0.1 exponent
-    // cannot distinguish a fixed-cost offset from genuine growth — a
-    // superlinear operator hiding under a large fixed cost reads as
-    // sublinear on one segment. The sf0.001 fixture (10× fewer rows
-    // again) adds a second decade: the published record carries BOTH
-    // per-decade exponents (scale_slope_exponents = the 0.01→0.1 segment,
-    // series-continuous with r10–r12; scale_slope_exponents_small = the
-    // 0.001→0.01 segment) plus their difference as curvature.
-    // READ THE SIGN CAREFULLY: positive curvature alone is the NORMAL
-    // fixed-cost signature at these sizes (t = c + a·n^k has a
-    // near-zero small-decade exponent, so e_big − e_small > 0 for
-    // every healthy op too — the r13 record shows exactly that). What
-    // positive curvature DOES certify is that the big-segment exponent
-    // is a LOWER bound still rising toward the true asymptote — so the
-    // flag pairs it with level: an op that is already super-linear on
-    // the big decade (e > 1.0) AND still steepening (curvature > 0.3)
-    // cannot be excused as amortizing fixed cost, and is flagged below
-    // the 1.3 line. Negative curvature = the exponent is falling with
-    // scale (amortization complete, asymptote approached from above).
-    // The big segment keeps the unconditional 1.3 super-linear line.
-    def probeAt(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                dir: String): Option[Double] =
+    /** Items per second of each frame in `dfs`, keyed by `keys`: `prep`
+      * returns the cached input (released afterwards), its item count,
+      * and the frames to time over it. */
+    def rates(keys: String*)(prep: => (DataFrame, Double, Seq[DataFrame]))
+        : Seq[(String, Measured, Double)] =
       try {
-        fn(spark, dir).count() // warm-up
-        def attempt(): Seq[Double] = Seq.fill(3)(
-          timed(() => fn(spark, dir).count())).sorted
-        // same burst-repair as the main loop whose tBig this divides: an
-        // external load burst covering the probe would inflate tSmall ~4×
-        // and shave ~0.6 off the exponent — a super-linear operator could
-        // escape the 1.3 flag line on a one-sided stretch
-        val first = attempt()
-        val times =
-          if (first.head > 0 && first.last / first.head >= 2.0) {
-            val second = attempt()
-            if (second(second.size / 2) < first(first.size / 2)) second
-            else first
-          } else first
-        Some(times(times.size / 2)).filter(_ > 0)
-      } catch { case _: Throwable => None }
-      finally {
-        // release the probe query's caches even when it throws — leaked
-        // blocks would depress every later micro-bench
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.valuesIterator
-          .foreach(_.unpersist(blocking = false))
-      }
-    val smallSfDir = new java.io.File(
-      new java.io.File(sfDir).getParentFile, "sf0.01")
-    val tinySfDir = new java.io.File(
-      new java.io.File(sfDir).getParentFile, "sf0.001")
-    // (name, e_0.01→0.1, Option(e_0.001→0.01))
-    val scaleSlopes: Seq[(String, Double, Option[Double])] =
-      if (new java.io.File(sfDir).getName == "sf0.1" && smallSfDir.isDirectory
-          && only.isEmpty)
-        slopeQueries.flatMap { name =>
-          (SparkEntry.queries.get(name),
-            results.find(_._1 == name).map(_._2).filter(_ > 0)) match {
-            case (Some(fn), Some(tBig)) =>
-              probeAt(fn, smallSfDir.getPath).map { tSmall =>
-                val eBig = math.log(tBig / tSmall) / math.log(10.0)
-                val eSmall =
-                  if (tinySfDir.isDirectory)
-                    probeAt(fn, tinySfDir.getPath).map(tTiny =>
-                      math.log(tSmall / tTiny) / math.log(10.0))
-                  else None
-                (name, eBig, eSmall)
-              }
-            case _ => None
-          }
-        }
-      else Seq.empty
-    val scaleSlopeFlags = scaleSlopes.collect {
-      case (n, e, _) if e > 1.3 => n
-      case (n, e, Some(es)) if e > 1.0 && e - es > 0.3 => n
-    }.distinct
-
-    // round-over-round drift check: compare medians against the newest
-    // BENCH_r*.json in the working directory (the driver writes one per
-    // round) and flag queries whose median moved > 20% — the gate the
-    // single-run bench could not provide.
-    val sfName = new java.io.File(sfDir).getName
-    // clean baselines carry their ROUND alongside the content: the
-    // adjudication ledger below supersedes records up to a named round,
-    // so the anchor derivation must know which round each record is from
-    val (prevBench: Option[String], cleanBaselines: Seq[(Int, String)]) =
-      try {
-        val dir = new java.io.File(".")
-        val files = Option(dir.listFiles()).getOrElse(Array.empty)
-        val round = roundInProgress(files)
-        // candidate baselines ordered oldest→best, so the clean-filtered
-        // lastOption below lands on the newest completed round's best
-        // record: per round, the driver's BENCH file (2k-char stdout
-        // tail, possibly truncated), then its _clean re-run, then the
-        // complete per-round details record this bench persisted itself.
-        // The rolling bench_details_<sf>.json is deliberately NOT a
-        // candidate: it is overwritten by every mid-round full run, and
-        // r10's drift list — computed against it — flagged six
-        // intra-round improvements while missing the round's one real
-        // regression. Only PRIOR-round records (n < round) qualify, and
-        // the details files are sf-specific by name, so an sf0.01
-        // iteration run never poisons the sf0.1 drift baseline.
-        val detailsRe = ("^bench_details_r(\\d+)_" +
-          java.util.regex.Pattern.quote(sfName) + "\\.json$").r
-        val ordered: Seq[(Int, java.io.File)] = files.toSeq.flatMap { f =>
-          f.getName match {
-            case BenchFileRe(n, clean) =>
-              Some((n.toInt, if (clean == null) 0 else 1, f))
-            case detailsRe(n) if n.toInt < round => Some((n.toInt, 2, f))
-            case _ => None
-          }
-        }.sortBy { case (n, pref, _) => (n, pref) }
-          .map { case (n, _, f) => (n, f) }
-        val contents = ordered.flatMap { case (n, f) =>
-            try {
-              val text = scala.io.Source.fromFile(f)
-              // the driver wraps our JSON line escaped inside its own
-              // record ("tail": "...{\"metric\":...}") — unescape before
-              // locating the metric blocks
-              Some((n, (try text.mkString finally text.close())
-                .replace("\\\"", "\"")))
-            } catch { case _: Throwable => None }
-          }
-          // a baseline is only comparable at the SAME scale factor: the
-          // driver's BENCH files are sf0.1, so an sf0.01 iteration run
-          // must not diff against them (every median differs ~10×, the
-          // mass-drift detector trips, and main() silently burns a full
-          // re-run). Every record carries its "sf" field — keep only
-          // records whose sf basename matches this run's.
-          .filter { case (_, c) => ("\"sf\":\"[^\"]*" +
-            java.util.regex.Pattern.quote(sfName) + "\"").r
-            .findFirstIn(c).isDefined }
-        // drift must compare against the newest CLEAN round: a
-        // contention-flagged file's medians are environment, and
-        // diffing against them flags phantom moves for a full round
-        // (r7's driver run was exactly this). BENCH_r<N>_clean.json
-        // files are re-runs taken on a quiet machine for rounds whose
-        // driver file burned.
-        // strip any attached contended first attempt up front: its
-        // medians and its "contended":true flag belong to the burned
-        // attempt, and both the clean-file filter and the block parsers
-        // below (which locate the LAST "queries":{ occurrence) must see
-        // only the published retry
-        val stripped = contents.map { case (n, c) =>
-          (n, c.replaceAll("\"contended_first_attempt\":\\{.*", "")) }
-        // a clean baseline is neither contended NOR mass-drift-flagged:
-        // a published retry carrying mass_drift_suspected=true has
-        // environment-poisoned medians even when the contention probes
-        // stayed quiet, and diffing against it builds the phantom-drift
-        // wall the r7 lesson documents
-        val clean = stripped.filterNot { case (_, c) =>
-          c.contains("\"contended\":true") ||
-            c.contains("\"mass_drift_suspected\":true") }
-        (clean.lastOption.map(_._2).orElse(stripped.lastOption.map(_._2)),
-          clean)
-      } catch { case scala.util.control.NonFatal(e) =>
-        // a baseline-scan failure must not kill the bench, but it must
-        // be LOUD: with no prevBench the drift lists go vacuous, and the
-        // published drift_warning field (below) marks the record as such
-        System.err.println(s"[bench] drift baseline scan failed: $e")
-        (None, Seq.empty[(Int, String)])
+        val (input, n, dfs) = prep
+        try keys.zip(dfs).map { case (k, df) =>
+          val m = measure(spark)(df)
+          (k, m, if (m.median > 0) n / m.median else -1.0)
+        } finally input.unpersist(blocking = false)
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[bench] ${keys.mkString("/")} failed: $e")
+        keys.map(k => (k, Failed, -1.0))
       }
 
-    // the parsing/delta/anchor math lives in [[BenchDrift]] (pure,
-    // unit-tested without a bench run); one parser serves the
-    // round-over-round diff and the best-ever anchor so the two can
-    // never read a record differently
-    def parseQueryMedians(content: String): Map[String, Double] =
-      BenchDrift.parseQueryMedians(content)
+    import org.apache.spark.sql.functions._
+    def vectors(): DataFrame = Tables.embeddings(spark, sfDir)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    def docTexts(every: Int): DataFrame = Tables.documents(spark, sfDir)
+      .filter(col("doc_id") % every === 0).select(col("text")).repartition(cpusN).cache()
+    def centroidsOf(vecs: DataFrame): Array[(Int, Seq[Double])] =
+      vecs.filter(col("vec_id") < 32)
+        .select(col("vec_id").cast("int"), col("v")).collect()
+        .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1)
 
-    // (flagged names any direction, slowdown-only names, count of
-    // queries the baseline could compare at all) — the slowdown-only
-    // list feeds the mass-drift trigger below; the full list publishes.
-    // NonFatal only (r16 review): a Throwable catch here once swallowed
-    // any baseline read bug into silently-empty flag lists
-    val (driftFlags: Seq[String], driftSlowdowns: Seq[String],
-         driftComparable: Int) =
-      try BenchDrift.driftDeltas(
-        results.map { case (n, m, _) => (n, m) }, prevBench)
-      catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] drift-delta pass failed: $e")
-        (Seq.empty[String], Seq.empty[String], 0)
-      }
-    // loud-vacuity marker: a prior record exists but nothing compared —
-    // a parse bug would otherwise read exactly like a drift-free round
-    val driftWarning: Option[String] =
-      BenchDrift.driftWarning(prevBench.nonEmpty, driftComparable)
-    driftWarning.foreach(w => System.err.println(s"[bench] WARNING: $w"))
-
-    // probe-adjudicated anchor re-dates (r16 verdict #3): a committed
-    // ledger line re-dates a machine-era ghost anchor to the same-day
-    // probe-measured floor; see [[BenchDrift.anchorTimes]] for the
-    // supersede-then-roll policy and the ledger's note field for the
-    // evidence chain. Read per run so an sf without entries is a no-op.
-    val adjudications: Map[String, BenchDrift.Adjudication] =
-      try {
-        val f = new java.io.File("bench_anchor_adjudications.jsonl")
-        if (!f.isFile) Map.empty
-        else {
-          val src = scala.io.Source.fromFile(f)
-          val lines = try src.getLines().toList finally src.close()
-          BenchDrift.parseAdjudications(lines, sfName)
-        }
-      } catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] adjudication ledger read failed: $e")
-        Map.empty
-      }
-
-    // cumulative drift anchor (r12 verdict #3): the round-over-round
-    // diff is blind to slow creep — d_minhash_lsh gained +19% over TWO
-    // rounds at ~6% spread each step and was never flagged. Diff each
-    // median against the BEST-EVER clean same-sf record as well: >30%
-    // above the best this query has ever measured cleanly is cumulative
-    // drift no single round-over-round step showed. Published as a map
-    // name → {best, best_round-ish pct} so the reader sees the size of
-    // the creep, not just its existence; suppressed when contended like
-    // the round-over-round flags (an environment-shifted pass would
-    // flag half the suite against its best-ever anchor).
-    // Re-anchoring (r16 verdict #3): anchors from machine-eras the
-    // hardware no longer reproduces are re-dated by the committed
-    // adjudication ledger — [[BenchDrift.anchorTimes]] — so a flag in
-    // drift_vs_best is actionable without a same-day A/B probe.
-    val bestTimes: Map[String, Double] =
-      try BenchDrift.anchorTimes(
-        cleanBaselines.flatMap { case (rnd, c) =>
-          parseQueryMedians(c).toSeq.collect {
-            case (n, v) if v > 0 => (n, rnd, v) } },
-        adjudications, _.floorSec)
-      catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] best-anchor derivation failed: $e")
-        Map.empty
-      }
-    // flag = relative AND absolute: a 0.1 s query reads +50% over its
-    // best-ever on pure scheduler noise (observed: env_roundtrip +53% =
-    // 0.06 s), so the 30% relative line alone would keep sub-second
-    // noise in the flag list forever — require the creep to also be
-    // ≥ 0.1 s of wall time before it names a query
-    val driftVsBest: Seq[(String, Double, Double)] =
-      results.collect {
-        case (name, median, _) if median > 0 && bestTimes.get(name).exists { b =>
-          b > 0 && (median - b) / b > 0.30 && median - b > 0.10
-        } => (name, bestTimes(name), 100.0 * (median - bestTimes(name)) / bestTimes(name))
-      }
-    // the full over-best map (every comparable query, any sign) rides in
-    // the details line: the 30% flag is one threshold, but slow creep is
-    // visible at ANY threshold only if the whole curve is published —
-    // d_minhash_lsh's +19%-over-two-rounds sat below every single-round
-    // gate and below this flag line too
-    val overBestPct: Seq[(String, Double)] = results.collect {
-      case (name, median, _) if median > 0 && bestTimes.get(name).exists(_ > 0) =>
-        name -> (100.0 * (median - bestTimes(name)) / bestTimes(name))
-    }
-
-    // every throughput metric below is a multi-run median with min→max
-    // spread, exactly like the queries: BENCH r04→r05 showed a 2× swing
-    // on serde_rows_per_sec from a single-run measurement taken after an
-    // ever-growing amount of prior bench work (heap state, JIT tier-down,
-    // ContextCleaner backlog) — a median with a published spread separates
-    // a codec regression from measurement noise.
-    // Contention-aware (r11 verdict #4): the r11 driver record published
-    // serde_uuid at 153.6% spread, and its burned first attempt printed
-    // the GATE metric at 0.61× the gate purely from machine noise — a
-    // gate number must not be publishable below the gate on a noisy
-    // machine-day when the fix costs seconds. Each metric re-runs ALONE
-    // (not the 25-minute sweep) until its spread is ≤ 20%, bounded at 4
-    // attempts; of contended attempts the HIGHEST median wins (noise
-    // only ever drags rates DOWN, so max-median is the least-contended
-    // reading), and the published spread is that attempt's.
-    def rateMedian(runs: Int)(f: () => Double): (Double, Double) = {
-      def spreadOf(vs: Seq[Double]): Double = {
-        val med = vs(vs.size / 2)
-        if (med > 0) 100.0 * (vs.last - vs.head) / med else -1.0
-      }
-      // selection is TIGHT-FIRST: any attempt with spread ≤ 20% beats
-      // every wide one (a max-median-only rule could publish a 120%-
-      // spread attempt forever just because one of its runs spiked
-      // high, discarding three clean retries); among tight attempts the
-      // HIGHEST median wins — uniform contention depresses a whole
-      // attempt with a deceptively tight spread, and noise only ever
-      // drags rates DOWN. Only if no attempt is tight does max-median
-      // pick among the wide ones.
-      var attempts = List(Seq.fill(runs)(f()).sorted)
-      while (spreadOf(attempts.head) > 20.0 && attempts.size < 4)
-        attempts = Seq.fill(runs)(f()).sorted :: attempts
-      val tight = attempts.filter(a => { val sp = spreadOf(a); sp >= 0 && sp <= 20.0 })
-      val pool = if (tight.nonEmpty) tight else attempts
-      val best = pool.maxBy(a => a(a.size / 2))
-      (best(best.size / 2), spreadOf(best))
-    }
-
-    /** Shared interpreted-vs-native micro harness (ONE definition for
-      * the six hof/expr pairs — the tail was copy-pasted six times and a
-      * repair-policy change had to be replicated by hand): `prep` builds
-      * the cached input and returns (frame, rowCount, run) where
-      * run(false) executes the portable/HOF form and run(true) the
-      * native expression. Both paths warm once, each rate is a
-      * tight-first [[rateMedian]] of 3, the cached frame is released
-      * even on a throw, and a failed block logs and yields −1
-      * sentinels. */
-    def hofExprRates(label: String)(
-        prep: () => (org.apache.spark.sql.DataFrame, Double, Boolean => Any))
-        : ((Double, Double), (Double, Double)) =
-      try {
-        val (frame, n, run) = prep()
-        try {
-          run(false); run(true) // warm-up
-          val slow = rateMedian(3) { () =>
-            val t = timed(() => { run(false); () }); if (t > 0) n / t else -1.0
-          }
-          val fast = rateMedian(3) { () =>
-            val t = timed(() => { run(true); () }); if (t > 0) n / t else -1.0
-          }
-          (slow, fast)
-        } finally frame.unpersist()
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] $label metric failed: $e")
-        ((-1.0, -1.0), (-1.0, -1.0))
-      }
-
-    // serde throughput: full envelope round trip (encode → pack → unpack
-    // → decode) at ≥1M rows so scheduling overhead doesn't mask the codec.
-    val (serdeRowsPerSec, serdeSpreadPct) =
-      try {
-        import org.apache.spark.sql.functions._
+    val rateRows: Seq[(String, Measured, Double)] = Seq(
+      // the Spark envelope round trip (encode → pack → unpack → decode)
+      // over ≥4M rows, so fixed job overhead amortizes
+      rates("serde_rows_per_sec") {
         val reg = new graft.schema.SchemaRegistry
         val entry = reg.registerSchema("bench", "event", queries.EnvelopeOps.eventSchemaJson)
         val base = Tables.events(spark, sfDir)
           .select(col("event_id"), col("user_id"), col("event_type"), col("value"), col("ts"))
-        // ≥4M rows so fixed job overhead (~0.3 s) amortizes and the number
-        // reflects steady-state executor throughput, not scheduling floor.
         val factor = math.max(1, (4000000 / math.max(1L, base.count())).toInt)
-        // single-file parquet input arrives as 1-2 partitions; spread the
-        // replicated rows across every core before the codec chain.
         val big = base.withColumn("rep", explode(lit((0 until factor).toArray)))
           .repartition(cpusN).cache()
-        val n = big.count().toDouble
-        def roundTrip() = {
-          val env = struct(
-            unhex(md5(col("event_id").cast("string"))).as("uuid"),
-            lit("create").as("message_type"),
-            lit(entry.schemaId).as("schema_id"),
-            graft.functions.encode_payload(
-              struct(col("event_id"), col("user_id"), col("event_type"), col("value")),
-              queries.EnvelopeOps.eventSchemaJson).as("payload"),
-            lit(null).cast("binary").as("previous_payload"),
-            lit(null).cast(graft.core.Envelope.sparkType("meta").dataType).as("meta"),
-            lit(null).cast("string").as("encryption_type"),
-            unix_timestamp(col("ts")).cast("int").as("timestamp"))
-          big.select(graft.functions.pack_envelope(env).as("value"))
-            .select(graft.functions.unpack_envelope(col("value")).as("env"))
-            .select(graft.functions.decode_payload(
-              col("env.payload"), col("env.schema_id"), reg, entry.schemaId).as("p"))
-            .select(sum(col("p.event_id"))).head()
-        }
-        try {
-          roundTrip() // warm-up
-          rateMedian(5) { () =>
-            val secs = timed(() => roundTrip())
-            if (secs > 0) n / secs else -1.0
-          }
-        } finally big.unpersist(blocking = false) // even on a thrown run —
-        // a leaked 4M-row cache would skew every metric after this one
-      } catch { case _: Throwable => (-1.0, -1.0) }
-
-    // give the single-thread micro-benchmarks a quiet heap: the bench run
-    // above leaves unpersist queues and collected shuffle state behind,
-    // and a GC pause landing inside a 0.5 s timed loop is a 2× swing.
-    System.gc()
-
-    // single-thread codec rates, decomposed so a serde regression and a
-    // uuid-cost regression stay separately visible (BASELINE.md tiers:
-    // no-uuid ~730k/s, FastUUID instantiation ~185k/s, uuid-only 385k/s;
-    // gate: ≥ ~90k rows/s/core on the full chain).
-    // r13 (verdict #4): the timed windows were too SHORT for the ≤20%
-    // spread goal on a noisy machine-hour — 300k chain rows ≈ 0.35 s and
-    // 2M uuid rows ≈ 0.02 s, so one GC pause or scheduler blip inside
-    // the window moved the reading 25%+ (the r12 driver record published
-    // the GATE at 26.4% spread). 5× the chain window (~1.7 s) and 25×
-    // the uuid window (~0.5 s) amortize a blip below the 20% line;
-    // seconds per attempt next to the 25-minute sweep.
-    val (serdePerCore, serdeCoreSpreadPct) = // fixed uuid (ref "no uuid" tier)
-      try rateMedian(5)(() => SerdeMicroBench.chainRowsPerSecCore(1500000))
-      catch { case _: Throwable => (-1.0, -1.0) }
-    val (serdeUuidPerCore, serdeUuidSpreadPct) = // fresh uuid4 per message
-      try rateMedian(5)(() => SerdeMicroBench.chainWithUuidRowsPerSecCore(1500000))
-      catch { case _: Throwable => (-1.0, -1.0) }
-    val (uuidGenPerCore, uuidGenSpreadPct) = // uuid4 alone (ref 385,845/s best)
-      try rateMedian(5)(() => SerdeMicroBench.uuidRowsPerSecCore(50000000))
-      catch { case _: Throwable => (-1.0, -1.0) }
-
-    // uuid4 generation rate through the codegen'd Uuid4Binary expression
-    // (reference headline: _fast_uuid.py — 385k/s PyPy-FFI, 29k/s stock).
-    val (uuidRowsPerSec, uuidSpreadPct) =
-      try {
-        import org.apache.spark.sql.functions._
-        val n = 8000000L
-        // project the uuid first (nondeterministic exprs can't live inside
-        // an Aggregate), then fold — length() forces full evaluation
-        def run() = spark.range(0, n, 1, cpusN)
-          .select(graft.functions.uuid4_binary(42L).as("u"))
-          .select(sum(length(col("u")))).head()
-        run() // warm-up
-        rateMedian(5) { () =>
-          val secs = timed(() => run())
-          if (secs > 0) n / secs else -1.0
-        }
-      } catch { case _: Throwable => (-1.0, -1.0) }
-
-    // minhash signature stage, portable md5-hex family vs the in-engine
-    // xxhash64 family (identical LSH semantics downstream — the fast path
-    // exists purely to cut signature-stage CPU and shuffle width at
-    // corpus scale; measured as whole-stage docs/s over the same shingle
-    // frame, forced through every signature column)
-    val ((minhashMd5DocsPerSec, minhashMd5SpreadPct),
-         (minhashXxhDocsPerSec, minhashXxhSpreadPct)) =
-      hofExprRates("minhash") { () =>
-        import org.apache.spark.sql.functions._
+        val env = struct(
+          unhex(md5(col("event_id").cast("string"))).as("uuid"),
+          lit("create").as("message_type"),
+          lit(entry.schemaId).as("schema_id"),
+          graft.functions.encode_payload(
+            struct(col("event_id"), col("user_id"), col("event_type"), col("value")),
+            queries.EnvelopeOps.eventSchemaJson).as("payload"),
+          lit(null).cast("binary").as("previous_payload"),
+          lit(null).cast(graft.core.Envelope.sparkType("meta").dataType).as("meta"),
+          lit(null).cast("string").as("encryption_type"),
+          unix_timestamp(col("ts")).cast("int").as("timestamp"))
+        val roundTrip = big.select(graft.functions.pack_envelope(env).as("value"))
+          .select(graft.functions.unpack_envelope(col("value")).as("env"))
+          .select(graft.functions.decode_payload(
+            col("env.payload"), col("env.schema_id"), reg, entry.schemaId).as("p"))
+        (big, big.count().toDouble, Seq(roundTrip))
+      },
+      // minhash signatures: portable md5-hex family vs in-engine xxhash64
+      rates("minhash_md5_docs_per_sec", "minhash_xxh64_docs_per_sec") {
         val sh = graft.operators.Dedup
           .wordShingles(Tables.documents(spark, sfDir), "doc_id", "text", 3).cache()
-        val nDocs = sh.select(col("id")).distinct().count().toDouble
-        def run(fast: Boolean) = {
-          val sigs = if (fast) graft.operators.Dedup.minhashSignaturesFast(sh, 12)
-          else graft.operators.Dedup.minhashSignatures(sh, 12)
-          val allSigs = (0 until 12).map(i => col(s"s$i"))
-          // bit_xor folds every signature column without ANSI sum overflow
-          sigs.select(xxhash64(allSigs: _*).as("h")).agg(expr("bit_xor(h)")).head()
-        }
-        (sh, nDocs, run)
-      }
-
-    // rolling-hash fingerprint: portable higher-order-function formulation
-    // (O(len·w), per-window slices — the oracle-replayable path) vs the
-    // native RollingMinHash64 expression (O(len) true rolling update).
-    // Same arithmetic, identical results (spec-pinned); this measures what
-    // the native expression buys at scale.
-    val ((rollingHofDocsPerSec, rollingHofSpreadPct),
-         (rollingExprDocsPerSec, rollingExprSpreadPct)) =
-      hofExprRates("rolling-hash") { () =>
-        import org.apache.spark.sql.functions._
-        // no row amplification here: the HOF path is orders of magnitude
-        // slower (interpreted per-window slices), so the raw table is
-        // already enough signal for it — and the expr rate then reads as
-        // a scheduling-floor-bound LOWER bound on the true speedup
-        val docs = Tables.documents(spark, sfDir).select(col("text"))
+        (sh, sh.select(col("id")).distinct().count().toDouble,
+          Seq(graft.operators.Dedup.minhashSignatures(sh, 12),
+            graft.operators.Dedup.minhashSignaturesFast(sh, 12)))
+      },
+      // rolling-hash fingerprint: per-window HOF slices vs RollingMinHash64.
+      // The HOF form is orders of magnitude slower (~0.5 core-seconds per
+      // sf0.1 document), so it runs over every 20th document; both rates
+      // are per document.
+      rates("rolling_fp_hof_docs_per_sec") {
+        val docs = docTexts(20)
+        (docs, docs.count().toDouble,
+          Seq(docs.select(array_min(graft.operators.TextAnalysis.rollingHashes(col("text"), 8)))))
+      },
+      rates("rolling_fp_expr_docs_per_sec") {
+        val docs = docTexts(1)
+        (docs, docs.count().toDouble,
+          Seq(docs.select(graft.functions.RollingMinHash64.rolling_min_hash(col("text"), 8))))
+      },
+      // cluster-assignment argmax over k=32 centroids: HOF fold vs CosineArgmax
+      rates("argmax_hof_vecs_per_sec", "argmax_expr_vecs_per_sec") {
+        val vecs = vectors().repartition(cpusN).cache()
+        val cents = centroidsOf(vecs)
+        (vecs, vecs.count().toDouble,
+          Seq(graft.operators.Similarity.assignClustersHof(vecs, cents),
+            graft.operators.Similarity.assignClusters(vecs, cents)))
+      },
+      // coarse residual v − centroid[cluster]: zip_with HOF vs CentroidResidual
+      rates("residual_hof_vecs_per_sec", "residual_expr_vecs_per_sec") {
+        val vecs = vectors().withColumn("cluster", pmod(col("vec_id"), lit(32)).cast("int"))
           .repartition(cpusN).cache()
-        val n = docs.count().toDouble
-        def run(fast: Boolean) = {
-          val h =
-            if (fast) graft.functions.RollingMinHash64.rolling_min_hash(col("text"), 8)
-            else array_min(graft.operators.TextAnalysis.rollingHashes(col("text"), 8))
-          docs.select(h.as("h")).agg(expr("bit_xor(h)")).head()
-        }
-        (docs, n, run)
-      }
-
-    // cluster-assignment argmax: the portable HOF projection (transform +
-    // fold over a centroid struct literal — the oracle-replayable form)
-    // vs the native CosineArgmax expression, over the embeddings table
-    // with k=32 centroids. This is the per-vector label under the
-    // IVF/SemDeDup oracle queries; same caveat as rolling-fp — the
-    // native run sits near the scheduling floor at sf0.1, so its rate is
-    // a LOWER bound on the true speedup.
-    val ((argmaxHofVecsPerSec, argmaxHofSpreadPct),
-         (argmaxExprVecsPerSec, argmaxExprSpreadPct)) =
-      hofExprRates("argmax") { () =>
-        import org.apache.spark.sql.functions._
-        val vecs = Tables.embeddings(spark, sfDir)
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+        val cents = centroidsOf(vecs)
+        (vecs, vecs.count().toDouble,
+          Seq(vecs.select(graft.operators.Similarity.residualExprHof(cents, col("v"), col("cluster"))),
+            vecs.select(graft.functions.CentroidResidual.centroid_residual(col("v"),
+              col("cluster"), cents.map(_._1), cents.map(_._2.toArray)))))
+      },
+      // PQ ADC lookup-sum at a production shape (m=8, ksub=64, 8M synthetic
+      // candidate pairs): element_at formulation vs PqAdc. The distance
+      // table rides as a literal, as in the real search.
+      rates("adc_hof_pairs_per_sec", "adc_expr_pairs_per_sec") {
+        val (m, ksub) = (8, 64)
+        val cbs = (0 until m).map(j => j -> (0 until ksub).map(i => (i, Seq(0.0))).toArray).toMap
+        val tbl = (0 until m).map(j => (0 until ksub).map(i => (j * ksub + i) * 1e-6))
+        val pairs = spark.range(8000000L).toDF("id")
+          .select(col("id"), array((0 until m).map(j =>
+            pmod(xxhash64(col("id") * m + j), lit(ksub.toLong)).cast("int")): _*).as("codes"))
           .repartition(cpusN).cache()
-        val n = vecs.count().toDouble
-        // centroids collected ONCE outside the timed loop — the metric
-        // times the label job, not the centroid collect
-        val centRows = vecs.filter(col("vec_id") < 32)
-          .select(col("vec_id").cast("int").as("cluster"), col("v").as("c"))
-          .collect()
-          .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1)
-        def run(fast: Boolean) = {
-          val labeled =
-            if (fast) graft.operators.Similarity.assignClusters(vecs, centRows)
-            else graft.operators.Similarity.assignClustersHof(vecs, centRows)
-          labeled.select(col("cluster").cast("bigint").as("h"))
-            .agg(expr("bit_xor(h)")).head()
-        }
-        (vecs, n, run)
-      }
-
-    // coarse-residual projection: the zip_with/map-literal HOF form (the
-    // executable documentation of the oracle's element order) vs the
-    // native CentroidResidual expression — the v − centroid[cluster]
-    // step of the residual-IVFADC index build, where the HOF form is
-    // CodegenFallback and breaks the index projection's codegen stage.
-    // Same caveat as rolling-fp/argmax: the native run sits near the
-    // scheduling floor at sf0.1, so its rate is a LOWER bound.
-    val ((residualHofVecsPerSec, residualHofSpreadPct),
-         (residualExprVecsPerSec, residualExprSpreadPct)) =
-      hofExprRates("residual") { () =>
-        import org.apache.spark.sql.functions._
-        val vecs = Tables.embeddings(spark, sfDir)
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-          .withColumn("cluster", pmod(col("vec_id"), lit(32)).cast("int"))
-          .repartition(cpusN).cache()
-        val n = vecs.count().toDouble
-        val centRows = vecs.filter(col("vec_id") < 32)
-          .select(col("vec_id").cast("int").as("cluster"), col("v").as("c"))
-          .collect()
-          .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1)
-        def run(fast: Boolean) = {
-          val res =
-            if (fast) graft.functions.CentroidResidual.centroid_residual(
-              col("v"), col("cluster"),
-              centRows.map(_._1), centRows.map(_._2.toArray))
-            else graft.operators.Similarity
-              .residualExprHof(centRows, col("v"), col("cluster"))
-          vecs.select(element_at(res, 1).as("r0")).agg(sum(col("r0"))).head()
-        }
-        (vecs, n, run)
-      }
-
-    // PQ ADC lookup-sum: the array_position/element_at formulation (the
-    // oracle-replayable form — m scans over ksub-entry literal id arrays
-    // per candidate) vs the native PqAdc expression (direct-indexed
-    // code→position map, one primitive loop). The sf fixtures are too
-    // small for this to show in sim_pq_topk (2k vectors — codebook
-    // TRAINING dominates there), so this measures the per-pair scoring
-    // rate at a production shape: m=8 subspaces, ksub=64 centroids,
-    // 8M synthetic candidate pairs. Identical results, spec-pinned
-    // (FunctionsSpec parity sweep).
-    val ((adcHofPairsPerSec, adcHofSpreadPct),
-         (adcExprPairsPerSec, adcExprSpreadPct)) =
-      hofExprRates("adc") { () =>
-        import org.apache.spark.sql.functions._
-        val m = 8
-        val ksub = 64
-        val n = 8000000L
-        val cbs: Map[Int, Array[(Int, Seq[Double])]] =
-          (0 until m).map(j => j -> (0 until ksub).map(i => (i, Seq(0.0))).toArray).toMap
-        val tbl: Seq[Seq[Double]] =
-          (0 until m).map(j => (0 until ksub).map(i => (j * ksub + i) * 1e-6))
-        // the distance table rides as a LITERAL (the broadcast-probe
-        // shape of the real search), NOT a cached column — materializing
-        // m·ksub doubles per row would turn the metric into a
-        // memory-bandwidth read of the table, identical in both paths
-        val pairs = spark.range(n).toDF("id")
-          .select(col("id"),
-            array((0 until m).map(j =>
-              pmod(xxhash64(col("id") * m + j), lit(ksub.toLong)).cast("int")): _*)
-              .as("codes"))
-          .repartition(cpusN).cache()
-        pairs.count()
-        def run(fast: Boolean) = {
-          val d =
-            if (fast) graft.operators.Similarity.pqAdist(cbs, m)
-            else graft.operators.Similarity.pqAdistHof(cbs, m)
-          pairs.withColumn("__tbl", typedLit(tbl))
-            .select(d.as("adist")).agg(sum("adist")).head()
-        }
-        (pairs, n, run)
-      }
-
-    // int8 quantized dot: the boxed zip_with/aggregate fold (the
-    // oracle-replayable form) vs the native Int8Dot multiply-accumulate
-    // — the memory-bandwidth claim of quantized search is only real if
-    // the per-pair kernel doesn't give it back in lambda dispatch. Same
-    // literal-probe shape as the ADC metric; dim=64, 4M synthetic pairs.
-    val ((i8HofPairsPerSec, i8HofSpreadPct),
-         (i8ExprPairsPerSec, i8ExprSpreadPct)) =
-      hofExprRates("int8-dot") { () =>
-        import org.apache.spark.sql.functions._
+        def adist(d: org.apache.spark.sql.Column) =
+          pairs.withColumn("__tbl", typedLit(tbl)).select(d.as("adist"))
+        (pairs, pairs.count().toDouble,
+          Seq(adist(graft.operators.Similarity.pqAdistHof(cbs, m)),
+            adist(graft.operators.Similarity.pqAdist(cbs, m))))
+      },
+      // int8 quantized dot (dim 64, 4M synthetic pairs): zip_with/aggregate
+      // fold vs Int8Dot
+      rates("int8_dot_hof_pairs_per_sec", "int8_dot_expr_pairs_per_sec") {
         val dim = 64
-        val n = 4000000L
-        val pairs = spark.range(n).toDF("id")
-          .select(col("id"),
-            transform(sequence(lit(1), lit(dim)),
-              i => (pmod(xxhash64(col("id") * 7 + i), lit(255L)) - 127L)
-                .cast("int")).as("q"))
+        val pairs = spark.range(4000000L).toDF("id")
+          .select(col("id"), transform(sequence(lit(1), lit(dim)),
+            i => (pmod(xxhash64(col("id") * 7 + i), lit(255L)) - 127L).cast("int")).as("q"))
           .repartition(cpusN).cache()
-        pairs.count()
-        val pqLit = typedLit((0 until dim).map(i => (i * 37 % 255) - 127))
-        def run(fast: Boolean) = {
-          val d =
-            if (fast) graft.functions.Int8Dot.int8_dot(col("q"), col("__pq"))
-            else graft.operators.Similarity.int8DotHof("q", "__pq")
-          pairs.withColumn("__pq", pqLit).select(d.as("d"))
-            .agg(sum("d")).head()
-        }
-        (pairs, n, run)
-      }
+        val withProbe = pairs.withColumn("__pq", typedLit((0 until dim).map(i => (i * 37 % 255) - 127)))
+        (pairs, pairs.count().toDouble,
+          Seq(withProbe.select(graft.operators.Similarity.int8DotHof("q", "__pq")),
+            withProbe.select(graft.functions.Int8Dot.int8_dot(col("q"), col("__pq")))))
+      }).flatten
 
-    // ANN retrieval QUALITY: recall@10 of every approximate search path
-    // against the exact brute-force neighborhood on the same vectors and
-    // probes. The oracle gates pin replay determinism (the approximation
-    // computed identically), not how much of the true neighborhood it
-    // finds — this is the number that sizes nprobe / PQ codebooks /
-    // quantization at 100 TB. The ivf sweep shows the recall-vs-pruning
-    // dial; nprobe = k(=8 clusters) searches everything and must read 1.
     val recallK = 10
     val recalls: Seq[(String, Double)] =
-      try {
-        import org.apache.spark.sql.functions._
-        import graft.operators.Similarity
-        val vecs = Tables.embeddings(spark, sfDir)
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-          .cache()
-        try {
-          val probes = vecs.filter(col("vec_id") < 5)
-            .select(col("vec_id").as("probe_id"), col("v").as("p"))
-          val exact = Similarity.bruteForceTopK(vecs, probes, k = recallK)
-            .select(col("probe_id"), col("vec_id"), col("rank")).cache()
-          exact.count()
-          val cents = Similarity.kmeansFit(vecs, k = 8, iters = 2)
-          val ivf = Seq(1, 2, 4, 8).map { np =>
-            s"recall_ivf_nprobe$np" -> Similarity.recallAtK(
-              Similarity.ivfTopK(vecs, cents, probes, k = recallK,
-                nprobe = np, roundTo = 4, reliable = false),
-              exact, recallK)
-          }
-          val cb = Similarity.pqFit(vecs.filter(col("vec_id") % 4 === 0),
-            m = 4, subDim = 16, ksub = 8, iters = 2)
-          val enc = Similarity.pqEncode(vecs, cb, m = 4, subDim = 16)
-          val pqR = Similarity.recallAtK(
-            Similarity.pqTopK(enc, probes, cb, k = recallK, m = 4, subDim = 16),
-            exact, recallK)
-          // the two-stage shape: ADC fetches 400 (40×k — on isotropic
-          // random fixtures the compressed screen is near-uninformative,
-          // so the pool must be wide; clustered real embeddings need far
-          // less, spec-gated in CurationSpec's recall floors), exact
-          // cosine re-ranks —
-          // published next to the raw ADC number so the rank-resolution
-          // gap of 32-bit codes (and what re-ranking buys back) is visible
-          val pqRerankR = Similarity.recallAtK(
-            Similarity.pqTopKRerank(enc, probes, cb, vecs, k = recallK,
-              m = 4, subDim = 16, fetchK = 400),
-            exact, recallK)
-          // production-shaped codebooks (m=8, ksub=32 → 40 bits, ~10^12
-          // distinct codes vs the oracle config's 4096): the oracle keeps
-          // the tiny config for replayability; this shows recall scaling
-          // with codebook capacity — the dial a 100 TB deployment turns
-          val cb2 = Similarity.pqFit(vecs.filter(col("vec_id") % 4 === 0),
-            m = 8, subDim = 8, ksub = 32, iters = 2)
-          val enc2 = Similarity.pqEncode(vecs, cb2, m = 8, subDim = 8)
-          val pq2R = Similarity.recallAtK(
-            Similarity.pqTopK(enc2, probes, cb2, k = recallK, m = 8, subDim = 8),
-            exact, recallK)
-          val pq2RerankR = Similarity.recallAtK(
-            Similarity.pqTopKRerank(enc2, probes, cb2, vecs, k = recallK,
-              m = 8, subDim = 8, fetchK = 400),
-            exact, recallK)
-          // OPQ (Ge et al. 2013): trained-rotation PQ at the SAME code
-          // budgets, published as pairs with the plain-PQ numbers above
-          // (measured: raw-ADC recall 0.10 → 0.14 at m=4, 0.10 → 0.18 at
-          // m=8/ksub=32). This fixture is near-isotropic (eigenvalue
-          // spread ~2×), which BOUNDS what any rotation can buy — the
-          // distortion ratio converges to ~0.95 here (4 alternations
-          // reach 0.964; the per-iteration trajectory matches a NumPy
-          // reference implementation of OPQ-NP to 4 decimals). The
-          // anisotropic-spectrum case (OPQ's actual target, where the
-          // identity split wastes whole codebooks on low-variance
-          // subspaces — distortion −30%, recall 0.20 → 0.38) is
-          // spec-gated with floors in CurationSpec.
-          val (orot4, ocb4) = Similarity.opqFit(
-            vecs.filter(col("vec_id") % 4 === 0), m = 4, subDim = 16,
-            ksub = 8, pqIters = 2, opqIters = 4)
-          val opq4R = Similarity.recallAtK(
-            Similarity.opqTopK(
-              Similarity.opqEncode(vecs, orot4, ocb4, m = 4, subDim = 16),
-              probes, orot4, ocb4, k = recallK, m = 4, subDim = 16),
-            exact, recallK)
-          val (orot8, ocb8) = Similarity.opqFit(
-            vecs.filter(col("vec_id") % 4 === 0), m = 8, subDim = 8,
-            ksub = 32, pqIters = 2, opqIters = 4)
-          val oenc8 = Similarity.opqEncode(vecs, orot8, ocb8, m = 8, subDim = 8)
-          val opq8R = Similarity.recallAtK(
-            Similarity.opqTopK(oenc8, probes, orot8, ocb8, k = recallK,
-              m = 8, subDim = 8),
-            exact, recallK)
-          val opq8RerankR = Similarity.recallAtK(
-            Similarity.rerankExact(
-              Similarity.opqTopK(oenc8, probes, orot8, ocb8, k = 400,
-                m = 8, subDim = 8),
-              probes, vecs, k = recallK),
-            exact, recallK)
-          // the objective OPQ minimizes, as an OPQ/PQ ratio (< 1 = the
-          // rotation cut mean squared quantization error) — visible even
-          // where recall is capacity-bound
-          val distRatio4 = Similarity.pqDistortion(
-            Similarity.rotate(vecs, "v", orot4), ocb4, 4, 16) /
-            Similarity.pqDistortion(vecs, cb, 4, 16)
-          val distRatio8 = Similarity.pqDistortion(
-            Similarity.rotate(vecs, "v", orot8), ocb8, 8, 8) /
-            Similarity.pqDistortion(vecs, cb2, 8, 8)
-          val quant = Similarity.quantizeInt8(vecs)
-          val qprobes = quant.filter(col("vec_id") < 5)
-            .select(col("vec_id").as("probe_id"), col("q").as("pq"))
-          val i8R = Similarity.recallAtK(
-            Similarity.int8TopK(quant, qprobes, k = recallK), exact, recallK)
-          // IVFADC (coarse route + in-cluster ADC over the joint index):
-          // the recall cost of pruning the COMPRESSED scan, same sweep
-          // shape as exact ivf above
-          val index = Similarity.pqIndex(vecs, cents, cb, m = 4, subDim = 16)
-          val ivfpq = Seq(1, 2, 4).map { np =>
-            s"recall_ivfpq_nprobe$np" -> Similarity.recallAtK(
-              Similarity.ivfPqTopK(index, cents, probes, cb, k = recallK,
-                nprobe = np, m = 4, subDim = 16),
-              exact, recallK)
-          }
-          // IVFADC fetch-200 + exact re-rank: the full production shape
-          // (coarse route → compressed scan → exact top-k on survivors)
-          val ivfpqRerankR = Similarity.recallAtK(
-            Similarity.rerankExact(
-              Similarity.ivfPqTopK(index, cents, probes, cb, k = 400,
-                nprobe = 4, m = 4, subDim = 16),
-              probes, vecs, k = recallK),
-            exact, recallK)
-          // RESIDUAL IVFADC (Jégou §IV-A): same code budget spent on
-          // within-cell offsets — published next to the raw-vector
-          // ivfpq sweep so the residual-encoding gain is a visible pair
-          val rcb = Similarity.pqFitResidual(
-            vecs.filter(col("vec_id") % 4 === 0), cents,
-            m = 4, subDim = 16, ksub = 8, iters = 2)
-          val rindex = Similarity.pqIndexResidual(vecs, cents, rcb,
-            m = 4, subDim = 16)
-          val ivfpqRes = Seq(1, 2, 4).map { np =>
-            s"recall_ivfpq_res_nprobe$np" -> Similarity.recallAtK(
-              Similarity.ivfPqResidualTopK(rindex, cents, probes, rcb,
-                k = recallK, nprobe = np, m = 4, subDim = 16),
-              exact, recallK)
-          }
-          val ivfpqResRerankR = Similarity.recallAtK(
-            Similarity.rerankExact(
-              Similarity.ivfPqResidualTopK(rindex, cents, probes, rcb,
-                k = 400, nprobe = 4, m = 4, subDim = 16),
-              probes, vecs, k = recallK),
-            exact, recallK)
-          // OPQ ∘ residual IVFADC — the FAISS-canonical composition
-          // (rotate, then the unchanged residual chain; zero new code),
-          // measured beside the unrotated residual sweep with the SAME
-          // m=4 code budget and the already-trained m=4 rotation. The
-          // exact re-rank runs against the ORIGINAL vectors (rotation
-          // preserves cosine, so the candidate ids carry over).
-          val rvecs = Similarity.rotate(vecs, "v", orot4).cache()
-          val (opqResRawR, opqResRerankR) = try {
-            val rprobes = Similarity.rotate(probes, "p", orot4)
-            val rcents = Similarity.kmeansFit(rvecs, k = 8, iters = 2)
-            val orcb = Similarity.pqFitResidual(
-              rvecs.filter(col("vec_id") % 4 === 0), rcents,
-              m = 4, subDim = 16, ksub = 8, iters = 2)
-            val orindex = Similarity.pqIndexResidual(rvecs, rcents, orcb,
-              m = 4, subDim = 16)
-            (Similarity.recallAtK(
-              Similarity.ivfPqResidualTopK(orindex, rcents, rprobes, orcb,
-                k = recallK, nprobe = 4, m = 4, subDim = 16),
-              exact, recallK),
-              Similarity.recallAtK(
-                Similarity.rerankExact(
-                  Similarity.ivfPqResidualTopK(orindex, rcents, rprobes, orcb,
-                    k = 400, nprobe = 4, m = 4, subDim = 16),
-                  probes, vecs, k = recallK),
-                exact, recallK))
-          } finally rvecs.unpersist(blocking = false)
-          // JL 64→16: the map-only dim-reduction screen. Raw recall is the
-          // distortion cost of quartering every downstream shuffle —
-          // isotropic random fixtures are JL's WORST case (real embedding
-          // spectra decay, random ones don't), so the raw number reads
-          // low; the fetch-200 + exact re-rank pair shows the shape a
-          // deployment runs (screen cheap, re-rank exact)
-          val jlR = Similarity.recallAtK(
-            Similarity.jlTopK(vecs, probes, inDim = 64, outDim = 16,
-              seed = "r8", k = recallK),
-            exact, recallK)
-          val jlRerankR = Similarity.recallAtK(
-            Similarity.rerankExact(
-              Similarity.jlTopK(vecs, probes, inDim = 64, outDim = 16,
-                seed = "r8", k = 400),
-              probes, vecs, k = recallK),
-            exact, recallK)
-          // the dimension dial: 64→32 halves (not quarters) the shuffle
-          // and pays far less distortion — published next to d16 so the
-          // outDim-vs-recall tradeoff is a visible curve, like the
-          // nprobe sweep and the PQ codebook-capacity pair above
-          val jl32R = Similarity.recallAtK(
-            Similarity.jlTopK(vecs, probes, inDim = 64, outDim = 32,
-              seed = "r8", k = recallK),
-            exact, recallK)
-          val jl32RerankR = Similarity.recallAtK(
-            Similarity.rerankExact(
-              Similarity.jlTopK(vecs, probes, inDim = 64, outDim = 32,
-                seed = "r8", k = 400),
-              probes, vecs, k = recallK),
-            exact, recallK)
-          // recall_diag_*: deliberately-underpowered DIAGNOSTIC configs
-          // (m=4 codes feeding a rerank pool, JL d=16 = 4× compression)
-          // kept to show the capacity/recall curve — NOT shipped
-          // defaults. The production-shaped dials carry plain recall_*
-          // names and spec floors (CurationSpec); a reader of the bench
-          // line should never mistake a curve point for a default.
-          val out = ivf ++ ivfpq ++ ivfpqRes ++ Seq("recall_pq_topk" -> pqR,
-            "recall_diag_pq_m4_rerank" -> pqRerankR,
-            "recall_pq_m8k32_topk" -> pq2R,
-            "recall_pq_m8k32_rerank" -> pq2RerankR,
-            "recall_opq_topk" -> opq4R,
-            "recall_opq_m8k32_topk" -> opq8R,
-            "recall_opq_m8k32_rerank" -> opq8RerankR,
-            "recall_opq_ivfpq_res_nprobe4" -> opqResRawR,
-            "recall_opq_ivfpq_res_rerank" -> opqResRerankR,
-            "opq_vs_pq_distortion_m4" -> distRatio4,
-            "opq_vs_pq_distortion_m8k32" -> distRatio8,
-            "recall_int8_topk" -> i8R,
-            // diagnostic: plain raw-vector IVFADC rerank sits below the
-            // 0.9 deployment floor on this fixture (0.84) — the SHIPPED
-            // configs are the residual path (recall_ivfpq_res_rerank,
-            // 1.00) and the OPQ-composed path (recall_opq_ivfpq_res_
-            // rerank, 1.00), which supersede it at the same code budget
-            // (the one-round recall_ivfpq_rerank continuity alias
-            // expired as planned in r13 — the rename is noted in
-            // recall_notes so the r11→r12 series break stays explicit)
-            "recall_diag_ivfpq_rerank" -> ivfpqRerankR,
-            "recall_ivfpq_res_rerank" -> ivfpqResRerankR,
-            "recall_diag_jl_d16_topk" -> jlR,
-            "recall_diag_jl_d16_rerank" -> jlRerankR,
-            "recall_jl_d32_topk" -> jl32R,
-            "recall_jl_d32_rerank" -> jl32RerankR)
-          exact.unpersist(blocking = false)
-          out
-        } finally vecs.unpersist(blocking = false)
-      } catch { case e: Throwable =>
+      try recallBlock(spark, sfDir, recallK)
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] recall metric failed: $e")
         Seq.empty
       }
-
-    // round-over-round drift on the throughput metrics, same 20% gate as
-    // the queries — this is what would have caught the r04→r05 2× swing.
-    // ONE canonical (name, rate, spread) table — the drift list, the
-    // spread map and the JSON rate fields all derive from it, so a
-    // metric rename can no longer land in one of three hand-written
-    // lists and silently stop that metric's drift checking
-    val serdeMetricRows: Seq[(String, Double, Double)] = Seq(
-      ("serde_rows_per_sec", serdeRowsPerSec, serdeSpreadPct),
-      ("serde_rows_per_sec_core", serdePerCore, serdeCoreSpreadPct),
-      ("serde_uuid_rows_per_sec_core", serdeUuidPerCore, serdeUuidSpreadPct),
-      ("uuid_gen_rows_per_sec_core", uuidGenPerCore, uuidGenSpreadPct),
-      ("uuid_rows_per_sec", uuidRowsPerSec, uuidSpreadPct),
-      ("minhash_md5_docs_per_sec", minhashMd5DocsPerSec, minhashMd5SpreadPct),
-      ("minhash_xxh64_docs_per_sec", minhashXxhDocsPerSec, minhashXxhSpreadPct),
-      ("rolling_fp_hof_docs_per_sec", rollingHofDocsPerSec, rollingHofSpreadPct),
-      ("rolling_fp_expr_docs_per_sec", rollingExprDocsPerSec, rollingExprSpreadPct),
-      ("argmax_hof_vecs_per_sec", argmaxHofVecsPerSec, argmaxHofSpreadPct),
-      ("argmax_expr_vecs_per_sec", argmaxExprVecsPerSec, argmaxExprSpreadPct),
-      ("residual_hof_vecs_per_sec", residualHofVecsPerSec, residualHofSpreadPct),
-      ("residual_expr_vecs_per_sec", residualExprVecsPerSec, residualExprSpreadPct),
-      ("adc_hof_pairs_per_sec", adcHofPairsPerSec, adcHofSpreadPct),
-      ("adc_expr_pairs_per_sec", adcExprPairsPerSec, adcExprSpreadPct),
-      ("int8_dot_hof_pairs_per_sec", i8HofPairsPerSec, i8HofSpreadPct),
-      ("int8_dot_expr_pairs_per_sec", i8ExprPairsPerSec, i8ExprSpreadPct))
-    val serdeMetrics = serdeMetricRows.map { case (n, v, _) => n -> v }
-    val serdeDriftFlags: Seq[String] =
-      try {
-        prevBench.toSeq.flatMap { content =>
-          // strip the spread maps first: they repeat every metric NAME
-          // with its spread PCT as the value, and for metrics printed
-          // after the spread map a bare first-match would read the spread
-          // (e.g. 5.3) as the prior rate and flag phantom drift forever
-          val topLevel = content
-            .replaceAll("\"query_spread_pct\":\\{[^}]*\\}", "")
-            .replaceAll("\"serde_spread_pct\":\\{[^}]*\\}", "")
-          serdeMetrics.collect {
-            case (name, v) if v > 0 &&
-              ("\"" + name + "\":([0-9.]+)").r.findFirstMatchIn(topLevel)
-                .map(_.group(1).toDouble)
-                .exists(p => p > 0 && math.abs(v - p) / p > 0.20) => name
-          }
-        }
-      } catch { case _: Throwable => Seq.empty }
-
-    // end-of-run probes: contention that arrived mid-bench shows here even
-    // if the start probes were clean (and vice versa) — the run is flagged
-    // if ANY reading, single or parallel, stretched past its threshold
-    val calEndSec = calibrationSecs()
-    val calParEndSec = calibrationParallelSecs()
-    val contended =
-      math.max(calStartSec, calEndSec) > CalibrationRefSec * ContentionFactor ||
-        math.max(calParStartSec, calParEndSec) >
-          calibrationParRefSec * ParContentionFactor
-    // the probes sample the START and END instants only; external load
-    // that ramps mid-run slips between them (observed live: clean probes,
-    // yet every query from the 13th on 1.5–4× slower and 13/23 medians
-    // drifted > 20% vs the clean baseline, all the same direction). A
-    // third of the suite moving > 20% in one round is environment, not a
-    // plausible code change — treat mass drift as suspected contention,
-    // which (like the probe flag) triggers the one fresh-session retry.
-    // denominator is the COMPARABLE set, not the whole headline: against
-    // a partial baseline (older BENCH file from a smaller suite) a
-    // headline-sized threshold could never trip no matter how many of
-    // the comparable queries moved. Require a minimum comparable sample
-    // so a handful of queries can't trip it on noise.
-    // SLOWDOWNS ONLY (r16): contention's signature — including the live
-    // incident this trigger encodes — is same-direction mass SLOWDOWN;
-    // external load cannot make a third of the suite 20% FASTER (a
-    // faster-than-reference machine-hour would show in the calibration
-    // probes and the normalized columns instead). Counting improvements
-    // also deadlocks the baseline chain after a real optimization: the
-    // r16 record read 8 of its 13 movers as improvements (the r15
-    // session warm-up landing on its first non-contended day + the
-    // memoized ingest guard) and self-excluded on its own speedups —
-    // as would every later record, since flagged records never become
-    // the baseline the improvements would be measured against.
-    val massDrift = driftComparable >= 9 &&
-      driftSlowdowns.size * 3 >= driftComparable
-
-    // Calibration-normalized drift reads (r14 verdict #2). The r13/r14
-    // zero-diff natural experiment measured the noise floor: on
-    // byte-identical code, 6 query medians drifted >20% raw — and the
-    // machine-hour's single-thread calibration shifted 0.78 → 0.60 s
-    // (−22%). Dividing each record's medians by its own slowness factor
-    // (mean of start/end single-thread probes ÷ the committed idle
-    // reference) retroactively explains the CPU-bound side of that pair:
-    // d_ngram_near_dups −24.4% → −2.7%, d_incr_lsh −20.6% → +2.2%,
-    // q_salted_join −26.5% → −5.4%. The remaining raw flags were all
-    // sub-0.4 s fixed-overhead queries penalized by attempt-1's cold JVM
-    // (q1 +97%) — the session warm-up above addresses that class, since
-    // a global divisor can't (their cost doesn't track CPU speed).
-    // Both reads are published: raw for series continuity, normalized
-    // for adjudication; a query flagged on BOTH is a real candidate.
-    val slownessNow =
-      math.max(0.1, ((calStartSec + calEndSec) / 2.0) / CalibrationRefSec)
-    def parseSlowness(content: String): Double = {
-      def f(key: String): Option[Double] =
-        ("\"" + key + "\":([0-9.]+)").r.findFirstMatchIn(content)
-          .flatMap(_.group(1).toDoubleOption)
-      (f("calibration_start_sec"), f("calibration_end_sec"),
-        f("calibration_ref_sec")) match {
-        case (Some(s), Some(e), Some(r)) if r > 0 && s > 0 && e > 0 =>
-          math.max(0.1, ((s + e) / 2.0) / r)
-        case _ => 1.0 // pre-calibration record: compare raw
-      }
-    }
-    val normNow: Map[String, Double] =
-      results.collect { case (n, m, _) if m > 0 => n -> m / slownessNow }.toMap
-    val prevNorm: Map[String, Double] = prevBench.map { c =>
-      val s = parseSlowness(c)
-      parseQueryMedians(c).collect { case (n, v) if v > 0 => n -> v / s }
-    }.getOrElse(Map.empty)
-    val driftNormFlags: Seq[String] = normNow.collect {
-      case (n, v) if prevNorm.get(n).exists(p => p > 0 && math.abs(v - p) / p > 0.20) => n
-    }.toSeq.sorted
-    // same supersede-then-roll re-anchoring as the raw read, with the
-    // ledger's calibration-normalized floor
-    val bestNorm: Map[String, Double] = BenchDrift.anchorTimes(
-      cleanBaselines.flatMap { case (rnd, c) =>
-        val s = parseSlowness(c)
-        parseQueryMedians(c).toSeq.collect {
-          case (n, v) if v > 0 => (n, rnd, v / s) }
-      },
-      adjudications, _.floorNormSec)
-    // same flag rule as the raw read: >30% over the normalized best AND
-    // ≥0.1 s of normalized wall time
-    val driftVsBestNorm: Seq[(String, Double, Double)] = normNow.toSeq.collect {
-      case (n, v) if bestNorm.get(n).exists(b => b > 0 && (v - b) / b > 0.30 && v - b > 0.10) =>
-        (n, bestNorm(n), 100.0 * (v - bestNorm(n)) / bestNorm(n))
-    }.sortBy(_._1)
-    val overBestNormPct: Seq[(String, Double)] = normNow.toSeq.collect {
-      case (n, v) if bestNorm.get(n).exists(_ > 0) =>
-        n -> (100.0 * (v - bestNorm(n)) / bestNorm(n))
-    }.sortBy(_._1)
-
-    val qs = results.map { case (k, v, _) => "\"" + k + f"""\":$v%.4f""" }
-      .mkString("{", ",", "}")
-    val spreads = results.map { case (k, _, s) => "\"" + k + f"""\":$s%.1f""" }
-      .mkString("{", ",", "}")
-    // a contended machine shifts every median the same direction — those
-    // flags are environment, not regressions, so they are suppressed and
-    // the contended marker carries the signal instead
-    val drift = (if (contended) Seq.empty else driftFlags)
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val serdeSpreads = serdeMetricRows
-      .map { case (k, _, sp) => "\"" + k + f"""\":$sp%.1f""" }
-      .mkString("{", ",", "}")
-    // the JSON rate fields derive from the same table (split where the
-    // derived uuid_rows_per_sec_core / spread map / gate fields sit
-    // between them in the line)
-    def rateJson(names: String*): String = names.map { n =>
-      val v = serdeMetricRows.find(_._1 == n).get._2
-      "\"" + n + f"""\":$v%.0f"""
-    }.mkString(",")
-    val serdeRatesJson = rateJson("serde_rows_per_sec",
-      "serde_rows_per_sec_core", "serde_uuid_rows_per_sec_core",
-      "uuid_gen_rows_per_sec_core", "uuid_rows_per_sec")
-    val microRatesJson = rateJson("minhash_md5_docs_per_sec",
-      "minhash_xxh64_docs_per_sec", "rolling_fp_hof_docs_per_sec",
-      "rolling_fp_expr_docs_per_sec", "argmax_hof_vecs_per_sec",
-      "argmax_expr_vecs_per_sec", "residual_hof_vecs_per_sec",
-      "residual_expr_vecs_per_sec", "adc_hof_pairs_per_sec",
-      "adc_expr_pairs_per_sec", "int8_dot_hof_pairs_per_sec",
-      "int8_dot_expr_pairs_per_sec")
-    val serdeDrift = (if (contended) Seq.empty else serdeDriftFlags)
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = results.map(_._2).filter(_ >= 0).sum
-    // failed queries must be VISIBLE at the headline: their -1 medians
-    // drop out of `total`, so a crashing query otherwise reads as a
-    // round-over-round speedup with the only signal a -1 buried in the
-    // queries map
-    val failedQueries = results.filter(_._2 < 0).map(_._1)
-    // preserve the -1 failure sentinel on derived metrics (dividing -1 by
-    // cpus would print ≈ -0 and hide the failure)
-    val uuidPerCore = if (uuidRowsPerSec < 0) -1.0 else uuidRowsPerSec / cpusN
-    // gate comparison: BASELINE.md requires the full envelope chain to
-    // sustain ≥ ~90k rows/s/core; ratio < 1 means the gate failed
-    val gateRatio = if (serdeUuidPerCore < 0) -1.0 else serdeUuidPerCore / 90000.0
-    val recallJson = recalls
-      .map { case (k, v) => "\"" + k + f"""\":$v%.4f""" }
-      .mkString("{", ",", "}")
-    val slopesJson = scaleSlopes
-      .map { case (k, v, _) => "\"" + k + f"""\":$v%.3f""" }
-      .mkString("{", ",", "}")
-    // the 0.001→0.01 decade + per-op curvature (big − small exponent):
-    // ≈ 0 = straight power law across both decades; > 0 = the exponent
-    // grows with scale, which at these fixture sizes is USUALLY
-    // fixed-cost amortization (small decade suppressed toward 0) and
-    // only signals accelerating complexity when the big-segment level
-    // is itself ≥ linear — see the flag rationale at the probe site
-    val slopesSmallJson = scaleSlopes
-      .collect { case (k, _, Some(v)) => "\"" + k + f"""\":$v%.3f""" }
-      .mkString("{", ",", "}")
-    val curvatureJson = scaleSlopes
-      .collect { case (k, e, Some(es)) => "\"" + k + f"""\":${e - es}%.3f""" }
-      .mkString("{", ",", "}")
-    val slopeFlagsJson = scaleSlopeFlags
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val driftVsBestJson = (if (contended) Seq.empty else driftVsBest)
-      .map { case (n, b, pct) =>
-        "\"" + n + f"""\":{"best_sec":$b%.4f,"over_best_pct":$pct%.1f}""" }
-      .mkString("{", ",", "}")
-    val overBestJson = overBestPct
-      .map { case (n, pct) => "\"" + n + f"""\":$pct%.1f""" }
-      .mkString("{", ",", "}")
-    val qsNorm = normNow.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + f"""\":$v%.4f""" }
-      .mkString("{", ",", "}")
-    val driftNormJson = (if (contended) Seq.empty else driftNormFlags)
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val driftVsBestNormJson = (if (contended) Seq.empty else driftVsBestNorm)
-      .map { case (n, b, pct) =>
-        "\"" + n + f"""\":{"best_norm_sec":$b%.4f,"over_best_pct":$pct%.1f}""" }
-      .mkString("{", ",", "}")
-    val overBestNormJson = overBestNormPct
-      .map { case (n, pct) => "\"" + n + f"""\":$pct%.1f""" }
-      .mkString("{", ",", "}")
-    val failedJson = failedQueries.map(q => "\"" + q + "\"").mkString("[", ",", "]")
-    val driftWarningJson =
-      driftWarning.map(w => "\"" + w + "\"").getOrElse("null")
-    // self-describing record: which anchors this run's drift_vs_best
-    // compared against were ledger-re-dated, and on what evidence
-    val adjJson = adjudications.toSeq.sortBy(_._1).map { case (n, a) =>
-      "\"" + n + f"""\":{"floor_sec":${a.floorSec}%.4f,"floor_norm_sec":${a.floorNormSec}%.4f,"supersedes_rounds_through":${a.round},"evidence":"${a.evidence}"}"""
-    }.mkString("{", ",", "}")
-    val json =
-      f"""{"metric":"total","value":$total%.4f,"unit":"sec","runs_per_query":$runsPerQuery,"queries":$qs,"query_spread_pct":$spreads,"drift_gt20pct_vs_prev":$drift,"drift_comparable":$driftComparable,"drift_vs_best":$driftVsBestJson,"over_best_pct":$overBestJson,"drift_vs_best_notes":"anchor = per-query min over prior CLEAN same-sf records, with probe-adjudicated machine-era ghosts re-dated by the committed bench_anchor_adjudications.jsonl ledger (records up to the entry's round contribute max(min, floor); later records roll the anchor down as usual) — a flag is actionable as-is: same-era creep, no A/B probe needed","anchor_adjudications":$adjJson,"drift_warning":$driftWarningJson,"calibration_slowness":$slownessNow%.3f,"queries_normalized":$qsNorm,"drift_gt20pct_vs_prev_normalized":$driftNormJson,"drift_vs_best_normalized":$driftVsBestNormJson,"over_best_pct_normalized":$overBestNormJson,"normalization_notes":"normalized = median / (record's mean single-thread calibration / calibration_ref_sec), applied to THIS record and every baseline record alike (pre-calibration records compare raw). Validated on the r13/r14 zero-diff pair: it explains the CPU-bound drift class; sub-0.4 s fixed-overhead queries do not track CPU speed and are instead covered by the session warm-up. A query flagged on BOTH raw and normalized reads is a real adjudication candidate","failed_queries":$failedJson,$serdeRatesJson,"uuid_rows_per_sec_core":$uuidPerCore%.0f,"serde_spread_pct":$serdeSpreads,"serde_drift_gt20pct_vs_prev":$serdeDrift,"baseline_gate_rows_per_sec_core":90000,"serde_uuid_vs_gate":$gateRatio%.2f,$microRatesJson,"recall_at_k":$recallK,"recall":$recallJson,"recall_notes":"recall_diag_* are diagnostic curve points, not shipped configs; shipped rerank paths are recall_ivfpq_res_rerank and recall_opq_ivfpq_res_rerank. recall_ivfpq_rerank was renamed recall_diag_ivfpq_rerank in r11 (dual-keyed r12, old key dropped r13) — longitudinal readers join the series there. recall_opq_m8k32_rerank < recall_pq_m8k32_rerank is expected on this near-isotropic fixture (rotation cannot help an isotropic spectrum; the 0.9 floor holds and the anisotropic gain is spec-pinned in CurationSpec)","scale_slope_exponents":$slopesJson,"scale_slope_exponents_small":$slopesSmallJson,"scale_slope_curvature":$curvatureJson,"scale_slope_flags":$slopeFlagsJson,"calibration_ref_sec":$CalibrationRefSec%.2f,"calibration_start_sec":$calStartSec%.3f,"calibration_end_sec":$calEndSec%.3f,"calibration_par_ref_sec":$calibrationParRefSec%.2f,"calibration_par_start_sec":$calParStartSec%.3f,"calibration_par_end_sec":$calParEndSec%.3f,"contended":$contended,"mass_drift_suspected":$massDrift,"sf":"$sfDir"}"""
-    // compact contract line — MUST stay well under the harness's ~2k-char
-    // stdout tail window (see [[publish]]); everything here is either a
-    // driver-contract field or a headline number the judge compares
-    // against BASELINE.md. Diagnostics live in the full line only.
-    val compact =
-      f"""{"metric":"total","value":$total%.4f,"unit":"sec","runs_per_query":$runsPerQuery,"queries":$qs,"serde_rows_per_sec":$serdeRowsPerSec%.0f,"serde_uuid_rows_per_sec_core":$serdeUuidPerCore%.0f,"baseline_gate_rows_per_sec_core":90000,"serde_uuid_vs_gate":$gateRatio%.2f,"contended":$contended,"mass_drift_suspected":$massDrift,"details":"bench_details_${new java.io.File(sfDir).getName}.json","sf":"$sfDir"}"""
     spark.stop()
-    (json, compact, contended || massDrift)
+
+    val sfName = new java.io.File(sfDir).getName
+    val detailsFile = s"bench_details_$sfName.json"
+    val d = drift(results, committed(detailsFile))
+    d.warning.foreach(w => System.err.println(s"[bench] WARNING: $w"))
+
+    def obj(kv: Seq[(String, String)]): String =
+      kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    def arr(xs: Seq[String]): String = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val gateRatio = if (serdeUuidPerCore < 0) -1.0 else serdeUuidPerCore / 90000.0
+    val fields: Seq[(String, String)] = Seq(
+      "metric" -> "\"total\"",
+      "value" -> f"${d.total}%.4f",
+      "unit" -> "\"sec\"",
+      "runs_per_query" -> "3",
+      "queries" -> obj(results.map { case (k, m) => k -> f"${m.median}%.4f" }),
+      "query_spread_pct" -> obj(results.map { case (k, m) => k -> f"${m.spreadPct}%.1f" }),
+      "work" -> obj(results.map { case (k, m) => k -> m.work.toJson }),
+      "failed_queries" -> arr(d.failed),
+      "drift_baseline" -> ("\"HEAD:" + detailsFile + "\""),
+      "drift_flags" -> arr(d.flagged),
+      "drift_comparable" -> d.comparable.toString,
+      "drift_warning" -> d.warning.map("\"" + _ + "\"").getOrElse("null"),
+      "serde_uuid_rows_per_sec_core" -> f"$serdeUuidPerCore%.0f",
+      "baseline_gate_rows_per_sec_core" -> "90000",
+      "serde_uuid_vs_gate" -> f"$gateRatio%.2f") ++
+      rateRows.map { case (k, _, r) => k -> f"$r%.0f" } ++ Seq(
+      "rate_spread_pct" -> obj(rateRows.map { case (k, m, _) => k -> f"${m.spreadPct}%.1f" }),
+      "recall_at_k" -> recallK.toString,
+      "recall" -> obj(recalls.map { case (k, v) => k -> f"$v%.4f" }),
+      "cpus" -> cpusN.toString,
+      "sf" -> ("\"" + sfDir + "\""))
+    val json = obj(fields)
+    if (only.isEmpty) {
+      val w = new java.io.PrintWriter(detailsFile)
+      try w.println(json) finally w.close()
+    }
+    println(json)
+  }
+
+  /** ANN retrieval quality: recall@k of every approximate search path
+    * against the exact brute-force neighborhood of the same 5 probes.
+    * The oracles pin replay determinism; this shows how much of the true
+    * neighborhood each approximation finds. `recall_diag_*` keys are
+    * deliberately underpowered curve points (m=4 codes feeding a rerank
+    * pool, JL d=16), not shipped defaults; `opq_vs_pq_distortion_*` is the
+    * OPQ/PQ quantization-error ratio (< 1 = the rotation helped). On this
+    * near-isotropic fixture a rotation cannot help much, so OPQ may read
+    * at or below plain PQ; the anisotropic gain is pinned in CurationSpec. */
+  private def recallBlock(spark: SparkSession, sfDir: String, recallK: Int): Seq[(String, Double)] = {
+    import org.apache.spark.sql.functions._
+    import graft.operators.Similarity
+    val vecs = Tables.embeddings(spark, sfDir)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      .cache()
+    try {
+      val probes = vecs.filter(col("vec_id") < 5)
+        .select(col("vec_id").as("probe_id"), col("v").as("p"))
+      val exact = Similarity.bruteForceTopK(vecs, probes, k = recallK)
+        .select(col("probe_id"), col("vec_id"), col("rank")).cache()
+      exact.count()
+      def recall(approx: DataFrame): Double = Similarity.recallAtK(approx, exact, recallK)
+      def reranked(approx: DataFrame): Double =
+        recall(Similarity.rerankExact(approx, probes, vecs, k = recallK))
+      val sample = vecs.filter(col("vec_id") % 4 === 0)
+      val cents = Similarity.kmeansFit(vecs, k = 8, iters = 2)
+      // nprobe = 8 (every cluster) searches everything and must read 1
+      val ivf = Seq(1, 2, 4, 8).map { np =>
+        s"recall_ivf_nprobe$np" -> recall(Similarity.ivfTopK(vecs, cents, probes,
+          k = recallK, nprobe = np, roundTo = 4, reliable = false))
+      }
+      val cb = Similarity.pqFit(sample, m = 4, subDim = 16, ksub = 8, iters = 2)
+      val enc = Similarity.pqEncode(vecs, cb, m = 4, subDim = 16)
+      // ADC fetches a wide pool (400) before the exact re-rank: on
+      // isotropic random fixtures the compressed screen is weak
+      val pqR = recall(Similarity.pqTopK(enc, probes, cb, k = recallK, m = 4, subDim = 16))
+      val pqRerankR = recall(Similarity.pqTopKRerank(enc, probes, cb, vecs,
+        k = recallK, m = 4, subDim = 16, fetchK = 400))
+      // production-shaped codebooks: m=8, ksub=32 → 40-bit codes
+      val cb2 = Similarity.pqFit(sample, m = 8, subDim = 8, ksub = 32, iters = 2)
+      val enc2 = Similarity.pqEncode(vecs, cb2, m = 8, subDim = 8)
+      val pq2R = recall(Similarity.pqTopK(enc2, probes, cb2, k = recallK, m = 8, subDim = 8))
+      val pq2RerankR = recall(Similarity.pqTopKRerank(enc2, probes, cb2, vecs,
+        k = recallK, m = 8, subDim = 8, fetchK = 400))
+      // OPQ (trained rotation before PQ) at the same two code budgets
+      val (orot4, ocb4) = Similarity.opqFit(sample, m = 4, subDim = 16,
+        ksub = 8, pqIters = 2, opqIters = 4)
+      val opq4R = recall(Similarity.opqTopK(
+        Similarity.opqEncode(vecs, orot4, ocb4, m = 4, subDim = 16),
+        probes, orot4, ocb4, k = recallK, m = 4, subDim = 16))
+      val (orot8, ocb8) = Similarity.opqFit(sample, m = 8, subDim = 8,
+        ksub = 32, pqIters = 2, opqIters = 4)
+      val oenc8 = Similarity.opqEncode(vecs, orot8, ocb8, m = 8, subDim = 8)
+      val opq8R = recall(Similarity.opqTopK(oenc8, probes, orot8, ocb8,
+        k = recallK, m = 8, subDim = 8))
+      val opq8RerankR = reranked(Similarity.opqTopK(oenc8, probes, orot8, ocb8,
+        k = 400, m = 8, subDim = 8))
+      val distRatio4 = Similarity.pqDistortion(Similarity.rotate(vecs, "v", orot4), ocb4, 4, 16) /
+        Similarity.pqDistortion(vecs, cb, 4, 16)
+      val distRatio8 = Similarity.pqDistortion(Similarity.rotate(vecs, "v", orot8), ocb8, 8, 8) /
+        Similarity.pqDistortion(vecs, cb2, 8, 8)
+      val quant = Similarity.quantizeInt8(vecs)
+      val qprobes = quant.filter(col("vec_id") < 5)
+        .select(col("vec_id").as("probe_id"), col("q").as("pq"))
+      val i8R = recall(Similarity.int8TopK(quant, qprobes, k = recallK))
+      // IVFADC: coarse route + in-cluster ADC, raw-vector codes
+      val index = Similarity.pqIndex(vecs, cents, cb, m = 4, subDim = 16)
+      val ivfpq = Seq(1, 2, 4).map { np =>
+        s"recall_ivfpq_nprobe$np" -> recall(Similarity.ivfPqTopK(index, cents, probes, cb,
+          k = recallK, nprobe = np, m = 4, subDim = 16))
+      }
+      val ivfpqRerankR = reranked(Similarity.ivfPqTopK(index, cents, probes, cb,
+        k = 400, nprobe = 4, m = 4, subDim = 16))
+      // residual IVFADC (Jégou §IV-A): the same code budget spent on
+      // within-cell offsets; this and the OPQ-composed path are the
+      // shipped rerank configs
+      val rcb = Similarity.pqFitResidual(sample, cents, m = 4, subDim = 16, ksub = 8, iters = 2)
+      val rindex = Similarity.pqIndexResidual(vecs, cents, rcb, m = 4, subDim = 16)
+      val ivfpqRes = Seq(1, 2, 4).map { np =>
+        s"recall_ivfpq_res_nprobe$np" -> recall(Similarity.ivfPqResidualTopK(rindex, cents,
+          probes, rcb, k = recallK, nprobe = np, m = 4, subDim = 16))
+      }
+      val ivfpqResRerankR = reranked(Similarity.ivfPqResidualTopK(rindex, cents, probes, rcb,
+        k = 400, nprobe = 4, m = 4, subDim = 16))
+      // OPQ ∘ residual IVFADC with the m=4 rotation; the exact re-rank
+      // reads the original vectors (a rotation preserves cosine)
+      val rvecs = Similarity.rotate(vecs, "v", orot4).cache()
+      val (opqResRawR, opqResRerankR) = try {
+        val rprobes = Similarity.rotate(probes, "p", orot4)
+        val rcents = Similarity.kmeansFit(rvecs, k = 8, iters = 2)
+        val orcb = Similarity.pqFitResidual(rvecs.filter(col("vec_id") % 4 === 0), rcents,
+          m = 4, subDim = 16, ksub = 8, iters = 2)
+        val orindex = Similarity.pqIndexResidual(rvecs, rcents, orcb, m = 4, subDim = 16)
+        (recall(Similarity.ivfPqResidualTopK(orindex, rcents, rprobes, orcb,
+          k = recallK, nprobe = 4, m = 4, subDim = 16)),
+          reranked(Similarity.ivfPqResidualTopK(orindex, rcents, rprobes, orcb,
+            k = 400, nprobe = 4, m = 4, subDim = 16)))
+      } finally rvecs.unpersist(blocking = false)
+      // JL random projection 64→16 and 64→32, raw and fetch-400 re-ranked
+      def jl(outDim: Int, k: Int) =
+        Similarity.jlTopK(vecs, probes, inDim = 64, outDim = outDim, seed = "r8", k = k)
+      val out = ivf ++ ivfpq ++ ivfpqRes ++ Seq(
+        "recall_pq_topk" -> pqR,
+        "recall_diag_pq_m4_rerank" -> pqRerankR,
+        "recall_pq_m8k32_topk" -> pq2R,
+        "recall_pq_m8k32_rerank" -> pq2RerankR,
+        "recall_opq_topk" -> opq4R,
+        "recall_opq_m8k32_topk" -> opq8R,
+        "recall_opq_m8k32_rerank" -> opq8RerankR,
+        "recall_opq_ivfpq_res_nprobe4" -> opqResRawR,
+        "recall_opq_ivfpq_res_rerank" -> opqResRerankR,
+        "opq_vs_pq_distortion_m4" -> distRatio4,
+        "opq_vs_pq_distortion_m8k32" -> distRatio8,
+        "recall_int8_topk" -> i8R,
+        "recall_diag_ivfpq_rerank" -> ivfpqRerankR,
+        "recall_ivfpq_res_rerank" -> ivfpqResRerankR,
+        "recall_diag_jl_d16_topk" -> recall(jl(16, recallK)),
+        "recall_diag_jl_d16_rerank" -> reranked(jl(16, 400)),
+        "recall_jl_d32_topk" -> recall(jl(32, recallK)),
+        "recall_jl_d32_rerank" -> reranked(jl(32, 400)))
+      exact.unpersist(blocking = false)
+      out
+    } finally vecs.unpersist(blocking = false)
   }
 }

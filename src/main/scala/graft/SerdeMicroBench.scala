@@ -5,58 +5,18 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.Envelope
-import graft.functions.{AvroCodec, DecodePayload, PackEnvelope, UnpackEnvelope}
+import graft.functions.AvroCodec
 import graft.schema.AvroConversions
 
-/** Single-threaded microbenchmark of the envelope serde stages, no Spark
-  * job machinery — isolates codec cost to guide optimization. */
+/** Single-threaded microbenchmark of the envelope codec, no Spark job
+  * machinery: the per-core ceiling [[Bench]] holds to the BASELINE.md
+  * ≥90k rows/s/core gate. */
 object SerdeMicroBench {
 
-  /** Full-chain (encode → pack → unpack → decode) single-thread throughput
-    * in rows/s — the per-core codec ceiling, comparable to the reference's
-    * single-process message numbers (BASELINE.md). */
-  def chainRowsPerSecCore(n: Int): Double = {
-    val payloadJson = queries.EnvelopeOps.eventSchemaJson
-    val payloadSchema = AvroCodec.parse(payloadJson)
-    val payloadType = AvroConversions.toStructType(payloadSchema)
-    val envelopeSchema = AvroCodec.parse(Envelope.avroSchemaJson)
-    val uuid = Array.fill[Byte](16)(7)
-    def once(): Unit = {
-      var i = 0
-      while (i < n) {
-        val payload = AvroCodec.encode(
-          AvroConversions.toAvro(
-            new GenericInternalRow(Array[Any](
-              i.toLong, (i % 150).toLong, UTF8String.fromString("click"), i * 0.5)),
-            payloadType, payloadSchema)
-            .asInstanceOf[org.apache.avro.generic.GenericRecord], payloadJson)
-        val framed = AvroCodec.frameBinary(AvroCodec.encode(
-          AvroConversions.toAvro(
-            new GenericInternalRow(Array[Any](
-              uuid, UTF8String.fromString("create"), 1, payload, null, null, null,
-              1700000000)),
-            Envelope.sparkType, envelopeSchema)
-            .asInstanceOf[org.apache.avro.generic.GenericRecord],
-          Envelope.avroSchemaJson))
-        val env = AvroConversions.toCatalyst(
-          AvroCodec.decode(AvroCodec.unframe(framed), Envelope.avroSchemaJson,
-            Envelope.avroSchemaJson), envelopeSchema).asInstanceOf[InternalRow]
-        AvroConversions.toCatalyst(
-          AvroCodec.decode(env.getBinary(3), payloadJson, payloadJson), payloadSchema)
-        i += 1
-      }
-    }
-    once() // warm-up: JIT
-    val t0 = System.nanoTime()
-    once()
-    n / ((System.nanoTime() - t0) / 1e9)
-  }
-
-  /** Same chain, but drawing a fresh uuid4 per message — the reference's
-    * "message instantiation with FastUUID" tier (~185k/s, message.py:193-198),
-    * vs [[chainRowsPerSecCore]]'s fixed-uuid "no uuid" tier (~730k/s).
-    * Decomposed so a serde regression and a uuid-cost regression are
-    * visible separately in the round-over-round bench. */
+  /** Full chain (encode → pack → unpack → decode) drawing a fresh uuid4
+    * per message — the reference's "message instantiation with FastUUID"
+    * tier (~185k/s, message.py:193-198). One untimed pass warms the JIT,
+    * then one timed pass of `n` rows; returns rows/s. */
   def chainWithUuidRowsPerSecCore(n: Int): Double = {
     val payloadJson = queries.EnvelopeOps.eventSchemaJson
     val payloadSchema = AvroCodec.parse(payloadJson)
@@ -93,91 +53,5 @@ object SerdeMicroBench {
     val t0 = System.nanoTime()
     once()
     n / ((System.nanoTime() - t0) / 1e9)
-  }
-
-  /** uuid4 generation alone, single thread (reference: _fast_uuid.py
-    * 385,845/s best). Complements the distributed uuid metric in
-    * [[Bench]] with a clean per-core number on the same generator the
-    * envelope path uses. */
-  def uuidRowsPerSecCore(n: Int): Double = {
-    val gen = org.apache.spark.sql.catalyst.util.RandomUUIDGenerator(42L)
-    def once(): Long = {
-      var i = 0
-      var acc = 0L
-      while (i < n) {
-        acc += graft.functions.Uuid4Binary.toBytes(gen.getNextUUID())(0)
-        i += 1
-      }
-      acc
-    }
-    once() // warm-up: JIT
-    val t0 = System.nanoTime()
-    val sink = once()
-    val secs = (System.nanoTime() - t0) / 1e9
-    if (sink == Long.MinValue) println("") // keep the loop un-eliminable
-    n / secs
-  }
-  def main(args: Array[String]): Unit = {
-    val n = args.headOption.map(_.toInt).getOrElse(500000)
-    val payloadJson = queries.EnvelopeOps.eventSchemaJson
-    val payloadSchema = AvroCodec.parse(payloadJson)
-    val payloadType = AvroConversions.toStructType(payloadSchema)
-    val envelopeSchema = AvroCodec.parse(Envelope.avroSchemaJson)
-
-    def mkPayloadRow(i: Int): InternalRow = new GenericInternalRow(Array[Any](
-      i.toLong, (i % 150).toLong, UTF8String.fromString("click"), i * 0.5))
-
-    def time(label: String)(f: => Unit): Unit = {
-      val t0 = System.nanoTime()
-      f
-      val secs = (System.nanoTime() - t0) / 1e9
-      println(f"$label%-28s ${n / secs}%,12.0f rows/s  (${secs}%.2f s)")
-    }
-
-    // stage 1: payload struct -> avro bytes
-    val rows = Array.tabulate(n)(mkPayloadRow)
-    var payloadBytes: Array[Array[Byte]] = null
-    time("encode_payload") {
-      payloadBytes = rows.map { r =>
-        AvroCodec.encode(
-          AvroConversions.toAvro(r, payloadType, payloadSchema)
-            .asInstanceOf[org.apache.avro.generic.GenericRecord], payloadJson)
-      }
-    }
-
-    // stage 2: envelope struct -> framed bytes
-    val uuid = Array.fill[Byte](16)(7)
-    def mkEnvRow(i: Int): InternalRow = new GenericInternalRow(Array[Any](
-      uuid, UTF8String.fromString("create"), 1, payloadBytes(i), null, null, null, 1700000000))
-    val envRows = Array.tabulate(n)(mkEnvRow)
-    var framed: Array[Array[Byte]] = null
-    time("pack_envelope") {
-      framed = envRows.map { r =>
-        AvroCodec.frameBinary(AvroCodec.encode(
-          AvroConversions.toAvro(r, Envelope.sparkType, envelopeSchema)
-            .asInstanceOf[org.apache.avro.generic.GenericRecord], Envelope.avroSchemaJson))
-      }
-    }
-
-    // stage 3: framed bytes -> envelope struct
-    var unpacked: Array[InternalRow] = null
-    time("unpack_envelope") {
-      unpacked = framed.map { f =>
-        val avro = AvroCodec.unframe(f)
-        AvroConversions.toCatalyst(
-          AvroCodec.decode(avro, Envelope.avroSchemaJson, Envelope.avroSchemaJson),
-          envelopeSchema).asInstanceOf[InternalRow]
-      }
-    }
-
-    // stage 4: payload bytes -> struct
-    time("decode_payload") {
-      var i = 0
-      while (i < n) {
-        AvroConversions.toCatalyst(
-          AvroCodec.decode(payloadBytes(i), payloadJson, payloadJson), payloadSchema)
-        i += 1
-      }
-    }
   }
 }

@@ -31,9 +31,9 @@ object Tables {
     * The NTZ→TimestampType cast below interprets wall-clock values in the
     * SESSION timezone (every NTZ→TZ path in Spark does), so the session tz is
     * pinned to UTC here rather than trusting the entry point to have done
-    * it — Verify/Bench/SparkTestBase all set it, but a library user's
-    * ad-hoc session in another zone would otherwise silently shift every
-    * ts by the zone offset.
+    * it: a session in another zone would otherwise silently shift every ts
+    * by the zone offset. Both confs are set on the caller's session, so
+    * they stay in effect for everything that session runs afterwards.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}

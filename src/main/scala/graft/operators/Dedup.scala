@@ -414,10 +414,8 @@ object Dedup {
     * parallelism (scale-adaptive conf, not a constant) because an
     * explicit count keeps AQE from coalescing the one-off layout
     * shuffle into a partitioning the loop's EnsureRequirements-inserted
-    * labels-side exchanges couldn't match. Package-private so OptProbe's
-    * ccplan evidence probe provably measures the SHIPPED layout. Callers
-    * own the unpersist. */
-  private[graft] def ccEdgeLayout(pairs: DataFrame): DataFrame = {
+    * labels-side exchanges couldn't match. Callers own the unpersist. */
+  private def ccEdgeLayout(pairs: DataFrame): DataFrame = {
     val nParts = pairs.sparkSession.sessionState.conf.numShufflePartitions
     pairs
       .select(explode(array(
@@ -661,9 +659,9 @@ object Dedup {
     * evidence): a mass common-affix key distribution (serial codes
     * "ITEM-00001"…, same length, shared segments) lands every key in ONE
     * segment block, and the candidate join is quadratic within a block —
-    * 29× the uniform-key runtime on a 20k-key synthetic (OptProbe
-    * `fuzzy`). An adaptive hot-block salt (census → per-block sub-
-    * buckets → probe replication, explicit pinned repartition so AQE
+    * 29× the uniform-key runtime on a 20k-key synthetic. An adaptive
+    * hot-block salt (census → per-block sub-buckets → probe
+    * replication, explicit pinned repartition so AQE
     * cannot re-coalesce the tiny pre-blowup inputs) was implemented and
     * measured NET-NEGATIVE on BOTH fixtures: +~60% on uniform keys (the
     * census aggregate + broadcast joins) and 4.4× WORSE on the skewed
