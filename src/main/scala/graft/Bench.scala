@@ -38,7 +38,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    tree, which every run overwrites);
   *  - the Spark envelope round-trip rate and the single-thread uuid4
   *    codec chain against the BASELINE.md ≥90k rows/s/core gate;
-  *  - portable (HOF) vs native rates for six kernel expressions;
+  *  - portable (HOF) vs native rates for seven kernel expressions;
   *  - recall@10 of every approximate search path against exact search.
   *
   * SPARK_GRAFT_BENCH_ONLY=a,b times only the named headline keys and
@@ -349,6 +349,22 @@ object Bench {
         (pairs, pairs.count().toDouble,
           Seq(adist(graft.operators.Similarity.pqAdistHof(cbs, m)),
             adist(graft.operators.Similarity.pqAdist(cbs, m))))
+      },
+      // PQ ADC distance table at the queries' shape (m=4, ksub=8,
+      // subDim=16; 400k synthetic probes): the 512-leaf element_at tree
+      // vs PqDistTable. Rates are per probe.
+      rates("dist_table_hof_probes_per_sec", "dist_table_expr_probes_per_sec") {
+        val (m, ksub, subDim) = (4, 8, 16)
+        val cbs = (0 until m).map(j => j -> Array.tabulate(ksub)(c =>
+          (c, Seq.tabulate(subDim)(i => ((j * 31 + c * 7 + i * 3) % 19 - 9) / 10.0)))).toMap
+        val probes = spark.range(400000L).toDF("id")
+          .select(transform(sequence(lit(1), lit(m * subDim)),
+            i => (pmod(xxhash64(col("id") * 64 + i), lit(2001L)) - 1000L) / 1000.0).as("p"))
+          .repartition(cpusN).cache()
+        (probes, probes.count().toDouble,
+          Seq(probes.select(graft.operators.Similarity.distTableHof(cbs, m, subDim)),
+            probes.select(graft.functions.PqDistTable.pq_dist_table(col("p"),
+              (0 until m).map(j => cbs(j).map(_._2.toArray)).toArray, subDim))))
       },
       // int8 quantized dot (dim 64, 4M synthetic pairs): zip_with/aggregate
       // fold vs Int8Dot

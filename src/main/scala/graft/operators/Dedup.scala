@@ -414,7 +414,12 @@ object Dedup {
     * parallelism (scale-adaptive conf, not a constant) because an
     * explicit count keeps AQE from coalescing the one-off layout
     * shuffle into a partitioning the loop's EnsureRequirements-inserted
-    * labels-side exchanges couldn't match. Callers own the unpersist. */
+    * labels-side exchanges couldn't match. The trade: AQE can split a
+    * skewed shuffle input but not a cached partition, so pinning the
+    * edges disables skew-join splitting for every per-round join — a
+    * hub node's whole edge list stays in one task each round, the first
+    * place to look if hub-heavy graphs regress at scale. Callers own
+    * the unpersist. */
   private def ccEdgeLayout(pairs: DataFrame): DataFrame = {
     val nParts = pairs.sparkSession.sessionState.conf.numShufflePartitions
     pairs

@@ -588,7 +588,7 @@ object Similarity {
     * L2 between the probe's sub-vector and each codebook centroid
     * (m·ksub doubles — computed once per probe, broadcast with it); a
     * candidate's approximate distance is the sum of its m table lookups —
-    * m element_at's per (probe, vector) pair instead of dim multiply-adds,
+    * m lookups per (probe, vector) pair instead of dim multiply-adds,
     * and the corpus side carries only (vec_id, codes), never vectors.
     * Ranking uses the map-side group-limited top-k (ascending distance, ties to
     * the lower vec_id). The final sum re-rounds to 6 dp so both engines
@@ -613,13 +613,29 @@ object Similarity {
     * squared L2 between the probe's sub-vector and each codebook
     * centroid (m·ksub doubles, computed once per probe and broadcast
     * with it). Probes shorter than m·subDim are dropped up front — their
-    * element_at's would null out the table, adist would be null for
-    * EVERY candidate, and ascending order (NULLS FIRST) would rank the
-    * null rows as the top-k. */
+    * tables would carry null rows, adist would be null for EVERY
+    * candidate, and ascending order (NULLS FIRST) would rank the null
+    * rows as the top-k.
+    *
+    * The table itself is the native [[graft.functions.PqDistTable]]
+    * expression: the expression-built twin ([[distTableHof]], kept for
+    * the parity spec) is m·ksub·subDim `element_at`/literal leaves —
+    * 512 at the queries' m=4/ksub=8/subDim=16 — that Catalyst analyses
+    * and optimizes on every build and AQE re-optimizes at every query
+    * stage; PqDistTable carries the codebooks on one node. */
   private def probesWithDistTable(probes: DataFrame,
                                   cbs: Map[Int, Array[(Int, Seq[Double])]],
-                                  m: Int, subDim: Int): DataFrame = {
-    val tblCol = array((0 until m).map { j =>
+                                  m: Int, subDim: Int): DataFrame =
+    probes.filter(size(col("p")) >= m * subDim)
+      .withColumn("__tbl", graft.functions.PqDistTable.pq_dist_table(col("p"),
+        (0 until m).map(j => cbs(j).map(_._2.toArray)).toArray, subDim))
+
+  /** The column-expression distance-table twin — bit-identical contract
+    * to [[probesWithDistTable]]'s table (FunctionsSpec pins the parity
+    * on raw bits, NaN/±Inf/nulls included). */
+  private[graft] def distTableHof(cbs: Map[Int, Array[(Int, Seq[Double])]],
+                                  m: Int, subDim: Int): Column =
+    array((0 until m).map { j =>
       array(cbs(j).map { case (_, cvec) =>
         val d2 = cvec.indices.map { i =>
           val diff = element_at(col("p"), j * subDim + i + 1) - lit(cvec(i))
@@ -628,9 +644,6 @@ object Similarity {
         round(d2, 6)
       }.toIndexedSeq: _*)
     }.toIndexedSeq: _*)
-    probes.filter(size(col("p")) >= m * subDim)
-      .withColumn("__tbl", tblCol)
-  }
 
   // code -> table position (1-based); by construction positions follow
   // ascending cluster id, so a code always resolves unless its cluster

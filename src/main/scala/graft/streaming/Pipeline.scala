@@ -304,7 +304,8 @@ object Pipeline {
     * TRUNCATED lineage — on a real cluster an executor loss mid-query
     * makes the lost partitions unrecomputable and kills the job. At
     * 100 TB set the session's checkpoint dir (`sc.setCheckpointDir`, an
-    * HDFS/object-store path) and pass `reliable = true` for a
+    * HDFS/object-store path — required: without one `reliable = true`
+    * fails up front) and pass `reliable = true` for a
     * fault-tolerant reliable checkpoint, mirroring
     * [[graft.operators.Dedup.connectedComponents]]'s flag. The reliable
     * path materializes EAGERLY through a transient cache: a bare
@@ -321,6 +322,11 @@ object Pipeline {
   private def sharedDecodePass(decoded: DataFrame, reliable: Boolean): DataFrame =
     if (decoded.isStreaming) decoded
     else if (reliable) {
+      // fail before the persist, naming the fix, instead of with Spark's
+      // own error from inside the checkpoint job
+      require(decoded.sparkSession.sparkContext.getCheckpointDir.isDefined,
+        "reliable = true checkpoints the shared decode pass: set the " +
+          "session's checkpoint dir first (sc.setCheckpointDir)")
       val pinned = decoded.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try pinned.checkpoint()

@@ -89,7 +89,11 @@ object StreamingCdc {
     *    the EMPTY frame. The fallback must not leak deliberately
     *    unpublished snapshots.
     * The pointer open races the writer's delete+rename; a vanishing
-    * file reads as mid-swap, never as a reader crash. */
+    * file reads as mid-swap, never as a reader crash.
+    *
+    * The snapshot is always read with the caller's `schema`, exactly as
+    * the empty case is built: Parquet columns resolve by name, and no
+    * schema-inference job runs on every `processBatch`. */
   def currentState(spark: SparkSession, statePath: String,
                    schema: StructType): DataFrame = {
     val dir = new Path(statePath)
@@ -111,7 +115,7 @@ object StreamingCdc {
         committedVersions(fs, dir).lastOption.map(v => s"v_$v")
       case None => None // never published: the publish gate holds
     }
-    resolved.map(v => spark.read.parquet(new Path(dir, v).toString))
+    resolved.map(v => spark.read.schema(schema).parquet(new Path(dir, v).toString))
       .getOrElse(empty)
   }
 

@@ -528,6 +528,81 @@ class FunctionsSpec extends SparkTestBase {
       "unresolvable codes must drop to null, never rank")
   }
 
+  test("pq_dist_table is bit-identical to the element_at formulation (NaN, ±Inf, −0.0, nulls, HALF_UP)") {
+    import scala.jdk.CollectionConverters._
+    import graft.operators.Similarity
+    val (m, subDim, ksub) = (3, 4, 5)
+    val rnd = new scala.util.Random(47)
+    val specials = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, -0.0)
+    def value(): Double =
+      if (rnd.nextInt(12) == 0) specials(rnd.nextInt(specials.size))
+      else math.round((rnd.nextDouble() * 4 - 2) * 1e4) / 1e4
+    // every codebook carries an all-zero centroid (position 0), so a probe
+    // that is zero outside one dim scores exactly that dim's square
+    val cbs: Map[Int, Array[(Int, Seq[Double])]] = (0 until m).map { j =>
+      j -> ((0, Seq.fill(subDim)(0.0)) +: (1 until ksub).map(c =>
+        (c, Seq.fill(subDim)(if (rnd.nextInt(10) == 0) -0.0 else value())))).toArray
+    }.toMap
+    // values on the HALF_UP boundary: a dim d with d·d printing exactly
+    // `target` (7th decimal 5), found among the ulps next to √target
+    def onBoundary(target: Double): Double =
+      (-4 to 4).iterator.map(u => math.sqrt(target) + u * math.ulp(math.sqrt(target)))
+        .find(d => (d * d).toString == target.toString)
+        .getOrElse(fail(s"no double squares to $target"))
+    val boundary = Seq(0.1000005, 2.0000005, 5.0E-7).map { t =>
+      val p = Array.fill[java.lang.Double](m * subDim)(0.0)
+      p(subDim + 1) = onBoundary(t)
+      p.toSeq
+    }
+    val random = (0 until 60).map { i =>
+      val len = if (i % 7 == 0) m * subDim + 3 else m * subDim
+      Seq.fill[java.lang.Double](len)(value())
+    }
+    // a null element in subspace 1 (dims 4..7) only
+    val withNull = Seq.tabulate[java.lang.Double](m * subDim)(i => if (i == 6) null else i * 0.5)
+    val rows: Seq[(Long, Seq[java.lang.Double])] =
+      (boundary ++ random :+ withNull).zipWithIndex.map { case (p, i) => (i.toLong, p) } :+
+        ((-1L, null))
+    val schema = StructType.fromDDL("id BIGINT, p ARRAY<DOUBLE>")
+    val local = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (i, p) => org.apache.spark.sql.Row(i, p) }, 2),
+      schema)
+    val native = graft.functions.PqDistTable.pq_dist_table(col("p"),
+      (0 until m).map(j => cbs(j).map(_._2.toArray)).toArray, subDim)
+    def bits(t: Seq[Seq[java.lang.Double]]): Seq[Seq[Option[Long]]] =
+      t.map(_.map(d => Option(d).map(x => java.lang.Double.doubleToRawLongBits(x))))
+    def tables(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("id"), native.as("fast"), Similarity.distTableHof(cbs, m, subDim).as("ref"))
+        .collect().map { r =>
+          def tbl(i: Int) = Option(r.getAs[scala.collection.Seq[scala.collection.Seq[java.lang.Double]]](i))
+            .map(_.map(_.toSeq).toSeq)
+          r.getLong(0) -> (tbl(1), tbl(2).get)
+        }.toMap
+    // generated (whole-stage codegen over an RDD scan) and interpreted
+    // (the optimizer folds a projection over a local relation) paths
+    val local2 = spark.createDataFrame(rows.map { case (i, p) =>
+      org.apache.spark.sql.Row(i, p) }.asJava, schema)
+    for ((path, out) <- Seq("codegen" -> tables(local), "interpreted" -> tables(local2))) {
+      rows.collect { case (id, p) if p != null => id }.foreach { id =>
+        val (fast, ref) = out(id)
+        assert(fast.map(bits) == Some(bits(ref)), s"$path row $id: native $fast != HOF $ref")
+      }
+      // a null probe is a null table (the HOF twin builds all-null rows;
+      // probesWithDistTable's size filter keeps both out of the search)
+      assert(out(-1L)._1.isEmpty && out(-1L)._2.flatten.forall(_ == null), s"$path null p")
+      // the null element nulls exactly subspace 1's row
+      val nulled = out((boundary.size + random.size).toLong)._1.get
+      assert(nulled(1).forall(_ == null) && nulled(0).forall(_ != null) &&
+        nulled(2).forall(_ != null), s"$path null element: $nulled")
+      // the boundary entries round half up at the 7th decimal
+      assert(Seq(0L, 1L, 2L).map(id => out(id)._1.get(1)(0).doubleValue) ==
+        Seq(0.100001, 2.000001, 1.0E-6), s"$path HALF_UP boundary")
+    }
+    // the sweep really exercised the special values
+    val flat = tables(local).values.flatMap(_._1).flatten.flatten.filter(_ != null).map(_.doubleValue)
+    assert(flat.exists(_.isNaN) && flat.exists(_.isPosInfinity), "sweep lacks NaN/Inf entries")
+  }
+
   test("centroid_residual matches the zip_with formulation; degenerates null the row") {
     import spark.implicits._
     import graft.operators.Similarity

@@ -386,6 +386,29 @@ class MigrationAndCatalogSpec extends SparkTestBase {
     }
   }
 
+  test("dead-letter split: reliable=true without a checkpoint dir fails up front, naming sc.setCheckpointDir") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val reg = new SchemaRegistry
+    val entry = reg.registerSchema("s", "ev", graft.queries.EnvelopeOps.eventSchemaJson)
+    val transport = Seq((1L, 10L, "click", 1.5))
+      .toDF("event_id", "user_id", "event_type", "value")
+      .select(graft.streaming.Pipeline.envelopeFor(
+        struct($"event_id", $"user_id", $"event_type", $"value"), "create", entry,
+        lit(1700000000L), unhex(md5($"event_id".cast("string")))).as("value"))
+    val sc = spark.sparkContext
+    val prevDir = sc.getCheckpointDir
+    sc.setCheckpointDir(null)
+    try {
+      val e = intercept[IllegalArgumentException] {
+        graft.streaming.Pipeline.consumeWithDeadLetters(
+          transport, reg, entry.schemaId, reliable = true)
+      }
+      assert(e.getMessage.contains("sc.setCheckpointDir"),
+        s"the error must name the fix: ${e.getMessage}")
+    } finally sc.setCheckpointDir(prevDir.orNull)
+  }
+
   test("heartbeats fan out per topic as REAL enveloped transport rows") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col

@@ -303,6 +303,18 @@ class PlanSpec extends SparkTestBase {
       s"the per-probe distance tables must broadcast:\n$p")
   }
 
+  test("sim_ivfpq_res_topk: the probe distance table is one pq_dist_table node, never an element_at tree") {
+    val opt = SparkEntry.queries("sim_ivfpq_res_topk")(spark, dir)
+      .queryExecution.optimizedPlan.toString
+    assert(opt.contains("pq_dist_table("),
+      s"the distance table must plan as the native expression:\n$opt")
+    // the column-expression table was m·ksub·subDim element_at leaves over
+    // the probe vector; the query has no other element_at, so none may
+    // come back
+    assert(!opt.contains("element_at("),
+      s"element_at over the probe vector in the optimized plan:\n$opt")
+  }
+
   test("sim_opq_topk: rotated vectors never shuffle — only codes; rotation fuses into the scan-side projection") {
     val p = planOf("sim_opq_topk")
     // the rotation is a MatVec literal applied in the same projection as
