@@ -457,7 +457,7 @@ object Bench {
       // nprobe = 8 (every cluster) searches everything and must read 1
       val ivf = Seq(1, 2, 4, 8).map { np =>
         s"recall_ivf_nprobe$np" -> recall(Similarity.ivfTopK(vecs, cents, probes,
-          k = recallK, nprobe = np, roundTo = 4, reliable = false))
+          k = recallK, nprobe = np, roundTo = 4))
       }
       val cb = Similarity.pqFit(sample, m = 4, subDim = 16, ksub = 8, iters = 2)
       val enc = Similarity.pqEncode(vecs, cb, m = 4, subDim = 16)

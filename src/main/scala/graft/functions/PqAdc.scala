@@ -29,10 +29,11 @@ import org.apache.spark.sql.types._
   * sim_pq_rerank DuckDB oracles replay the same sums): terms accumulate
   * left to right in subspace order and the sum re-rounds to 6 dp exactly
   * as Spark's `round` does for doubles
-  * (`BigDecimal.valueOf(x).setScale(6, HALF_UP)`). Null parity: a null
-  * codes/table array, a codes array shorter than m, a null code element,
-  * a code that resolves to no table position (stale codebook), or a
-  * missing/null table entry all yield null — the same cases where the
+  * (`BigDecimal.valueOf(x).setScale(6, HALF_UP)`, NaN/±Inf passed
+  * through). Null parity: a null codes/table array, a codes array
+  * shorter than m, a null code element, a code that resolves to no
+  * table position (stale codebook), or a missing/null table entry all
+  * yield null — the same cases where the
   * expression form's `element_at`/`nullif(array_position, 0)` chain goes
   * null — so `topKPerProbeBy`'s null-score filter drops the candidate
   * identically.
@@ -103,8 +104,10 @@ case class PqAdc(left: Expression, right: Expression,
       s += row.getDouble(pos)
       j += 1
     }
-    java.lang.Double.valueOf(java.math.BigDecimal.valueOf(s)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue())
+    java.lang.Double.valueOf(
+      if (java.lang.Double.isNaN(s) || java.lang.Double.isInfinite(s)) s
+      else java.math.BigDecimal.valueOf(s)
+        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue())
   }
 
   override protected def withNewChildrenInternal(newLeft: Expression,

@@ -369,21 +369,16 @@ object Dedup {
     * rows; checkpointing truncates the growing lineage so round N doesn't
     * re-run rounds 1..N-1.
     *
-    * `reliable` governs the LOOP's per-round label checkpoints (the
-    * growing lineage): `reliable = false` uses `localCheckpoint`
-    * (executor-local blocks: fastest, but an executor loss
-    * mid-computation kills the job because the truncated lineage can't
-    * recompute). On a cluster, set the session's checkpoint dir
-    * (`sc.setCheckpointDir`, an HDFS/object-store path) and pass
-    * `reliable = true` for fault-tolerant checkpoints. The edge frame is
-    * not checkpointed in either mode — it persists with FULL lineage
-    * (recoverable by recompute in both modes), pre-partitioned on the
-    * loop's join key; see the layout note in the body.
+    * The per-round label cuts go through [[Checkpoint.cut]]: lazy and
+    * executor-local by default, reliable and materialized at composition
+    * time when the session has a checkpoint dir. The edge frame is never
+    * checkpointed — it persists with FULL lineage (recoverable by
+    * recompute), pre-partitioned on the loop's join key; see the layout
+    * note in the body.
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
-                          reliable: Boolean = false): DataFrame = {
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     val edges = ccEdgeLayout(pairs)
-    try connectedComponentsLoop(edges, maxIter, reliable)
+    try connectedComponentsLoop(edges, maxIter)
     // release the cache entry on EVERY exit — including the loud
     // non-convergence require and any mid-loop job failure — so nothing
     // persists across invocations (a fresh call re-caches from its own
@@ -432,18 +427,15 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
-  private def connectedComponentsLoop(edges: DataFrame, maxIter: Int,
-                                      reliable: Boolean): DataFrame = {
-    // lazy checkpoints + ONE action per round: the convergence check
-    // itself materializes the round's checkpoint blocks (Spark completes
-    // a lazily-checkpointed RDD's missing partitions at the end of the
-    // same action), so each round schedules one job instead of two —
-    // the eager-chk-then-isEmpty form doubled the loop's fixed job cost
-    // for zero extra information. Same math, same checkpointed lineage
-    // truncation, same loud non-convergence contract.
-    def lazyChk(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = false) else df.localCheckpoint(eager = false)
-    var labels = lazyChk(edges.select(col("a").as("id")).distinct()
+  private def connectedComponentsLoop(edges: DataFrame, maxIter: Int): DataFrame = {
+    // with the default (lazy) cut, ONE action per round: the convergence
+    // check itself materializes the round's checkpoint blocks (Spark
+    // completes a lazily-checkpointed RDD's missing partitions at the end
+    // of the same action), so each round schedules one job instead of
+    // two — the eager-chk-then-isEmpty form doubled the loop's fixed job
+    // cost for zero extra information. Same math, same checkpointed
+    // lineage truncation, same loud non-convergence contract.
+    var labels = Checkpoint.cut(edges.select(col("a").as("id")).distinct()
       .select(col("id"), col("id").as("rep")))
     var converged = false
     var iter = 0
@@ -451,7 +443,7 @@ object Dedup {
       val neighborMin = edges
         .join(labels.select(col("id").as("b"), col("rep").as("nrep")), "b")
         .groupBy(col("a").as("id")).agg(min(col("nrep")).as("nmin"))
-      val updated = lazyChk(labels
+      val updated = Checkpoint.cut(labels
         .join(neighborMin, Seq("id"), "left")
         .select(col("id"), col("rep"),
           least(col("rep"), coalesce(col("nmin"), col("rep"))).as("next")))

@@ -232,29 +232,17 @@ object Similarity {
     * code path is identical, only the input differs.
     *
     * Returns (vec_id, v, cluster) after `iters` assignment rounds.
-    *
-    * `reliable` is CONTRACT-FROZEN and ignored (forwarded to
-    * [[kmeansFit]], which documents the freeze): centroids live as
-    * driver arrays through the loop since r18 — there are no per-round
-    * checkpoints left to make fault-tolerant, and each round reads
-    * `vectors` directly, whose own persistence is the caller's contract.
     */
-  def kmeansLabels(vectors: DataFrame, k: Int, iters: Int,
-                   reliable: Boolean = false): DataFrame =
-    assignClusters(vectors, kmeansFit(vectors, k, iters, reliable))
+  def kmeansLabels(vectors: DataFrame, k: Int, iters: Int): DataFrame =
+    assignClusters(vectors, kmeansFit(vectors, k, iters))
 
   /** The fit half of the fit/assign split: train the deterministic Lloyd
     * loop of [[kmeansLabels]] on `sample` and return the centroid frame
     * (cluster, c:array<double>) the final assignment would use —
     * initial lowest-id seeds refined by `iters − 1` assign-and-recompute
     * rounds, centroids held as driver arrays through the loop (k·dim
-    * doubles — every consumer collects them anyway).
-    *
-    * `reliable` is CONTRACT-FROZEN and ignored: since r18 the loop keeps
-    * no mid-loop distributed state (no per-round checkpoints exist to
-    * make fault-tolerant — each round reads `sample` directly, whose own
-    * persistence is the caller's contract). The parameter stays only so
-    * existing callers keep compiling; it has no effect.
+    * doubles — every consumer collects them anyway). Each round reads
+    * `sample` directly, whose own persistence is the caller's contract.
     *
     * THIS is the 100 TB path: pass a bounded sample (`full.sample(…)` or
     * a hash-filtered slice) so the `iters` training scans touch only the
@@ -262,8 +250,7 @@ object Similarity {
     * over the pre-fit centroids. `kmeansFit(full, …)` reproduces the
     * combined [[kmeansLabels]] exactly (the oracle-gated path).
     */
-  def kmeansFit(sample: DataFrame, k: Int, iters: Int,
-                reliable: Boolean = false): DataFrame = {
+  def kmeansFit(sample: DataFrame, k: Int, iters: Int): DataFrame = {
     require(iters >= 1, "k-means needs at least one assignment round")
     val spark = sample.sparkSession
     import spark.implicits._
@@ -280,11 +267,7 @@ object Similarity {
     // instead of checkpointed — row-identical maths, job count
     // iters instead of 2·iters+consumer collects). The returned frame is
     // a LOCAL relation: downstream collectCents/broadcasts read it
-    // without launching jobs. `reliable` kept for signature stability —
-    // with no mid-loop checkpoints there is nothing left to make
-    // fault-tolerant (each round reads `sample` directly, whose own
-    // persistence is the caller's contract, unchanged).
-    val _ = reliable
+    // without launching jobs.
     val seedRows = sample.orderBy(col("vec_id")).limit(k)
       .select(col("v")).collect().map(_.getSeq[Double](0))
     var cents: Array[(Int, Seq[Double])] =
@@ -393,20 +376,16 @@ object Similarity {
     * contract is "centroids = means of the given labels", so every
     * search paid a second full-corpus pass + a dim-explode of every
     * vector just to recompute k rows the caller already held.) The
-    * labeled frame is checkpointed (same `reliable` contract as
-    * [[kmeansLabels]]) because the search reads it in the cluster-pruned
-    * scan and composition should not re-run the argmax per consumer. The
-    * checkpoint is LAZY (materializes with the first action, then
-    * consumers read the stored blocks) so merely composing or explaining
-    * the query never launches the corpus scan. */
+    * labeled frame is cut by [[Checkpoint.cut]] because the search reads
+    * it in the cluster-pruned scan and composition should not re-run the
+    * argmax per consumer: lazy and executor-local by default, so merely
+    * composing or explaining the query never launches the corpus scan;
+    * reliable and materialized at composition time when the session has
+    * a checkpoint dir. */
   def ivfTopK(vectors: DataFrame, cents: DataFrame, probes: DataFrame,
-              k: Int, nprobe: Int, roundTo: Int,
-              reliable: Boolean): DataFrame = {
-    val labeled = assignClusters(vectors, cents)
-    val pinned = if (reliable) labeled.checkpoint(eager = false)
-      else labeled.localCheckpoint(eager = false)
-    searchRouted(pinned, cents, probes, k, nprobe, roundTo)
-  }
+              k: Int, nprobe: Int, roundTo: Int): DataFrame =
+    searchRouted(Checkpoint.cut(assignClusters(vectors, cents)),
+      cents, probes, k, nprobe, roundTo)
 
   /** IVF search over pre-assigned cluster labels: routing centroids are
     * the elementwise means of the labeled clusters (one bounded-state
@@ -1384,17 +1363,19 @@ object Similarity {
     * Returns one row per removed vector:
     * (removed_vec_id, cluster, n_near, max_cos).
     */
-  def semanticDedup(vectors: DataFrame, k: Int, iters: Int, threshold: Double,
-                    reliable: Boolean = false): DataFrame =
-    semanticDedup(vectors, kmeansFit(vectors, k, iters, reliable), threshold, reliable)
+  def semanticDedup(vectors: DataFrame, k: Int, iters: Int,
+                    threshold: Double): DataFrame =
+    semanticDedup(vectors, kmeansFit(vectors, k, iters), threshold)
 
   /** SemDeDup over pre-fit centroids: one [[assignClusters]] pass labels
     * the corpus (fit the centroids on a sample via [[kmeansFit]] at
     * scale), then the within-cluster removal rule applies unchanged. The
     * labeled frame feeds both sides of the within-cluster self-join, so
-    * it is checkpointed — one assignment pass, not two. */
+    * it is cut by [[Checkpoint.cut]] — one assignment pass, not two (lazy
+    * by default; reliable and materialized at composition time when the
+    * session has a checkpoint dir). */
   def semanticDedup(vectors: DataFrame, cents: DataFrame,
-                    threshold: Double, reliable: Boolean): DataFrame = {
+                    threshold: Double): DataFrame = {
     // cluster -1 is the degenerate label (zero-norm / width-mismatched
     // vectors — CosineArgmax returns -1 when no cosine is defined):
     // exclude it BEFORE the self-join. Degenerates pairing with each
@@ -1402,8 +1383,7 @@ object Similarity {
     // all 0/0 = NaN, and Spark's nan-safe compare would pass NaN >=
     // threshold — reporting "duplicates" whose similarity is undefined.
     val assigned = assignClusters(vectors, cents).filter(col("cluster") =!= -1)
-    val labeled = if (reliable) assigned.checkpoint(eager = false)
-      else assigned.localCheckpoint(eager = false)
+    val labeled = Checkpoint.cut(assigned)
     val lo = labeled.select(col("cluster"), col("vec_id").as("lo_id"), col("v"))
     val hi = labeled.select(col("cluster"), col("vec_id").as("hi_id"), col("v").as("p"))
     lo.join(hi, Seq("cluster"))

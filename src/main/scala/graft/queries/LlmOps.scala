@@ -316,8 +316,7 @@ object LlmOps {
     val probes = vecs.filter($"vec_id" < 5)
       .select($"vec_id".as("probe_id"), $"v".as("p"))
     graft.operators.Similarity
-      .ivfTopK(vecs, cents, probes, k = 3, nprobe = 1, roundTo = 4,
-        reliable = false)
+      .ivfTopK(vecs, cents, probes, k = 3, nprobe = 1, roundTo = 4)
       .select($"probe_id", $"vec_id", $"cosine", $"rank")
       .orderBy($"probe_id", $"rank")
   }
@@ -656,7 +655,7 @@ object LlmOps {
     val cents = graft.operators.Similarity
       .kmeansFit(all.filter($"vec_id" % 4 === 0), k = 8, iters = 2)
     graft.operators.Similarity
-      .semanticDedup(all, cents, threshold = 0.95, reliable = false)
+      .semanticDedup(all, cents, threshold = 0.95)
       .orderBy($"removed_vec_id")
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Envelope
 import graft.functions._
+import graft.operators.Checkpoint
 import graft.schema.SchemaRegistry
 
 /** Producer/consumer surface of the engine: payload rows ⇄ enveloped
@@ -167,9 +168,7 @@ object Pipeline {
       ivSchemaId: Int,
       valueCol: String = "value"): DataFrame =
     consumeDecrypted(transport, registry, readerSchemaId, valueCol,
-      decryptPayload = Some((bytes, env) =>
-        Encryption.decrypt(bytes, env.getField("encryption_type"),
-          env.getField("meta"), ivSchemaId, keys))).drop("raw_envelope")
+      decryptPayload = Some(decryptWith(keys, ivSchemaId))).drop("raw_envelope")
 
   /** [[consumeEncrypted]] with the dead-letter split — the composition
     * an encrypted stream actually runs: good rows decrypt+decode, while
@@ -183,16 +182,14 @@ object Pipeline {
       readerSchemaId: Int,
       keys: Map[Int, String],
       ivSchemaId: Int,
-      valueCol: String = "value",
-      reliable: Boolean = false): (DataFrame, DataFrame) = {
-    val consumed = sharedDecodePass(
-      consumeDecrypted(transport, registry, readerSchemaId,
-        valueCol, decryptPayload = Some((bytes, env) =>
-          Encryption.decrypt(bytes, env.getField("encryption_type"),
-            env.getField("meta"), ivSchemaId, keys))), reliable)
-    (consumed.filter(col("payload").isNotNull).drop("raw_envelope"),
-      consumed.filter(col("payload").isNull))
-  }
+      valueCol: String = "value"): (DataFrame, DataFrame) =
+    deadLetterSplit(consumeDecrypted(transport, registry, readerSchemaId,
+      valueCol, decryptPayload = Some(decryptWith(keys, ivSchemaId))))
+
+  private def decryptWith(keys: Map[Int, String],
+                          ivSchemaId: Int): (Column, Column) => Column =
+    (bytes, env) => Encryption.decrypt(bytes, env.getField("encryption_type"),
+      env.getField("meta"), ivSchemaId, keys)
 
   // private[graft]: PlanSpec pins the generator-barrier plan shape (one
   // unpack, one decode per row) on the un-truncated frame — the public
@@ -269,70 +266,35 @@ object Pipeline {
     * side-output): rows whose payload failed to decode (unknown schema_id,
     * corrupt bytes → null) route to the second frame with the raw envelope
     * intact for replay, instead of silently vanishing or killing the task.
-    * Both frames read ONE shared decode pass — see [[sharedDecodePass]]
-    * for the materialization contract and the `reliable` cluster flag.
+    * Both frames read ONE shared decode pass — see [[deadLetterSplit]].
     */
   def consumeWithDeadLetters(
       transport: DataFrame,
       registry: SchemaRegistry,
       readerSchemaId: Int,
-      valueCol: String = "value",
-      reliable: Boolean = false): (DataFrame, DataFrame) = {
-    val consumed = sharedDecodePass(
-      consumeDecrypted(transport, registry, readerSchemaId,
-        valueCol, decryptPayload = None), reliable)
+      valueCol: String = "value"): (DataFrame, DataFrame) =
+    deadLetterSplit(consumeDecrypted(transport, registry, readerSchemaId,
+      valueCol, decryptPayload = None))
+
+  /** The two-branch split over one shared decode pass. A dead-letter split
+    * BY DEFINITION consumes both halves, and Spark has no cross-branch
+    * common-subplan reuse, so without materialization the unpack+decode
+    * chain Avro-decodes the corpus once PER BRANCH — the dominant cost of
+    * the split at any scale (guide §5: persist what is reused and
+    * expensive to recompute). The pass is cut by [[Checkpoint.cut]]:
+    * lazy and executor-local by default, reliable and materialized at
+    * composition time when the session has a checkpoint dir. Streaming
+    * frames keep the two-branch lineage (each micro-batch is small; the
+    * sink pair shares the exchange-free scan).
+    */
+  private def deadLetterSplit(decoded: DataFrame): (DataFrame, DataFrame) = {
+    val consumed = Checkpoint.cut(decoded)
     (consumed.filter(col("payload").isNotNull).drop("raw_envelope"),
       // the dead-letter frame KEEPS the raw transport bytes: after a
       // registry fix the letters re-consume from raw_envelope — without
       // it the original envelope is unrecoverable and replay impossible
       consumed.filter(col("payload").isNull))
   }
-
-  /** One shared decode pass for a two-branch split. A dead-letter split
-    * BY DEFINITION consumes both halves, and Spark has no cross-branch
-    * common-subplan reuse, so without materialization the unpack+decode
-    * chain Avro-decodes the corpus once PER BRANCH — the dominant cost of
-    * the split at any scale (guide §5: persist what is reused and
-    * expensive to recompute). The default path is lazy, so composing/
-    * explaining never runs the scan; blocks appear with the first action
-    * and are released by the session's usual checkpoint-block cleanup
-    * (the same contract as connectedComponents'). The reliable path is
-    * EAGER — see below for why.
-    *
-    * `reliable = false` (the default) uses a lazy `localCheckpoint`:
-    * fastest, but its blocks live non-replicated on executors with
-    * TRUNCATED lineage — on a real cluster an executor loss mid-query
-    * makes the lost partitions unrecomputable and kills the job. At
-    * 100 TB set the session's checkpoint dir (`sc.setCheckpointDir`, an
-    * HDFS/object-store path — required: without one `reliable = true`
-    * fails up front) and pass `reliable = true` for a
-    * fault-tolerant reliable checkpoint, mirroring
-    * [[graft.operators.Dedup.connectedComponents]]'s flag. The reliable
-    * path materializes EAGERLY through a transient cache: a bare
-    * reliable checkpoint recomputes its RDD from scratch in the
-    * checkpoint-write job (the double-decode the RDD.checkpoint docs
-    * warn about), so the frame persists first, the eager checkpoint's
-    * materialization action fills the cache and the write job reads it
-    * back — ONE decode pass — and the cache entry is released before
-    * returning (the checkpointed frame reads its files, not the cache).
-    * Streaming frames can't checkpoint — they keep the two-branch
-    * lineage (each micro-batch is small; the sink pair shares the
-    * exchange-free scan).
-    */
-  private def sharedDecodePass(decoded: DataFrame, reliable: Boolean): DataFrame =
-    if (decoded.isStreaming) decoded
-    else if (reliable) {
-      // fail before the persist, naming the fix, instead of with Spark's
-      // own error from inside the checkpoint job
-      require(decoded.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "reliable = true checkpoints the shared decode pass: set the " +
-          "session's checkpoint dir first (sc.setCheckpointDir)")
-      val pinned = decoded.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try pinned.checkpoint()
-      finally pinned.unpersist(blocking = false)
-    }
-    else decoded.localCheckpoint(eager = false)
 
   /** Effectively-once delivery on an at-least-once transport (SURVEY §2.7
     * ST1/ST2 consumer side): drop redelivered messages by envelope uuid,

@@ -125,8 +125,12 @@ object StreamingIncrementalDedup {
     val tmp = new Path(dir, "_max_batch.tmp")
     val out = fs.create(tmp, true)
     try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-    fs.delete(new Path(dir, "_max_batch"), false)
-    fs.rename(tmp, new Path(dir, "_max_batch"))
+    val hw = new Path(dir, "_max_batch")
+    fs.delete(hw, false)
+    // a refused rename would leave no high-water at all and silently
+    // disarm the reset-checkpoint guard: fail the batch instead
+    if (!fs.rename(tmp, hw))
+      throw new java.io.IOException(s"rename $tmp -> $hw failed")
   }
 
   /** The index state strictly older than `batchId`: newest compacted

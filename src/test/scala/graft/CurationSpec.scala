@@ -468,12 +468,12 @@ class CurationSpec extends SparkTestBase {
     // an exhaustive search that must recover the exact neighborhood
     val cents = Similarity.kmeansFit(vecs, k = 4, iters = 2)
     val exhaustive = Similarity.ivfTopK(vecs, cents, probes, k = 5,
-      nprobe = 4, roundTo = 4, reliable = false)
+      nprobe = 4, roundTo = 4)
     assert(Similarity.recallAtK(exhaustive, exact, 5) == 1.0,
       "nprobe = k must be exhaustive")
     // pruned ivf trades recall for scan fraction but stays a valid result
     val pruned = Similarity.ivfTopK(vecs, cents, probes, k = 5,
-      nprobe = 1, roundTo = 4, reliable = false)
+      nprobe = 1, roundTo = 4)
     val prunedRecall = Similarity.recallAtK(pruned, exact, 5)
     assert(prunedRecall > 0.0 && prunedRecall <= 1.0)
     // a zero-norm corpus vector forms the degenerate cluster −1 whose
@@ -538,8 +538,8 @@ class CurationSpec extends SparkTestBase {
     exact.count()
     val cents = Similarity.kmeansFit(vecs, k = 8, iters = 3)
     val ivfR = Similarity.recallAtK(
-      Similarity.ivfTopK(vecs, cents, probes, k, nprobe = 4, roundTo = 4,
-        reliable = false), exact, k)
+      Similarity.ivfTopK(vecs, cents, probes, k, nprobe = 4, roundTo = 4),
+      exact, k)
     assert(ivfR >= 0.95, s"ivf nprobe=4 recall@10 $ivfR under its 0.95 floor")
     // production-shaped PQ (m=8) + exact re-rank from an 8×k candidate
     // pool — the two-stage shape a deployment runs

@@ -500,16 +500,21 @@ class FunctionsSpec extends SparkTestBase {
     // two subspaces, gappy cluster ids (cluster 1 "emptied out" of sub 0)
     // to exercise the code→position indirection, not just identity
     val cbs: Map[Int, Array[(Int, Seq[Double])]] = Map(
-      0 -> Array((0, Seq(0.0)), (2, Seq(0.0)), (3, Seq(0.0))),
-      1 -> Array((0, Seq(0.0)), (1, Seq(0.0))))
-    val tbl = Seq(Seq(0.125001, 0.25, 0.5), Seq(0.0625, 1.000001))
+      0 -> Array(0, 2, 3, 4, 5, 6).map(c => (c, Seq(0.0))),
+      1 -> Array(0, 1, 2).map(c => (c, Seq(0.0))))
+    val (nan, inf) = (Double.NaN, Double.PositiveInfinity)
+    val tbl = Seq(Seq(0.125001, 0.25, 0.5, nan, inf, -inf), Seq(0.0625, 1.000001, -inf))
     val rows = Seq(
-      (0L, Seq[Integer](0, 0)),   // 0.125001 + 0.0625
-      (1L, Seq[Integer](2, 1)),   // 0.25 + 1.000001
-      (2L, Seq[Integer](3, 0)),   // gappy id resolves by position
-      (3L, Seq[Integer](1, 0)),   // stale code: sub 0 has no cluster 1 → null
-      (4L, Seq[Integer](9, 0)),   // out-of-range code → null
-      (5L, Seq[Integer](null, 1)) // null code element → null
+      (0L, Seq[Integer](0, 0)),    // 0.125001 + 0.0625
+      (1L, Seq[Integer](2, 1)),    // 0.25 + 1.000001
+      (2L, Seq[Integer](3, 0)),    // gappy id resolves by position
+      (3L, Seq[Integer](1, 0)),    // stale code: sub 0 has no cluster 1 → null
+      (4L, Seq[Integer](9, 0)),    // out-of-range code → null
+      (5L, Seq[Integer](null, 1)), // null code element → null
+      (6L, Seq[Integer](4, 0)),    // NaN entry → NaN, as round(NaN) is
+      (7L, Seq[Integer](5, 0)),    // +Inf entry → +Inf
+      (8L, Seq[Integer](6, 1)),    // −Inf entry → −Inf
+      (9L, Seq[Integer](5, 2))     // +Inf + −Inf → NaN
     ).toDF("vec_id", "codes")
       .select($"vec_id", $"codes".cast("array<int>").as("codes"),
         typedLit(tbl).as("__tbl"))
@@ -517,15 +522,20 @@ class FunctionsSpec extends SparkTestBase {
       Similarity.pqAdist(cbs, m = 2).as("fast"),
       Similarity.pqAdistHof(cbs, m = 2).as("ref"))
       .collect()
+    def bits(v: Any): Option[Long] =
+      Option(v).map(d => java.lang.Double.doubleToRawLongBits(d.asInstanceOf[Double]))
     both.foreach { r =>
       val (fast, ref) = (r.get(1), r.get(2))
-      assert(fast == ref, s"row ${r.getLong(0)}: native $fast != HOF $ref")
+      assert(bits(fast) == bits(ref), s"row ${r.getLong(0)}: native $fast != HOF $ref")
     }
     // the valid sums land on the 6-dp rounding the oracle replays
     val byId = both.map(r => r.getLong(0) -> r.get(1)).toMap
     assert(byId(0L) == 0.187501 && byId(1L) == 1.250001 && byId(2L) == 0.5625)
     assert(Seq(3L, 4L, 5L).forall(byId(_) == null),
       "unresolvable codes must drop to null, never rank")
+    val special = Seq(6L, 7L, 8L, 9L).map(byId(_).asInstanceOf[Double])
+    assert(special(0).isNaN && special(1) == inf && special(2) == -inf && special(3).isNaN,
+      s"NaN/±Inf sums must pass through the rounding, got $special")
   }
 
   test("pq_dist_table is bit-identical to the element_at formulation (NaN, ±Inf, −0.0, nulls, HALF_UP)") {

@@ -332,9 +332,11 @@ class MigrationAndCatalogSpec extends SparkTestBase {
       dead2.select($"raw_envelope").head().getAs[Array[Byte]](0).length == 3)
   }
 
-  test("dead-letter split: reliable=true routes the shared decode pass to the session checkpoint dir; rows identical to the local default") {
+  test("Checkpoint.cut: with a session checkpoint dir every cut site writes reliable checkpoints; rows identical to the local default") {
     import spark.implicits._
+    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions._
+    import graft.operators.{Dedup, Similarity}
     val reg = new SchemaRegistry
     val entry = reg.registerSchema("s", "ev", graft.queries.EnvelopeOps.eventSchemaJson)
     val good = Seq((1L, 10L, "click", 1.5), (2L, 20L, "view", 2.0))
@@ -347,66 +349,73 @@ class MigrationAndCatalogSpec extends SparkTestBase {
         lit(Array[Byte](0x7f, 0x33, 0x01)), "create", entry.schemaId,
         lit(1700000002L), unhex(md5(lit("c")))).as("value"))
     val transport = good.union(corrupt)
-    // the cluster path: a configured checkpoint dir + reliable=true must
-    // place the shared pass's blocks in that dir (a RELIABLE checkpoint —
-    // recomputable-from-storage after executor loss, unlike
-    // localCheckpoint's truncated-lineage executor-local blocks)
-    val chkDir = java.nio.file.Files.createTempDirectory("dl_chk").toFile
+    val pairs = Seq((2L, 3L), (1L, 2L), (3L, 4L), (8L, 9L)).toDF("d1", "d2")
+    val vecs = Seq(
+      (0L, Seq(1.0, 0.0, 0.0)), (1L, Seq(0.0, 1.0, 0.0)),
+      (5L, Seq(0.8, 0.0, 0.6)), (10L, Seq(0.999, 0.001, 0.0)),
+      (11L, Seq(0.998, 0.002, 0.0)), (20L, Seq(0.001, 0.999, 0.0))
+    ).toDF("vec_id", "v")
+    val probes = vecs.filter($"vec_id" < 2).select($"vec_id".as("probe_id"), $"v".as("p"))
+    val cents = Similarity.kmeansFit(vecs, k = 2, iters = 2)
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    // each site's rows, as the site composes them (a reliable cut
+    // materializes at composition, so the call itself runs under the dir)
+    val sites: Seq[(String, () => Seq[String])] = Seq(
+      "dead-letter split" -> { () =>
+        val (ok, dead) = graft.streaming.Pipeline.consumeWithDeadLetters(
+          transport, reg, entry.schemaId)
+        rows(ok.select($"payload.event_id")) ++ rows(dead.select(hex($"raw_envelope")))
+      },
+      "connectedComponents" -> (() => rows(Dedup.connectedComponents(pairs))),
+      "ivfTopK (pre-fit)" -> (() =>
+        rows(Similarity.ivfTopK(vecs, cents, probes, k = 3, nprobe = 1, roundTo = 4))),
+      "semanticDedup (pre-fit)" -> (() =>
+        rows(Similarity.semanticDedup(vecs, cents, threshold = 0.95))))
+    def rddDirs(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).getOrElse(Array.empty).toSeq
+        .flatMap(f => if (f.isDirectory) f +: rddDirs(f) else Seq(f))
+        .filter(_.getName.startsWith("rdd-"))
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
+      f.delete(); ()
+    }
     val sc = spark.sparkContext
     val prevDir = sc.getCheckpointDir
-    sc.setCheckpointDir(chkDir.getAbsolutePath)
-    try {
-      val (okR, deadR) = graft.streaming.Pipeline.consumeWithDeadLetters(
-        transport, reg, entry.schemaId, reliable = true)
-      val okRows = okR.select($"payload.event_id").collect().map(_.getLong(0)).sorted.toSeq
-      assert(okRows == Seq(1L, 2L) && deadR.count() == 1)
-      def rddDirs(d: java.io.File): Seq[java.io.File] =
-        Option(d.listFiles()).getOrElse(Array.empty).toSeq
-          .flatMap(f => if (f.isDirectory) f +: rddDirs(f) else Seq(f))
-          .filter(_.getName.startsWith("rdd-"))
-      assert(rddDirs(chkDir).nonEmpty,
-        "reliable=true must checkpoint the shared decode pass into the " +
-          s"session checkpoint dir, found none under $chkDir")
-      // the local default computes the identical split
-      val (okL, deadL) = graft.streaming.Pipeline.consumeWithDeadLetters(
-        transport, reg, entry.schemaId)
-      assert(okL.select($"payload.event_id").collect().map(_.getLong(0)).sorted.toSeq
-        == okRows && deadL.count() == 1)
-    } finally {
-      // restore EXPLICITLY even when no dir was set before (orNull →
-      // Option(null) = None inside setCheckpointDir, i.e. unset): the
-      // session is shared across suites, and a leftover temp checkpoint
-      // dir would silently change later tests' reliable-path behavior
-      sc.setCheckpointDir(prevDir.orNull)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
+    sites.foreach { case (site, run) =>
+      val chkDir = java.nio.file.Files.createTempDirectory("cut_chk").toFile
+      try {
+        sc.setCheckpointDir(chkDir.getAbsolutePath)
+        val reliable = run()
+        assert(rddDirs(chkDir).nonEmpty,
+          s"$site: a cut must checkpoint into the session checkpoint dir, found none under $chkDir")
+        sc.setCheckpointDir(null)
+        val local = run()
+        assert(local.nonEmpty && reliable == local,
+          s"$site: reliable rows $reliable != local rows $local")
+      } finally {
+        // orNull → Option(null) = None inside setCheckpointDir, i.e. unset
+        sc.setCheckpointDir(prevDir.orNull)
+        rm(chkDir)
       }
-      rm(chkDir)
     }
   }
 
-  test("dead-letter split: reliable=true without a checkpoint dir fails up front, naming sc.setCheckpointDir") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val reg = new SchemaRegistry
-    val entry = reg.registerSchema("s", "ev", graft.queries.EnvelopeOps.eventSchemaJson)
-    val transport = Seq((1L, 10L, "click", 1.5))
-      .toDF("event_id", "user_id", "event_type", "value")
-      .select(graft.streaming.Pipeline.envelopeFor(
-        struct($"event_id", $"user_id", $"event_type", $"value"), "create", entry,
-        lit(1700000000L), unhex(md5($"event_id".cast("string")))).as("value"))
+  test("test harness: a checkpoint dir left on the shared session fails the suite and is cleared") {
     val sc = spark.sparkContext
-    val prevDir = sc.getCheckpointDir
-    sc.setCheckpointDir(null)
+    val chkDir = java.nio.file.Files.createTempDirectory("leak_chk").toFile
     try {
-      val e = intercept[IllegalArgumentException] {
-        graft.streaming.Pipeline.consumeWithDeadLetters(
-          transport, reg, entry.schemaId, reliable = true)
+      sc.setCheckpointDir(chkDir.getAbsolutePath)
+      val e = intercept[IllegalStateException] {
+        SparkTestBase.clearLeftoverCheckpointDir("LeakySpec")
       }
-      assert(e.getMessage.contains("sc.setCheckpointDir"),
-        s"the error must name the fix: ${e.getMessage}")
-    } finally sc.setCheckpointDir(prevDir.orNull)
+      assert(e.getMessage.contains("LeakySpec"), e.getMessage)
+      assert(sc.getCheckpointDir.isEmpty, "the guard must unset the leaked dir")
+      SparkTestBase.clearLeftoverCheckpointDir("CleanSpec") // no dir: no-op
+    } finally {
+      sc.setCheckpointDir(null)
+      Option(chkDir.listFiles()).getOrElse(Array.empty).foreach(_.delete())
+      chkDir.delete()
+    }
   }
 
   test("heartbeats fan out per topic as REAL enveloped transport rows") {

@@ -1009,6 +1009,23 @@ class StreamingSpec extends SparkTestBase {
     assert(corpus == Set(1L, 2L, 3L), s"got $corpus")
   }
 
+  test("incremental dedup: a refused high-water rename fails the batch instead of disarming the run fence") {
+    import spark.implicits._
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.norename.impl", classOf[RefuseHighWaterRenameFs].getName)
+    try {
+      // the state dir lives on the refusing scheme; everything but the
+      // final high-water rename goes through as on the local disk
+      val state = "norename://" + java.nio.file.Files.createTempDirectory("hw_state")
+      val out = java.nio.file.Files.createTempDirectory("hw_out").toString
+      val e = intercept[java.io.IOException] {
+        graft.streaming.StreamingIncrementalDedup.processBatch(
+          Seq((1L, "a")).toDF("doc_id", "text"), 0L, state, out)
+      }
+      assert(e.getMessage.contains("_max_batch"), e.getMessage)
+    } finally conf.unset("fs.norename.impl")
+  }
+
   test("incremental dedup crash window: compaction batch dies after d_b, before c_b; replay converges to the clean run") {
     import spark.implicits._
     // The nastiest window in the delta-file discipline: batch b is a
@@ -1139,4 +1156,13 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
     profile.unpersist()
   }
+}
+
+/** A local file system under the test-only `norename:` scheme that
+  * refuses every rename onto a `_max_batch` high-water file. */
+class RefuseHighWaterRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("norename:///")
+  override def rename(src: org.apache.hadoop.fs.Path,
+                      dst: org.apache.hadoop.fs.Path): Boolean =
+    dst.getName != "_max_batch" && super.rename(src, dst)
 }
