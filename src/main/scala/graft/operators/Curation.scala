@@ -270,12 +270,11 @@ object Curation {
     // the oversized-stoplist branch reads stopDf AGAIN inside the
     // anti-join — without the pin that whole explode+groupBy lineage
     // executed twice. The materialized frame is vocabulary-bounded.
-    val stopDf = counts
+    val stopDf = Checkpoint.cut(counts
       .filter(col("t") =!= "")
       .crossJoin(broadcast(nDocs))
       .filter(col("df") > floor(lit(dfRatio) * col("n")))
-      .select(col("t"))
-      .localCheckpoint(eager = false)
+      .select(col("t")))
     val probe = stopDf.take(maxStoplistLiteral + 1)
     if (probe.length <= maxStoplistLiteral) {
       val stop = probe.map(_.getString(0)).toSeq.sorted

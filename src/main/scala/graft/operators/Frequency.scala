@@ -111,8 +111,7 @@ object Frequency {
     // (the bpeTokenCounts lesson: an un-pinned shared frame re-runs its
     // whole lineage per consumer). Lazy: materializes with the first
     // action, so composing/explaining never triggers the scan.
-    val counts = df.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("n"))
-      .localCheckpoint(eager = false)
+    val counts = Checkpoint.cut(df.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("n")))
     val totals = counts.agg(sum(col("n")).as("__total"),
       count(lit(1)).as("__nkeys"))
     // tie-break NULLS LAST explicitly: Spark's bare .asc sorts NULL

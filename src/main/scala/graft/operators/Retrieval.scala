@@ -72,12 +72,11 @@ object Retrieval {
     // measured 2 scans per run). The materialized frame is narrow: a
     // long dl plus only query-vocabulary hits per doc — a tiny fraction
     // of corpus bytes even at 100 TB.
-    val toks = docs.select(col(idCol).as("id"), ws.as("__ws"))
+    val toks = Checkpoint.cut(docs.select(col(idCol).as("id"), ws.as("__ws"))
       .select(col("id"), size(col("__ws")).cast("long").as("dl"),
         // query-vocabulary filter BEFORE explode: only query-term hits
         // ever leave the scan
-        filter(col("__ws"), w => w.isInCollection(terms)).as("__hit"))
-      .localCheckpoint(eager = false)
+        filter(col("__ws"), w => w.isInCollection(terms)).as("__hit")))
     val stats = toks.agg(count(lit(1)).as("n"), sum(col("dl")).as("t"))
     val tf = toks
       .filter(size(col("__hit")) > 0)
@@ -157,10 +156,9 @@ object Retrieval {
         // per-doc (id, dl, hits) frame pins lazily and feeds BOTH the
         // corpus-stats fold and the tf aggregation — one regex pass over
         // the corpus text instead of two
-        val perDoc = base
+        val perDoc = Checkpoint.cut(base
           .select(col("id"), size(col("__ws")).cast("long").as("dl"),
-            filter(col("__ws"), w => w.isInCollection(vocab)).as("__hit"))
-          .localCheckpoint(eager = false)
+            filter(col("__ws"), w => w.isInCollection(vocab)).as("__hit")))
         (perDoc
           .filter(size(col("__hit")) > 0)
           .select(col("id"), col("dl"), explode(col("__hit")).as("term"))
@@ -249,10 +247,9 @@ object Retrieval {
     // single-tokenize discipline (see [[bm25TopK]]): the narrow per-doc
     // (id, dl, hits) frame pins lazily and feeds BOTH the corpus-stats
     // fold and the tf aggregation
-    val perDoc = docs.select(col(idCol).as("id"), ws.as("__ws"))
+    val perDoc = Checkpoint.cut(docs.select(col(idCol).as("id"), ws.as("__ws"))
       .select(col("id"), size(col("__ws")).cast("long").as("dl"),
-        filter(col("__ws"), w => w.isInCollection(vocab)).as("__hit"))
-      .localCheckpoint(eager = false)
+        filter(col("__ws"), w => w.isInCollection(vocab)).as("__hit")))
     val tf = perDoc
       .filter(size(col("__hit")) > 0)
       .select(col("id"), col("dl"), explode(col("__hit")).as("term"))
@@ -331,11 +328,10 @@ object Retrieval {
     // tokenize+distinct a second time when the join executes. With it the
     // probe materializes the distinct-word blocks once and the encode
     // loop reads them back.
-    val words = docs
+    val words = Checkpoint.cut(docs
       .select(explode(split(trim(lower(col(textCol))), "\\s+")).as("w"))
       .filter(col("w") =!= "")
-      .distinct()
-      .localCheckpoint(eager = false)
+      .distinct())
     import words.sparkSession.implicits._
     val wordTokens = words.mapPartitions { it =>
       it.map(r => (r.getString(0), bpeEncodeWord(r.getString(0), ranks).size.toLong))
@@ -398,12 +394,11 @@ object Retrieval {
       transform(sequence(lit(1), length(col("w"))),
         i => col("w").substr(i, lit(1))),
       array(lit("</w>")))
-    var vocab = docs
+    var vocab = Checkpoint.cut(docs
       .select(explode(split(trim(lower(col(textCol))), "\\s+")).as("w"))
       .filter(col("w") =!= "")
       .groupBy(col("w")).agg(count(lit(1)).as("n"))
-      .select(syms.as("sy"), col("n"))
-      .localCheckpoint()
+      .select(syms.as("sy"), col("n")))
     if (vocab.limit(driverTailRows + 1).count() <= driverTailRows)
       return bpeTrainDriver(
         vocab.collect().map(r => (r.getSeq[String](0).toArray, r.getLong(1))),
@@ -431,7 +426,7 @@ object Retrieval {
             size(acc) > 0 && element_at(acc, size(acc)) === lit(a) && (s === lit(b)),
             concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
             .otherwise(concat(acc, array(s))))
-        vocab = vocab.select(mergedSy.as("sy"), col("n")).localCheckpoint()
+        vocab = Checkpoint.cut(vocab.select(mergedSy.as("sy"), col("n")))
       }
     }
     learned.toSeq

@@ -456,22 +456,6 @@ object Similarity {
     * subspace (fewer if a cluster empties, which both engines drop
     * identically).
     */
-  /** Release a localCheckpoint pin for real: `Dataset.unpersist` goes
-    * through the CacheManager, which never registered a checkpoint's
-    * backing RDD (it was persisted directly), so on a checkpointed
-    * frame it is a silent no-op — verified empirically against
-    * getPersistentRDDs. The pin lives in the plan's LogicalRDD leaf;
-    * unpersist THAT. Safe on the checkpointed frame itself: its
-    * analyzed plan is exactly one LogicalRDD leaf (the checkpoint
-    * replaced the original lineage), so an upstream caller's own pin
-    * is never touched. */
-  private def releasePin(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   def pqFit(sample: DataFrame, m: Int, subDim: Int, ksub: Int, iters: Int): DataFrame = {
     require(iters >= 1, "PQ training needs at least one assignment round")
     val spark = sample.sparkSession
@@ -486,8 +470,7 @@ object Similarity {
     // lazily-checkpointed RDD's missing partitions at the end of that
     // action), so the former eager pin's dedicated materialization job
     // disappears — one job per pqFit saved, same blocks, same release
-    val pinned = sample.select(col("vec_id"), col("v"))
-      .localCheckpoint(eager = false)
+    val pinned = Checkpoint.cut(sample.select(col("vec_id"), col("v")))
     try {
       // seed: the first ksub vectors by id seed EVERY subspace's codebook
       // — ONE collect, each sub slices its dims locally (bit-identical to
@@ -533,7 +516,7 @@ object Similarity {
       cents.zipWithIndex.toSeq
         .flatMap { case (cs, j) => cs.map { case (cid, c) => (j, cid, c) } }
         .toDF("sub", "cluster", "c")
-    } finally releasePin(pinned)
+    } finally Checkpoint.release(pinned)
   }
 
   /** (sub → ascending-cluster codebook rows) from a [[pqFit]] frame. */
@@ -903,8 +886,8 @@ object Similarity {
     // the sample is re-scanned every round — pin it once, release on
     // every exit path (a periodic-retrain deployment calling this in a
     // long-lived session must not accumulate pinned sample copies)
-    val pinned = sample.select(col("vec_id"), col("v"))
-      .filter(size(col("v")) === d).localCheckpoint()
+    val pinned = Checkpoint.cut(sample.select(col("vec_id"), col("v"))
+      .filter(size(col("v")) === d))
     try {
       var r = Array.tabulate(d, d)((i, j) => if (i == j) 1.0 else 0.0)
       var cbs = pqFit(pinned, m, subDim, ksub, pqIters)
@@ -935,7 +918,7 @@ object Similarity {
         cbs = pqFit(rotate(pinned, "v", r), m, subDim, ksub, pqIters)
       }
       (r, cbs)
-    } finally releasePin(pinned)
+    } finally Checkpoint.release(pinned)
   }
 
   /** PQ-encode in the rotated space: ONE shuffle-free projection — the

@@ -9,6 +9,7 @@ import org.apache.avro.{Schema, SchemaCompatibility}
 import org.apache.avro.SchemaCompatibility.SchemaCompatibilityType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.core.Commit
 import graft.functions.AvroCodec
 
 /** Embedded schema registry — the engine's control plane.
@@ -621,23 +622,20 @@ class SchemaRegistry extends Serializable {
     * Atomic and point-in-time consistent: the whole call is synchronized
     * on the registry (a registration racing the save can otherwise split
     * across the table snapshots and produce a store that fails its own
-    * reload-drift checks), all tables land in a fresh GENERATION
-    * directory `gen_<n>`, a `_COMMITTED` marker lands after the last
-    * table, and only then does the `_latest_gen` pointer flip
-    * (write-temp-then-rename) — a crash at ANY point leaves the previous
-    * generation fully intact and resolvable. Old generations vacuum
-    * (newest 2 kept). [[SchemaRegistry.load]] still reads the legacy
-    * flat layout when no generation exists. */
+    * reload-drift checks), and all tables land in a fresh GENERATION
+    * directory `gen_<n>` committed by [[graft.core.Commit]] — marker
+    * after the last table, then the `_latest_gen` pointer flip — so a
+    * crash at ANY point leaves the previous generation fully intact and
+    * resolvable. Old generations vacuum to one committed grace copy.
+    * [[SchemaRegistry.load]] still reads the legacy flat layout when no
+    * generation exists. */
   def save(spark: SparkSession, dir: String): Unit = synchronized {
     import spark.implicits._
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens =
-      if (!fs.exists(root)) Seq.empty[Long]
-      else fs.listStatus(root).map(_.getPath.getName).toSeq.collect {
-        case n if n.matches("^gen_\\d+$") => n.drop(4).toLong
-      }.sorted
-    val gen = s"gen_${gens.lastOption.getOrElse(-1L) + 1L}"
+    // numbered past EVERY generation on disk, uncommitted debris included
+    val genId = Commit.ids(fs, root, "gen").lastOption.getOrElse(-1L) + 1L
+    val gen = s"gen_$genId"
     val base = s"$dir/$gen"
     topicsDF(spark).write.mode("overwrite").parquet(s"$base/topics")
     schemasDF(spark).write.mode("overwrite").parquet(s"$base/schemas")
@@ -666,26 +664,13 @@ class SchemaRegistry extends Serializable {
       .toDF("namespace", "source", "meta_attribute_schema_id")
       .write.mode("overwrite").parquet(s"$base/meta_attr_mappings")
     // commit: marker after every table, pointer flip after the marker
-    val mk = fs.create(new org.apache.hadoop.fs.Path(base, "_COMMITTED"), true)
-    mk.close()
-    val ptrTmp = new org.apache.hadoop.fs.Path(root, "_latest_gen.tmp")
-    val out = fs.create(ptrTmp, true)
-    try out.write(gen.getBytes("UTF-8")) finally out.close()
-    fs.delete(new org.apache.hadoop.fs.Path(root, "_latest_gen"), false)
-    if (!fs.rename(ptrTmp, new org.apache.hadoop.fs.Path(root, "_latest_gen")))
-      throw new java.io.IOException(s"catalog pointer flip to $gen failed")
-    // vacuum superseded generations: keep ONE grace copy for a reader
-    // that resolved the pointer just before the flip — and that reader
-    // can only have resolved a COMMITTED generation, so the survivor is
-    // chosen among committed gens only. Uncommitted debris (a save that
-    // crashed pre-marker) deletes unconditionally: keeping it as the
-    // grace copy would vacuum the newest committed old generation and
-    // void the guarantee exactly in the crash window it exists for.
-    def oldGenCommitted(g: Long): Boolean =
-      fs.exists(new org.apache.hadoop.fs.Path(root, s"gen_$g/_COMMITTED"))
-    val (committedOld, uncommittedOld) = gens.partition(oldGenCommitted)
-    (committedOld.dropRight(1) ++ uncommittedOld).foreach(g =>
-      fs.delete(new org.apache.hadoop.fs.Path(root, s"gen_$g"), true))
+    Commit.mark(fs, new org.apache.hadoop.fs.Path(base))
+    Commit.writePointer(fs, root, "_latest_gen", gen)
+    // keep ONE grace copy for a reader that resolved the pointer just
+    // before the flip — a COMMITTED one, as that reader can only have
+    // resolved such; uncommitted debris (a save that crashed pre-marker)
+    // deletes unconditionally
+    Commit.vacuum(fs, root, "gen", keep = 2, current = genId)
   }
 
   /** Restore a refresh row verbatim (reload path: ids, offsets and states
@@ -740,27 +725,16 @@ object SchemaRegistry {
   val MaxCatalogRows: Long = 1L << 20
 
   def load(spark: SparkSession, dir: String): SchemaRegistry = {
-    // resolve the catalog generation: a validated `_latest_gen` pointer
-    // (target present with its `_COMMITTED` marker) wins; a missing or
-    // dangling pointer falls back to the newest committed generation; a
-    // store with no generations at all is the legacy flat layout
+    // resolve the catalog generation: a `_latest_gen` pointer naming a
+    // committed generation wins; a missing, garbage or dangling pointer
+    // falls back to the newest committed generation; a store with no
+    // generations at all is the legacy flat layout
     val root = new org.apache.hadoop.fs.Path(dir)
     val rootFs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def genCommitted(g: String): Boolean =
-      rootFs.exists(new org.apache.hadoop.fs.Path(root, s"$g/_COMMITTED"))
-    val pointedGen: Option[String] =
-      try {
-        val in = rootFs.open(new org.apache.hadoop.fs.Path(root, "_latest_gen"))
-        val g = try scala.io.Source.fromInputStream(in).mkString.trim
-        finally in.close()
-        Some(g).filter(v => v.matches("^gen_\\d+$") && genCommitted(v))
-      } catch { case _: java.io.FileNotFoundException => None }
-    val resolvedGen: Option[String] = pointedGen.orElse {
-      if (!rootFs.exists(root)) None
-      else rootFs.listStatus(root).map(_.getPath.getName).toSeq.collect {
-        case n if n.matches("^gen_\\d+$") && genCommitted(n) => n.drop(4).toLong
-      }.sorted.lastOption.map(g => s"gen_$g")
-    }
+    val resolvedGen: Option[String] = Commit.readPointer(rootFs, root, "_latest_gen")
+      .filter(g => g.matches("^gen_\\d+$") &&
+        Commit.isCommitted(rootFs, new org.apache.hadoop.fs.Path(root, g)))
+      .orElse(Commit.committed(rootFs, root, "gen").lastOption.map(g => s"gen_$g"))
     val base = resolvedGen.map(g => s"$dir/$g").getOrElse(dir)
     val reg = new SchemaRegistry
     val catalog = spark.read.parquet(s"$base/schemas")

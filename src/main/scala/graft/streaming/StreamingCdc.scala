@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
+import graft.core.Commit
 import graft.refresh.CdcMerge
 
 /** Continuous table materialization from a CDC stream — the streaming
@@ -15,20 +16,18 @@ import graft.refresh.CdcMerge
   * over Structured Streaming.
   *
   * State layout is versioned-snapshot-plus-pointer (the minimal
-  * transactional table): each micro-batch merges into a STAGING
-  * directory, renames it into `v_<batchId>` (a metadata-only swap —
-  * the merge's lazy read of the previous snapshot is NEVER overwritten
-  * by its own write, which would otherwise delete the live data mid-job
-  * on any plan that reads after the overwrite starts), and then flips
-  * the one-line `_latest` pointer via its own write-temp-then-rename.
-  * Readers resolve the pointer and VALIDATE it (target present with
-  * this operator's own `_COMMITTED` marker, written only after the
-  * rename returns — independent of Spark committer config, and immune
-  * to object-store renames landing marker files before data); an
-  * invalid or mid-swap pointer falls back to the newest committed
-  * version on disk, while a never-published state dir (backfills with
-  * `flipPointer = false`) stays EMPTY to readers — so every crash
-  * window leaves readers a complete snapshot:
+  * transactional table), committed by [[graft.core.Commit]]: each
+  * micro-batch merges into a STAGING directory, renames it into
+  * `v_<batchId>` (a metadata-only swap — the merge's lazy read of the
+  * previous snapshot is NEVER overwritten by its own write, which would
+  * otherwise delete the live data mid-job on any plan that reads after
+  * the overwrite starts), marks it committed once the rename returns,
+  * and then flips the one-line `_latest` pointer. Readers resolve the
+  * pointer and VALIDATE it (target committed); an invalid or mid-swap
+  * pointer falls back to the newest committed version on disk, while a
+  * never-published state dir (backfills with `flipPointer = false`)
+  * stays EMPTY to readers — so every crash window leaves readers a
+  * complete snapshot:
   *  - die during the staging write → orphan staging dir, old state
   *    intact; the replay deletes it and rewrites.
   *  - die between the `v_b` delete and the staging rename (a replay
@@ -37,9 +36,9 @@ import graft.refresh.CdcMerge
   *    and the replay's next attempt recomputes from that same fallback
   *    — which is exactly the snapshot the dead attempt read, because
   *    applying a batch is idempotent over its own result (spec-pinned).
-  *  - die between the pointer delete and its rename → readers fall back
-  *    to the newest committed version, which IS the one the pointer was
-  *    about to name.
+  *  - die between the pointer delete and its rename → readers take the
+  *    version the temp pointer names, the one the flip was about to
+  *    publish.
   * Together with the merge's replay idempotence this is exactly-once
   * table state over an at-least-once stream.
   *
@@ -53,27 +52,6 @@ object StreamingCdc {
 
   private val VersionName = "^v_(\\d+)$".r
 
-  /** This operator's OWN commit marker, written only after the staging
-    * rename fully returns. Deliberately not Spark's `_SUCCESS`: that
-    * marker is config-dependent (`marksuccessfuljobs=false` would make
-    * every committed snapshot invisible and silently merge onto empty
-    * state), and on an object store whose rename copies object by
-    * object a crash mid-rename can land `_SUCCESS` before the data
-    * files — our marker cannot exist until the whole rename call
-    * completed. */
-  private val CommitMarker = "_COMMITTED"
-
-  private def isCommitted(fs: org.apache.hadoop.fs.FileSystem, dir: Path,
-                          version: String): Boolean =
-    fs.exists(new Path(dir, s"$version/$CommitMarker"))
-
-  private def committedVersions(fs: org.apache.hadoop.fs.FileSystem,
-                                dir: Path): Seq[Long] =
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).map(_.getPath.getName).toSeq.collect {
-      case VersionName(n) if isCommitted(fs, dir, s"v_$n") => n.toLong
-    }.sorted
-
   /** Read the current materialized snapshot (empty with `schema` before
     * the first batch PUBLISHES). Resolution order:
     *  - a pointer naming a committed version wins;
@@ -82,14 +60,11 @@ object StreamingCdc {
     *    or a replay rebuilding its own version) falls back to the
     *    newest committed version on disk;
     *  - a MISSING pointer with a `_latest.tmp` present is the mid-swap
-    *    instant (the writer deletes the pointer only after its
-    *    replacement is fully staged) — same fallback;
-    *  - a missing pointer with no tmp means nothing was ever published
-    *    (e.g. only `flipPointer = false` backfill versions exist) →
-    *    the EMPTY frame. The fallback must not leak deliberately
-    *    unpublished snapshots.
-    * The pointer open races the writer's delete+rename; a vanishing
-    * file reads as mid-swap, never as a reader crash.
+    *    instant, and the temp pointer resolves as the pointer would;
+    *  - no pointer and no temp means nothing was ever published (e.g.
+    *    only `flipPointer = false` backfill versions exist) → the EMPTY
+    *    frame. The fallback must not leak deliberately unpublished
+    *    snapshots.
     *
     * The snapshot is always read with the caller's `schema`, exactly as
     * the empty case is built: Parquet columns resolve by name, and no
@@ -98,21 +73,12 @@ object StreamingCdc {
                    schema: StructType): DataFrame = {
     val dir = new Path(statePath)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ptr = new Path(dir, "_latest")
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val ptrContent: Option[String] =
-      try {
-        val in = fs.open(ptr)
-        Some(try scala.io.Source.fromInputStream(in).mkString.trim
-        finally in.close())
-      } catch { case _: java.io.FileNotFoundException => None }
-    val resolved: Option[String] = ptrContent match {
-      case Some(v @ VersionName(_)) if isCommitted(fs, dir, v) => Some(v)
+    val resolved: Option[String] = Commit.readPointer(fs, dir, "_latest") match {
+      case Some(v @ VersionName(_)) if Commit.isCommitted(fs, new Path(dir, v)) => Some(v)
       case Some(_) => // garbage or dangling target: newest committed
-        committedVersions(fs, dir).lastOption.map(v => s"v_$v")
-      case None if fs.exists(new Path(dir, "_latest.tmp")) => // mid-swap
-        committedVersions(fs, dir).lastOption.map(v => s"v_$v")
+        Commit.committed(fs, dir, "v").lastOption.map(v => s"v_$v")
       case None => None // never published: the publish gate holds
     }
     resolved.map(v => spark.read.schema(schema).parquet(new Path(dir, v).toString))
@@ -159,32 +125,14 @@ object StreamingCdc {
     // commit marker AFTER the rename returned: a crash mid-rename (an
     // object store copies object by object) leaves the version
     // invisible to readers and vacuum, and the replay rebuilds it
-    val mk = fs.create(new Path(dir, s"$version/$CommitMarker"), true)
-    mk.close()
+    Commit.mark(fs, new Path(dir, version))
     if (flipPointer) {
-      // pointer flip via write-temp-then-rename: a reader never observes
-      // a truncated/partial pointer, and the missing-pointer instant
-      // between delete and rename falls back (currentState) to the
-      // newest committed version — which is the one being named
-      val ptr = new Path(dir, "_latest")
-      val ptrTmp = new Path(dir, "_latest.tmp")
-      val out = fs.create(ptrTmp, true)
-      try out.write(version.getBytes("UTF-8")) finally out.close()
-      fs.delete(ptr, false)
-      if (!fs.rename(ptrTmp, ptr))
-        throw new java.io.IOException(s"pointer flip to $version failed")
-      // vacuum: retention counts COMMITTED versions only (an
-      // uncommitted/partial dir must not occupy a retention slot and
-      // push out the committed snapshot the crash-fallback depends on);
-      // everything else — superseded committed versions, uncommitted
-      // debris, orphan staging dirs of other batches — deletes
-      val keep = committedVersions(fs, dir).takeRight(retainVersions)
-        .map(i => s"v_$i").toSet + version
-      val names = fs.listStatus(dir).map(_.getPath.getName)
-      names.collect { case v @ VersionName(_) if !keep.contains(v) => v }
-        .foreach(v => fs.delete(new Path(dir, v), true))
-      names.filter(n => n.startsWith("_staging_") && n != s"_staging_$version")
-        .foreach(n => fs.delete(new Path(dir, n), true))
+      Commit.writePointer(fs, dir, "_latest", version)
+      // vacuum superseded versions and uncommitted debris, then orphan
+      // staging dirs of other batches
+      Commit.vacuum(fs, dir, "v", retainVersions, batchId)
+      fs.listStatus(dir).map(_.getPath).filter(_.getName.startsWith("_staging_"))
+        .foreach(fs.delete(_, true))
     }
     ()
   }

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.operators.Dedup
+import graft.core.Commit
+import graft.operators.{Checkpoint, Dedup}
 
 /** Corpus-LIFETIME streaming dedup — the live-ingest form of the batch
   * incremental operators ([[graft.operators.Dedup.buildExactIndex]] /
@@ -41,6 +42,15 @@ import graft.operators.Dedup
   * re-run of b reads the identical state-as-of-(b−1), recomputes the
   * identical admissions, and overwrites its own `d_b`/`c_b` in place.
   *
+  * Every `c_`, `d_` and output `batch_` dir is committed by
+  * [[graft.core.Commit]] once its parquet job returns, and the
+  * `_max_batch` high-water is a Commit pointer. The streaming path never
+  * reads a partial dir on its own (a batch's files are strictly older
+  * than it, and Structured Streaming replays the failed batch before
+  * advancing); the marker guards a BACKFILL caller driving
+  * [[processBatch]] past a crashed batch and any reader racing a
+  * replay's overwrite.
+  *
   * Vacuum runs one batch LATE: batch b deletes files superseded by the
   * newest base `c_j` with j < b (older bases and deltas ≤ j). Deferring
   * to the NEXT batch keeps every file a replay of the current batch
@@ -63,42 +73,17 @@ object StreamingIncrementalDedup {
     StructField("text", StringType),
     StructField("n_copies", LongType)))
 
-  /** Per-directory commit marker (the [[StreamingCdc]] discipline),
-    * written only after the parquet job returns: a partially-written
-    * delta/base/output dir from a dead attempt — possible when a
-    * BACKFILL caller drives [[processBatch]] past a crashed batch, or
-    * for any reader racing a replay's overwrite — is invisible rather
-    * than silently read as truncated state. The streaming path never
-    * reads a partial dir on its own (a batch's files are strictly older
-    * than it, and Structured Streaming replays the failed batch before
-    * advancing), so this guards the out-of-band readers and callers. */
-  private val CommitMarker = "_COMMITTED"
-
-  private def mark(fs: org.apache.hadoop.fs.FileSystem, dir: Path): Unit = {
-    val out = fs.create(new Path(dir, CommitMarker), true)
-    out.close()
-  }
-
   private def emptyIndex(spark: SparkSession): DataFrame =
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], IndexSchema)
 
-  private val StateName = "^([cd])_(\\d+)$".r
-
   /** (compacted-base ids, delta ids) COMMITTED in `statePath`; foreign
-    * file names are inert, unmarked (partial) dirs invisible. */
+    * names are inert, unmarked (partial) dirs invisible. */
   private def listVersions(spark: SparkSession,
-                           statePath: String): (Array[Long], Array[Long]) = {
+                           statePath: String): (Seq[Long], Seq[Long]) = {
     val dir = new Path(statePath)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) (Array.empty[Long], Array.empty[Long])
-    else {
-      val names = fs.listStatus(dir).map(_.getPath.getName).collect {
-        case n @ StateName(kind, id)
-          if fs.exists(new Path(dir, s"$n/$CommitMarker")) => (kind, id.toLong)
-      }
-      (names.collect { case ("c", i) => i }, names.collect { case ("d", i) => i })
-    }
+    (Commit.committed(fs, dir, "c"), Commit.committed(fs, dir, "d"))
   }
 
   /** The highest batchId whose body completed against this state dir —
@@ -110,28 +95,8 @@ object StreamingIncrementalDedup {
     * of two runs, and let vacuum destroy live state — so the batch
     * fails loudly instead. */
   private def highWater(fs: org.apache.hadoop.fs.FileSystem,
-                        dir: Path): Option[Long] = {
-    val p = new Path(dir, "_max_batch")
-    try {
-      val in = fs.open(p)
-      val v = try scala.io.Source.fromInputStream(in).mkString.trim
-      finally in.close()
-      v.toLongOption
-    } catch { case _: java.io.FileNotFoundException => None }
-  }
-
-  private def writeHighWater(fs: org.apache.hadoop.fs.FileSystem, dir: Path,
-                             batchId: Long): Unit = {
-    val tmp = new Path(dir, "_max_batch.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-    val hw = new Path(dir, "_max_batch")
-    fs.delete(hw, false)
-    // a refused rename would leave no high-water at all and silently
-    // disarm the reset-checkpoint guard: fail the batch instead
-    if (!fs.rename(tmp, hw))
-      throw new java.io.IOException(s"rename $tmp -> $hw failed")
-  }
+                        dir: Path): Option[Long] =
+    Commit.readPointer(fs, dir, "_max_batch").flatMap(_.toLongOption)
 
   /** The index state strictly older than `batchId`: newest compacted
     * base `c_j` (j < batchId) unioned with every delta in (j, batchId).
@@ -141,9 +106,9 @@ object StreamingIncrementalDedup {
   def indexBefore(spark: SparkSession, statePath: String,
                   batchId: Long): DataFrame = {
     val (bases, deltas) = listVersions(spark, statePath)
-    val base = bases.filter(_ < batchId).sorted.lastOption
+    val base = bases.filter(_ < batchId).lastOption
     val floor = base.getOrElse(Long.MinValue)
-    val live = deltas.filter(i => i > floor && i < batchId).sorted
+    val live = deltas.filter(i => i > floor && i < batchId)
     val paths =
       base.map(j => new Path(statePath, s"c_$j").toString).toSeq ++
         live.map(i => new Path(statePath, s"d_$i").toString)
@@ -157,7 +122,7 @@ object StreamingIncrementalDedup {
   private def vacuum(spark: SparkSession, statePath: String,
                      batchId: Long): Unit = {
     val (bases, deltas) = listVersions(spark, statePath)
-    bases.filter(_ < batchId).sorted.lastOption.foreach { j =>
+    bases.filter(_ < batchId).lastOption.foreach { j =>
       val dir = new Path(statePath)
       val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       bases.filter(_ < j).foreach(i => fs.delete(new Path(dir, s"c_$i"), true))
@@ -188,27 +153,28 @@ object StreamingIncrementalDedup {
     // record twice WITHIN one micro-batch — without the collapse the
     // admit join below fans the surviving doc out once per delivery and
     // the "deduplicated" corpus ships duplicates.
-    val pinned = batch.select(col("doc_id"), col("text"))
-      .dropDuplicates("doc_id").localCheckpoint()
-    val survivors = Dedup.dedupDeltaExact(pinned, index, "doc_id", "text")
-      .localCheckpoint() // feeds two writes; compute the anti-join once
+    val pinned = Checkpoint.cut(batch.select(col("doc_id"), col("text"))
+      .dropDuplicates("doc_id"))
+    // feeds two writes; compute the anti-join once
+    val survivors = Checkpoint.cut(Dedup.dedupDeltaExact(pinned, index, "doc_id", "text"))
     val admitted = pinned.join(
       broadcast(survivors.select(col("kept_id").as("doc_id"), col("n_copies"))),
       "doc_id")
     val outDir = new Path(outPath, s"batch_$batchId")
     admitted.write.mode("overwrite").parquet(outDir.toString)
-    mark(outDir.getFileSystem(spark.sparkContext.hadoopConfiguration), outDir)
+    Commit.mark(outDir.getFileSystem(spark.sparkContext.hadoopConfiguration), outDir)
     val deltaDir = new Path(stateDir, s"d_$batchId")
     survivors.select(col("content_md5"), col("kept_id")).write.mode("overwrite")
       .parquet(deltaDir.toString)
-    mark(fs, deltaDir)
+    Commit.mark(fs, deltaDir)
     if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
       val baseDir = new Path(stateDir, s"c_$batchId")
       Dedup.mergeExactIndex(index, survivors).write.mode("overwrite")
         .parquet(baseDir.toString)
-      mark(fs, baseDir)
+      Commit.mark(fs, baseDir)
     }
-    writeHighWater(fs, stateDir, batchId)
+    // a refused rename throws: no high-water would disarm the run fence
+    Commit.writePointer(fs, stateDir, "_max_batch", batchId.toString)
   }
 
   /** Start corpus-lifetime dedup of a streaming (doc_id, text) frame. */
@@ -229,15 +195,11 @@ object StreamingIncrementalDedup {
   def admittedCorpus(spark: SparkSession, outPath: String): DataFrame = {
     val dir = new Path(outPath)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed =
-      if (!fs.exists(dir)) Array.empty[String]
-      else fs.listStatus(dir).map(_.getPath).collect {
-        case p if p.getName.matches("^batch_\\d+$") &&
-          fs.exists(new Path(p, CommitMarker)) => p.toString
-      }
+    val committed = Commit.committed(fs, dir, "batch")
+      .map(b => new Path(dir, s"batch_$b").toString)
     if (committed.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], AdmittedSchema)
-    else spark.read.schema(AdmittedSchema).parquet(committed.toIndexedSeq: _*)
+    else spark.read.schema(AdmittedSchema).parquet(committed: _*)
   }
 }

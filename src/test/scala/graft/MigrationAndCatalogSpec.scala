@@ -336,7 +336,8 @@ class MigrationAndCatalogSpec extends SparkTestBase {
     import spark.implicits._
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions._
-    import graft.operators.{Dedup, Similarity}
+    import graft.operators.{Curation, Dedup, Frequency, Retrieval, Similarity}
+    import graft.streaming.StreamingIncrementalDedup
     val reg = new SchemaRegistry
     val entry = reg.registerSchema("s", "ev", graft.queries.EnvelopeOps.eventSchemaJson)
     val good = Seq((1L, 10L, "click", 1.5), (2L, 20L, "view", 2.0))
@@ -357,6 +358,9 @@ class MigrationAndCatalogSpec extends SparkTestBase {
     ).toDF("vec_id", "v")
     val probes = vecs.filter($"vec_id" < 2).select($"vec_id".as("probe_id"), $"v".as("p"))
     val cents = Similarity.kmeansFit(vecs, k = 2, iters = 2)
+    val docs = Seq((1L, "spark is fast"), (2L, "spark streaming is fun"),
+      (3L, "the fast cat"), (4L, "a cat is a cat")).toDF("doc_id", "text")
+    def tmp(name: String): String = java.nio.file.Files.createTempDirectory(name).toString
     def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
     // each site's rows, as the site composes them (a reliable cut
     // materializes at composition, so the call itself runs under the dir)
@@ -370,7 +374,23 @@ class MigrationAndCatalogSpec extends SparkTestBase {
       "ivfTopK (pre-fit)" -> (() =>
         rows(Similarity.ivfTopK(vecs, cents, probes, k = 3, nprobe = 1, roundTo = 4))),
       "semanticDedup (pre-fit)" -> (() =>
-        rows(Similarity.semanticDedup(vecs, cents, threshold = 0.95))))
+        rows(Similarity.semanticDedup(vecs, cents, threshold = 0.95))),
+      "Retrieval.bm25TopK" -> (() =>
+        rows(Retrieval.bm25TopK(docs, "doc_id", "text", Seq("spark", "cat"), k = 3))),
+      "Curation.stripBoilerplate" -> (() =>
+        rows(Curation.stripBoilerplate(docs, "doc_id", "text", dfRatio = 0.5))),
+      "Frequency.skewStats" -> (() =>
+        rows(Frequency.skewStats(Seq("a", "a", "a", "b", "b", "c").toDF("key"),
+          Seq("key"), topN = 2))),
+      "Similarity.pqFit" -> (() =>
+        rows(Similarity.pqFit(vecs, m = 1, subDim = 3, ksub = 2, iters = 2))),
+      "StreamingIncrementalDedup.processBatch" -> { () =>
+        val out = tmp("cut_incr_out")
+        StreamingIncrementalDedup.processBatch(
+          Seq((1L, "a"), (2L, "a"), (3L, "b"), (3L, "b")).toDF("doc_id", "text"),
+          0L, tmp("cut_incr_state"), out)
+        rows(StreamingIncrementalDedup.admittedCorpus(spark, out))
+      })
     def rddDirs(d: java.io.File): Seq[java.io.File] =
       Option(d.listFiles()).getOrElse(Array.empty).toSeq
         .flatMap(f => if (f.isDirectory) f +: rddDirs(f) else Seq(f))
@@ -398,6 +418,24 @@ class MigrationAndCatalogSpec extends SparkTestBase {
         rm(chkDir)
       }
     }
+  }
+
+  test("source guard: lineage cuts only in Checkpoint.scala, the commit marker only in Commit.scala") {
+    def files(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).getOrElse(Array.empty).toSeq
+        .flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    val sources = files(new java.io.File("src/main/scala"))
+      .filter(_.getName.endsWith(".scala"))
+      .map(f => f.getPath.replace('\\', '/') ->
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+    def outside(needle: String, home: String): Seq[String] = {
+      assert(sources.exists(_._1.endsWith(home)), s"$home not found under src/main/scala")
+      sources.collect { case (path, text) if !path.endsWith(home) && text.contains(needle) => path }
+    }
+    val cuts = outside("localCheckpoint(", "graft/operators/Checkpoint.scala")
+    assert(cuts.isEmpty, s"cut lineage through Checkpoint.cut, not localCheckpoint, in $cuts")
+    val markers = outside("\"_COMMITTED\"", "graft/core/Commit.scala")
+    assert(markers.isEmpty, s"commit through graft.core.Commit, not a marker of its own, in $markers")
   }
 
   test("test harness: a checkpoint dir left on the shared session fails the suite and is cleared") {

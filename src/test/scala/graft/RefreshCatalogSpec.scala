@@ -276,6 +276,36 @@ class RefreshCatalogSpec extends SparkTestBase {
       "a dangling pointer must fall back to the previous committed generation")
   }
 
+  test("catalog pointer crash windows: a mid-swap temp pointer resolves its generation; a garbage pointer falls back") {
+    val dir = java.nio.file.Files.createTempDirectory("reg_pointer").toString
+    val reg = new SchemaRegistry
+    reg.registerSchema("yelp", "user", userJson)
+    reg.createRefresh("yelp", "user", 0L, 500, 50)
+    reg.save(spark, dir) // gen_0: refresh not started
+    reg.updateRefresh(1, RefreshStatus.InProgress, 1234L)
+    reg.save(spark, dir) // gen_1: refresh in progress
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def writeFile(name: String, content: String): Unit = {
+      val out = fs.create(new org.apache.hadoop.fs.Path(dir, name), true)
+      try out.write(content.getBytes("UTF-8")) finally out.close()
+    }
+    def status(): Option[(RefreshStatus.Value, Long)] =
+      SchemaRegistry.load(spark, dir).getRefreshById(1).map(j => (j.status, j.offset))
+    // die between the pointer delete and its rename: the temp pointer
+    // is the pointer (it names gen_0 here, so the newest-committed
+    // fallback would read differently)
+    writeFile("_latest_gen.tmp", "gen_0")
+    fs.delete(new org.apache.hadoop.fs.Path(dir, "_latest_gen"), false)
+    assert(status().contains((RefreshStatus.NotStarted, 0L)),
+      "a mid-swap load must resolve the generation the temp pointer names")
+    // a garbage pointer falls back to the newest committed generation
+    fs.delete(new org.apache.hadoop.fs.Path(dir, "_latest_gen.tmp"), false)
+    writeFile("_latest_gen", "not a generation")
+    assert(status().contains((RefreshStatus.InProgress, 1234L)),
+      "a garbage pointer must fall back to the newest committed generation")
+  }
+
   test("generation vacuum keeps a COMMITTED grace copy and deletes crash debris") {
     val dir = java.nio.file.Files.createTempDirectory("reg_vacuum").toString
     val reg = new SchemaRegistry

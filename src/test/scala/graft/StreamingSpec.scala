@@ -1026,6 +1026,25 @@ class StreamingSpec extends SparkTestBase {
     } finally conf.unset("fs.norename.impl")
   }
 
+  test("incremental dedup crash window: a high-water left only as its temp file still fences a reset run") {
+    import spark.implicits._
+    val state = java.nio.file.Files.createTempDirectory("hw_tmp_state").toString
+    val out = java.nio.file.Files.createTempDirectory("hw_tmp_out").toString
+    def run(id: Long, rows: (Long, String)*): Unit =
+      graft.streaming.StreamingIncrementalDedup.processBatch(
+        rows.toDF("doc_id", "text"), id, state, out)
+    run(0L, (1L, "a")); run(5L, (2L, "b"))
+    // die between the high-water delete and its rename: only the temp
+    // file, fully written, holds the mark
+    val fs = new org.apache.hadoop.fs.Path(state)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = fs.create(new org.apache.hadoop.fs.Path(state, "_max_batch.tmp"), true)
+    try tmp.write("5".getBytes("UTF-8")) finally tmp.close()
+    fs.delete(new org.apache.hadoop.fs.Path(state, "_max_batch"), false)
+    val e = intercept[IllegalArgumentException] { run(0L, (9L, "z")) }
+    assert(e.getMessage.contains("fresh state directory"), e.getMessage)
+  }
+
   test("incremental dedup crash window: compaction batch dies after d_b, before c_b; replay converges to the clean run") {
     import spark.implicits._
     // The nastiest window in the delta-file discipline: batch b is a
