@@ -312,7 +312,6 @@ object Tables {
     * for the rules). */
   private def validateRawEmbeddings(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
     val raw = embeddings(spark, dir)
     val dims = raw
       .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
@@ -331,10 +330,9 @@ object Tables {
       val hasDupIds = dupIdProbe(filtered).head().getLong(0) > 0
       if (!hasDupIds) filtered
       else {
-        val w = Window.partitionBy(col("vec_id"))
-          .orderBy(col("embedding").asc, col("label").asc_nulls_last)
-        filtered.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
+        graft.operators.TopK.cut(filtered, 1, Seq(col("vec_id")),
+            Seq(col("embedding").asc, col("label").asc_nulls_last), "__rn")
+          .drop("__rn")
       }
     }
   }

@@ -35,7 +35,7 @@ import org.apache.spark.sql.types._
   * table position (stale codebook), or a missing/null table entry all
   * yield null — the same cases where the
   * expression form's `element_at`/`nullif(array_position, 0)` chain goes
-  * null — so `topKPerProbeBy`'s null-score filter drops the candidate
+  * null — so `Similarity.scoreTopK`'s null-score filter drops the candidate
   * identically.
   */
 case class PqAdc(left: Expression, right: Expression,

@@ -87,11 +87,9 @@ object Curation {
     * The draw is the same engine-portable md5 uniform as [[sampleKeep]]
     * ((first 6 hex digits + 1) / 16^6 ∈ (0, 1], so mixtures reproduce
     * byte for byte across engines and reruns), and the k-largest cut is
-    * the salted two-phase top-k: phase 1 ranks inside hash-salt buckets
-    * (parallel — this is what makes the cut work on a 100 TB corpus where
-    * a single ORDER BY key DESC LIMIT k would sort everything in one
-    * task), phase 2 ranks the ≤ k·nSalts survivors. Rows with
-    * non-positive weight are excluded (E-S is undefined there).
+    * one global [[TopK.cut]]: every task keeps its local k largest keys
+    * before the single merge, so no task ever sorts the whole corpus.
+    * Rows with non-positive weight are excluded (E-S is undefined there).
     *
     * Returns (idCol, weightCol, draw = key rounded 6 dp, rank ≤ k) —
     * ranking uses the key rounded to 12 dp with the id as tiebreak, so
@@ -101,7 +99,7 @@ object Curation {
     * pattern as the 6-dp-rounded cosine in bruteForceTopK).
     */
   def weightedSample(docs: DataFrame, idCol: String, weightCol: String,
-                     k: Int, salt: String, nSalts: Int = 32): DataFrame = {
+                     k: Int, salt: String): DataFrame = {
     val u = (md5Draw(salt, col(idCol).cast("string")) + lit(1L)).cast("double") /
       lit((1L << 24).toDouble)
     val keyed = docs
@@ -109,13 +107,7 @@ object Curation {
       .select(col(idCol), col(weightCol),
         pow(u, lit(1.0) / col(weightCol).cast("double")).as("__key"))
       .withColumn("__rkey", round(col("__key"), 12))
-    val w1 = Window
-      .partitionBy(pmod(xxhash64(col(idCol)), lit(nSalts.toLong)))
-      .orderBy(col("__rkey").desc, col(idCol).asc)
-    val w2 = Window.orderBy(col("__rkey").desc, col(idCol).asc)
-    keyed
-      .withColumn("__brank", row_number().over(w1)).filter(col("__brank") <= k)
-      .withColumn("rank", row_number().over(w2)).filter(col("rank") <= k)
+    TopK.cut(keyed, k, Nil, Seq(col("__rkey").desc, col(idCol).asc), "rank")
       .select(col(idCol), col(weightCol), round(col("__key"), 6).as("draw"), col("rank"))
   }
 
@@ -373,29 +365,26 @@ object Curation {
     * [[mixtureWeights]]' temperature-flattened targets into an actual
     * rebalanced corpus. Ranks each stratum on the portable md5-u24 draw
     * (descending, id tiebreak) and keeps the stratum's quota; the
-    * weights frame broadcasts (|strata| rows) and the rank runs in the
-    * same salted two-phase shape as the top-k operators — phase 1
-    * ranks (stratum, salt-of-id) buckets so a dominant stratum never
-    * sorts in one task, phase 2 ranks the survivors (the per-bucket cut
-    * keeps ≤ quota rows per bucket, and the true per-stratum top-quota
-    * set is contained in the union of per-bucket top-quota sets).
+    * weights frame broadcasts (|strata| rows). The rank is one
+    * per-stratum [[TopK.cut]] bounded by `totalK` — every quota is at
+    * most `totalK` for weights in [0, 1] — with the quota filtered on
+    * top. Up to the keyed-cut threshold [[TopK]] names (`totalK` ≤ 1000
+    * by default) each task forwards at most `totalK` rows per stratum,
+    * so a dominant stratum never sorts in one task; above it each
+    * stratum ranks whole in one task. A weight above 1 is out of
+    * contract: its quota is capped at `totalK`.
     * Returns (strataCol, idCol, rank). */
   def rebalanceSample(docs: DataFrame, strataCol: String, idCol: String,
-                      weights: DataFrame, totalK: Long, salt: String,
-                      nSalts: Int = 32): DataFrame = {
+                      weights: DataFrame, totalK: Long, salt: String): DataFrame = {
     val quotas = broadcast(weights.select(col(strataCol),
       floor(col("weight") * totalK).cast("long").as("__kg")))
     val keyed = docs.select(col(strataCol), col(idCol))
       .join(quotas, strataCol)
       .withColumn("__u", md5Draw(salt, col(idCol).cast("string")))
-    val w1 = Window
-      .partitionBy(col(strataCol), pmod(xxhash64(col(idCol)), lit(nSalts.toLong)))
-      .orderBy(col("__u").desc, col(idCol).asc)
-    val w2 = Window.partitionBy(col(strataCol))
-      .orderBy(col("__u").desc, col(idCol).asc)
-    keyed
-      .withColumn("__br", row_number().over(w1)).filter(col("__br") <= col("__kg"))
-      .withColumn("rank", row_number().over(w2)).filter(col("rank") <= col("__kg"))
+    // a rank never exceeds Int.MaxValue, so the clamp keeps every quota
+    TopK.cut(keyed, totalK.max(0L).min(Int.MaxValue).toInt, Seq(col(strataCol)),
+        Seq(col("__u").desc, col(idCol).asc), "rank")
+      .filter(col("rank") <= col("__kg"))
       .select(col(strataCol), col(idCol), col("rank"))
   }
 

@@ -89,19 +89,16 @@ object Frequency {
     * the table in exact integer ppm, and its ratio to the mean key size
     * (`skew_x`, 6-dp — a key at skew_x 500 needs ~500 salt buckets to
     * level its partition). Two map-side-combinable aggregations (per-key
-    * counts, then 1-row global stats broadcast back); the top-N cut uses
-    * the same salted two-phase ranking as the ANN searches — phase 1
-    * ranks inside (key-hash mod 32) buckets so no task ever sorts the
-    * full distinct-key set (billions of keys at corpus scale), phase 2
-    * ranks the ≤ 32·topN survivors. Ties break on the key columns.
+    * counts, then 1-row global stats broadcast back); the top-N cut is
+    * one global [[TopK.cut]], each task keeping its local topN before the
+    * single merge, so no task ever sorts the full distinct-key set
+    * (billions of keys at corpus scale). Ties break on the key columns.
     */
-  def skewStats(df: DataFrame, keyCols: Seq[String], topN: Int,
-                nSalts: Int = 32): DataFrame = {
+  def skewStats(df: DataFrame, keyCols: Seq[String], topN: Int): DataFrame = {
     // output/internal aliases must not collide with a key column — a key
     // literally named `n` made every later reference ambiguous at
     // analysis time with no useful error
-    val reserved = Seq("n", "share_ppm", "skew_x", "rank",
-      "__total", "__nkeys", "__brank")
+    val reserved = Seq("n", "share_ppm", "skew_x", "rank", "__total", "__nkeys")
     val clash = keyCols.toSet intersect reserved.toSet
     require(clash.isEmpty,
       s"key columns ${clash.mkString(", ")} collide with skewStats " +
@@ -109,8 +106,10 @@ object Frequency {
     // the per-key count frame feeds BOTH the global-stats fold and the
     // ranked cut — pin it so the corpus scan + count shuffle run once
     // (the bpeTokenCounts lesson: an un-pinned shared frame re-runs its
-    // whole lineage per consumer). Lazy: materializes with the first
-    // action, so composing/explaining never triggers the scan.
+    // whole lineage per consumer). With no session checkpoint dir the cut
+    // is lazy: it materializes with the first action, so composing or
+    // explaining runs no job. With a dir set, Checkpoint.cut materializes
+    // here, at composition.
     val counts = Checkpoint.cut(df.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("n")))
     val totals = counts.agg(sum(col("n")).as("__total"),
       count(lit(1)).as("__nkeys"))
@@ -122,20 +121,13 @@ object Frequency {
     // defensible semantics: at equal frequency, attributed keys
     // outrank the unattributed bucket.
     val order = col("n").desc +: keyCols.map(col(_).asc_nulls_last)
-    val w1 = org.apache.spark.sql.expressions.Window
-      .partitionBy(pmod(xxhash64(keyCols.map(col): _*), lit(nSalts.toLong)))
-      .orderBy(order: _*)
-    val w2 = org.apache.spark.sql.expressions.Window.orderBy(order: _*)
-    counts
-      .withColumn("__brank", row_number().over(w1)).filter(col("__brank") <= topN)
+    TopK.cut(counts, topN, Nil, order, "rank")
       .crossJoin(broadcast(totals))
       .withColumn("share_ppm", expr("1000000 * n div __total"))
       // multiply in double: long×long wraps silently in non-ANSI Spark
       // once n·nkeys passes 2^63 (n≈1e10 × nkeys≈1e9 at corpus scale)
       .withColumn("skew_x",
         round(col("n").cast("double") * col("__nkeys") / col("__total"), 6))
-      .withColumn("rank", row_number().over(w2))
-      .filter(col("rank") <= topN)
       .select(keyCols.map(col) ++
         Seq(col("n"), col("share_ppm"), col("skew_x"), col("rank")): _*)
   }

@@ -183,25 +183,13 @@ object Retrieval {
 
   /** Shared per-query rank tail of the multi-query retrievers: fold the
     * fanned (__qid, id, contrib) rows to per-(query, doc) scores, then
-    * top-k via ONE window — the rank-filter pattern plans as
-    * WindowGroupLimit (Spark ≥ 3.5, k below
-    * spark.sql.optimizer.windowGroupLimitThreshold), which inserts a
-    * map-side partial limit BEFORE the exchange — every task keeps only
-    * its local top-k per query, so ≤ k·n_map_partitions rows per query
-    * ever shuffle or sort in the final task. Same bound as the salted
-    * two-phase ranking used elsewhere, with one exchange fewer (the
-    * explicit two-phase variant cost +32% at bench scale for the extra
-    * shuffle; PlanSpec pins the WindowGroupLimit node so a config/
-    * version change that silently drops the partial limit fails loudly). */
+    * the per-query top-k through [[TopK.cut]]. */
   private def rankPerQuery(fanned: DataFrame, qidCol: String, idCol: String,
                            k: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__qid")).orderBy(col("score_ppm").desc, col("id"))
-    fanned
+    val scored = fanned
       .groupBy(col("__qid"), col("id"))
       .agg(count(lit(1)).as("n_terms_matched"), sum(col("contrib")).as("score_ppm"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    TopK.cut(scored, k, Seq(col("__qid")), Seq(col("score_ppm").desc, col("id")), "rank")
       .select(col("__qid").as(qidCol), col("id").as(idCol),
         col("n_terms_matched"), col("score_ppm"), col("rank"))
   }
@@ -322,12 +310,13 @@ object Retrieval {
                      merges: Seq[(String, String)],
                      maxVocabBroadcast: Int = 1 << 20): DataFrame = {
     val ranks = merges.zipWithIndex.toMap
-    // pinned (lazily — composing/explaining must not launch jobs): the
-    // broadcast-cap probe below is an action over this frame, and without
-    // the checkpoint the wordTokens lineage would re-run the full corpus
-    // tokenize+distinct a second time when the join executes. With it the
-    // probe materializes the distinct-word blocks once and the encode
-    // loop reads them back.
+    // pinned: the broadcast-cap probe below is an action over this frame,
+    // and without the cut the wordTokens lineage would re-run the full
+    // corpus tokenize+distinct a second time when the join executes.
+    // With no session checkpoint dir the cut is lazy and the probe fills
+    // it; with a dir set Checkpoint.cut runs its own job here, at
+    // composition. Either way the encode loop reads the distinct-word
+    // blocks back.
     val words = Checkpoint.cut(docs
       .select(explode(split(trim(lower(col(textCol))), "\\s+")).as("w"))
       .filter(col("w") =!= "")
@@ -593,10 +582,7 @@ object Retrieval {
       .groupBy(col("__q"), col("__id"))
       .agg(count(lit(1)).as("n_runs"),
         sum(expr(s"1000000L div (${c}L + __r)")).as("rrf_ppm"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__q"))
-      .orderBy(col("rrf_ppm").desc, col("__id").asc)
-    fused.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    TopK.cut(fused, k, Seq(col("__q")), Seq(col("rrf_ppm").desc, col("__id").asc), "rank")
       .select(col("__q").as(queryCol), col("__id").as(idCol),
         col("n_runs"), col("rrf_ppm"), col("rank"))
   }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
@@ -30,20 +29,20 @@ object Similarity {
   private val cosineExpr: Column =
     graft.functions.CosineSim.cosine_sim(col("v"), col("p"))
 
-  /** Per-probe top-k over a (probe_id, vec_id, cosine) frame via ONE
-    * keyed window whose rank filter plans as WindowGroupLimit (the
-    * `Retrieval.rankPerQuery` pattern): every task keeps only its local
-    * top-k per probe BEFORE the exchange, so ≤ k·n_map_partitions rows
-    * per probe ever shuffle or sort in the final task — the same
-    * per-task bound the former explicit salted two-phase gave, with one
-    * Exchange and one full sort fewer (that variant measured +32% at
-    * bench scale on the BM25 ranker for exactly this reason; PlanSpec
-    * pins the map-side WindowGroupLimit below the rank exchange so a
-    * config/version change that silently drops the partial limit fails
-    * loudly). Identical results: same (score, vec_id) total order, same
-    * null/NaN drop. */
-  private def topKPerProbe(scored: DataFrame, k: Int): DataFrame =
-    topKPerProbeBy(scored, k, col("cosine"), ascending = false)
+  /** Top-k by `score` per `parts` key (per probe unless given), ties to
+    * the lower vec_id, through the one bounded cut [[TopK.cut]]. A null
+    * OR NaN score can only arise from out-of-contract input (a null probe
+    * code, mismatched array widths null-padding a fold, a zero-norm
+    * vector whose cosine is 0/0) — those rows DROP before ranking:
+    * ascending row_number is NULLS FIRST and Spark's nan-safe ordering
+    * sorts NaN ABOVE every real double, so without both guards one
+    * garbage row per probe would silently crown the descending top-k
+    * (a single all-zero corpus vector would become the rank-1
+    * "neighbor" of every probe). */
+  private def scoreTopK(scored: DataFrame, k: Int, score: Column, ascending: Boolean,
+                        parts: Seq[Column] = Seq(col("probe_id"))): DataFrame =
+    TopK.cut(scored.filter(score.isNotNull && !isnan(score.cast("double"))), k,
+      parts, Seq(if (ascending) score.asc else score.desc, col("vec_id").asc), "rank")
 
   /** Exact top-k neighbors per probe. `vectors`: (vec_id, v:array<double>);
     * `probes`: (probe_id, p:array<double>). */
@@ -52,7 +51,7 @@ object Similarity {
     val scored = vectors.crossJoin(broadcast(probes))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"), round(cosineExpr, roundTo).as("cosine"))
-    topKPerProbe(scored, k)
+    scoreTopK(scored, k, col("cosine"), ascending = false)
   }
 
   /** Elementwise-mean centroids per cluster: (cluster, c:array<double>).
@@ -150,7 +149,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"),
         expr("bit_count(f ^ pf)").as("dist"))
-    topKPerProbeBy(scored, k, col("dist"), ascending = true)
+    scoreTopK(scored, k, col("dist"), ascending = true)
   }
 
   /** Embedding-cosine near-duplicate pairs via sign-random-projection LSH
@@ -415,9 +414,8 @@ object Similarity {
       // Undefined similarity must never route (DuckDB yields NULL here
       // and NULLS sort last — the oracles already skip it).
       .filter(col("ccos").isNotNull && !isnan(col("ccos")))
-    val wc = Window.partitionBy(col("probe_id")).orderBy(col("ccos").desc, col("cluster").asc)
-    probeCent.withColumn("crank", row_number().over(wc))
-      .filter(col("crank") <= nprobe)
+    TopK.cut(probeCent, nprobe, Seq(col("probe_id")),
+        Seq(col("ccos").desc, col("cluster").asc), "crank")
       .select(col("probe_id"), col("p"), col("cluster"))
   }
 
@@ -432,7 +430,7 @@ object Similarity {
       .join(broadcast(routeProbes(probes, cents, nprobe)), "cluster")
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"), round(cosineExpr, roundTo).as("cosine"))
-    topKPerProbe(scored, k)
+    scoreTopK(scored, k, col("cosine"), ascending = false)
   }
 
   /** Product-quantization codebooks (Jégou et al. 2011, "Product
@@ -568,7 +566,7 @@ object Similarity {
     val scored = encoded.crossJoin(withTbl)
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"), pqAdist(cbs, m).as("adist"))
-    topKPerProbeBy(scored, k, col("adist"), ascending = true)
+    scoreTopK(scored, k, col("adist"), ascending = true)
   }
 
   /** Per-probe ADC distance table: array(sub)(pos) of 6-dp-rounded
@@ -619,7 +617,7 @@ object Similarity {
     * fused into the lookup instead of pre-filtered: an unresolvable code
     * (stale codebook, short/null codes array) makes the lookup index go
     * null, the term and therefore the whole sum go null, and
-    * [[topKPerProbeBy]]'s null-score filter drops the candidate before
+    * [[scoreTopK]]'s null-score filter drops the candidate before
     * ranking — same drop-the-candidate semantics as the old pqCodesValid
     * pre-pass, without a second set of lookups per corpus row ahead of
     * the join.
@@ -697,7 +695,7 @@ object Similarity {
       .join(withTbl, "cluster")
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"), pqAdist(cbs, m).as("adist"))
-    topKPerProbeBy(scored, k, col("adist"), ascending = true)
+    scoreTopK(scored, k, col("adist"), ascending = true)
   }
 
   /** `v − centroid[cluster]`: the k coarse centroids ride ON the native
@@ -795,7 +793,7 @@ object Similarity {
       .join(withTbl, "cluster")
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"), pqAdist(cbs, m).as("adist"))
-    topKPerProbeBy(scored, k, col("adist"), ascending = true)
+    scoreTopK(scored, k, col("adist"), ascending = true)
   }
 
   // ──────────────── OPQ: optimized product quantization ────────────────
@@ -978,16 +976,8 @@ object Similarity {
     *
     * Returns (cluster, vec_id, cos_ppm, rank ≤ k), rank 1 = least
     * similar; ties to the lower vec_id.
-    *
-    * `nSalts` is CONTRACT-FROZEN and ignored: the per-cluster cut ranks
-    * through the map-side WindowGroupLimit (see [[topKPerProbe]]) since
-    * r18, which gives the same per-task bound the explicit salt buckets
-    * did with one Exchange and one sort fewer. The parameter stays only
-    * so existing callers keep compiling; it has no effect.
     */
-  def clusterOutliers(vectors: DataFrame, cents: DataFrame, k: Int,
-                      nSalts: Int = 32): DataFrame = {
-    val _ = nSalts
+  def clusterOutliers(vectors: DataFrame, cents: DataFrame, k: Int): DataFrame = {
     require(k > 0)
     val centRows = collectCents(cents)
     val centMap = map(centRows.flatMap { case (id, c) =>
@@ -1000,16 +990,13 @@ object Similarity {
       // zero-norm vector's cosine is NaN by CosineSim's documented
       // contract, and CAST(NaN AS BIGINT) kills the whole job under
       // ANSI — one corrupt vector must not take down the outlier pass.
-      // NULL cos_ppm rows then drop in topKByPartition's score filter,
+      // NULL cos_ppm rows then drop in scoreTopK's score filter,
       // and the oracle filters `cos_ppm IS NOT NULL` in lockstep.
       .select(col("vec_id"), col("cluster"),
         when(!isnan(col("__c6")),
           expr("CAST(round(__c6 * 1000000, 0) AS BIGINT)")).as("cos_ppm"))
-    // same map-side group-limited ranking as the per-probe rankers, via
-    // the shared helper (partitioned by cluster instead of probe_id) —
-    // one implementation carries the null/NaN guard for all of them
-    topKByPartition(scored, k, col("cos_ppm"), ascending = true,
-        parts = Seq(col("cluster")))
+    // the per-probe rankers' cut and null/NaN guard, keyed by cluster
+    scoreTopK(scored, k, col("cos_ppm"), ascending = true, parts = Seq(col("cluster")))
       .select(col("cluster"), col("vec_id"), col("cos_ppm"), col("rank"))
   }
 
@@ -1117,36 +1104,7 @@ object Similarity {
       .join(broadcast(cleaned), "vec_id")
       .join(broadcast(probes.select(col("probe_id"), col("p"))), "probe_id")
       .select(col("probe_id"), col("vec_id"), round(cosineExpr, roundTo).as("cosine"))
-    topKPerProbe(scored, k)
-  }
-
-  /** The [[topKPerProbe]] map-side group-limited ranking under an
-    * arbitrary score ordering (ties always break on ascending vec_id). A null OR
-    * NaN score can only arise from out-of-contract input (a null probe
-    * code, mismatched array widths null-padding a fold, a zero-norm
-    * vector whose cosine is 0/0) — those rows DROP before ranking:
-    * ascending row_number is NULLS FIRST and Spark's nan-safe ordering
-    * sorts NaN ABOVE every real double, so without both guards one
-    * garbage row per probe would silently crown the descending top-k
-    * (a single all-zero corpus vector would become the rank-1
-    * "neighbor" of every probe). */
-  private def topKPerProbeBy(scored: DataFrame, k: Int, score: Column,
-                             ascending: Boolean): DataFrame =
-    topKByPartition(scored, k, score, ascending, Seq(col("probe_id")))
-
-  /** [[topKPerProbeBy]] under an arbitrary partition key — shared by the
-    * per-probe rankers and [[clusterOutliers]]' per-cluster cut so the
-    * group-limit ranking machinery (and its null/NaN guard) exists once.
-    * The partial cut comes from WindowGroupLimit's map-side limit (k per
-    * partition key per task) — see [[topKPerProbe]]. */
-  private def topKByPartition(scored: DataFrame, k: Int, score: Column,
-                              ascending: Boolean,
-                              parts: Seq[Column]): DataFrame = {
-    val primary = if (ascending) score.asc else score.desc
-    val w = Window.partitionBy(parts: _*)
-      .orderBy(primary, col("vec_id").asc)
-    scored.filter(score.isNotNull && !isnan(score.cast("double")))
-      .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    scoreTopK(scored, k, col("cosine"), ascending = false)
   }
 
   /** Symmetric per-vector int8 scalar quantization — the embedding
@@ -1206,7 +1164,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"),
         round(dot.cast("double") / (col("__nq") * col("__np")), roundTo).as("cosine"))
-    topKPerProbe(scored, k)
+    scoreTopK(scored, k, col("cosine"), ascending = false)
   }
 
   /** The HOF twin of the [[graft.functions.Int8Dot]] pair kernel —

@@ -475,16 +475,13 @@ object CurationOps {
          SELECT user_id, n, share_ppm, skew_x, rank
          FROM r WHERE rank <= 20 ORDER BY rank""",
     "t_rebalance" ->
-      """WITH s AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY 1),
+      s"""WITH s AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY 1),
          d AS (SELECT sum(power(n_docs, 0.5)) AS denom FROM s),
          wt AS (SELECT source, round(power(n_docs, 0.5) / denom, 6) AS weight
                 FROM s, d),
          k AS (SELECT source, CAST(floor(weight * 200) AS BIGINT) AS kg FROM wt),
          u AS (SELECT doc_id, source,
-                      list_sum([(strpos('0123456789abcdef',
-                                        substr(md5('rb8:' || doc_id), i, 1)) - 1)
-                                * power(16, 6 - i)::BIGINT
-                                for i in range(1, 7)])::BIGINT AS u24
+                      ${LlmOps.u24Sql("'rb8:' || doc_id")} AS u24
                FROM documents),
          r AS (SELECT source, doc_id,
                       row_number() OVER (PARTITION BY source
@@ -495,12 +492,9 @@ object CurationOps {
          WHERE r.rank <= k.kg
          ORDER BY r.source, r.rank""",
     "t_split_hash" ->
-      """WITH u AS (
+      s"""WITH u AS (
            SELECT doc_id,
-                  list_sum([(strpos('0123456789abcdef',
-                                    substr(md5('sp8:' || doc_id), i, 1)) - 1)
-                            * power(16, 6 - i)::BIGINT
-                            for i in range(1, 7)])::BIGINT AS u24
+                  ${LlmOps.u24Sql("'sp8:' || doc_id")} AS u24
            FROM documents)
          SELECT doc_id,
                 CASE WHEN u24 < 13421772 THEN 'train'
@@ -516,13 +510,10 @@ object CurationOps {
                  CAST(least(32, len(toks) - st) AS INTEGER) AS n_tokens
           FROM s ORDER BY doc_id, chunk_idx""",
     "t_weighted_sample" ->
-      """WITH w AS (
+      s"""WITH w AS (
            SELECT doc_id,
-                  CAST(len(list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '')) AS BIGINT) AS weight,
-                  list_sum([(strpos('0123456789abcdef',
-                                    substr(md5('ws:' || doc_id), i, 1)) - 1)
-                            * power(16, 6 - i)::BIGINT
-                            for i in range(1, 7)])::BIGINT AS u24
+                  CAST(len(list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')) AS BIGINT) AS weight,
+                  ${LlmOps.u24Sql("'ws:' || doc_id")} AS u24
            FROM documents),
          keyed AS (
            SELECT doc_id, weight,
@@ -558,13 +549,10 @@ object CurationOps {
           WHERE i * 1.0 / bn.bn >= 0.5
           ORDER BY train_id, bench_id""",
     "t_stratified_sample" ->
-      """SELECT doc_id, lang
+      s"""SELECT doc_id, lang
          FROM (
            SELECT doc_id, lang,
-                  list_sum([(strpos('0123456789abcdef',
-                                    substr(md5('smp:' || doc_id), i, 1)) - 1)
-                            * power(16, 6 - i)::BIGINT
-                            for i in range(1, 7)])::BIGINT AS u
+                  ${LlmOps.u24Sql("'smp:' || doc_id")} AS u
            FROM documents)
          WHERE u < (CASE lang WHEN 'en' THEN 0.3 WHEN 'zh' THEN 0.0
                     ELSE 1.0 END) * 16777216
@@ -605,16 +593,13 @@ object CurationOps {
                 CAST(sum(t) AS BIGINT) AS batch_tokens
          FROM sized GROUP BY 1, 2 ORDER BY lang, batch_id""",
     "t_pack_sharded" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
            SELECT doc_id, lang,
-                  CAST(len(list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '')) AS BIGINT) AS n_tokens
+                  CAST(len(list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')) AS BIGINT) AS n_tokens
            FROM documents),
          sh AS (
            SELECT doc_id, lang, n_tokens,
-                  list_sum([(strpos('0123456789abcdef',
-                                    substr(md5('psh:' || doc_id), i, 1)) - 1)
-                            * power(16, 6 - i)::BIGINT
-                            for i in range(1, 7)])::BIGINT % 4 AS shard_id
+                  ${LlmOps.u24Sql("'psh:' || doc_id")} % 4 AS shard_id
            FROM toks),
          loc AS (
            SELECT lang, shard_id, doc_id, n_tokens,
@@ -885,9 +870,7 @@ object CurationOps {
                                   for i in range(1, len(ws) - 6)]) AS u
                    FROM d WHERE len(ws) >= 8)),
          sel AS (SELECT doc_id, idx, h FROM wnd
-                 WHERE list_sum([(strpos('0123456789abcdef', substr(h, i, 1)) - 1)
-                                 * power(16, 6 - i)::BIGINT
-                                 for i in range(1, 7)])::BIGINT % 4 = 0),
+                 WHERE ${LlmOps.hexU24Sql("h")} % 4 = 0),
          r AS (SELECT doc_id, idx,
                       row_number() OVER (PARTITION BY h ORDER BY doc_id, idx) AS rn
                FROM sel)

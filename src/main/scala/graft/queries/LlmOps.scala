@@ -1037,8 +1037,12 @@ object LlmOps {
 
   /** The portable md5-u24 draw as a DuckDB scalar over an expression —
     * the strpos hex ladder every sampling oracle uses. */
-  private def u24Sql(e: String): String =
-    s"""list_sum([(strpos('0123456789abcdef', substr(md5($e), i, 1)) - 1)
+  private[queries] def u24Sql(e: String): String = hexU24Sql(s"md5($e)")
+
+  /** [[u24Sql]] over a hex digest already in hand: its first 6 digits as
+    * an integer in [0, 2^24). */
+  private[queries] def hexU24Sql(hex: String): String =
+    s"""list_sum([(strpos('0123456789abcdef', substr($hex, i, 1)) - 1)
                   * power(16, 6 - i)::BIGINT
                   for i in range(1, 7)])::BIGINT"""
 

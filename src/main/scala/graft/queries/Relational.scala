@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.TopK
 
 /** Relational operator pack — the batch query surface of the engine.
   *
@@ -288,12 +289,9 @@ object Relational {
     // is nulls FIRST (a corrupt row with a null date won its customer's
     // head slot — SQL replays with nulls-last defaults disagreed, and
     // the picked head drove a different job on identical state)
-    val w = Window.partitionBy($"o_custkey")
-      .orderBy($"o_orderpriority".asc_nulls_last, $"o_orderdate".asc_nulls_last,
-        $"o_orderkey".asc_nulls_last)
-    Tables.orders(spark, dir)
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" === 1)
+    TopK.cut(Tables.orders(spark, dir), 1, Seq($"o_custkey"),
+        Seq($"o_orderpriority".asc_nulls_last, $"o_orderdate".asc_nulls_last,
+          $"o_orderkey".asc_nulls_last), "rn")
       .select($"o_custkey", $"o_orderkey", $"o_orderpriority", $"o_orderdate")
       .orderBy($"o_custkey")
   }
@@ -319,10 +317,8 @@ object Relational {
     */
   def qLatestPerUser(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val w = Window.partitionBy($"user_id").orderBy($"ts".desc, $"event_id".desc)
-    Tables.events(spark, dir)
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" === 1)
+    TopK.cut(Tables.events(spark, dir), 1, Seq($"user_id"),
+        Seq($"ts".desc, $"event_id".desc), "rn")
       .select($"user_id", $"event_id", $"event_type", $"ts")
       .orderBy($"user_id")
   }
@@ -426,12 +422,11 @@ object Relational {
     // SET-TIMESTAMP carry-forward order — and thus which statement gets
     // which timestamp — undefined (hostile-events duplicate-id class).
     // Deterministic winner: smallest (ts, user_id), mirrored in the oracle.
-    val dedupW = Window.partitionBy($"event_id")
-      .orderBy($"ts".asc_nulls_last, $"user_id".asc_nulls_last)
-    val ev = Tables.events(spark, dir).filter($"event_id" < 300)
-      .select($"event_id", $"ts", $"user_id")
-      .withColumn("__rn", row_number().over(dedupW))
-      .filter($"__rn" === 1).drop("__rn")
+    val ev = TopK.cut(
+        Tables.events(spark, dir).filter($"event_id" < 300)
+          .select($"event_id", $"ts", $"user_id"),
+        1, Seq($"event_id"), Seq($"ts".asc_nulls_last, $"user_id".asc_nulls_last), "__rn")
+      .drop("__rn")
     val kind = $"event_id" % 3
     val verb = when(kind === 0, "INSERT INTO").when(kind === 1, "UPDATE")
       .otherwise("DELETE FROM")

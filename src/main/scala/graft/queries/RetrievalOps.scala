@@ -649,11 +649,9 @@ object RetrievalOps {
          ORDER BY fertility_ppm DESC, doc_id LIMIT 20""",
     "t_bpe_train" -> bpeTrainOracle(BpeTrainMerges),
     "t_shard_plan" ->
-      """WITH a AS (SELECT doc_id, md5('shard:' || doc_id) AS sk FROM documents),
+      s"""WITH a AS (SELECT doc_id, md5('shard:' || doc_id) AS sk FROM documents),
          b AS (SELECT doc_id, sk,
-                      list_sum([(strpos('0123456789abcdef', substr(sk, i, 1)) - 1)
-                                * power(16, 6 - i)::BIGINT
-                                for i in range(1, 7)])::BIGINT % 8 AS shard_id
+                      ${LlmOps.hexU24Sql("sk")} % 8 AS shard_id
                FROM a)
          SELECT shard_id, count(*) AS n_docs,
                 md5(string_agg(doc_id::VARCHAR, ',' ORDER BY sk, doc_id)) AS perm_md5

@@ -1,8 +1,9 @@
 package graft.refresh
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.operators.TopK
 
 /** CDC snapshot merge — materialize the current table state from a
   * snapshot plus a batch of change messages.
@@ -22,23 +23,21 @@ import org.apache.spark.sql.functions._
   * inserts the row if the key is absent from the snapshot); a delete
   * removes the row; keys untouched by the batch pass through.
   *
-  * Scale shape: the latest-per-key cut is a rank-1 window that plans
-  * with a map-side WindowGroupLimit below its one shuffle
-  * (PlanSpec-asserted — each task forwards only its best candidate per
-  * key, so a hot key's update storm never lands in one task), then ONE
-  * full-outer join keyed on the primary key. The snapshot side never
-  * shuffles twice; persisted as a [[graft.operators.Bucketing]] table
-  * on the key it never shuffles at all.
+  * Scale shape: the latest-per-key cut is a rank-1
+  * [[graft.operators.TopK.cut]] (each task forwards only its best
+  * candidate per key, so a hot key's update storm never lands in one
+  * task), then ONE full-outer join keyed on the primary key. The
+  * snapshot side never shuffles twice; persisted as a
+  * [[graft.operators.Bucketing]] table on the key it never shuffles at
+  * all.
   */
 object CdcMerge {
 
   /** The rank-1 cut: latest change per key by `seqCols` descending. */
   def latestChanges(changes: DataFrame, keyCol: String,
                     seqCols: Seq[String]): DataFrame = {
-    val w = Window.partitionBy(col(keyCol))
-      .orderBy(seqCols.map(c => col(c).desc): _*)
-    changes.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
+    TopK.cut(changes, 1, Seq(col(keyCol)), seqCols.map(c => col(c).desc), "__rn")
+      .drop("__rn")
   }
 
   /** Apply a change batch to a snapshot. `changes` carries `keyCol`,

@@ -3,6 +3,8 @@ package graft.refresh
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.TopK
+
 /** Full-refresh subsystem: registry-tracked bootstrap scans of upstream
   * tables republished as `refresh` messages (reference:
   * tools/copy_table_to_blackhole_table.py, tools/refresh_manager.py,
@@ -72,14 +74,10 @@ object PriorityRefreshQueue {
   def scheduleDF(jobs: DataFrame): DataFrame = {
     val statusRankCol = when(col("status") === "PAUSED", 0)
       .when(col("status") === "NOT_STARTED", 1).otherwise(2)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("namespace_name"), col("source_name"))
-      .orderBy(col("priority").desc, statusRankCol.asc, col("created_at").asc,
-        col("refresh_id").asc)
-    jobs
-      .filter(col("status").isin("PAUSED", "NOT_STARTED"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    val pending = jobs.filter(col("status").isin("PAUSED", "NOT_STARTED"))
+    TopK.cut(pending, 1, Seq(col("namespace_name"), col("source_name")),
+        Seq(col("priority").desc, statusRankCol.asc, col("created_at").asc,
+          col("refresh_id").asc), "rn")
       .drop("rn")
       // refresh_id tiebreaker like the Scala `ordering`: without it two
       // cross-source heads tied on (priority, status, created_at) sorted

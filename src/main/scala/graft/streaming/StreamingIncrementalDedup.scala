@@ -104,8 +104,14 @@ object StreamingIncrementalDedup {
     * replayed batch read the same state its first attempt did. Reads
     * O(compactEvery) files, never a superseded history. */
   def indexBefore(spark: SparkSession, statePath: String,
-                  batchId: Long): DataFrame = {
-    val (bases, deltas) = listVersions(spark, statePath)
+                  batchId: Long): DataFrame =
+    readIndex(spark, statePath, listVersions(spark, statePath), batchId)
+
+  /** [[indexBefore]] over an already-taken listing. */
+  private def readIndex(spark: SparkSession, statePath: String,
+                        versions: (Seq[Long], Seq[Long]),
+                        batchId: Long): DataFrame = {
+    val (bases, deltas) = versions
     val base = bases.filter(_ < batchId).lastOption
     val floor = base.getOrElse(Long.MinValue)
     val live = deltas.filter(i => i > floor && i < batchId)
@@ -117,14 +123,14 @@ object StreamingIncrementalDedup {
   }
 
   /** Delete state files superseded by the newest base strictly older
-    * than `batchId` (older bases, deltas at or under it). Idempotent —
-    * a replayed batch re-deletes already-missing files as a no-op. */
-  private def vacuum(spark: SparkSession, statePath: String,
-                     batchId: Long): Unit = {
-    val (bases, deltas) = listVersions(spark, statePath)
+    * than `batchId` (older bases, deltas at or under it) — exactly the
+    * versions [[readIndex]] skips, so one listing serves both.
+    * Idempotent — a replayed batch re-deletes already-missing files as a
+    * no-op. */
+  private def vacuum(fs: org.apache.hadoop.fs.FileSystem, dir: Path,
+                     versions: (Seq[Long], Seq[Long]), batchId: Long): Unit = {
+    val (bases, deltas) = versions
     bases.filter(_ < batchId).lastOption.foreach { j =>
-      val dir = new Path(statePath)
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       bases.filter(_ < j).foreach(i => fs.delete(new Path(dir, s"c_$i"), true))
       deltas.filter(_ <= j).foreach(i => fs.delete(new Path(dir, s"d_$i"), true))
     }
@@ -145,8 +151,9 @@ object StreamingIncrementalDedup {
       s"state at $statePath was built by a run that already processed " +
         s"batch $hw; refusing batch $batchId — a reset checkpoint must " +
         "get a fresh state directory, or it silently corrupts the index"))
-    vacuum(spark, statePath, batchId)
-    val index = indexBefore(spark, statePath, batchId)
+    val versions = listVersions(spark, statePath)
+    vacuum(fs, stateDir, versions, batchId)
+    val index = readIndex(spark, statePath, versions, batchId)
     // the batch feeds the anti-join AND the admitted-doc join back;
     // micro-batches re-read their source on each action otherwise.
     // dropDuplicates: an at-least-once source may deliver the same

@@ -1744,6 +1744,30 @@ class CurationSpec extends SparkTestBase {
     assert(all.map(_._1).toSet == Set(3L) && all.head._4 == 1)
   }
 
+  test("rebalanceSample: the totalK-bounded cut keeps each stratum's top quota by draw") {
+    import spark.implicits._
+    // quotas at totalK = 20: a 0.3 → 6 of 40, b 0.5 → 10 of 25,
+    // c 0.5 → 10 of 5 (all kept), d 0.0 → none
+    val docs = ((0L until 40L).map(i => ("a", i)) ++ (100L until 125L).map(i => ("b", i)) ++
+      (200L until 205L).map(i => ("c", i)) ++ (300L until 310L).map(i => ("d", i)))
+      .toDF("source", "doc_id")
+    val weights = Seq(("a", 0.3), ("b", 0.5), ("c", 0.5), ("d", 0.0)).toDF("source", "weight")
+    val got = Curation.rebalanceSample(docs, "source", "doc_id", weights, 20L, salt = "rb:")
+      .as[(String, Long, Int)].collect().sortBy(r => (r._1, r._3)).toSeq
+    // replay off-engine: draw = first 6 hex digits of md5(salt || id),
+    // descending, id tiebreak, ranks 1..quota per stratum
+    def u24(id: Long): Long = java.lang.Long.parseLong(
+      java.security.MessageDigest.getInstance("MD5").digest(s"rb:$id".getBytes("UTF-8"))
+        .take(3).map(b => f"$b%02x").mkString, 16)
+    val quota = Map("a" -> 6, "b" -> 10, "c" -> 10, "d" -> 0)
+    val expected = docs.as[(String, Long)].collect().toSeq.groupBy(_._1).toSeq.sortBy(_._1)
+      .flatMap { case (src, rows) =>
+        rows.map(_._2).sortBy(id => (-u24(id), id)).take(quota(src)).zipWithIndex
+          .map { case (id, i) => (src, id, i + 1) }
+      }
+    assert(got == expected, s"got $got")
+  }
+
   // --- incremental dedup ------------------------------------------------
 
   test("incremental exact dedup: index blocks known content, delta self-dedups, merge admits") {

@@ -420,14 +420,19 @@ class MigrationAndCatalogSpec extends SparkTestBase {
     }
   }
 
-  test("source guard: lineage cuts only in Checkpoint.scala, the commit marker only in Commit.scala") {
+  /** (path, text) of every main source file, for the source guards. */
+  private lazy val mainSources: Seq[(String, String)] = {
     def files(d: java.io.File): Seq[java.io.File] =
       Option(d.listFiles()).getOrElse(Array.empty).toSeq
         .flatMap(f => if (f.isDirectory) files(f) else Seq(f))
-    val sources = files(new java.io.File("src/main/scala"))
+    files(new java.io.File("src/main/scala"))
       .filter(_.getName.endsWith(".scala"))
       .map(f => f.getPath.replace('\\', '/') ->
         new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+  }
+
+  test("source guard: lineage cuts only in Checkpoint.scala, the commit marker only in Commit.scala") {
+    val sources = mainSources
     def outside(needle: String, home: String): Seq[String] = {
       assert(sources.exists(_._1.endsWith(home)), s"$home not found under src/main/scala")
       sources.collect { case (path, text) if !path.endsWith(home) && text.contains(needle) => path }
@@ -436,6 +441,26 @@ class MigrationAndCatalogSpec extends SparkTestBase {
     assert(cuts.isEmpty, s"cut lineage through Checkpoint.cut, not localCheckpoint, in $cuts")
     val markers = outside("\"_COMMITTED\"", "graft/core/Commit.scala")
     assert(markers.isEmpty, s"commit through graft.core.Commit, not a marker of its own, in $markers")
+  }
+
+  test("source guard: rank cuts only through TopK.scala, nSalts only on the salted join") {
+    // per file, the DataFrame row_number windows it may hold: the one
+    // bounded cut, and the marks that flag rather than filter (first
+    // occurrence of a window hash, the first copy of a chunk)
+    val rankHomes = Map(
+      "graft/operators/TopK.scala" -> 1,
+      "graft/operators/Dedup.scala" -> 2,      // substringDupWindows, removeDupSpans
+      "graft/operators/Curation.scala" -> 1)   // dedupChunks' kept
+    val windows = mainSources.map { case (path, text) =>
+      path -> """row_number\(\)\s*\.over""".r.findAllMatchIn(text).size
+    }.filter(_._2 > 0)
+    val stray = windows.filterNot { case (path, n) =>
+      rankHomes.exists { case (home, max) => path.endsWith(home) && n <= max } }
+    assert(stray.isEmpty, s"cut ranks through graft.operators.TopK.cut, not a window of its own, in $stray")
+    val saltHomes = Seq("graft/operators/JoinPrune.scala", "graft/queries/Relational.scala")
+    val salts = mainSources.collect { case (path, text)
+      if text.contains("nSalts") && !saltHomes.exists(path.endsWith) => path }
+    assert(salts.isEmpty, s"nSalts belongs to the salted join only, found in $salts")
   }
 
   test("test harness: a checkpoint dir left on the shared session fails the suite and is cleared") {

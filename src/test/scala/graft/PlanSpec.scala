@@ -342,20 +342,40 @@ class PlanSpec extends SparkTestBase {
       s"the greedy selection must run as the native expression:\n$p")
   }
 
-  test("t_weighted_sample: text stays at the scan; group-limit runs map-side") {
+  /** Formatted-mode node ids of `op`: post-order, so a child's id is
+    * lower than its parent's and the node feeding an operator is its
+    * id − 1. */
+  private def nodeIds(p: String, op: String): Seq[Int] =
+    s"""$op \\((\\d+)\\)""".r.findAllMatchIn(p).map(_.group(1).toInt).toSeq
+
+  /** A global rank cut's map-side bound: a TakeOrderedAndProject (every
+    * task keeps its local top-k before the single merge) or a partial
+    * WindowGroupLimit below the first exchange. */
+  private def globalCutBounded(p: String): Boolean = {
+    val wgl = nodeIds(p, "WindowGroupLimit")
+    val ex = nodeIds(p, "Exchange")
+    p.contains("TakeOrderedAndProject") || (wgl.nonEmpty && ex.nonEmpty && wgl.min < ex.min)
+  }
+
+  test("t_weighted_sample: text stays at the scan; the global cut is bounded map-side") {
     val p = planOf("t_weighted_sample")
     hashExchangeInputs(p).foreach(in => assert(!in.contains("text#"),
       s"document text enters the top-k shuffle:\n$in"))
-    // the salt-bucket rank filter must plan as a WindowGroupLimit BELOW
-    // the shuffle (lower node id = deeper in the tree): each task keeps
-    // ≤ k rows per bucket before anything moves — the property that makes
-    // the global cut scale
-    def nodeIds(op: String): Seq[Int] =
-      s"""$op \\((\\d+)\\)""".r.findAllMatchIn(p).map(_.group(1).toInt).toSeq
-    val wgl = nodeIds("WindowGroupLimit")
-    val ex = nodeIds("Exchange")
-    assert(wgl.nonEmpty && ex.nonEmpty && wgl.min < ex.min,
-      s"no map-side group limit below the shuffle:\n$p")
+    // each task keeps ≤ k rows before anything moves — the property that
+    // makes the global cut scale
+    assert(globalCutBounded(p), s"no map-side bound on the global cut:\n$p")
+    assert(!p.contains("pmod(xxhash64"), s"salted pre-rank is back:\n$p")
+  }
+
+  test("t_rebalance: the per-stratum cut group-limits map-side below its exchange") {
+    val p = planOf("t_rebalance")
+    // the quota filter is a column, so only the literal totalK bound cut
+    // alongside it lets a partial WindowGroupLimit feed the stratum
+    // exchange: a dominant stratum never sorts whole in one task
+    val wgl = nodeIds(p, "WindowGroupLimit")
+    assert(nodeIds(p, "Exchange").exists(e => wgl.contains(e - 1)),
+      s"no map-side WindowGroupLimit feeding the per-stratum exchange:\n$p")
+    assert(!p.contains("pmod(xxhash64"), s"salted pre-rank is back:\n$p")
   }
 
   test("d_incr_exact / d_incr_lsh: document text never enters a shuffle") {
@@ -374,12 +394,11 @@ class PlanSpec extends SparkTestBase {
       s"classifier scoring must not hash-shuffle (model rides as a literal):\n$p")
   }
 
-  test("q_skew_stats: per-key counts combine map-side; salted cut below the global rank") {
+  test("q_skew_stats: per-key counts combine map-side; the global rank is bounded map-side") {
     val p = planOf("q_skew_stats")
-    // phase-1 rank must run inside (key-hash mod 32) buckets so the full
-    // distinct-key set never sorts in one task
-    assert(p.contains("pmod(xxhash64"),
-      s"expected the salted phase-1 bucket hash in the window spec:\n$p")
+    // the full distinct-key set never sorts in one task
+    assert(globalCutBounded(p), s"no map-side bound on the global rank:\n$p")
+    assert(!p.contains("pmod(xxhash64"), s"salted pre-rank is back:\n$p")
     hashExchangeInputs(p).foreach(in => assert(!in.contains("props#"),
       s"event payload enters the diagnostic shuffle:\n$in"))
   }

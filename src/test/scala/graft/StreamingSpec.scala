@@ -1026,6 +1026,28 @@ class StreamingSpec extends SparkTestBase {
     } finally conf.unset("fs.norename.impl")
   }
 
+  test("incremental dedup: one state-dir listing per batch serves both vacuum and the index read") {
+    import spark.implicits._
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.countls.impl", classOf[CountingListFs].getName)
+    try {
+      val local = java.nio.file.Files.createTempDirectory("ls_state").toString
+      val state = "countls://" + local
+      val out = java.nio.file.Files.createTempDirectory("ls_out").toString
+      def run(id: Long): Unit =
+        graft.streaming.StreamingIncrementalDedup.processBatch(
+          Seq((id, s"t$id")).toDF("doc_id", "text"), id, state, out, compactEvery = 2)
+      // batches 0..2 leave d_0, d_1, d_2 and the base c_2 (all committed)
+      (0L to 2L).foreach(run)
+      CountingListFs.listed.clear()
+      // batch 3 vacuums d_0..d_2 and reads c_2
+      run(3L)
+      val listings = CountingListFs.listed.toArray.count(_ == local)
+      assert(listings == 2,
+        s"expected one listing per version prefix (c_, d_), got $listings")
+    } finally conf.unset("fs.countls.impl")
+  }
+
   test("incremental dedup crash window: a high-water left only as its temp file still fences a reset run") {
     import spark.implicits._
     val state = java.nio.file.Files.createTempDirectory("hw_tmp_state").toString
@@ -1184,4 +1206,18 @@ class RefuseHighWaterRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def rename(src: org.apache.hadoop.fs.Path,
                       dst: org.apache.hadoop.fs.Path): Boolean =
     dst.getName != "_max_batch" && super.rename(src, dst)
+}
+
+/** A local file system under the test-only `countls:` scheme that
+  * records every path it lists. */
+class CountingListFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("countls:///")
+  override def listStatus(f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    CountingListFs.listed.add(f.toUri.getPath)
+    super.listStatus(f)
+  }
+}
+
+object CountingListFs {
+  val listed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }
