@@ -23,7 +23,8 @@ object ExplainAudit {
         "q_skew_stats", "q_salted_join", "sim_mean_pool", "t_corpus_profile",
         "sim_drift", "sim_ivfpq_res_topk", "sim_hybrid_rrf", "sim_mmr_select",
         "sim_outliers", "t_fertility", "d_fuzzy_pairs", "sim_opq_topk",
-        "sim_hybrid_mmr", "d_embedding_cosine")
+        "sim_hybrid_mmr", "d_embedding_cosine", "sim_hybrid_mmr_multi",
+        "t_bpe_train")
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false").getOrCreate()

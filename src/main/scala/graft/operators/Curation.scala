@@ -257,7 +257,7 @@ object Curation {
         filter(array_distinct(ws), w => w =!= ""))).as("t"))
       .groupBy(col("t")).agg(count(lit(1)).as("df"))
     val nDocs = counts.filter(col("t") === "").select(col("df").as("n"))
-    // pinned lazily (the in-file bm25TopKMulti discipline): the take()
+    // pinned lazily (as Retrieval.bpeTokenCounts pins its words): the take()
     // probe below fully runs the corpus-sized token-df aggregation, and
     // the oversized-stoplist branch reads stopDf AGAIN inside the
     // anti-join — without the pin that whole explode+groupBy lineage

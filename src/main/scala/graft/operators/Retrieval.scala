@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Lexical retrieval and tokenizer-training operators for corpus curation:
@@ -30,6 +30,10 @@ import org.apache.spark.sql.functions._
   */
 object Retrieval {
 
+  /** BM25 saturation constants k1 = 1.2 and b = 0.75, in milli-units. */
+  private val K1Milli = 1200L
+  private val BMilli = 750L
+
   /** Top-k documents for a bag-of-terms query under a log-free BM25
     * variant, integer-exact end to end.
     *
@@ -43,47 +47,29 @@ object Retrieval {
     *   contrib    = (idf_ppm · sat_ppm) div 10^6
     * }}}
     * where N = corpus size, T = total tokens, dl = doc length, df/tf the
-    * usual frequencies, k1‰/b‰ the BM25 constants in milli-units. The
-    * saturation term is the standard tf·(k1+1)/(tf + k1·((1−b)+b·dl/avgdl));
-    * the idf is the Robertson–Spärck-Jones form with the log dropped —
-    * monotone in df per term (zero float surface), but because rare terms
-    * weigh relatively more than under log-idf, multi-term score sums are a
-    * ranking variant of BM25, not rank-identical to it.
+    * usual frequencies, k1‰ = 1200 and b‰ = 750 the BM25 constants in
+    * milli-units. The saturation term is the standard
+    * tf·(k1+1)/(tf + k1·((1−b)+b·dl/avgdl)); the idf is the
+    * Robertson–Spärck-Jones form with the log dropped — monotone in df per
+    * term (zero float surface), but because rare terms weigh relatively
+    * more than under log-idf, multi-term score sums are a ranking variant
+    * of BM25, not rank-identical to it.
     *
     * Returns (id, n_terms_matched, score_ppm) for the k highest-scoring
     * docs, ties broken by ascending id.
     */
   def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
-               terms0: Seq[String], k: Int,
-               k1Milli: Long = 1200L, bMilli: Long = 750L): DataFrame = {
+               terms0: Seq[String], k: Int): DataFrame = {
     require(terms0.nonEmpty && k > 0)
-    // corpus tokens are lower()'d below, so query terms must normalize
-    // the same way — a verbatim 'Transformer' would silently match
-    // nothing; distinct so 'Spark' + 'spark' can't double-count a tf.
+    // corpus tokens are lower()'d, so query terms must normalize the same
+    // way — a verbatim 'Transformer' would silently match nothing;
+    // distinct so 'Spark' + 'spark' can't double-count a tf.
     // Locale.ROOT: Spark's lower() is locale-independent, while a bare
     // String.toLowerCase follows the JVM default locale (tr-TR maps
     // 'TITLE' to dotless-ı 'tıtle' — the term would silently match zero
     // docs on a Turkish-locale driver)
     val terms = terms0.map(_.toLowerCase(java.util.Locale.ROOT)).distinct
-    val ws = split(trim(lower(col(textCol))), "\\s+")
-    // pinned (lazily): corpus stats AND tf both consume the per-doc
-    // (id, dl, hits) frame — without the checkpoint each consumer re-runs
-    // the regex tokenize over the full corpus text (the dominant cost;
-    // measured 2 scans per run). The materialized frame is narrow: a
-    // long dl plus only query-vocabulary hits per doc — a tiny fraction
-    // of corpus bytes even at 100 TB.
-    val toks = Checkpoint.cut(docs.select(col(idCol).as("id"), ws.as("__ws"))
-      .select(col("id"), size(col("__ws")).cast("long").as("dl"),
-        // query-vocabulary filter BEFORE explode: only query-term hits
-        // ever leave the scan
-        filter(col("__ws"), w => w.isInCollection(terms)).as("__hit")))
-    val stats = toks.agg(count(lit(1)).as("n"), sum(col("dl")).as("t"))
-    val tf = toks
-      .filter(size(col("__hit")) > 0)
-      .select(col("id"), col("dl"), explode(col("__hit")).as("term"))
-      .groupBy(col("id"), col("dl"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-    termContribs(tf, stats, k1Milli, bMilli)
+    bm25Contribs(docs, idCol, textCol, terms)
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_terms_matched"), sum(col("contrib")).as("score_ppm"))
       .orderBy(col("score_ppm").desc, col("id"))
@@ -91,13 +77,70 @@ object Retrieval {
       .select(col("id").as(idCol), col("n_terms_matched"), col("score_ppm"))
   }
 
-  /** Per-(doc, term) BM25 contribution: (id, term, contrib) from a
-    * (id, dl, term, tf) frame plus the 1-row corpus stats (n, t). Document
-    * frequencies are recomputed from the tf frame (they only depend on
-    * which docs contain which vocab terms) and broadcast, as is the stats
-    * row — the formula is the one documented on [[bm25TopK]]. */
-  private def termContribs(tf: DataFrame, stats: DataFrame,
-                           k1Milli: Long, bMilli: Long): DataFrame = {
+  /** Multi-query BM25: top-k documents for EVERY query in a driver-local
+    * (query_id, term) set, with the per-(doc, term) arithmetic of
+    * [[bm25TopK]] — a query's rows here equal the single-query call with
+    * its terms, ranked per query with ties to the ascending doc id.
+    *
+    * The corpus is scanned once for the union vocabulary of all queries,
+    * and each (doc, term) contribution fans out to the queries holding
+    * the term through a map literal (`explode(element_at(map, term))`),
+    * so 1000 queries sharing a vocabulary pay the corpus scan once and no
+    * job runs to collect or broadcast a query table. The rank is the
+    * keyed [[TopK.cut]] on a real query column, the plan shape a
+    * many-query batch runs even at one query.
+    *
+    * Returns (qidCol, idCol, n_terms_matched, score_ppm, rank ≤ k).
+    */
+  def bm25TopKMulti(docs: DataFrame, idCol: String, textCol: String,
+                    queries: Seq[(Long, String)], qidCol: String,
+                    k: Int): DataFrame = {
+    require(queries.nonEmpty && k > 0)
+    // lower() beside the corpus tokens (Locale.ROOT — see [[bm25TopK]]),
+    // distinct so case-variant duplicates within a query can't
+    // double-count a term
+    val qn = queries
+      .map { case (q, t) => (q, t.toLowerCase(java.util.Locale.ROOT)) }.distinct
+    val termToQids: Map[String, Seq[Long]] =
+      qn.groupBy(_._2).map { case (t, qs) => (t, qs.map(_._1).sorted) }
+    val scored = bm25Contribs(docs, idCol, textCol, termToQids.keys.toSeq.sorted)
+      .select(col("id"), col("contrib"),
+        explode(element_at(typedLit(termToQids), col("term"))).as("__qid"))
+      .groupBy(col("__qid"), col("id"))
+      .agg(count(lit(1)).as("n_terms_matched"), sum(col("contrib")).as("score_ppm"))
+    TopK.cut(scored, k, Seq(col("__qid")), Seq(col("score_ppm").desc, col("id")), "rank")
+      .select(col("__qid").as(qidCol), col("id").as(idCol),
+        col("n_terms_matched"), col("score_ppm"), col("rank"))
+  }
+
+  /** The BM25 front end of both retrievers: per-(doc, term) contributions
+    * (id, term, contrib) for the lower-case `vocab`, under the formula
+    * documented on [[bm25TopK]]. The corpus token stream is filtered to
+    * the vocabulary before any shuffle, so the (doc, term) aggregation is
+    * query-bounded; document frequencies and the 1-row corpus stats
+    * (n, t) broadcast. */
+  private def bm25Contribs(docs: DataFrame, idCol: String, textCol: String,
+                           vocab: Seq[String]): DataFrame = {
+    val ws = split(trim(lower(col(textCol))), "\\s+")
+    // pinned (lazily): corpus stats AND tf both consume the per-doc
+    // (id, dl, hits) frame — without the checkpoint each consumer re-runs
+    // the regex tokenize over the full corpus text (the dominant cost;
+    // measured 2 scans per run). The materialized frame is narrow: a
+    // long dl plus only query-vocabulary hits per doc — a tiny fraction
+    // of corpus bytes even at 100 TB.
+    val perDoc = Checkpoint.cut(docs.select(col(idCol).as("id"), ws.as("__ws"))
+      .select(col("id"), size(col("__ws")).cast("long").as("dl"),
+        // query-vocabulary filter BEFORE explode: only query-term hits
+        // ever leave the scan
+        filter(col("__ws"), w => w.isInCollection(vocab)).as("__hit")))
+    val stats = perDoc.agg(count(lit(1)).as("n"), sum(col("dl")).as("t"))
+    val tf = perDoc
+      .filter(size(col("__hit")) > 0)
+      .select(col("id"), col("dl"), explode(col("__hit")).as("term"))
+      .groupBy(col("id"), col("dl"), col("term"))
+      .agg(count(lit(1)).as("tf"))
+    // document frequencies only depend on which docs contain which vocab
+    // terms, so they come from the tf frame
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     tf.join(broadcast(df), "term")
       .crossJoin(broadcast(stats))
@@ -106,150 +149,23 @@ object Retrieval {
         expr("(cast(1000000 as decimal(38,0)) * dl * n) div t").as("dlnorm_ppm"),
         col("tf"))
       .select(col("id"), col("term"), col("idf_ppm"), col("tf"),
-        expr(s"(1000000L - ${bMilli}L * 1000L) + (${bMilli}L * dlnorm_ppm) div 1000L")
+        expr(s"(1000000L - ${BMilli}L * 1000L) + (${BMilli}L * dlnorm_ppm) div 1000L")
           .as("inner_ppm"))
       .select(col("id"), col("term"), col("idf_ppm"),
-        expr(s"(cast(tf as decimal(38,0)) * ${1000L + k1Milli}L * 1000000000L) div " +
-          s"(tf * 1000000L + (${k1Milli}L * inner_ppm) div 1000L)")
+        expr(s"(cast(tf as decimal(38,0)) * ${1000L + K1Milli}L * 1000000000L) div " +
+          s"(tf * 1000000L + (${K1Milli}L * inner_ppm) div 1000L)")
           .as("sat_ppm"))
       .select(col("id"), col("term"),
         expr("(cast(idf_ppm as decimal(38,0)) * sat_ppm) div 1000000L").as("contrib"))
   }
 
-  /** Multi-query BM25: top-k documents for EVERY query in a
-    * (query_id, term) table — real retrieval scores a query set, not one
-    * bag of terms. Identical per-(doc, term) arithmetic to [[bm25TopK]]
-    * (a query's top-k here matches the single-query call with its terms),
-    * ranked per query with ties to the ascending doc id.
-    *
-    * Same vocabulary-filter-first shape: the union vocabulary of all
-    * queries is probed with `take(maxVocabLiteral + 1)` — at or under the
-    * cap it ships as an InSet literal and corpus tokens are filtered
-    * BEFORE the explode; above it the explode streams into a broadcast
-    * semi-join on the vocabulary (corpus-bounded CPU, still no corpus
-    * shuffle — only vocab hits reach the tf aggregation). Per-term work
-    * is computed once per (doc, term) and fanned out to queries by a
-    * broadcast join on the query table, so 1000 queries sharing a
-    * vocabulary pay the corpus scan once.
-    *
-    * Returns (qidCol, idCol, n_terms_matched, score_ppm, rank ≤ k).
-    */
-  def bm25TopKMulti(docs: DataFrame, idCol: String, textCol: String,
-                    queries: DataFrame, qidCol: String, termCol: String,
-                    k: Int, k1Milli: Long = 1200L, bMilli: Long = 750L,
-                    maxVocabLiteral: Int = 65536): DataFrame = {
-    require(k > 0)
-    // lower() the query terms like the corpus tokens (see [[bm25TopK]]);
-    // the distinct collapses case-variant duplicates within a query
-    val qt = queries
-      .select(col(qidCol).as("__qid"), lower(col(termCol)).as("term")).distinct()
-    val ws = split(trim(lower(col(textCol))), "\\s+")
-    val base = docs.select(col(idCol).as("id"), ws.as("__ws"))
-    val stats = base.select(size(col("__ws")).cast("long").as("dl"))
-      .agg(count(lit(1)).as("n"), sum(col("dl")).as("t"))
-    val vocabDf = qt.select(col("term")).distinct()
-    val probe = vocabDf.take(maxVocabLiteral + 1)
-    val (tf, statsShared) =
-      if (probe.length <= maxVocabLiteral) {
-        val vocab = probe.map(_.getString(0)).toSeq
-        // same single-tokenize discipline as [[bm25TopK]]: the narrow
-        // per-doc (id, dl, hits) frame pins lazily and feeds BOTH the
-        // corpus-stats fold and the tf aggregation — one regex pass over
-        // the corpus text instead of two
-        val perDoc = Checkpoint.cut(base
-          .select(col("id"), size(col("__ws")).cast("long").as("dl"),
-            filter(col("__ws"), w => w.isInCollection(vocab)).as("__hit")))
-        (perDoc
-          .filter(size(col("__hit")) > 0)
-          .select(col("id"), col("dl"), explode(col("__hit")).as("term"))
-          .groupBy(col("id"), col("dl"), col("term"))
-          .agg(count(lit(1)).as("tf")),
-          Some(perDoc.agg(count(lit(1)).as("n"), sum(col("dl")).as("t"))))
-      } else {
-        // over-cap vocabulary: the exploded token stream is corpus-sized,
-        // so nothing narrow exists to pin — stats pays its own scan
-        (base.select(col("id"), size(col("__ws")).cast("long").as("dl"),
-          explode(col("__ws")).as("term"))
-          .join(broadcast(vocabDf), Seq("term"), "left_semi")
-          .groupBy(col("id"), col("dl"), col("term"))
-          .agg(count(lit(1)).as("tf")),
-          None)
-      }
-    rankPerQuery(
-      termContribs(tf, statsShared.getOrElse(stats), k1Milli, bMilli)
-        .join(broadcast(qt), "term"),
-      qidCol, idCol, k)
-  }
-
-  /** Shared per-query rank tail of the multi-query retrievers: fold the
-    * fanned (__qid, id, contrib) rows to per-(query, doc) scores, then
-    * the per-query top-k through [[TopK.cut]]. */
-  private def rankPerQuery(fanned: DataFrame, qidCol: String, idCol: String,
-                           k: Int): DataFrame = {
-    val scored = fanned
-      .groupBy(col("__qid"), col("id"))
-      .agg(count(lit(1)).as("n_terms_matched"), sum(col("contrib")).as("score_ppm"))
-    TopK.cut(scored, k, Seq(col("__qid")), Seq(col("score_ppm").desc, col("id")), "rank")
-      .select(col("__qid").as(qidCol), col("id").as(idCol),
-        col("n_terms_matched"), col("score_ppm"), col("rank"))
-  }
-
-  /** [[bm25TopKMulti]] for a DRIVER-LOCAL query set — identical rows,
-    * ranks, and plan tail (real `__qid` column, keyed WindowGroupLimit),
-    * minus the scheduling overhead the DataFrame-table path pays before
-    * the corpus scan even starts. With the queries in hand on the driver
-    * there is nothing to probe or collect, so three separate Spark jobs
-    * disappear: the `take()` vocabulary probe (the vocabulary is a local
-    * `distinct`), the `broadcast(qt)` collect (the per-term query fan-out
-    * ships as a map LITERAL — `explode(element_at(map, term))` — inside
-    * the one real job), and the query-table `distinct` shuffles feeding
-    * both. At fixture scale those fixed costs roughly DOUBLED the 1-query
-    * hybrid chain (r11 bench: sim_hybrid_rrf 0.67→1.23 s); at a 1000-query
-    * batch they are noise — this path keeps the batch-scale plan shape
-    * while refusing to pay collect-side jobs for a query set the caller
-    * already holds.
-    *
-    * A query set too large for a map literal (> maxVocabLiteral distinct
-    * terms) falls back to the DataFrame path and its broadcast-semi-join
-    * vocabulary guard — same results, spec-pinned. */
-  def bm25TopKMultiLocal(docs: DataFrame, idCol: String, textCol: String,
-                         queries: Seq[(Long, String)], qidCol: String,
-                         k: Int, k1Milli: Long = 1200L, bMilli: Long = 750L,
-                         maxVocabLiteral: Int = 65536): DataFrame = {
-    require(queries.nonEmpty && k > 0)
-    // same normalization contract as the table path: lower() beside the
-    // corpus tokens (Locale.ROOT — see [[bm25TopK]]), distinct so
-    // case-variant duplicates within a query can't double-count a term
-    val qn = queries
-      .map { case (q, t) => (q, t.toLowerCase(java.util.Locale.ROOT)) }.distinct
-    val termToQids: Map[String, Seq[Long]] =
-      qn.groupBy(_._2).map { case (t, qs) => (t, qs.map(_._1).sorted) }
-    if (termToQids.size > maxVocabLiteral) {
-      val spark = docs.sparkSession
-      import spark.implicits._
-      return bm25TopKMulti(docs, idCol, textCol, qn.toDF(qidCol, "term"),
-        qidCol, "term", k, k1Milli, bMilli, maxVocabLiteral)
-    }
-    val vocab = termToQids.keys.toSeq.sorted
-    val ws = split(trim(lower(col(textCol))), "\\s+")
-    // single-tokenize discipline (see [[bm25TopK]]): the narrow per-doc
-    // (id, dl, hits) frame pins lazily and feeds BOTH the corpus-stats
-    // fold and the tf aggregation
-    val perDoc = Checkpoint.cut(docs.select(col(idCol).as("id"), ws.as("__ws"))
-      .select(col("id"), size(col("__ws")).cast("long").as("dl"),
-        filter(col("__ws"), w => w.isInCollection(vocab)).as("__hit")))
-    val tf = perDoc
-      .filter(size(col("__hit")) > 0)
-      .select(col("id"), col("dl"), explode(col("__hit")).as("term"))
-      .groupBy(col("id"), col("dl"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-    val stats = perDoc.agg(count(lit(1)).as("n"), sum(col("dl")).as("t"))
-    rankPerQuery(
-      termContribs(tf, stats, k1Milli, bMilli)
-        .select(col("id"), col("contrib"),
-          explode(element_at(typedLit(termToQids), col("term"))).as("__qid")),
-      qidCol, idCol, k)
-  }
+  /** The BPE family's corpus word stream: every lower-cased whitespace
+    * token of `textCol` as `w`, beside the `keep` columns. Empty tokens
+    * drop — splitting an empty or whitespace-only document yields [""],
+    * which is no word. */
+  private def corpusWords(docs: DataFrame, textCol: String, keep: Column*): DataFrame =
+    docs.select(keep :+ explode(split(trim(lower(col(textCol))), "\\s+")).as("w"): _*)
+      .filter(col("w") =!= "")
 
   /** Greedy BPE encode of one word under a ranked merge table — the
     * standard lowest-rank-first loop (Sennrich et al. 2016 `apply_bpe`):
@@ -295,8 +211,8 @@ object Retrieval {
     * encode loop |vocab| times, not |tokens| times, and the corpus text
     * never shuffles.
     *
-    * The join-back broadcast is CAPPED (same two-path shape as
-    * [[bm25TopKMulti]]'s vocabulary guard): a 100 TB corpus has a
+    * The join-back broadcast is CAPPED (same two-path shape as the
+    * stoplist guard of `Curation.stripBoilerplate`): a 100 TB corpus has a
     * 10⁷–10⁸-entry distinct-word set, and broadcasting a multi-GB
     * per-word frame kills the driver. The vocabulary is probed with
     * `limit(maxVocabBroadcast + 1).count()` — at or under the cap the
@@ -317,18 +233,13 @@ object Retrieval {
     // it; with a dir set Checkpoint.cut runs its own job here, at
     // composition. Either way the encode loop reads the distinct-word
     // blocks back.
-    val words = Checkpoint.cut(docs
-      .select(explode(split(trim(lower(col(textCol))), "\\s+")).as("w"))
-      .filter(col("w") =!= "")
-      .distinct())
+    val words = Checkpoint.cut(corpusWords(docs, textCol).distinct())
     import words.sparkSession.implicits._
     val wordTokens = words.mapPartitions { it =>
       it.map(r => (r.getString(0), bpeEncodeWord(r.getString(0), ranks).size.toLong))
     }.toDF("w", "wtok")
     val fits = words.limit(maxVocabBroadcast + 1).count() <= maxVocabBroadcast
-    docs
-      .select(col(idCol), explode(split(trim(lower(col(textCol))), "\\s+")).as("w"))
-      .filter(col("w") =!= "")
+    corpusWords(docs, textCol, col(idCol))
       .join(if (fits) broadcast(wordTokens) else wordTokens, "w")
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_words"), sum(col("wtok")).as("n_bpe_tokens"))
@@ -383,9 +294,7 @@ object Retrieval {
       transform(sequence(lit(1), length(col("w"))),
         i => col("w").substr(i, lit(1))),
       array(lit("</w>")))
-    var vocab = Checkpoint.cut(docs
-      .select(explode(split(trim(lower(col(textCol))), "\\s+")).as("w"))
-      .filter(col("w") =!= "")
+    var vocab = Checkpoint.cut(corpusWords(docs, textCol)
       .groupBy(col("w")).agg(count(lit(1)).as("n"))
       .select(syms.as("sy"), col("n")))
     if (vocab.limit(driverTailRows + 1).count() <= driverTailRows)
@@ -492,9 +401,7 @@ object Retrieval {
     * `topK` pairs as (pair, n_occurrences), ties broken by ascending pair.
     */
   def bpePairCounts(docs: DataFrame, textCol: String, topK: Int): DataFrame = {
-    val vocab = docs
-      .select(explode(split(trim(lower(col(textCol))), "\\s+")).as("w"))
-      .filter(col("w") =!= "")
+    val vocab = corpusWords(docs, textCol)
       .groupBy(col("w")).agg(count(lit(1)).as("n"))
     val syms = concat(
       transform(sequence(lit(1), length(col("w"))),

@@ -31,36 +31,27 @@ object RetrievalOps {
       .orderBy($"score_ppm".desc, $"doc_id")
   }
 
-  /** Hybrid retrieval by reciprocal-rank fusion: the BM25 lexical run
-    * (the sim_bm25_topk fixture query) and a dense cosine run (brute-force
-    * top-15 for the probe embedding vec 0) fuse via `Retrieval.rrfFuse` —
-    * per candidate Σ_runs 1000000 div (60 + rank), exact integer ppm, so
-    * a doc surfaced by only one retriever still scores and rank
-    * positions (not incomparable raw scores) carry the evidence. The
-    * oracle replays both runs and the fused integer ranking step for
-    * step. */
   /** Shared hybrid-retrieval front end: the BM25 lexical run over a
     * (query_id, term) table and the dense cosine run from probe vector
     * q−1 for each query q, both as (query_id, doc_id, rank), plus the
     * embedding frame for downstream diversity scoring.
     *
     * Single-query callers go through the MULTI-query retriever with a
-    * 1-query set: identical scores and ranks (documented contract of
-    * bm25TopKMulti/-Local), but the rank window partitions by a REAL
-    * query column — attaching lit(1) and partitioning by it
-    * constant-folds back to an unpartitioned WindowExec, this doesn't,
-    * and the plan shape is the one a many-query batch runs. The
-    * driver-LOCAL variant carries the query fan-out as a map literal,
+    * 1-query set: identical scores to `Retrieval.bm25TopK` (the
+    * documented contract of `Retrieval.bm25TopKMulti`), but the rank
+    * window partitions by a REAL query column — attaching lit(1) and
+    * partitioning by it constant-folds back to an unpartitioned
+    * WindowExec, this doesn't, and the plan shape is the one a
+    * many-query batch runs. The query fan-out ships as a map literal,
     * so the keyed-window shape costs no extra scheduling jobs at 1
-    * query (the r11 +2× regression). On the dense side the
-    * probe_id stays the VECTOR id through the search so the
-    * self-exclusion contract (a probe never retrieves itself) keeps its
-    * meaning, then maps to the query id. */
+    * query. On the dense side the probe_id stays the VECTOR id through
+    * the search so the self-exclusion contract (a probe never retrieves
+    * itself) keeps its meaning, then maps to the query id. */
   private def hybridRuns(spark: SparkSession, dir: String,
                          queries: Seq[(Long, String)])
       : (DataFrame, DataFrame, DataFrame) = {
     import spark.implicits._
-    val lex = Retrieval.bm25TopKMultiLocal(Tables.documents(spark, dir),
+    val lex = Retrieval.bm25TopKMulti(Tables.documents(spark, dir),
         "doc_id", "text", queries, "query_id", k = Bm25K)
       .select($"query_id", $"doc_id", $"rank")
     val vecs = Tables.validEmbeddings(spark, dir)
@@ -91,6 +82,14 @@ object RetrievalOps {
         n = 5, lambdaPpm = 700000L)
   }
 
+  /** Hybrid retrieval by reciprocal-rank fusion: the BM25 lexical run
+    * (the sim_bm25_topk fixture query) and a dense cosine run (brute-force
+    * top-15 for the probe embedding vec 0) fuse via `Retrieval.rrfFuse` —
+    * per candidate Σ_runs 1000000 div (60 + rank), exact integer ppm, so
+    * a doc surfaced by only one retriever still scores and rank
+    * positions (not incomparable raw scores) carry the evidence. The
+    * oracle replays both runs and the fused integer ranking step for
+    * step. */
   def qHybridRrf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val (lex, dense, _) = hybridRuns(spark, dir, Bm25Terms.map((1L, _)))
@@ -137,15 +136,15 @@ object RetrievalOps {
   /** Multi-query BM25: three probe queries scored in one pass — query 1
     * is the single-query fixture (its rows must agree with sim_bm25_topk),
     * query 2 overlaps it partially, query 3 mixes a stopword-common term
-    * with a likely-absent one. Per-(doc, term) work is shared; the query
-    * table broadcasts. */
+    * with a likely-absent one. Per-(doc, term) work is shared; the
+    * per-term query fan-out ships as a map literal. */
   def qBm25Multi(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val queries = Seq(
       (1L, "spark"), (1L, "window"), (1L, "hash"), (1L, "vector"),
       (2L, "hash"), (2L, "data"), (2L, "model"),
       (3L, "the"), (3L, "zzzunseen"))
-    Retrieval.bm25TopKMultiLocal(Tables.documents(spark, dir), "doc_id",
+    Retrieval.bm25TopKMulti(Tables.documents(spark, dir), "doc_id",
         "text", queries, "query_id", k = Bm25K)
       .orderBy($"query_id", $"rank")
   }

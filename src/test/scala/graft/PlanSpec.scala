@@ -378,6 +378,24 @@ class PlanSpec extends SparkTestBase {
     assert(!p.contains("pmod(xxhash64"), s"salted pre-rank is back:\n$p")
   }
 
+  test("TopK.cut: a keyed cut group-limits map-side up to k = 1000, not at 1001") {
+    import org.apache.spark.sql.functions.col
+    // Spark plans a WindowGroupLimit only for k up to
+    // spark.sql.optimizer.windowGroupLimitThreshold (1000 by default);
+    // above it each key's rows rank whole in one task. TopK and
+    // Curation.rebalanceSample document the limit; this pins it to the
+    // Spark version in use. Only planned, never run: the range must hold
+    // more than k rows, or Spark needs no bound at any k
+    val df = spark.range(1L << 20).select((col("id") % 3).as("g"), col("id"))
+    def keyedPlan(k: Int): String =
+      graft.operators.TopK.cut(df, k, Seq(col("g")), Seq(col("id")), "rank")
+        .queryExecution.explainString(FormattedMode)
+    assert(keyedPlan(1000).contains("WindowGroupLimit"),
+      s"no WindowGroupLimit at k = 1000:\n${keyedPlan(1000)}")
+    assert(!keyedPlan(1001).contains("WindowGroupLimit"),
+      s"WindowGroupLimit at k = 1001 — the threshold moved:\n${keyedPlan(1001)}")
+  }
+
   test("d_incr_exact / d_incr_lsh: document text never enters a shuffle") {
     // incremental dedup's whole point is that the corpus collapses to
     // hashes/bands once — the delta probe must move hash rows, never text

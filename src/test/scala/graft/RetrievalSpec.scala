@@ -107,18 +107,17 @@ class RetrievalSpec extends SparkTestBase {
       s"df/stats sides must broadcast:\n$plan")
   }
 
-  test("bm25TopKMulti: per-query rows match the single-query call; paths agree") {
+  test("bm25TopKMulti: per-query rows match the single-query call") {
     import spark.implicits._
     val docs = Seq(
       (1L, "spark spark hash window"),
       (2L, "hash table lookup"),
       (3L, "spark cluster compute engine"),
       (4L, "unrelated words entirely here")).toDF("doc_id", "text")
-    val queries = Seq(
-      (10L, "spark"), (10L, "hash"),
-      (20L, "hash"), (20L, "table")).toDF("query_id", "term")
     val multi = Retrieval
-      .bm25TopKMulti(docs, "doc_id", "text", queries, "query_id", "term", k = 3)
+      .bm25TopKMulti(docs, "doc_id", "text",
+        Seq((10L, "spark"), (10L, "hash"), (20L, "hash"), (20L, "table")),
+        "query_id", k = 3)
       .select($"query_id", $"doc_id", $"n_terms_matched", $"score_ppm")
       .as[(Long, Long, Long, Long)].collect().toSet
     def single(terms: Seq[String]): Set[(Long, Long, Long)] =
@@ -129,33 +128,47 @@ class RetrievalSpec extends SparkTestBase {
       single(Seq("spark", "hash")))
     assert(multi.filter(_._1 == 20L).map(t => (t._2, t._3, t._4)) ==
       single(Seq("hash", "table")))
-    // the over-cap broadcast-join fallback produces identical rows
-    val viaJoin = Retrieval
-      .bm25TopKMulti(docs, "doc_id", "text", queries, "query_id", "term",
-        k = 3, maxVocabLiteral = 0)
-      .select($"query_id", $"doc_id", $"n_terms_matched", $"score_ppm")
-      .as[(Long, Long, Long, Long)].collect().toSet
-    assert(viaJoin == multi)
-    // the driver-local map-literal path produces identical rows AND ranks
-    val qSeq = Seq((10L, "spark"), (10L, "hash"), (20L, "hash"), (20L, "table"))
-    val local = Retrieval
-      .bm25TopKMultiLocal(docs, "doc_id", "text", qSeq, "query_id", k = 3)
-      .select($"query_id", $"doc_id", $"n_terms_matched", $"score_ppm")
-      .as[(Long, Long, Long, Long)].collect().toSet
-    assert(local == multi)
-    // its over-cap fallback (map literal refused) also agrees
-    val localFb = Retrieval
-      .bm25TopKMultiLocal(docs, "doc_id", "text", qSeq, "query_id", k = 3,
-        maxVocabLiteral = 0)
-      .select($"query_id", $"doc_id", $"n_terms_matched", $"score_ppm")
-      .as[(Long, Long, Long, Long)].collect().toSet
-    assert(localFb == multi)
   }
 
-  test("bm25TopKMultiLocal: keyed WindowGroupLimit, no query-table jobs") {
+  test("bm25TopKMulti over an InSet-sized vocabulary: shared and case-variant terms match the single-query call") {
+    import spark.implicits._
+    // RDD-backed, not a local Seq: Catalyst folds a projection over a
+    // local relation into a new local relation before OptimizeIn runs,
+    // so the vocabulary filter would never reach its InSet form
+    val docs = spark.sparkContext.parallelize(Seq(
+      (1L, "alpha beta gamma delta alpha"),
+      (2L, "epsilon zeta eta theta"),
+      (3L, "iota kappa lambda mu alpha"),
+      (4L, "beta zeta kappa kappa"),
+      (5L, "nothing matches here at all"),
+      (6L, "gamma eta mu mu mu")), 2).toDF("doc_id", "text")
+    val q1 = Seq("alpha", "beta", "gamma", "delta", "Alpha")
+    val q2 = Seq("epsilon", "zeta", "eta", "theta", "kappa")
+    val q3 = Seq("iota", "kappa", "lambda", "mu")
+    val queries = Seq(1L -> q1, 2L -> q2, 3L -> q3)
+      .flatMap { case (q, ts) => ts.map((q, _)) }
+    // 12 distinct lower-case terms: past Catalyst's 10-element
+    // OptimizeIn threshold, the vocabulary filter plans as an InSet
+    // (inside the pinned per-doc frame, so the outer plan cannot show it)
+    assert(queries.map(_._2.toLowerCase(java.util.Locale.ROOT)).distinct.size == 12)
+    val multi = Retrieval
+      .bm25TopKMulti(docs, "doc_id", "text", queries, "query_id", k = 4)
+      .select($"query_id", $"doc_id", $"n_terms_matched", $"score_ppm")
+      .as[(Long, Long, Long, Long)].collect().toSet
+    queries.map(_._1).distinct.foreach { q =>
+      val single = Retrieval.bm25TopK(docs, "doc_id", "text",
+          queries.filter(_._1 == q).map(_._2), 4)
+        .as[(Long, Long, Long)].collect().toSet
+      assert(single.nonEmpty)
+      assert(multi.filter(_._1 == q).map(t => (t._2, t._3, t._4)) == single,
+        s"query $q differs from its single-query call")
+    }
+  }
+
+  test("bm25TopKMulti: keyed WindowGroupLimit, no query-table jobs") {
     import spark.implicits._
     val docs = Seq((1L, "spark hash"), (2L, "hash table")).toDF("doc_id", "text")
-    val df = Retrieval.bm25TopKMultiLocal(docs, "doc_id", "text",
+    val df = Retrieval.bm25TopKMulti(docs, "doc_id", "text",
       Seq((1L, "spark"), (1L, "hash")), "query_id", k = 2)
     val plan = df.queryExecution.executedPlan.toString
     // the rank window must keep the map-side partial limit and stay
