@@ -338,7 +338,7 @@ object Bench {
       // table rides as a literal, as in the real search.
       rates("adc_hof_pairs_per_sec", "adc_expr_pairs_per_sec") {
         val (m, ksub) = (8, 64)
-        val cbs = (0 until m).map(j => j -> (0 until ksub).map(i => (i, Seq(0.0))).toArray).toMap
+        val cb = graft.operators.Codebook(Array.fill(m)((0 until ksub).map(i => (i, Seq(0.0))).toArray))
         val tbl = (0 until m).map(j => (0 until ksub).map(i => (j * ksub + i) * 1e-6))
         val pairs = spark.range(8000000L).toDF("id")
           .select(col("id"), array((0 until m).map(j =>
@@ -347,24 +347,23 @@ object Bench {
         def adist(d: org.apache.spark.sql.Column) =
           pairs.withColumn("__tbl", typedLit(tbl)).select(d.as("adist"))
         (pairs, pairs.count().toDouble,
-          Seq(adist(graft.operators.Similarity.pqAdistHof(cbs, m)),
-            adist(graft.operators.Similarity.pqAdist(cbs, m))))
+          Seq(adist(graft.operators.Similarity.pqAdistHof(cb)),
+            adist(cb.adc(col("codes"), col("__tbl")))))
       },
       // PQ ADC distance table at the queries' shape (m=4, ksub=8,
       // subDim=16; 400k synthetic probes): the 512-leaf element_at tree
       // vs PqDistTable. Rates are per probe.
       rates("dist_table_hof_probes_per_sec", "dist_table_expr_probes_per_sec") {
         val (m, ksub, subDim) = (4, 8, 16)
-        val cbs = (0 until m).map(j => j -> Array.tabulate(ksub)(c =>
-          (c, Seq.tabulate(subDim)(i => ((j * 31 + c * 7 + i * 3) % 19 - 9) / 10.0)))).toMap
+        val cb = graft.operators.Codebook(Array.tabulate(m)(j => Array.tabulate(ksub)(c =>
+          (c, Seq.tabulate(subDim)(i => ((j * 31 + c * 7 + i * 3) % 19 - 9) / 10.0)))))
         val probes = spark.range(400000L).toDF("id")
           .select(transform(sequence(lit(1), lit(m * subDim)),
             i => (pmod(xxhash64(col("id") * 64 + i), lit(2001L)) - 1000L) / 1000.0).as("p"))
           .repartition(cpusN).cache()
         (probes, probes.count().toDouble,
-          Seq(probes.select(graft.operators.Similarity.distTableHof(cbs, m, subDim)),
-            probes.select(graft.functions.PqDistTable.pq_dist_table(col("p"),
-              (0 until m).map(j => cbs(j).map(_._2.toArray)).toArray, subDim))))
+          Seq(probes.select(graft.operators.Similarity.distTableHof(cb)),
+            probes.select(cb.distTable(col("p")))))
       },
       // int8 quantized dot (dim 64, 4M synthetic pairs): zip_with/aggregate
       // fold vs Int8Dot
@@ -460,58 +459,55 @@ object Bench {
           k = recallK, nprobe = np, roundTo = 4))
       }
       val cb = Similarity.pqFit(sample, m = 4, subDim = 16, ksub = 8, iters = 2)
-      val enc = Similarity.pqEncode(vecs, cb, m = 4, subDim = 16)
+      val enc = Similarity.pqEncode(vecs, cb)
       // ADC fetches a wide pool (400) before the exact re-rank: on
       // isotropic random fixtures the compressed screen is weak
-      val pqR = recall(Similarity.pqTopK(enc, probes, cb, k = recallK, m = 4, subDim = 16))
+      val pqR = recall(Similarity.pqTopK(enc, probes, cb, k = recallK))
       val pqRerankR = recall(Similarity.pqTopKRerank(enc, probes, cb, vecs,
-        k = recallK, m = 4, subDim = 16, fetchK = 400))
+        k = recallK, fetchK = 400))
       // production-shaped codebooks: m=8, ksub=32 → 40-bit codes
       val cb2 = Similarity.pqFit(sample, m = 8, subDim = 8, ksub = 32, iters = 2)
-      val enc2 = Similarity.pqEncode(vecs, cb2, m = 8, subDim = 8)
-      val pq2R = recall(Similarity.pqTopK(enc2, probes, cb2, k = recallK, m = 8, subDim = 8))
+      val enc2 = Similarity.pqEncode(vecs, cb2)
+      val pq2R = recall(Similarity.pqTopK(enc2, probes, cb2, k = recallK))
       val pq2RerankR = recall(Similarity.pqTopKRerank(enc2, probes, cb2, vecs,
-        k = recallK, m = 8, subDim = 8, fetchK = 400))
+        k = recallK, fetchK = 400))
       // OPQ (trained rotation before PQ) at the same two code budgets
       val (orot4, ocb4) = Similarity.opqFit(sample, m = 4, subDim = 16,
         ksub = 8, pqIters = 2, opqIters = 4)
       val opq4R = recall(Similarity.opqTopK(
-        Similarity.opqEncode(vecs, orot4, ocb4, m = 4, subDim = 16),
-        probes, orot4, ocb4, k = recallK, m = 4, subDim = 16))
+        Similarity.opqEncode(vecs, orot4, ocb4), probes, orot4, ocb4, k = recallK))
       val (orot8, ocb8) = Similarity.opqFit(sample, m = 8, subDim = 8,
         ksub = 32, pqIters = 2, opqIters = 4)
-      val oenc8 = Similarity.opqEncode(vecs, orot8, ocb8, m = 8, subDim = 8)
-      val opq8R = recall(Similarity.opqTopK(oenc8, probes, orot8, ocb8,
-        k = recallK, m = 8, subDim = 8))
-      val opq8RerankR = reranked(Similarity.opqTopK(oenc8, probes, orot8, ocb8,
-        k = 400, m = 8, subDim = 8))
-      val distRatio4 = Similarity.pqDistortion(Similarity.rotate(vecs, "v", orot4), ocb4, 4, 16) /
-        Similarity.pqDistortion(vecs, cb, 4, 16)
-      val distRatio8 = Similarity.pqDistortion(Similarity.rotate(vecs, "v", orot8), ocb8, 8, 8) /
-        Similarity.pqDistortion(vecs, cb2, 8, 8)
+      val oenc8 = Similarity.opqEncode(vecs, orot8, ocb8)
+      val opq8R = recall(Similarity.opqTopK(oenc8, probes, orot8, ocb8, k = recallK))
+      val opq8RerankR = reranked(Similarity.opqTopK(oenc8, probes, orot8, ocb8, k = 400))
+      val distRatio4 = Similarity.pqDistortion(Similarity.rotate(vecs, "v", orot4), ocb4) /
+        Similarity.pqDistortion(vecs, cb)
+      val distRatio8 = Similarity.pqDistortion(Similarity.rotate(vecs, "v", orot8), ocb8) /
+        Similarity.pqDistortion(vecs, cb2)
       val quant = Similarity.quantizeInt8(vecs)
       val qprobes = quant.filter(col("vec_id") < 5)
         .select(col("vec_id").as("probe_id"), col("q").as("pq"))
       val i8R = recall(Similarity.int8TopK(quant, qprobes, k = recallK))
       // IVFADC: coarse route + in-cluster ADC, raw-vector codes
-      val index = Similarity.pqIndex(vecs, cents, cb, m = 4, subDim = 16)
+      val index = Similarity.pqIndex(vecs, cents, cb)
       val ivfpq = Seq(1, 2, 4).map { np =>
         s"recall_ivfpq_nprobe$np" -> recall(Similarity.ivfPqTopK(index, cents, probes, cb,
-          k = recallK, nprobe = np, m = 4, subDim = 16))
+          k = recallK, nprobe = np))
       }
       val ivfpqRerankR = reranked(Similarity.ivfPqTopK(index, cents, probes, cb,
-        k = 400, nprobe = 4, m = 4, subDim = 16))
+        k = 400, nprobe = 4))
       // residual IVFADC (Jégou §IV-A): the same code budget spent on
       // within-cell offsets; this and the OPQ-composed path are the
       // shipped rerank configs
       val rcb = Similarity.pqFitResidual(sample, cents, m = 4, subDim = 16, ksub = 8, iters = 2)
-      val rindex = Similarity.pqIndexResidual(vecs, cents, rcb, m = 4, subDim = 16)
+      val rindex = Similarity.pqIndexResidual(vecs, cents, rcb)
       val ivfpqRes = Seq(1, 2, 4).map { np =>
         s"recall_ivfpq_res_nprobe$np" -> recall(Similarity.ivfPqResidualTopK(rindex, cents,
-          probes, rcb, k = recallK, nprobe = np, m = 4, subDim = 16))
+          probes, rcb, k = recallK, nprobe = np))
       }
       val ivfpqResRerankR = reranked(Similarity.ivfPqResidualTopK(rindex, cents, probes, rcb,
-        k = 400, nprobe = 4, m = 4, subDim = 16))
+        k = 400, nprobe = 4))
       // OPQ ∘ residual IVFADC with the m=4 rotation; the exact re-rank
       // reads the original vectors (a rotation preserves cosine)
       val rvecs = Similarity.rotate(vecs, "v", orot4).cache()
@@ -520,11 +516,11 @@ object Bench {
         val rcents = Similarity.kmeansFit(rvecs, k = 8, iters = 2)
         val orcb = Similarity.pqFitResidual(rvecs.filter(col("vec_id") % 4 === 0), rcents,
           m = 4, subDim = 16, ksub = 8, iters = 2)
-        val orindex = Similarity.pqIndexResidual(rvecs, rcents, orcb, m = 4, subDim = 16)
+        val orindex = Similarity.pqIndexResidual(rvecs, rcents, orcb)
         (recall(Similarity.ivfPqResidualTopK(orindex, rcents, rprobes, orcb,
-          k = recallK, nprobe = 4, m = 4, subDim = 16)),
+          k = recallK, nprobe = 4)),
           reranked(Similarity.ivfPqResidualTopK(orindex, rcents, rprobes, orcb,
-            k = 400, nprobe = 4, m = 4, subDim = 16)))
+            k = 400, nprobe = 4)))
       } finally rvecs.unpersist(blocking = false)
       // JL random projection 64→16 and 64→32, raw and fetch-400 re-ranked
       def jl(outDim: Int, k: Int) =

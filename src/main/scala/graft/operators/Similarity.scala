@@ -4,18 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
-/** Embedding similarity search (north-star requirement).
-  *
-  * Two paths with the same output contract:
-  *  - [[bruteForceTopK]]: exact — probes broadcast against the full
-  *    vector table; the table side never shuffles. Right answer, O(N·P)
-  *    dot products; the baseline and the verifier for the ANN path.
-  *  - [[ivfTopK]]: IVF-style approximate — vectors are bucketed by
-  *    centroid (here the fixture's `label` clustering; in production the
-  *    assignment comes from k-means over a sample), each probe searches
-  *    only its `nprobe` nearest centroids. At 100 TB the centroid table is
-  *    a broadcast dim and the scan prunes to nprobe/k of the data —
-  *    turning an all-pairs shuffle into a partition-pruned scan.
+/** Embedding similarity search (north-star requirement). The families:
+  *  - exact: [[bruteForceTopK]] (the baseline and verifier of every
+  *    approximate path), [[hammingTopK]], [[int8TopK]], [[jlTopK]];
+  *  - IVF: [[kmeansFit]] / [[assignClusters]], then [[ivfTopK]] searches
+  *    only each probe's `nprobe` nearest cells;
+  *  - PQ, OPQ and IVFADC (raw and residual): [[pqFit]] / [[opqFit]]
+  *    train, every consumer reads m and subDim off the trained
+  *    [[Codebook]]; [[rerankExact]] re-ranks any candidate frame;
+  *  - curation: [[cosineNearDups]], [[semanticDedup]],
+  *    [[clusterOutliers]], [[mmrSelect]], [[embeddingDrift]].
   *
   * Cosines are rounded before ranking so ordering is reproducible across
   * engines (ties then break on vec_id).
@@ -288,8 +286,8 @@ object Similarity {
 
   /** The k-row centroid frame collected to ascending-cluster-id driver
     * rows — the plan-literal/closure payload both assignment forms carry
-    * (k·dim doubles; the frames are already checkpointed by the fit
-    * loop, so this reads stored rows, never a corpus scan). */
+    * (k·dim doubles; [[kmeansFit]] returns a local relation, so its
+    * frame collects without a job, never a corpus scan). */
   private def collectCents(cents: DataFrame): Array[(Int, Seq[Double])] = {
     val rows = cents.select(col("cluster").cast("int"), col("c")).collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1)))
@@ -302,8 +300,8 @@ object Similarity {
     * max-cosine centroid (6-dp rounded, ties to the lower cluster id —
     * identical to the training loop's rule). Returns (vec_id, v, cluster).
     *
-    * SHUFFLE-FREE: the centroid frame is k rows of k·dim doubles (already
-    * materialized by the fit loop's checkpoints), so it collapses into
+    * SHUFFLE-FREE: the centroid frame is k rows of k·dim doubles (a
+    * local relation when it comes from [[kmeansFit]]), so it collapses into
     * the [[graft.functions.CosineArgmax]] expression — one tight
     * primitive k·dim loop per vector — and the argmax is a pure
     * projection. The corpus is scanned exactly once with NO Exchange and
@@ -452,48 +450,34 @@ object Similarity {
     *
     * Returns (sub, cluster, c: array<double> of subDim) — `ksub` rows per
     * subspace (fewer if a cluster empties, which both engines drop
-    * identically).
+    * identically). A subspace that comes out empty or ragged — a sample
+    * whose vectors are shorter than m·subDim — fails the fit, so
+    * consumers, which read m and subDim off the codebook, never see it.
     */
   def pqFit(sample: DataFrame, m: Int, subDim: Int, ksub: Int, iters: Int): DataFrame = {
     require(iters >= 1, "PQ training needs at least one assignment round")
     val spark = sample.sparkSession
     import spark.implicits._
-    // the sample is scanned m·iters times — pin it once, release before
-    // returning: the codebooks below are a driver-side Seq, so nothing
-    // downstream reads the pin, and [[opqFit]] calls this once per
-    // alternation round (an unreleased pin per round accumulated
-    // sample-sized block-manager copies for the life of the session)
-    // lazy pin: the seed collect below is the first action and
-    // materializes the checkpoint blocks itself (Spark completes a
-    // lazily-checkpointed RDD's missing partitions at the end of that
-    // action), so the former eager pin's dedicated materialization job
-    // disappears — one job per pqFit saved, same blocks, same release
+    // the sample is scanned once per round: pin it lazily (the seed
+    // collect materializes the blocks, no job of its own) and release it
+    // before returning — the codebooks are driver rows, and [[opqFit]]
+    // calls this once per alternation round
     val pinned = Checkpoint.cut(sample.select(col("vec_id"), col("v")))
     try {
       // seed: the first ksub vectors by id seed EVERY subspace's codebook
-      // — ONE collect, each sub slices its dims locally (bit-identical to
-      // the former per-sub orderBy/limit/slice collects, m× fewer jobs)
-      val seedRows = pinned.orderBy(col("vec_id")).limit(ksub)
-        .select(col("v")).collect().map(_.getSeq[Double](0))
-      var cents: Array[Array[(Int, Seq[Double])]] = Array.tabulate(m) { j =>
+      // — ONE collect, each sub slices its dims locally
+      val seedRows = pinned.orderBy(col("vec_id")).limit(ksub).select(col("v")).collect()
+        .map(r => if (r.isNullAt(0)) Seq.empty[Double] else r.getSeq[Double](0))
+      var cb = fitted(Array.tabulate(m) { j =>
         seedRows.zipWithIndex.map { case (v, i) =>
           (i, v.slice(j * subDim, (j + 1) * subDim)) }
-      }
+      }, subDim)
       // ONE job per training round updates ALL m codebooks: per row an
       // array of (sub, argmin cluster, sub-vector) structs explodes, and
-      // the (sub, cluster, dim) means aggregate behind a single shuffle.
-      // The group keys carry `sub`, so every mean is the one the former
-      // per-sub loop computed — same rows, same round(avg, 6) — while
-      // the job count drops from m·(iters−1)+m to (iters−1)+1; the
-      // sequential per-sub form made PQ/OPQ training the bench's widest
-      // scheduling-overhead surface (subspaces are independent, their
-      // jobs never were).
+      // the (sub, cluster, dim) means aggregate behind a single shuffle
       for (_ <- 1 until iters) {
         val perSubCols = (0 until m).map { j =>
-          struct(lit(j).as("sub"),
-            graft.functions.L2Argmin.l2_argmin(col("v"),
-              cents(j).map(_._1), cents(j).map(_._2.toArray), j * subDim)
-              .as("cluster"),
+          struct(lit(j).as("sub"), cb.code(col("v"), j).as("cluster"),
             expr(s"slice(v, ${j * subDim + 1}, $subDim)").as("sv"))
         }
         val updated = pinned
@@ -507,22 +491,26 @@ object Similarity {
           .select(col("sub"), col("cluster").cast("int"),
             expr("transform(pairs, q -> q.mn)").as("c"))
           .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
-        cents = Array.tabulate(m) { j =>
-          updated.collect { case (s, cid, c) if s == j => (cid, c) }.sortBy(_._1)
-        }
+        cb = fitted(Array.tabulate(m) { j =>
+          updated.collect { case (s, cid, c) if s == j => (cid, c) }
+        }, subDim)
       }
-      cents.zipWithIndex.toSeq
+      cb.subs.zipWithIndex.toSeq
         .flatMap { case (cs, j) => cs.map { case (cid, c) => (j, cid, c) } }
         .toDF("sub", "cluster", "c")
     } finally Checkpoint.release(pinned)
   }
 
-  /** (sub → ascending-cluster codebook rows) from a [[pqFit]] frame. */
-  private def collectCodebooks(codebooks: DataFrame): Map[Int, Array[(Int, Seq[Double])]] =
-    codebooks.select(col("sub").cast("int"), col("cluster").cast("int"), col("c"))
-      .collect()
-      .map(r => (r.getInt(0), (r.getInt(1), r.getSeq[Double](2))))
-      .groupBy(_._1).map { case (s, rows) => s -> rows.map(_._2).sortBy(_._1) }
+  /** The [[Codebook]] over a fit's per-subspace centroid rows, held to
+    * the requested `subDim`: a sample narrower than m·subDim leaves a
+    * subspace short or empty, and the fit fails here instead of handing
+    * its consumers a codebook whose derived shape silently shrank. */
+  private def fitted(subs: Array[Array[(Int, Seq[Double])]], subDim: Int): Codebook = {
+    val cb = Codebook(subs)
+    require(cb.subDim == subDim, s"codebook centroids are ${cb.subDim} wide, trained " +
+      s"for subDim = $subDim: the sample's vectors are shorter than m·subDim = ${subs.length * subDim}")
+    cb
+  }
 
   /** PQ encode: every vector compressed to `m` small codes — the 100 TB
     * ANN storage path (m·log2(ksub) bits per vector instead of dim
@@ -532,16 +520,8 @@ object Similarity {
     * codebooks ride on the expressions (m·ksub·subDim doubles).
     * Returns (vec_id, codes: array<int>, ordered by subspace).
     */
-  def pqEncode(vectors: DataFrame, codebooks: DataFrame, m: Int, subDim: Int): DataFrame = {
-    val cbs = collectCodebooks(codebooks)
-    require((0 until m).forall(cbs.contains), s"codebooks must cover subspaces 0 until $m")
-    val codeCols = (0 until m).map { j =>
-      val cs = cbs(j)
-      graft.functions.L2Argmin.l2_argmin(col("v"),
-        cs.map(_._1), cs.map(_._2.toArray), j * subDim)
-    }
-    vectors.select(col("vec_id"), array(codeCols: _*).as("codes"))
-  }
+  def pqEncode(vectors: DataFrame, codebooks: DataFrame): DataFrame =
+    vectors.select(col("vec_id"), Codebook(codebooks).codes(col("v")).as("codes"))
 
   /** PQ search with asymmetric distance computation (ADC, Jégou §III):
     * per probe, a distance table d[sub][cluster] = 6-dp-rounded squared
@@ -559,14 +539,9 @@ object Similarity {
     * Returns (probe_id, vec_id, adist, rank ≤ k).
     */
   def pqTopK(encoded: DataFrame, probes: DataFrame, codebooks: DataFrame,
-             k: Int, m: Int, subDim: Int): DataFrame = {
-    val cbs = collectCodebooks(codebooks)
-    require((0 until m).forall(cbs.contains), s"codebooks must cover subspaces 0 until $m")
-    val withTbl = broadcast(probesWithDistTable(probes, cbs, m, subDim))
-    val scored = encoded.crossJoin(withTbl)
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"), pqAdist(cbs, m).as("adist"))
-    scoreTopK(scored, k, col("adist"), ascending = true)
+             k: Int): DataFrame = {
+    val cb = Codebook(codebooks)
+    adcTopK(encoded.crossJoin(broadcast(probesWithDistTable(probes, cb))), cb, k)
   }
 
   /** Per-probe ADC distance table: array(sub)(pos) of 6-dp-rounded
@@ -575,74 +550,56 @@ object Similarity {
     * with it). Probes shorter than m·subDim are dropped up front — their
     * tables would carry null rows, adist would be null for EVERY
     * candidate, and ascending order (NULLS FIRST) would rank the null
-    * rows as the top-k.
-    *
-    * The table itself is the native [[graft.functions.PqDistTable]]
-    * expression: the expression-built twin ([[distTableHof]], kept for
-    * the parity spec) is m·ksub·subDim `element_at`/literal leaves —
-    * 512 at the queries' m=4/ksub=8/subDim=16 — that Catalyst analyses
-    * and optimizes on every build and AQE re-optimizes at every query
-    * stage; PqDistTable carries the codebooks on one node. */
-  private def probesWithDistTable(probes: DataFrame,
-                                  cbs: Map[Int, Array[(Int, Seq[Double])]],
-                                  m: Int, subDim: Int): DataFrame =
-    probes.filter(size(col("p")) >= m * subDim)
-      .withColumn("__tbl", graft.functions.PqDistTable.pq_dist_table(col("p"),
-        (0 until m).map(j => cbs(j).map(_._2.toArray)).toArray, subDim))
+    * rows as the top-k. The table is the native
+    * [[graft.functions.PqDistTable]], whose doc says why it replaced the
+    * expression-built twin [[distTableHof]]. */
+  private def probesWithDistTable(probes: DataFrame, cb: Codebook): DataFrame =
+    probes.filter(size(col("p")) >= cb.m * cb.subDim)
+      .withColumn("__tbl", cb.distTable(col("p")))
 
   /** The column-expression distance-table twin — bit-identical contract
-    * to [[probesWithDistTable]]'s table (FunctionsSpec pins the parity
-    * on raw bits, NaN/±Inf/nulls included). */
-  private[graft] def distTableHof(cbs: Map[Int, Array[(Int, Seq[Double])]],
-                                  m: Int, subDim: Int): Column =
-    array((0 until m).map { j =>
-      array(cbs(j).map { case (_, cvec) =>
+    * to [[Codebook.distTable]] (FunctionsSpec pins the parity on raw
+    * bits, NaN/±Inf/nulls included). */
+  private[graft] def distTableHof(cb: Codebook): Column =
+    array(cb.subs.indices.map { j =>
+      array(cb.subs(j).map { case (_, cvec) =>
         val d2 = cvec.indices.map { i =>
-          val diff = element_at(col("p"), j * subDim + i + 1) - lit(cvec(i))
+          val diff = element_at(col("p"), j * cb.subDim + i + 1) - lit(cvec(i))
           diff * diff
         }.reduce(_ + _)
         round(d2, 6)
       }.toIndexedSeq: _*)
-    }.toIndexedSeq: _*)
+    }: _*)
 
-  // code -> table position (1-based); by construction positions follow
-  // ascending cluster id, so a code always resolves unless its cluster
-  // emptied out of the codebook
-  private def pqIdsLit(cbs: Map[Int, Array[(Int, Seq[Double])]], m: Int) =
-    (0 until m).map(j => typedLit(cbs(j).map(_._1).toSeq))
-
-  /** Candidate ADC distance: the sum of the m table lookups, re-rounded
-    * to 6 dp (each term is a 6-dp multiple, so the sum mathematically is
-    * too and rounding absorbs summation-order noise). Code validity is
-    * fused into the lookup instead of pre-filtered: an unresolvable code
-    * (stale codebook, short/null codes array) makes the lookup index go
-    * null, the term and therefore the whole sum go null, and
-    * [[scoreTopK]]'s null-score filter drops the candidate before
-    * ranking — same drop-the-candidate semantics as the old pqCodesValid
-    * pre-pass, without a second set of lookups per corpus row ahead of
-    * the join.
-    *
-    * The lookup-sum itself is the native [[graft.functions.PqAdc]]
-    * expression: the expression-built twin ([[pqAdistHof]], kept for the
-    * parity spec) pays m× `array_position` scans over ksub-entry literal
-    * arrays per candidate row — O(m·ksub) boxed comparisons, more work
-    * than the dim multiply-adds ADC exists to avoid — where PqAdc
-    * direct-indexes a code→position map precomputed once at plan build
-    * and runs one primitive loop inside whole-stage codegen. */
-  private[graft] def pqAdist(cbs: Map[Int, Array[(Int, Seq[Double])]], m: Int): Column =
-    graft.functions.PqAdc.pq_adc(col("codes"), col("__tbl"),
-      (0 until m).map(j => cbs(j).map(_._1)).toArray)
+  /** Rank probe × candidate pairs (`codes` against the probe's `__tbl`)
+    * by ascending ADC distance: the sum of the m table lookups,
+    * re-rounded to 6 dp (each term is a 6-dp multiple, so the sum
+    * mathematically is too and rounding absorbs summation-order noise).
+    * Code validity is fused into the lookup instead of pre-filtered: an
+    * unresolvable code (stale codebook, short/null codes array) makes
+    * the lookup go null, the whole sum goes null, and [[scoreTopK]]'s
+    * null-score filter drops the candidate before ranking. The lookup
+    * is the native [[graft.functions.PqAdc]], whose doc says why it
+    * replaced the expression-built twin [[pqAdistHof]]. */
+  private def adcTopK(pairs: DataFrame, cb: Codebook, k: Int): DataFrame = {
+    val scored = pairs
+      .filter(col("vec_id") =!= col("probe_id"))
+      .select(col("probe_id"), col("vec_id"), cb.adc(col("codes"), col("__tbl")).as("adist"))
+    scoreTopK(scored, k, col("adist"), ascending = true)
+  }
 
   /** The column-expression ADC twin — bit-identical contract to
-    * [[pqAdist]] (FunctionsSpec pins the parity sweep, nulls included). */
-  private[graft] def pqAdistHof(cbs: Map[Int, Array[(Int, Seq[Double])]], m: Int): Column = {
-    val ids = pqIdsLit(cbs, m)
-    round((0 until m).map { j =>
-      val pos = array_position(ids(j), element_at(col("codes"), j + 1))
+    * [[Codebook.adc]] (FunctionsSpec pins the parity sweep, nulls
+    * included). A code resolves to its 1-based table position, which
+    * follows ascending cluster id; a cluster that emptied out of the
+    * codebook resolves to nothing. */
+  private[graft] def pqAdistHof(cb: Codebook): Column =
+    round(cb.subs.indices.map { j =>
+      val pos = array_position(typedLit(cb.subs(j).map(_._1).toSeq),
+        element_at(col("codes"), j + 1))
       element_at(element_at(col("__tbl"), j + 1),
         nullif(pos, lit(0L)).cast("int"))
     }.reduce(_ + _), 6)
-  }
 
   /** The IVFADC index build (Jégou §IV): ONE shuffle-free projection
     * labels every vector with its coarse max-cosine centroid AND its m
@@ -650,20 +607,20 @@ object Similarity {
     * stores instead of raw vectors (coarse label for routing/pruning,
     * codes for in-cluster ADC; both argmaxes are native expressions, so
     * the corpus is scanned once with no Exchange and no join). */
-  def pqIndex(vectors: DataFrame, cents: DataFrame, codebooks: DataFrame,
-              m: Int, subDim: Int): DataFrame = {
+  def pqIndex(vectors: DataFrame, cents: DataFrame, codebooks: DataFrame): DataFrame =
+    ivfPqIndex(vectors, cents, codebooks, residual = false)
+
+  /** The index body both IVFADC builds share: coarse-label every vector
+    * and encode either `v` itself or its residual `v − centroid[cluster]`
+    * (the residual variant's codebooks were trained on residuals). */
+  private def ivfPqIndex(vectors: DataFrame, cents: DataFrame, codebooks: DataFrame,
+                         residual: Boolean): DataFrame = {
     val centRows = collectCents(cents)
-    val cbs = collectCodebooks(codebooks)
-    require((0 until m).forall(cbs.contains), s"codebooks must cover subspaces 0 until $m")
-    val codeCols = (0 until m).map { j =>
-      val cs = cbs(j)
-      graft.functions.L2Argmin.l2_argmin(col("v"),
-        cs.map(_._1), cs.map(_._2.toArray), j * subDim)
-    }
-    vectors.select(col("vec_id"),
-      graft.functions.CosineArgmax.cosine_argmax(col("v"),
-        centRows.map(_._1), centRows.map(_._2.toArray)).as("cluster"),
-      array(codeCols: _*).as("codes"))
+    val cb = Codebook(codebooks)
+    val rv = if (residual) residualExpr(centRows, col("v"), col("cluster")) else col("v")
+    assignClusters(vectors, centRows)
+      .select(col("vec_id"), col("cluster"), rv.as("rv"))
+      .select(col("vec_id"), col("cluster"), cb.codes(col("rv")).as("codes"))
   }
 
   /** IVFADC search (Jégou §IV — the composition that actually ships at
@@ -683,19 +640,18 @@ object Similarity {
     * Returns (probe_id, vec_id, adist, rank ≤ k).
     */
   def ivfPqTopK(index: DataFrame, cents: DataFrame, probes: DataFrame,
-                codebooks: DataFrame, k: Int, nprobe: Int,
-                m: Int, subDim: Int): DataFrame = {
-    val cbs = collectCodebooks(codebooks)
-    require((0 until m).forall(cbs.contains), s"codebooks must cover subspaces 0 until $m")
-    val routed = routeProbes(probes, cents, nprobe)
-    val withTbl = broadcast(
-      probesWithDistTable(routed, cbs, m, subDim)
-        .select(col("probe_id"), col("cluster"), col("__tbl")))
-    val scored = index
-      .join(withTbl, "cluster")
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"), pqAdist(cbs, m).as("adist"))
-    scoreTopK(scored, k, col("adist"), ascending = true)
+                codebooks: DataFrame, k: Int, nprobe: Int): DataFrame =
+    routedAdcTopK(index, routeProbes(probes, cents, nprobe), codebooks, k)
+
+  /** The routed-ADC search body both IVFADC searches share: one distance
+    * table per routed (probe, cluster) row, joined to that cluster's
+    * index rows only. */
+  private def routedAdcTopK(index: DataFrame, routed: DataFrame, codebooks: DataFrame,
+                            k: Int): DataFrame = {
+    val cb = Codebook(codebooks)
+    val withTbl = broadcast(probesWithDistTable(routed, cb)
+      .select(col("probe_id"), col("cluster"), col("__tbl")))
+    adcTopK(index.join(withTbl, "cluster"), cb, k)
   }
 
   /** `v − centroid[cluster]`: the k coarse centroids ride ON the native
@@ -717,11 +673,8 @@ object Similarity {
     * cases included); kept as executable documentation of the
     * element-order the oracle replays. */
   private[graft] def residualExprHof(centRows: Array[(Int, Seq[Double])],
-                                     v: Column, cluster: Column): Column = {
-    val centMap = map(centRows.flatMap { case (id, c) =>
-      Seq(lit(id), typedLit(c)) }.toIndexedSeq: _*)
-    zip_with(v, element_at(centMap, cluster), (x, y) => x - y)
-  }
+                                     v: Column, cluster: Column): Column =
+    zip_with(v, element_at(Codebook.centroidMap(centRows), cluster), (x, y) => x - y)
 
   /** Coarse-label every vector and subtract its centroid — the residual
     * frame IVFADC quantizes (Jégou §IV-A: PQ over `v − q_coarse(v)`
@@ -753,20 +706,8 @@ object Similarity {
     * the projection (the centroid map rides as a literal, both argmaxes
     * are native expressions, no Exchange, no join). */
   def pqIndexResidual(vectors: DataFrame, cents: DataFrame,
-                      codebooks: DataFrame, m: Int, subDim: Int): DataFrame = {
-    val centRows = collectCents(cents)
-    val cbs = collectCodebooks(codebooks)
-    require((0 until m).forall(cbs.contains), s"codebooks must cover subspaces 0 until $m")
-    val labeled = assignClusters(vectors, centRows)
-      .select(col("vec_id"), col("cluster"),
-        residualExpr(centRows, col("v"), col("cluster")).as("rv"))
-    val codeCols = (0 until m).map { j =>
-      val cs = cbs(j)
-      graft.functions.L2Argmin.l2_argmin(col("rv"),
-        cs.map(_._1), cs.map(_._2.toArray), j * subDim)
-    }
-    labeled.select(col("vec_id"), col("cluster"), array(codeCols: _*).as("codes"))
-  }
+                      codebooks: DataFrame): DataFrame =
+    ivfPqIndex(vectors, cents, codebooks, residual = true)
 
   /** Residual IVFADC search: routes like [[ivfPqTopK]], but each probe's
     * ADC distance table is computed over the probe's residual w.r.t. THE
@@ -779,21 +720,10 @@ object Similarity {
     * semantics — is the shared machinery. Compose with [[rerankExact]]
     * for the exact final ranking. */
   def ivfPqResidualTopK(index: DataFrame, cents: DataFrame, probes: DataFrame,
-                        codebooks: DataFrame, k: Int, nprobe: Int,
-                        m: Int, subDim: Int): DataFrame = {
+                        codebooks: DataFrame, k: Int, nprobe: Int): DataFrame = {
     val centRows = collectCents(cents)
-    val cbs = collectCodebooks(codebooks)
-    require((0 until m).forall(cbs.contains), s"codebooks must cover subspaces 0 until $m")
-    val routedRes = routeProbes(probes, cents, nprobe)
-      .withColumn("p", residualExpr(centRows, col("p"), col("cluster")))
-    val withTbl = broadcast(
-      probesWithDistTable(routedRes, cbs, m, subDim)
-        .select(col("probe_id"), col("cluster"), col("__tbl")))
-    val scored = index
-      .join(withTbl, "cluster")
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"), pqAdist(cbs, m).as("adist"))
-    scoreTopK(scored, k, col("adist"), ascending = true)
+    routedAdcTopK(index, routeProbes(probes, cents, nprobe)
+      .withColumn("p", residualExpr(centRows, col("p"), col("cluster"))), codebooks, k)
   }
 
   // ──────────────── OPQ: optimized product quantization ────────────────
@@ -890,17 +820,10 @@ object Similarity {
       var r = Array.tabulate(d, d)((i, j) => if (i == j) 1.0 else 0.0)
       var cbs = pqFit(pinned, m, subDim, ksub, pqIters)
       for (_ <- 0 until opqIters) {
-        val cbMap = collectCodebooks(cbs)
         // x = the ORIGINAL vector, y = its reconstruction in rotated space
         val xy = pinned.select(col("v").as("x"),
           graft.functions.MatVec.mat_vec(col("v"), r).as("rv"))
-          .select(col("x"), flatten(array((0 until m).map { j =>
-            val cs = cbMap(j)
-            val centMap = map(cs.flatMap { case (id, c) =>
-              Seq(lit(id), typedLit(c)) }.toIndexedSeq: _*)
-            element_at(centMap, graft.functions.L2Argmin.l2_argmin(col("rv"),
-              cs.map(_._1), cs.map(_._2.toArray), j * subDim))
-          }.toIndexedSeq: _*)).as("y"))
+          .select(col("x"), Codebook(cbs).reconstruct(col("rv")).as("y"))
           .filter(col("y").isNotNull && size(col("y")) === d)
         // Gram frame XᵀY: d² cells, reduced with map-side partial agg
         val cells = xy
@@ -922,36 +845,27 @@ object Similarity {
   /** PQ-encode in the rotated space: ONE shuffle-free projection — the
     * MatVec rotation and the per-subspace native argmins collapse into a
     * single corpus pass (same storage contract as [[pqEncode]]). */
-  def opqEncode(vectors: DataFrame, rot: Array[Array[Double]],
-                codebooks: DataFrame, m: Int, subDim: Int,
+  def opqEncode(vectors: DataFrame, rot: Array[Array[Double]], codebooks: DataFrame,
                 roundTo: Int = graft.functions.MatVec.NoRounding): DataFrame =
-    pqEncode(rotate(vectors, "v", rot, roundTo), codebooks, m, subDim)
+    pqEncode(rotate(vectors, "v", rot, roundTo), codebooks)
 
   /** ADC search in the rotated space: probes rotate through the same
     * matrix (rotation is orthogonal, so rotated-space L2 ≡ original-space
     * L2 and the ranking contract carries over), then exactly [[pqTopK]].
     */
   def opqTopK(encoded: DataFrame, probes: DataFrame, rot: Array[Array[Double]],
-              codebooks: DataFrame, k: Int, m: Int, subDim: Int,
+              codebooks: DataFrame, k: Int,
               roundTo: Int = graft.functions.MatVec.NoRounding): DataFrame =
-    pqTopK(encoded, rotate(probes, "p", rot, roundTo), codebooks, k, m, subDim)
+    pqTopK(encoded, rotate(probes, "p", rot, roundTo), codebooks, k)
 
   /** Mean squared quantization distortion E‖v − q(v)‖² of a codebook
     * over a vector frame — the objective OPQ minimizes; published in the
     * bench next to the recall pairs so the rotation's effect is visible
     * even where recall is code-capacity-bound. One aggregation pass. */
-  def pqDistortion(vectors: DataFrame, codebooks: DataFrame,
-                   m: Int, subDim: Int): Double = {
-    val cbMap = collectCodebooks(codebooks)
-    val recon = flatten(array((0 until m).map { j =>
-      val cs = cbMap(j)
-      val centMap = map(cs.flatMap { case (id, c) =>
-        Seq(lit(id), typedLit(c)) }.toIndexedSeq: _*)
-      element_at(centMap, graft.functions.L2Argmin.l2_argmin(col("v"),
-        cs.map(_._1), cs.map(_._2.toArray), j * subDim))
-    }.toIndexedSeq: _*))
-    vectors.filter(size(col("v")) === m * subDim)
-      .select(aggregate(zip_with(col("v"), recon,
+  def pqDistortion(vectors: DataFrame, codebooks: DataFrame): Double = {
+    val cb = Codebook(codebooks)
+    vectors.filter(size(col("v")) === cb.m * cb.subDim)
+      .select(aggregate(zip_with(col("v"), cb.reconstruct(col("v")),
         (a, b) => (a - b) * (a - b)), lit(0.0), _ + _).as("e2"))
       .agg(avg(col("e2"))).head.getDouble(0)
   }
@@ -980,12 +894,10 @@ object Similarity {
   def clusterOutliers(vectors: DataFrame, cents: DataFrame, k: Int): DataFrame = {
     require(k > 0)
     val centRows = collectCents(cents)
-    val centMap = map(centRows.flatMap { case (id, c) =>
-      Seq(lit(id), typedLit(c)) }.toIndexedSeq: _*)
     val scored = assignClusters(vectors, centRows)
       .select(col("vec_id"), col("cluster"),
         round(graft.functions.CosineSim.cosine_sim(col("v"),
-          element_at(centMap, col("cluster"))), 6).as("__c6"))
+          element_at(Codebook.centroidMap(centRows), col("cluster"))), 6).as("__c6"))
       // NaN-guard BEFORE the ANSI cast (hostile-VECTORS wave): a
       // zero-norm vector's cosine is NaN by CosineSim's documented
       // contract, and CAST(NaN AS BIGINT) kills the whole job under
@@ -1076,10 +988,10 @@ object Similarity {
     * survives in the ADC candidate set (spec-pinned at fetchK = corpus).
     */
   def pqTopKRerank(encoded: DataFrame, probes: DataFrame, codebooks: DataFrame,
-                   vectors: DataFrame, k: Int, m: Int, subDim: Int,
-                   fetchK: Int, roundTo: Int = 4): DataFrame = {
+                   vectors: DataFrame, k: Int, fetchK: Int,
+                   roundTo: Int = 4): DataFrame = {
     require(fetchK >= k, s"fetchK=$fetchK must be >= k=$k")
-    rerankExact(pqTopK(encoded, probes, codebooks, fetchK, m, subDim),
+    rerankExact(pqTopK(encoded, probes, codebooks, fetchK),
       probes, vectors, k, roundTo)
   }
 

@@ -334,10 +334,10 @@ object LlmOps {
       .select($"vec_id", $"embedding".cast("array<double>").as("v")).cache()
     val cb = graft.operators.Similarity.pqFit(
       vecs.filter($"vec_id" % 4 === 0), m = 4, subDim = 16, ksub = 8, iters = 2)
-    val enc = graft.operators.Similarity.pqEncode(vecs, cb, m = 4, subDim = 16)
+    val enc = graft.operators.Similarity.pqEncode(vecs, cb)
     val probes = vecs.filter($"vec_id" < 5)
       .select($"vec_id".as("probe_id"), $"v".as("p"))
-    graft.operators.Similarity.pqTopK(enc, probes, cb, k = 3, m = 4, subDim = 16)
+    graft.operators.Similarity.pqTopK(enc, probes, cb, k = 3)
       .select($"probe_id", $"vec_id", $"adist", $"rank")
       .orderBy($"probe_id", $"rank")
   }
@@ -364,12 +364,10 @@ object LlmOps {
       graft.operators.Similarity.rotate(
         vecs.filter($"vec_id" % 4 === 0), "v", rot, roundTo = 6),
       m = 4, subDim = 4, ksub = 8, iters = 2)
-    val enc = graft.operators.Similarity.opqEncode(vecs, rot, cb,
-      m = 4, subDim = 4, roundTo = 6)
+    val enc = graft.operators.Similarity.opqEncode(vecs, rot, cb, roundTo = 6)
     val probes = vecs.filter($"vec_id" < 5)
       .select($"vec_id".as("probe_id"), $"v".as("p"))
-    graft.operators.Similarity.opqTopK(enc, probes, rot, cb,
-      k = 3, m = 4, subDim = 4, roundTo = 6)
+    graft.operators.Similarity.opqTopK(enc, probes, rot, cb, k = 3, roundTo = 6)
       .select($"probe_id", $"vec_id", $"adist", $"rank")
       .orderBy($"probe_id", $"rank")
   }
@@ -387,11 +385,11 @@ object LlmOps {
       .select($"vec_id", $"embedding".cast("array<double>").as("v")).cache()
     val cb = graft.operators.Similarity.pqFit(
       vecs.filter($"vec_id" % 4 === 0), m = 4, subDim = 16, ksub = 8, iters = 2)
-    val enc = graft.operators.Similarity.pqEncode(vecs, cb, m = 4, subDim = 16)
+    val enc = graft.operators.Similarity.pqEncode(vecs, cb)
     val probes = vecs.filter($"vec_id" < 5)
       .select($"vec_id".as("probe_id"), $"v".as("p"))
     graft.operators.Similarity
-      .pqTopKRerank(enc, probes, cb, vecs, k = 3, m = 4, subDim = 16, fetchK = 50)
+      .pqTopKRerank(enc, probes, cb, vecs, k = 3, fetchK = 50)
       .select($"probe_id", $"vec_id", $"cosine", $"rank")
       .orderBy($"probe_id", $"rank")
   }
@@ -412,11 +410,11 @@ object LlmOps {
     val sample = vecs.filter($"vec_id" % 4 === 0)
     val cents = graft.operators.Similarity.kmeansFit(sample, k = 8, iters = 2)
     val cb = graft.operators.Similarity.pqFit(sample, m = 4, subDim = 16, ksub = 8, iters = 2)
-    val index = graft.operators.Similarity.pqIndex(vecs, cents, cb, m = 4, subDim = 16)
+    val index = graft.operators.Similarity.pqIndex(vecs, cents, cb)
     val probes = vecs.filter($"vec_id" < 5)
       .select($"vec_id".as("probe_id"), $"v".as("p"))
     graft.operators.Similarity
-      .ivfPqTopK(index, cents, probes, cb, k = 3, nprobe = 2, m = 4, subDim = 16)
+      .ivfPqTopK(index, cents, probes, cb, k = 3, nprobe = 2)
       .select($"probe_id", $"vec_id", $"adist", $"rank")
       .orderBy($"probe_id", $"rank")
   }
@@ -439,13 +437,11 @@ object LlmOps {
     val cents = graft.operators.Similarity.kmeansFit(sample, k = 8, iters = 2)
     val cb = graft.operators.Similarity.pqFitResidual(sample, cents,
       m = 4, subDim = 16, ksub = 8, iters = 2)
-    val index = graft.operators.Similarity.pqIndexResidual(vecs, cents, cb,
-      m = 4, subDim = 16)
+    val index = graft.operators.Similarity.pqIndexResidual(vecs, cents, cb)
     val probes = vecs.filter($"vec_id" < 5)
       .select($"vec_id".as("probe_id"), $"v".as("p"))
     graft.operators.Similarity
-      .ivfPqResidualTopK(index, cents, probes, cb, k = 3, nprobe = 2,
-        m = 4, subDim = 16)
+      .ivfPqResidualTopK(index, cents, probes, cb, k = 3, nprobe = 2)
       .select($"probe_id", $"vec_id", $"adist", $"rank")
       .orderBy($"probe_id", $"rank")
   }

@@ -500,9 +500,8 @@ class CurationSpec extends SparkTestBase {
     // exact re-ranking must reproduce brute force row for row — and the
     // raw ADC ordering it corrects must itself score worse or equal
     val cb = Similarity.pqFit(vecs, m = 2, subDim = 4, ksub = 4, iters = 2)
-    val enc = Similarity.pqEncode(vecs, cb, m = 2, subDim = 4)
-    val rr = Similarity.pqTopKRerank(enc, probes, cb, vecs, k = 5,
-      m = 2, subDim = 4, fetchK = 48)
+    val enc = Similarity.pqEncode(vecs, cb)
+    val rr = Similarity.pqTopKRerank(enc, probes, cb, vecs, k = 5, fetchK = 48)
     assert(Similarity.recallAtK(rr, exact, 5) == 1.0,
       "full-fetch re-rank must equal brute force")
     val rrRows = rr.select($"probe_id", $"vec_id", $"cosine", $"rank")
@@ -511,7 +510,7 @@ class CurationSpec extends SparkTestBase {
       .as[(Long, Long, Double, Int)].collect().toSet
     assert(rrRows == bfRows, "re-ranked rows must match brute force exactly")
     val adcRecall = Similarity.recallAtK(
-      Similarity.pqTopK(enc, probes, cb, k = 5, m = 2, subDim = 4), exact, 5)
+      Similarity.pqTopK(enc, probes, cb, k = 5), exact, 5)
     assert(adcRecall <= 1.0)
     exact.unpersist()
   }
@@ -544,18 +543,17 @@ class CurationSpec extends SparkTestBase {
     // production-shaped PQ (m=8) + exact re-rank from an 8×k candidate
     // pool — the two-stage shape a deployment runs
     val cb = Similarity.pqFit(vecs, m = 8, subDim = 2, ksub = 16, iters = 3)
-    val enc = Similarity.pqEncode(vecs, cb, m = 8, subDim = 2)
+    val enc = Similarity.pqEncode(vecs, cb)
     val pqRerankR = Similarity.recallAtK(
-      Similarity.pqTopKRerank(enc, probes, cb, vecs, k, m = 8, subDim = 2,
+      Similarity.pqTopKRerank(enc, probes, cb, vecs, k,
         fetchK = 8 * k), exact, k)
     assert(pqRerankR >= 0.9,
       s"pq m=8 rerank recall@10 $pqRerankR under its 0.9 floor")
     // IVFADC route → compressed scan → exact re-rank, same floor
-    val index = Similarity.pqIndex(vecs, cents, cb, m = 8, subDim = 2)
+    val index = Similarity.pqIndex(vecs, cents, cb)
     val ivfpqRerankR = Similarity.recallAtK(
       Similarity.rerankExact(
-        Similarity.ivfPqTopK(index, cents, probes, cb, k = 8 * k, nprobe = 4,
-          m = 8, subDim = 2),
+        Similarity.ivfPqTopK(index, cents, probes, cb, k = 8 * k, nprobe = 4),
         probes, vecs, k), exact, k)
     assert(ivfpqRerankR >= 0.9,
       s"ivfpq rerank recall@10 $ivfpqRerankR under its 0.9 floor")
@@ -565,16 +563,15 @@ class CurationSpec extends SparkTestBase {
     // re-ranked composition holds the same 0.9 gate as the others
     val rcb = Similarity.pqFitResidual(vecs, cents, m = 8, subDim = 2,
       ksub = 16, iters = 3)
-    val rindex = Similarity.pqIndexResidual(vecs, cents, rcb, m = 8, subDim = 2)
+    val rindex = Similarity.pqIndexResidual(vecs, cents, rcb)
     val resRawR = Similarity.recallAtK(
-      Similarity.ivfPqResidualTopK(rindex, cents, probes, rcb, k, nprobe = 4,
-        m = 8, subDim = 2), exact, k)
+      Similarity.ivfPqResidualTopK(rindex, cents, probes, rcb, k, nprobe = 4), exact, k)
     assert(resRawR >= 0.6,
       s"residual ivfpq RAW adc recall@10 $resRawR under its 0.6 floor")
     val resRerankR = Similarity.recallAtK(
       Similarity.rerankExact(
         Similarity.ivfPqResidualTopK(rindex, cents, probes, rcb, k = 8 * k,
-          nprobe = 4, m = 8, subDim = 2),
+          nprobe = 4),
         probes, vecs, k), exact, k)
     assert(resRerankR >= 0.9,
       s"residual ivfpq rerank recall@10 $resRerankR under its 0.9 floor")
@@ -600,8 +597,8 @@ class CurationSpec extends SparkTestBase {
     val opqRerankR = Similarity.recallAtK(
       Similarity.rerankExact(
         Similarity.opqTopK(
-          Similarity.opqEncode(vecs, orot, ocb, m = 8, subDim = 2),
-          probes, orot, ocb, k = 8 * k, m = 8, subDim = 2),
+          Similarity.opqEncode(vecs, orot, ocb),
+          probes, orot, ocb, k = 8 * k),
         probes, vecs, k), exact, k)
     assert(opqRerankR >= 0.9,
       s"opq m=8 rerank recall@10 $opqRerankR under its 0.9 floor")
@@ -642,9 +639,9 @@ class CurationSpec extends SparkTestBase {
       math.abs(rtr(i)(j) - (if (i == j) 1.0 else 0.0)) < 1e-9)),
       "trained rotation must be orthogonal (RᵀR = I)")
     // the objective OPQ minimizes must actually drop
-    val dist0 = Similarity.pqDistortion(vecs, cb0, m, subDim)
+    val dist0 = Similarity.pqDistortion(vecs, cb0)
     val distR = Similarity.pqDistortion(Similarity.rotate(vecs, "v", r),
-      cb, m, subDim)
+      cb)
     info(f"distortion: PQ $dist0%.5f OPQ $distR%.5f")
     assert(distR < 0.8 * dist0,
       s"OPQ distortion $distR must undercut plain PQ $dist0 by >20%")
@@ -655,11 +652,11 @@ class CurationSpec extends SparkTestBase {
     val exact = Similarity.bruteForceTopK(vecs, probes, k).cache()
     exact.count()
     val pqR = Similarity.recallAtK(
-      Similarity.pqTopK(Similarity.pqEncode(vecs, cb0, m, subDim),
-        probes, cb0, k, m, subDim), exact, k)
+      Similarity.pqTopK(Similarity.pqEncode(vecs, cb0),
+        probes, cb0, k), exact, k)
     val opqR = Similarity.recallAtK(
-      Similarity.opqTopK(Similarity.opqEncode(vecs, r, cb, m, subDim),
-        probes, r, cb, k, m, subDim), exact, k)
+      Similarity.opqTopK(Similarity.opqEncode(vecs, r, cb),
+        probes, r, cb, k), exact, k)
     info(f"recall@10: PQ $pqR%.2f OPQ $opqR%.2f")
     assert(opqR >= pqR + 0.1,
       s"OPQ raw-ADC recall $opqR must beat plain PQ $pqR by >= 0.1")
@@ -729,9 +726,9 @@ class CurationSpec extends SparkTestBase {
       m, subDim, ksub = 8, iters = 2)
     // opqEncode ≡ pqEncode over a pre-rotated corpus (the wiring adds
     // nothing but the rotation)
-    val viaOpq = Similarity.opqEncode(vecs, rot, cb, m, subDim)
+    val viaOpq = Similarity.opqEncode(vecs, rot, cb)
     val viaPre = Similarity.pqEncode(Similarity.rotate(vecs, "v", rot),
-      cb, m, subDim)
+      cb)
     assert(viaOpq.exceptAll(viaPre).isEmpty && viaPre.exceptAll(viaOpq).isEmpty,
       "opqEncode diverged from pqEncode over pre-rotated vectors")
     // the rotated index build stays ONE shuffle-free projection: MatVec
@@ -744,9 +741,9 @@ class CurationSpec extends SparkTestBase {
     // opqTopK ≡ pqTopK with both sides pre-rotated (search-side wiring)
     val probes = vecs.filter($"vec_id" < 3)
       .select($"vec_id".as("probe_id"), $"v".as("p"))
-    val viaOpqTk = Similarity.opqTopK(viaOpq, probes, rot, cb, k = 3, m, subDim)
+    val viaOpqTk = Similarity.opqTopK(viaOpq, probes, rot, cb, k = 3)
     val viaPreTk = Similarity.pqTopK(viaPre,
-      Similarity.rotate(probes, "p", rot), cb, k = 3, m, subDim)
+      Similarity.rotate(probes, "p", rot), cb, k = 3)
     assert(viaOpqTk.exceptAll(viaPreTk).isEmpty &&
       viaPreTk.exceptAll(viaOpqTk).isEmpty,
       "opqTopK diverged from pqTopK over pre-rotated inputs")
@@ -756,8 +753,8 @@ class CurationSpec extends SparkTestBase {
     val dirty = vecs.unionByName(Seq(
       (900L, (0 until 3).map(_ => 1.0))).toDF("vec_id", "v"))
     val dirtyTk = Similarity.opqTopK(
-      Similarity.opqEncode(dirty, rot, cb, m, subDim), probes, rot, cb,
-      k = 80, m, subDim)
+      Similarity.opqEncode(dirty, rot, cb), probes, rot, cb,
+      k = 80)
     assert(!dirtyTk.select($"vec_id").as[Long].collect().contains(900L),
       "a width-mismatched vector must drop from the ADC ranking")
     // rank-deficient training input (every vector identical): the Gram
@@ -772,7 +769,7 @@ class CurationSpec extends SparkTestBase {
     assert((0 until d).forall(i => (0 until d).forall(j =>
       math.abs(rtr(i)(j) - (if (i == j) 1.0 else 0.0)) < 1e-9)),
       "rotation from rank-deficient training must still be orthogonal")
-    assert(Similarity.opqEncode(flat, rf, cbf, m, subDim).count() == 40L)
+    assert(Similarity.opqEncode(flat, rf, cbf).count() == 40L)
     vecs.unpersist()
   }
 
@@ -806,10 +803,10 @@ class CurationSpec extends SparkTestBase {
       val cents = Similarity.kmeansFit(corpus, k = 4, iters = 2)
       val rcb = Similarity.pqFitResidual(
         corpus.filter($"vec_id" % 2 === 0), cents, m, subDim, ksub = 8, iters = 2)
-      val rindex = Similarity.pqIndexResidual(corpus, cents, rcb, m, subDim)
+      val rindex = Similarity.pqIndexResidual(corpus, cents, rcb)
       Similarity.recallAtK(
         Similarity.ivfPqResidualTopK(rindex, cents, prb, rcb, k,
-          nprobe = 4, m, subDim), exact, k)
+          nprobe = 4), exact, k)
     }
     val plainR = residualRecall(vecs, probes)
     val (rot, _) = Similarity.opqFit(sample, m, subDim, ksub = 8,
@@ -1040,12 +1037,11 @@ class CurationSpec extends SparkTestBase {
     val cents = Similarity.kmeansFit(vecs, k = 4, iters = 2)
     val cb = Similarity.pqFitResidual(vecs, cents, m = 2, subDim = 4,
       ksub = 4, iters = 2)
-    val index = Similarity.pqIndexResidual(vecs, cents, cb, m = 2, subDim = 4)
+    val index = Similarity.pqIndexResidual(vecs, cents, cb)
     // the joint build equals the residuals() → encode pair
     val res = Similarity.residuals(vecs, cents).cache()
     val viaPair = res.select($"vec_id", $"cluster")
-      .join(Similarity.pqEncode(res.select($"vec_id", $"v"), cb,
-        m = 2, subDim = 4), "vec_id")
+      .join(Similarity.pqEncode(res.select($"vec_id", $"v"), cb), "vec_id")
       .select($"vec_id", $"cluster", $"codes")
     assert(index.exceptAll(viaPair).isEmpty && viaPair.exceptAll(index).isEmpty,
       "pqIndexResidual diverged from residuals + pqEncode")
@@ -1061,7 +1057,7 @@ class CurationSpec extends SparkTestBase {
     // must reproduce brute force row for row
     val rr = Similarity.rerankExact(
       Similarity.ivfPqResidualTopK(index, cents, probes, cb, k = 48,
-        nprobe = 4, m = 2, subDim = 4),
+        nprobe = 4),
       probes, vecs, k = 5)
     val exact = Similarity.bruteForceTopK(vecs, probes, k = 5)
     val rrRows = rr.select($"probe_id", $"vec_id", $"cosine", $"rank")
@@ -1085,11 +1081,11 @@ class CurationSpec extends SparkTestBase {
       .select($"vec_id".as("probe_id"), $"v".as("p"))
     val cents = Similarity.kmeansFit(vecs, k = 4, iters = 2)
     val cb = Similarity.pqFit(vecs, m = 2, subDim = 4, ksub = 4, iters = 2)
-    val index = Similarity.pqIndex(vecs, cents, cb, m = 2, subDim = 4)
+    val index = Similarity.pqIndex(vecs, cents, cb)
     // the index equals the assign + encode pair, built in ONE projection
     val viaPair = Similarity.assignClusters(vecs, cents)
       .select($"vec_id", $"cluster")
-      .join(Similarity.pqEncode(vecs, cb, m = 2, subDim = 4), "vec_id")
+      .join(Similarity.pqEncode(vecs, cb), "vec_id")
       .select($"vec_id", $"cluster", $"codes")
     assert(index.exceptAll(viaPair).isEmpty && viaPair.exceptAll(index).isEmpty,
       "pqIndex diverged from assignClusters + pqEncode")
@@ -1100,18 +1096,18 @@ class CurationSpec extends SparkTestBase {
       s"the index build must be one shuffle-free projection:\n$p")
     // nprobe >= cluster count routes every cluster — exactly flat pqTopK
     val ex = Similarity
-      .ivfPqTopK(index, cents, probes, cb, k = 5, nprobe = 4, m = 2, subDim = 4)
+      .ivfPqTopK(index, cents, probes, cb, k = 5, nprobe = 4)
       .select($"probe_id", $"vec_id", $"adist", $"rank")
       .as[(Long, Long, Double, Int)].collect().toSet
     val flat = Similarity
-      .pqTopK(index.select($"vec_id", $"codes"), probes, cb, k = 5, m = 2, subDim = 4)
+      .pqTopK(index.select($"vec_id", $"codes"), probes, cb, k = 5)
       .select($"probe_id", $"vec_id", $"adist", $"rank")
       .as[(Long, Long, Double, Int)].collect().toSet
     assert(ex == flat, "exhaustive IVFADC must equal flat ADC")
     // pruned routing only surfaces candidates from each probe's routed
     // cluster: every result id must carry that cluster in the index
     val one = Similarity
-      .ivfPqTopK(index, cents, probes, cb, k = 5, nprobe = 1, m = 2, subDim = 4)
+      .ivfPqTopK(index, cents, probes, cb, k = 5, nprobe = 1)
     val offRoute = one
       .join(index.select($"vec_id", $"cluster"), "vec_id")
       .join(graft.operators.Similarity // probe's single routed cluster
@@ -1123,8 +1119,7 @@ class CurationSpec extends SparkTestBase {
     // the generic exact re-rank stage composes with IVFADC candidates:
     // exhaustive fetch + exact cosine must reproduce brute force
     val rrIvf = Similarity.rerankExact(
-      Similarity.ivfPqTopK(index, cents, probes, cb, k = 48, nprobe = 4,
-        m = 2, subDim = 4),
+      Similarity.ivfPqTopK(index, cents, probes, cb, k = 48, nprobe = 4),
       probes, vecs, k = 5)
       .select($"probe_id", $"vec_id", $"cosine", $"rank")
       .as[(Long, Long, Double, Int)].collect().toSet
@@ -1502,7 +1497,7 @@ class CurationSpec extends SparkTestBase {
       (5L, Seq(4.0, 6.0, 5.0, 5.0))).toDF("vec_id", "v")
     val cb = Similarity.pqFit(vecs.filter($"vec_id" < 4), m = 2, subDim = 2,
       ksub = 2, iters = 2)
-    val enc = Similarity.pqEncode(vecs, cb, m = 2, subDim = 2)
+    val enc = Similarity.pqEncode(vecs, cb)
       .as[(Long, Seq[Int])].collect().toMap
     // vectors sharing a sub-corner share that subspace's code
     assert(enc(0L)(0) == enc(2L)(0), "0 and 2 share the low first-half corner")
@@ -1515,8 +1510,8 @@ class CurationSpec extends SparkTestBase {
     // probe→twin
     val probes = Seq((1L, Seq(10.0, 10.0, 10.0, 10.0))).toDF("probe_id", "p")
     val top = Similarity.pqTopK(
-      Similarity.pqEncode(vecs, cb, m = 2, subDim = 2), probes, cb,
-      k = 3, m = 2, subDim = 2)
+      Similarity.pqEncode(vecs, cb), probes, cb,
+      k = 3)
       .orderBy($"rank").as[(Long, Long, Double, Int)].collect()
     assert(top.head._2 == 4L && top.head._3 == 0.0,
       s"nearest by ADC must be the code-twin at distance 0: ${top.toSeq}")
@@ -1534,16 +1529,16 @@ class CurationSpec extends SparkTestBase {
       .toDF("vec_id", "v")
     val cb = Similarity.pqFit(vecs.filter($"vec_id" % 3 === 0), m = 2,
       subDim = 4, ksub = 4, iters = 2)
-    val enc = Similarity.pqEncode(vecs, cb, m = 2, subDim = 4)
+    val enc = Similarity.pqEncode(vecs, cb)
     val probes = vecs.filter($"vec_id" < 4)
       .select($"vec_id".as("probe_id"), $"v".as("p"))
-    val salted = Similarity.pqTopK(enc, probes, cb, k = 5, m = 2, subDim = 4)
+    val salted = Similarity.pqTopK(enc, probes, cb, k = 5)
       .select($"probe_id", $"vec_id", $"adist", $"rank")
       .as[(Long, Long, Double, Int)].collect().toSet
     assert(salted.size == 20, "4 probes × k=5")
     // vectors other than the probe sharing ALL its codes tie at the same
     // adist; the two-phase cut must resolve them exactly like one window
-    val naive = Similarity.pqTopK(enc, probes, cb, k = 200, m = 2, subDim = 4)
+    val naive = Similarity.pqTopK(enc, probes, cb, k = 200)
       .filter($"rank" <= 5)
       .select($"probe_id", $"vec_id", $"adist", $"rank")
       .as[(Long, Long, Double, Int)].collect().toSet
@@ -1557,22 +1552,22 @@ class CurationSpec extends SparkTestBase {
       .map(i => (i, Seq.tabulate(8)(j => math.cos(i * 3 + j + 1.0) * 4.0)))
       .toDF("vec_id", "v")
     val cb = Similarity.pqFit(vecs, m = 2, subDim = 4, ksub = 2, iters = 2)
-    val enc = Similarity.pqEncode(vecs, cb, m = 2, subDim = 4)
+    val enc = Similarity.pqEncode(vecs, cb)
     // a probe shorter than m·subDim would null-fill its ADC table —
     // every candidate's adist null, and ascending rank is NULLS FIRST:
     // the guard must drop the probe entirely (empty result, no garbage)
     val shortProbe = Seq((99L, Seq(1.0, 2.0))).toDF("probe_id", "p")
-    assert(Similarity.pqTopK(enc, shortProbe, cb, k = 3, m = 2, subDim = 4)
+    assert(Similarity.pqTopK(enc, shortProbe, cb, k = 3)
       .count() == 0, "short probe must yield no ranked rows")
     val cents = Similarity.kmeansFit(vecs, k = 2, iters = 2)
-    val index = Similarity.pqIndex(vecs, cents, cb, m = 2, subDim = 4)
+    val index = Similarity.pqIndex(vecs, cents, cb)
     assert(Similarity
-      .ivfPqTopK(index, cents, shortProbe, cb, k = 3, nprobe = 2, m = 2, subDim = 4)
+      .ivfPqTopK(index, cents, shortProbe, cb, k = 3, nprobe = 2)
       .count() == 0, "short probe must yield no ranked rows (ivfpq)")
     // a good probe alongside keeps its full top-k
     val mixed = shortProbe.union(
       vecs.filter($"vec_id" === 0L).select($"vec_id".as("probe_id"), $"v".as("p")))
-    val got = Similarity.pqTopK(enc, mixed, cb, k = 3, m = 2, subDim = 4)
+    val got = Similarity.pqTopK(enc, mixed, cb, k = 3)
       .select($"probe_id", $"adist").as[(Long, Double)].collect()
     assert(got.length == 3 && got.forall(_._1 == 0L),
       s"good probe must rank, short probe must not: ${got.toSeq}")
@@ -1600,7 +1595,7 @@ class CurationSpec extends SparkTestBase {
       .map(i => (i, Seq.tabulate(8)(j => math.sin(i * 5 + j + 1.0) * 6.0)))
       .toDF("vec_id", "v")
     val cb = Similarity.pqFit(vecs, m = 2, subDim = 4, ksub = 4, iters = 2)
-    val enc = Similarity.pqEncode(vecs, cb, m = 2, subDim = 4)
+    val enc = Similarity.pqEncode(vecs, cb)
     val probes = vecs.filter($"vec_id" === 0L)
       .select($"vec_id".as("probe_id"), $"v".as("p"))
     // pick a code that some (not all) vectors carry in subspace 0
@@ -1609,17 +1604,90 @@ class CurationSpec extends SparkTestBase {
     val dropped = codeCounts.keys.min
     assert(codeCounts.size > 1, "fixture must spread over >1 subspace-0 code")
     val staleCb = cb.filter(!($"sub" === 0 && $"cluster" === dropped))
-    val got = Similarity.pqTopK(enc, probes, staleCb, k = 16, m = 2, subDim = 4)
+    val got = Similarity.pqTopK(enc, probes, staleCb, k = 16)
       .select($"vec_id").as[Long].collect().toSet
     val unresolvable = enc
       .filter(element_at($"codes", 1) === dropped)
       .select($"vec_id").as[Long].collect().toSet
     assert(got.intersect(unresolvable).isEmpty,
       s"stale-coded candidates must drop, got $got with stale $unresolvable")
-    val full = Similarity.pqTopK(enc, probes, cb, k = 16, m = 2, subDim = 4)
+    val full = Similarity.pqTopK(enc, probes, cb, k = 16)
       .select($"vec_id").as[Long].collect().toSet
     assert(got == full -- unresolvable - 0L,
       "resolvable candidates must survive exactly")
+  }
+
+  test("PQ codebook defect: a subspace gap {0, 2} fails every consumer with a require naming the codebook") {
+    import spark.implicits._
+    import graft.operators.Similarity
+    val vecs = (0L until 8L).map(i => (i, Seq.tabulate(6)(j => (i + j).toDouble)))
+      .toDF("vec_id", "v")
+    val probes = vecs.filter($"vec_id" < 2).select($"vec_id".as("probe_id"), $"v".as("p"))
+    val gap = Seq((0, 0, Seq(0.0, 1.0)), (0, 1, Seq(4.0, 5.0)), (2, 0, Seq(2.0, 3.0)))
+      .toDF("sub", "cluster", "c")
+    val enc = Seq((0L, Seq(0, 0, 0))).toDF("vec_id", "codes")
+    val cents = Similarity.kmeansFit(vecs, k = 2, iters = 1)
+    val index = enc.withColumn("cluster", lit(0))
+    val consumers: Seq[(String, () => Any)] = Seq(
+      "pqEncode" -> (() => Similarity.pqEncode(vecs, gap)),
+      "pqTopK" -> (() => Similarity.pqTopK(enc, probes, gap, k = 3)),
+      "pqTopKRerank" -> (() => Similarity.pqTopKRerank(enc, probes, gap, vecs, k = 3, fetchK = 3)),
+      "pqIndex" -> (() => Similarity.pqIndex(vecs, cents, gap)),
+      "pqIndexResidual" -> (() => Similarity.pqIndexResidual(vecs, cents, gap)),
+      "ivfPqTopK" -> (() => Similarity.ivfPqTopK(index, cents, probes, gap, k = 3, nprobe = 1)),
+      "ivfPqResidualTopK" -> (() =>
+        Similarity.ivfPqResidualTopK(index, cents, probes, gap, k = 3, nprobe = 1)),
+      "opqEncode" -> (() => Similarity.opqEncode(vecs, Similarity.hadamardRotation(4), gap)),
+      "opqTopK" -> (() => Similarity.opqTopK(enc, probes, Similarity.hadamardRotation(4), gap, k = 3)),
+      "pqDistortion" -> (() => Similarity.pqDistortion(vecs, gap)))
+    consumers.foreach { case (name, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("codebook subspaces must be exactly 0 until m, got {0, 2}"),
+        s"$name: ${e.getMessage}")
+    }
+  }
+
+  test("PQ codebook defect: centroids of mixed widths fail with a require naming the codebook") {
+    import spark.implicits._
+    import graft.operators.Similarity
+    // the first subspace's second centroid is one dim short: a derived
+    // subDim of either width would shift the other subspace's offset
+    val vecs = (0L until 8L).map(i => (i, Seq.tabulate(4)(j => (i + j).toDouble)))
+      .toDF("vec_id", "v")
+    val ragged = Seq((0, 0, Seq(0.0, 1.0)), (0, 1, Seq(4.0)), (1, 0, Seq(2.0, 3.0)))
+      .toDF("sub", "cluster", "c")
+    val e = intercept[IllegalArgumentException](Similarity.pqEncode(vecs, ragged))
+    assert(e.getMessage.contains("codebook centroids must share one positive width subDim, got widths {1, 2}"),
+      e.getMessage)
+  }
+
+  test("PQ codebook defect: a sample shorter than m·subDim fails the fit with a require naming the codebook") {
+    import spark.implicits._
+    import graft.operators.Similarity
+    // 6-dim vectors against m·subDim = 8: the second subspace's seeds
+    // are 2 wide, the first's 4 — the fit must not emit them
+    val short = (0L until 8L).map(i => (i, Seq.tabulate(6)(j => math.sin((i * 6 + j).toDouble))))
+      .toDF("vec_id", "v")
+    val mixed = intercept[IllegalArgumentException](
+      Similarity.pqFit(short, m = 2, subDim = 4, ksub = 2, iters = 2))
+    assert(mixed.getMessage.contains("codebook centroids must share one positive width subDim, got widths {2, 4}"),
+      mixed.getMessage)
+    // uniformly short: one subspace of 6-dim seeds asked for 8 dims
+    val narrow = intercept[IllegalArgumentException](
+      Similarity.pqFit(short, m = 1, subDim = 8, ksub = 2, iters = 2))
+    assert(narrow.getMessage.contains("codebook centroids are 6 wide, trained for subDim = 8"),
+      narrow.getMessage)
+    // the residual fit trains on 6-dim residuals, so it fails the same way
+    val cents = Similarity.kmeansFit(short, k = 2, iters = 1)
+    val residual = intercept[IllegalArgumentException](
+      Similarity.pqFitResidual(short, cents, m = 2, subDim = 4, ksub = 2, iters = 2))
+    assert(residual.getMessage.contains("codebook centroids must share one positive width subDim"),
+      residual.getMessage)
+    // OPQ trains only on full-width vectors: none are left, so every
+    // subspace is empty
+    val opq = intercept[IllegalArgumentException](
+      Similarity.opqFit(short, m = 2, subDim = 4, ksub = 2, pqIters = 2, opqIters = 1))
+    assert(opq.getMessage.contains("codebook subspace 0 has no centroid"), opq.getMessage)
   }
 
   // --- substring-dedup removal ----------------------------------------

@@ -499,9 +499,9 @@ class FunctionsSpec extends SparkTestBase {
     import graft.operators.Similarity
     // two subspaces, gappy cluster ids (cluster 1 "emptied out" of sub 0)
     // to exercise the code→position indirection, not just identity
-    val cbs: Map[Int, Array[(Int, Seq[Double])]] = Map(
-      0 -> Array(0, 2, 3, 4, 5, 6).map(c => (c, Seq(0.0))),
-      1 -> Array(0, 1, 2).map(c => (c, Seq(0.0))))
+    val cb = graft.operators.Codebook(Array(
+      Array(0, 2, 3, 4, 5, 6).map(c => (c, Seq(0.0))),
+      Array(0, 1, 2).map(c => (c, Seq(0.0)))))
     val (nan, inf) = (Double.NaN, Double.PositiveInfinity)
     val tbl = Seq(Seq(0.125001, 0.25, 0.5, nan, inf, -inf), Seq(0.0625, 1.000001, -inf))
     val rows = Seq(
@@ -519,8 +519,8 @@ class FunctionsSpec extends SparkTestBase {
       .select($"vec_id", $"codes".cast("array<int>").as("codes"),
         typedLit(tbl).as("__tbl"))
     val both = rows.select($"vec_id",
-      Similarity.pqAdist(cbs, m = 2).as("fast"),
-      Similarity.pqAdistHof(cbs, m = 2).as("ref"))
+      cb.adc($"codes", $"__tbl").as("fast"),
+      Similarity.pqAdistHof(cb).as("ref"))
       .collect()
     def bits(v: Any): Option[Long] =
       Option(v).map(d => java.lang.Double.doubleToRawLongBits(d.asInstanceOf[Double]))
@@ -549,10 +549,10 @@ class FunctionsSpec extends SparkTestBase {
       else math.round((rnd.nextDouble() * 4 - 2) * 1e4) / 1e4
     // every codebook carries an all-zero centroid (position 0), so a probe
     // that is zero outside one dim scores exactly that dim's square
-    val cbs: Map[Int, Array[(Int, Seq[Double])]] = (0 until m).map { j =>
-      j -> ((0, Seq.fill(subDim)(0.0)) +: (1 until ksub).map(c =>
+    val cb = graft.operators.Codebook(Array.tabulate(m) { _ =>
+      ((0, Seq.fill(subDim)(0.0)) +: (1 until ksub).map(c =>
         (c, Seq.fill(subDim)(if (rnd.nextInt(10) == 0) -0.0 else value())))).toArray
-    }.toMap
+    })
     // values on the HALF_UP boundary: a dim d with d·d printing exactly
     // `target` (7th decimal 5), found among the ulps next to √target
     def onBoundary(target: Double): Double =
@@ -577,12 +577,11 @@ class FunctionsSpec extends SparkTestBase {
     val local = spark.createDataFrame(
       spark.sparkContext.parallelize(rows.map { case (i, p) => org.apache.spark.sql.Row(i, p) }, 2),
       schema)
-    val native = graft.functions.PqDistTable.pq_dist_table(col("p"),
-      (0 until m).map(j => cbs(j).map(_._2.toArray)).toArray, subDim)
+    val native = cb.distTable(col("p"))
     def bits(t: Seq[Seq[java.lang.Double]]): Seq[Seq[Option[Long]]] =
       t.map(_.map(d => Option(d).map(x => java.lang.Double.doubleToRawLongBits(x))))
     def tables(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("id"), native.as("fast"), Similarity.distTableHof(cbs, m, subDim).as("ref"))
+      df.select(col("id"), native.as("fast"), Similarity.distTableHof(cb).as("ref"))
         .collect().map { r =>
           def tbl(i: Int) = Option(r.getAs[scala.collection.Seq[scala.collection.Seq[java.lang.Double]]](i))
             .map(_.map(_.toSeq).toSeq)

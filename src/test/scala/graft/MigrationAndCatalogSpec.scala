@@ -463,6 +463,22 @@ class MigrationAndCatalogSpec extends SparkTestBase {
     assert(salts.isEmpty, s"nSalts belongs to the salted join only, found in $salts")
   }
 
+  test("source guard: PQ kernels only through Codebook.scala") {
+    // a consumer calling a kernel itself must be handed the codebook
+    // shape again; each kernel appears in Codebook.scala and its own
+    // definition only
+    val home = "graft/operators/Codebook.scala"
+    assert(mainSources.exists(_._1.endsWith(home)), s"$home not found under src/main/scala")
+    Seq("l2_argmin(" -> "graft/functions/L2Argmin.scala",
+      "pq_dist_table(" -> "graft/functions/PqDistTable.scala",
+      "pq_adc(" -> "graft/functions/PqAdc.scala").foreach { case (call, defn) =>
+      assert(mainSources.exists(_._1.endsWith(defn)), s"$defn not found under src/main/scala")
+      val stray = mainSources.collect { case (path, text)
+        if text.contains(call) && !path.endsWith(home) && !path.endsWith(defn) => path }
+      assert(stray.isEmpty, s"call $call through graft.operators.Codebook, found in $stray")
+    }
+  }
+
   test("test harness: a checkpoint dir left on the shared session fails the suite and is cleared") {
     val sc = spark.sparkContext
     val chkDir = java.nio.file.Files.createTempDirectory("leak_chk").toFile
