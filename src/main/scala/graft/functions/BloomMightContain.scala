@@ -35,6 +35,7 @@ case class BloomMightContainLong(child: Expression, bloomBytes: Array[Byte])
 
   override def dataType: DataType = BooleanType
   override def prettyName: String = "bloom_might_contain"
+  override protected def stringArgs: Iterator[Any] = kernelStringArgs(super.stringArgs)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case LongType | IntegerType | ShortType | ByteType =>

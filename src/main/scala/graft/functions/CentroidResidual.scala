@@ -50,6 +50,7 @@ case class CentroidResidual(left: Expression, right: Expression,
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "centroid_residual"
+  override protected def stringArgs: Iterator[Any] = kernelStringArgs(super.stringArgs)
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     (left.dataType, right.dataType) match {

@@ -48,6 +48,7 @@ case class CosineArgmax(child: Expression,
 
   override def dataType: DataType = IntegerType
   override def prettyName: String = "cosine_argmax"
+  override protected def stringArgs: Iterator[Any] = kernelStringArgs(super.stringArgs)
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {

@@ -38,6 +38,7 @@ case class L2Argmin(child: Expression,
 
   override def dataType: DataType = IntegerType
   override def prettyName: String = "l2_argmin"
+  override protected def stringArgs: Iterator[Any] = kernelStringArgs(super.stringArgs)
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {

@@ -45,6 +45,7 @@ case class MatVec(child: Expression, mat: Array[Array[Double]],
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "mat_vec"
+  override protected def stringArgs: Iterator[Any] = kernelStringArgs(super.stringArgs)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess

@@ -49,6 +49,7 @@ case class PqAdc(left: Expression, right: Expression,
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   override def prettyName: String = "pq_adc"
+  override protected def stringArgs: Iterator[Any] = kernelStringArgs(super.stringArgs)
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     (left.dataType, right.dataType) match {

@@ -49,6 +49,7 @@ case class PqDistTable(child: Expression, cents: Array[Array[Array[Double]]],
   override def dataType: DataType =
     ArrayType(ArrayType(DoubleType, containsNull = true), containsNull = false)
   override def prettyName: String = "pq_dist_table"
+  override protected def stringArgs: Iterator[Any] = kernelStringArgs(super.stringArgs)
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {

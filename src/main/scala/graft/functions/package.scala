@@ -12,6 +12,27 @@ package object functions {
   private def expr(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     GraftBridge.expression(c)
 
+  /** Plan-string arguments of a kernel that carries arrays: each array
+    * prints as its shape plus a content hash (`double[8][4](hash=1f2e3d4c)`)
+    * instead of a JVM identity hash, so a plan prints the same in every
+    * run and two kernels over equal arrays print alike. Printing only —
+    * `equals` and `hashCode` stay the case class's. */
+  private[functions] def kernelStringArgs(args: Iterator[Any]): Iterator[Any] =
+    args.map {
+      case a: Array[_] =>
+        val depth = a.getClass.getName.takeWhile(_ == '[').length
+        val dims = Iterator.iterate(Seq[Any](a))(_.flatMap(_.asInstanceOf[Array[_]]))
+          .take(depth)
+          .map(_.map(_.asInstanceOf[Array[_]].length).distinct match {
+            case Seq(n) => s"[$n]"
+            case _ => "[*]"
+          })
+        val elem = a.getClass.getSimpleName.takeWhile(_ != '[')
+        val hash = java.util.Arrays.deepHashCode(Array[AnyRef](a))
+        f"$elem${dims.mkString}(hash=$hash%08x)"
+      case other => other
+    }
+
   /** Envelope struct → framed binary-transport bytes (magic 0x00). */
   def pack_envelope(envelope: Column): Column =
     col(PackEnvelope(expr(envelope), ascii = false))

@@ -94,13 +94,17 @@ object LlmOps {
   /** MinHash + LSH near-dup detection: signatures → bands → candidate
     * pairs → exact verification. Same 25 planted pairs as the exhaustive
     * query, found without the all-pairs join. */
-  def qMinhashLsh(spark: SparkSession, dir: String): DataFrame = {
-    val sh = Dedup.wordShingles(Tables.documents(spark, dir), "doc_id", "text", ShingleN).cache()
+  def qMinhashLsh(spark: SparkSession, dir: String): DataFrame =
+    lshVerifiedPairs(Tables.documents(spark, dir)).orderBy(col("d1"), col("d2"))
+
+  /** The md5 MinHash-LSH chain shared by the near-dup pair, cluster and
+    * representative queries: cached shingles → signatures → bands →
+    * candidate pairs → exact Jaccard verification. */
+  private def lshVerifiedPairs(docs: DataFrame): DataFrame = {
+    val sh = Dedup.wordShingles(docs, "doc_id", "text", ShingleN).cache()
     val sigs = Dedup.minhashSignatures(sh, MinhashK)
     val bands = Dedup.lshBands(sigs, MinhashK, LshBands)
-    val cands = Dedup.lshCandidatePairs(bands)
-    Dedup.verifyJaccard(cands, sh, JaccardThreshold)
-      .orderBy(col("d1"), col("d2"))
+    Dedup.verifyJaccard(Dedup.lshCandidatePairs(bands), sh, JaccardThreshold)
   }
 
   /** Near-dup cluster formation: MinHash-LSH verified pairs → connected
@@ -109,11 +113,7 @@ object LlmOps {
     * in O(cluster diameter) label-propagation rounds (near-dup clusters
     * are shallow). */
   def qDupClusters(spark: SparkSession, dir: String): DataFrame = {
-    val sh = Dedup.wordShingles(Tables.documents(spark, dir), "doc_id", "text", ShingleN).cache()
-    val sigs = Dedup.minhashSignatures(sh, MinhashK)
-    val bands = Dedup.lshBands(sigs, MinhashK, LshBands)
-    val pairs = Dedup.verifyJaccard(Dedup.lshCandidatePairs(bands), sh, JaccardThreshold)
-      .select(col("d1"), col("d2"))
+    val pairs = lshVerifiedPairs(Tables.documents(spark, dir)).select(col("d1"), col("d2"))
     Dedup.connectedComponents(pairs).orderBy(col("doc_id"))
   }
 
@@ -719,11 +719,7 @@ object LlmOps {
   def qRepresentatives(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val docs = Tables.documents(spark, dir)
-    val sh = Dedup.wordShingles(docs, "doc_id", "text", ShingleN).cache()
-    val sigs = Dedup.minhashSignatures(sh, MinhashK)
-    val bands = Dedup.lshBands(sigs, MinhashK, LshBands)
-    val pairs = Dedup.verifyJaccard(Dedup.lshCandidatePairs(bands), sh, JaccardThreshold)
-      .select(col("d1"), col("d2"))
+    val pairs = lshVerifiedPairs(docs).select(col("d1"), col("d2"))
     val clusters = Dedup.connectedComponents(pairs)
     val quality = docs.select($"doc_id",
       size(filter(split(trim($"text"), "\\s+"), w => w =!= ""))

@@ -315,6 +315,35 @@ class FunctionsSpec extends SparkTestBase {
     assert(argmin(Seq(1.0), 2) == 0)
   }
 
+  test("array-carrying kernels print shape and content hash: equal arrays print alike, no identity hash") {
+    import graft.functions.{BloomMightContainLong, CentroidResidual, CosineArgmax,
+      L2Argmin, MatVec, PqAdc, PqDistTable}
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
+    val v = BoundReference(0, ArrayType(DoubleType), nullable = true)
+    val k = BoundReference(1, IntegerType, nullable = true)
+    // every call builds fresh arrays of the same content
+    def ids() = Array(0, 2, 5)
+    def cents() = Array(Array(0.0, 0.5), Array(3.0, 4.0), Array(3.0, -4.0))
+    val kernels: Seq[() => Expression] = Seq(
+      () => L2Argmin(v, ids(), cents(), 0),
+      () => PqDistTable(v, Array(cents(), cents()), 2),
+      () => PqAdc(v, v, Array(ids(), ids())),
+      () => CosineArgmax(v, ids(), cents()),
+      () => CentroidResidual(v, k, ids(), cents()),
+      () => MatVec(v, cents()),
+      () => BloomMightContainLong(k, Array[Byte](1, 2, 3)))
+    kernels.foreach { make =>
+      val (a, b) = (make(), make())
+      assert(a.toString == b.toString, s"equal arrays print differently: $a vs $b")
+      assert("@[0-9a-f]+".r.findFirstIn(a.toString).isEmpty, s"identity hash in $a")
+    }
+    assert(L2Argmin(v, ids(), cents(), 0).toString.contains("double[3][2](hash="),
+      L2Argmin(v, ids(), cents(), 0).toString)
+    assert(L2Argmin(v, ids(), cents(), 0).toString !=
+      L2Argmin(v, ids(), cents().reverse, 0).toString,
+      "different centroids must print differently")
+  }
+
   test("approx_top_k purge regime: a planted heavy hitter survives a tiny sketch within its error bound") {
     import spark.implicits._
     import graft.operators.Frequency

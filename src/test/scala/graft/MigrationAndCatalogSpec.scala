@@ -479,6 +479,16 @@ class MigrationAndCatalogSpec extends SparkTestBase {
     }
   }
 
+  test("source guard: queries read vectors only through Tables.validEmbeddings") {
+    // a raw read would hand NULL, NaN, wrong-dimension and duplicate-id
+    // vectors to the ANN and hybrid operators
+    val queries = mainSources.filter(_._1.contains("graft/queries/"))
+    assert(queries.exists(_._2.contains("Tables.validEmbeddings(")),
+      "no query under graft/queries reads Tables.validEmbeddings")
+    val raw = queries.collect { case (path, text) if text.contains("Tables.embeddings(") => path }
+    assert(raw.isEmpty, s"read vectors through Tables.validEmbeddings, not Tables.embeddings, in $raw")
+  }
+
   test("test harness: a checkpoint dir left on the shared session fails the suite and is cleared") {
     val sc = spark.sparkContext
     val chkDir = java.nio.file.Files.createTempDirectory("leak_chk").toFile

@@ -494,13 +494,13 @@ class PlanSpec extends SparkTestBase {
       spark.conf.unset("spark.sql.sources.bucketing.autoBucketedScan.enabled")
   }
 
-  test("validEmbeddings: ids-only dup pre-check; vector-wide dedup shuffle paid only on collisions; memoized per (session, dir)") {
+  test("validEmbeddings: ids-only dup pre-check; vector-wide dedup shuffle paid only on collisions; memoized per corpus dir") {
     // the ingest guard's scale contract (Tables.scala): the id-uniqueness
     // probe may shuffle aggregate buffers keyed on vec_id but NEVER the
     // vector column; a collision-free corpus plans scan+filter only (no
     // window, no exchange); only a corpus with real key collisions pays
-    // the vector-wide dedup window; and the validated frame memoizes per
-    // (session, dir) so the two eager probes run once per corpus per JVM,
+    // the vector-wide dedup window; and the probe results memoize per
+    // corpus dir so the two eager probes run once per corpus per JVM,
     // not once per query invocation
     import spark.implicits._
     val clean = Seq(
@@ -543,111 +543,36 @@ class PlanSpec extends SparkTestBase {
       assert(exchangeInputs.nonEmpty, s"expected exchanges in the probe plan:\n$probePlan")
       exchangeInputs.foreach(in => assert(!in.contains("embedding#"),
         s"the dup pre-check shuffles the vector column:\n$in"))
-      // (d) memoized per (session, dir): same instance back, probes not re-run
-      val first = Tables.validEmbeddings(spark, cleanDir)
-      assert(first eq Tables.validEmbeddings(spark, cleanDir),
-        "validEmbeddings must memoize per (session, dir)")
-      // (e) the ingest-persist path: materializing the validated table
-      // makes every later load a BARE SCAN of it — no probes, no filter,
-      // no window — with the dedup already baked in
-      val prePersist = Tables.buildValidEmbeddings(spark, dupDir)
-        .orderBy("vec_id").collect().map(_.toSeq)
-      val out = Tables.persistValidEmbeddings(spark, dupDir)
-      val loaded = Tables.validEmbeddings(spark, dupDir)
-      val loadedPlan = loaded.queryExecution.explainString(FormattedMode)
-      assert(loadedPlan.contains("embeddings_valid") &&
-        !loadedPlan.contains("Window") && !loadedPlan.contains("Filter"),
-        s"post-persist load must be a bare scan of $out:\n$loadedPlan")
-      assert(loaded.orderBy("vec_id").collect().map(_.toSeq).toSeq ==
-        prePersist.toSeq,
-        "persisted table must hold exactly the validated rows")
-      assert(loaded.count() == clean.count(),
-        "the planted duplicate id must be resolved in the persisted table")
-    } finally Tables.invalidateValidEmbeddings()
+      // (d) memoized per corpus dir: once the probes have run, a second
+      // call for the same dir starts no Spark job — no probe, and no
+      // Parquet schema inference either
+      Tables.validEmbeddings(spark, cleanDir)
+      val hitJobs = jobsStartedBy(Tables.validEmbeddings(spark, cleanDir))
+      assert(hitJobs == 0, s"a memo hit must start no job, got $hitJobs")
+    } finally Tables.invalidateValidEmbeddings(spark, cleanDir)
   }
 
-  test("guard memo: a stopped session's entry is swept on the NEXT MISS, live entries survive") {
-    // r17 verdict: eviction must not wait for the 64 bound — any miss
-    // drops stopped sessions' (unusable) plans immediately. One JVM =
-    // one SparkContext, so "stopped" is simulated by swapping the
-    // injectable predicate the real miss path consults; the production
-    // default is sparkContext.isStopped.
+  test("validEmbeddings: after an in-place rewrite and invalidateValidEmbeddings(dir), the next call sees the new rows") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("emb_evict").toString
-    val dir2 = java.nio.file.Files.createTempDirectory("emb_evict2").toString
-    Seq((0L, Seq(1.0f, 0.0f), 1), (1L, Seq(0.0f, 1.0f), 2))
-      .toDF("vec_id", "embedding", "label")
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    Seq((7L, Seq(0.3f, 0.7f), 1))
-      .toDF("vec_id", "embedding", "label")
-      .write.mode("overwrite").parquet(s"$dir2/embeddings.parquet")
-    val sessDead = spark.newSession()
-    val sessLive = spark.newSession()
-    try {
-      Tables.validEmbeddings(sessDead, dir)
-      val liveFrame = Tables.validEmbeddings(sessLive, dir)
-      assert(Tables.validEmbMemoContains(sessDead, dir) &&
-        Tables.validEmbMemoContains(sessLive, dir))
-      Tables.validEmbStoppedProbe = s => s eq sessDead
-      // a HIT does not sweep (one map get) — the dead entry lingers…
-      assert(Tables.validEmbeddings(sessLive, dir) eq liveFrame)
-      assert(Tables.validEmbMemoContains(sessDead, dir),
-        "the hit path must stay sweep-free")
-      // …until the next MISS (any new key) sweeps it out
-      Tables.validEmbeddings(sessLive, dir2)
-      assert(!Tables.validEmbMemoContains(sessDead, dir),
-        "a stopped session's entry must be gone after the next miss")
-      assert(Tables.validEmbMemoContains(sessLive, dir),
-        "live sessions' entries must survive the opportunistic sweep")
-      assert(Tables.validEmbeddings(sessLive, dir) eq liveFrame,
-        "the survivor must still memo-hit with the same instance")
-    } finally {
-      Tables.validEmbStoppedProbe = _.sparkContext.isStopped
-      Tables.invalidateValidEmbeddings()
-    }
-  }
-
-  test("persisted embeddings_valid: an in-place raw rewrite is DETECTED, never served stale") {
-    // the staleness guard (r16 review): persistValidEmbeddings stores a
-    // fingerprint of the raw table's file listing inside the materialized
-    // table; a later load trusts the table only while the fingerprint
-    // still matches. A raw rewrite after persisting must fall back to
-    // revalidating raw (correctness over the saved probe jobs), and a
-    // hand-copied table with NO fingerprint sidecar is never trusted.
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("emb_stale").toString
+    val dir = java.nio.file.Files.createTempDirectory("emb_rewrite").toString
     def write(rows: Seq[(Long, Seq[Float], Int)]): Unit =
       rows.toDF("vec_id", "embedding", "label")
         .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    def ids(): Set[Long] =
+      Tables.validEmbeddings(spark, dir).select($"vec_id").as[Long].collect().toSet
     try {
       write(Seq((0L, Seq(1.0f, 0.0f), 1), (1L, Seq(0.0f, 1.0f), 2)))
-      Tables.persistValidEmbeddings(spark, dir)
-      // fresh: bare scan of the materialized table
-      val freshPlan = Tables.buildValidEmbeddings(spark, dir)
-        .queryExecution.explainString(FormattedMode)
-      assert(freshPlan.contains("embeddings_valid"),
-        s"fingerprint-fresh persisted table must be preferred:\n$freshPlan")
-      // rewrite the RAW table in place (3 rows now) without re-persisting
-      write(Seq((0L, Seq(1.0f, 0.0f), 1), (1L, Seq(0.0f, 1.0f), 2),
-        (2L, Seq(0.5f, 0.5f), 3)))
+      assert(ids() == Set(0L, 1L))
+      // the rewrite changes every probe result: a new modal dimension
+      // (3, so both old rows drop out) and a colliding id
+      write(Seq((0L, Seq(1.0f, 0.0f), 1), (2L, Seq(0.5f, 0.5f, 0.5f), 3),
+        (3L, Seq(0.2f, 0.8f, 0.1f), 4), (3L, Seq(0.9f, 0.1f, 0.1f), 5)))
       Tables.invalidateValidEmbeddings(spark, dir)
-      val reloaded = Tables.buildValidEmbeddings(spark, dir)
-      assert(reloaded.count() == 3,
-        "a stale persisted table must be ignored in favor of raw revalidation")
-      assert(!reloaded.queryExecution.explainString(FormattedMode)
-        .contains("embeddings_valid"),
-        "the stale materialized table must not appear in the plan")
-      // a fingerprintless table (hand-copied) is never trusted either
-      Tables.persistValidEmbeddings(spark, dir)
-      val fp = new java.io.File(
-        s"$dir/${Tables.ValidEmbeddingsTable}/${Tables.RawFingerprintFile}")
-      assert(fp.isFile, "persist must write the fingerprint sidecar")
-      assert(fp.delete())
-      Tables.invalidateValidEmbeddings(spark, dir)
-      assert(!Tables.buildValidEmbeddings(spark, dir).queryExecution
-        .explainString(FormattedMode).contains("embeddings_valid"),
-        "a table without the fingerprint sidecar must not be trusted")
-    } finally Tables.invalidateValidEmbeddings()
+      val after = Tables.validEmbeddings(spark, dir)
+      assert(after.as[(Long, Seq[Float], Int)].collect().sortBy(_._1).toSeq ==
+        Seq((2L, Seq(0.5f, 0.5f, 0.5f), 3), (3L, Seq(0.2f, 0.8f, 0.1f), 4)),
+        "the next call must validate the rewritten corpus")
+    } finally Tables.invalidateValidEmbeddings(spark, dir)
   }
 
   test("a key-repartitioned persisted frame joins with no fresh exchange or sort on its side (the connectedComponents edge layout)") {

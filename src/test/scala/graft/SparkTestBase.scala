@@ -15,6 +15,39 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 
+  /** Spark jobs started by `body`, bracketed by marker jobs: listener
+    * events arrive in posting order, so the jobs seen between the two
+    * markers are exactly the jobs `body` started. */
+  def jobsStartedBy(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.LinkedBlockingQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.put(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    def jobsUpToMarker(): Int = {
+      val marker = s"jobs-marker-${java.util.UUID.randomUUID}"
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      var n = 0
+      var g = groups.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      while (g != null && g != marker) {
+        n += 1
+        g = groups.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      assert(g == marker, "marker job never reached the listener")
+      n
+    }
+    sc.addSparkListener(listener)
+    try {
+      jobsUpToMarker()
+      body
+      jobsUpToMarker()
+    } finally sc.removeSparkListener(listener)
+  }
+
   override protected def afterAll(): Unit =
     try super.afterAll()
     finally SparkTestBase.clearLeftoverCheckpointDir(suiteName)

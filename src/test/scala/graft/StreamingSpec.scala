@@ -304,7 +304,6 @@ class StreamingSpec extends SparkTestBase {
 
   test("streaming CDC: processBatch on an existing snapshot runs one job fewer than a schema-inferring read") {
     import spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val root = java.nio.file.Files.createTempDirectory("cdc_jobs").toString
     val state = s"$root/state"
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
@@ -315,58 +314,27 @@ class StreamingSpec extends SparkTestBase {
       graft.streaming.StreamingCdc.processBatch(df, id, state,
         keyCol = "k", seqCols = Seq("seq"), opCol = "op",
         payloadCols = Seq("name", "bal"))
-    // jobs started by `body`, bracketed by marker jobs: listener events
-    // arrive in posting order, so the jobs seen between the two markers
-    // are exactly the jobs `body` started
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.LinkedBlockingQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.put(Option(e.properties).flatMap(p =>
-          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    run(batchDf((1L, "u", "alice", 100L, 1L), (2L, "u", "bob", 200L, 1L)), 0L)
+    val b1 = batchDf((1L, "d", "", 0L, 1L), (3L, "u", "carol", 300L, 1L))
+    // the snapshot read itself is lazy and takes the caller's schema
+    val read = jobsStartedBy {
+      assert(graft.streaming.StreamingCdc.currentState(spark, state, schema)
+        .schema.fieldNames.toSeq == schema.fieldNames.toSeq)
     }
-    def jobsUpToMarker(): Int = {
-      val marker = s"cdc-jobs-marker-${java.util.UUID.randomUUID}"
-      sc.setJobGroup(marker, "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      var n = 0
-      var g = groups.poll(60, java.util.concurrent.TimeUnit.SECONDS)
-      while (g != null && g != marker) {
-        n += 1
-        g = groups.poll(60, java.util.concurrent.TimeUnit.SECONDS)
-      }
-      assert(g == marker, "marker job never reached the listener")
-      n
+    assert(read == 0, s"reading the snapshot must launch no job, got $read")
+    // the same micro-batch body over a schema-inferring read of v_0
+    val inferring = jobsStartedBy {
+      graft.refresh.CdcMerge.applyCdc(spark.read.parquet(s"$state/v_0"), b1,
+        "k", Seq("seq"), "op", Seq("name", "bal"))
+        .write.mode("overwrite").parquet(s"$root/inferred")
     }
-    def jobsOf(body: => Unit): Int = {
-      jobsUpToMarker()
-      body
-      jobsUpToMarker()
-    }
-    sc.addSparkListener(listener)
-    try {
-      run(batchDf((1L, "u", "alice", 100L, 1L), (2L, "u", "bob", 200L, 1L)), 0L)
-      val b1 = batchDf((1L, "d", "", 0L, 1L), (3L, "u", "carol", 300L, 1L))
-      // the snapshot read itself is lazy and takes the caller's schema
-      val read = jobsOf {
-        assert(graft.streaming.StreamingCdc.currentState(spark, state, schema)
-          .schema.fieldNames.toSeq == schema.fieldNames.toSeq)
-      }
-      assert(read == 0, s"reading the snapshot must launch no job, got $read")
-      // the same micro-batch body over a schema-inferring read of v_0
-      val inferring = jobsOf {
-        graft.refresh.CdcMerge.applyCdc(spark.read.parquet(s"$state/v_0"), b1,
-          "k", Seq("seq"), "op", Seq("name", "bal"))
-          .write.mode("overwrite").parquet(s"$root/inferred")
-      }
-      val processed = jobsOf(run(b1, 1L))
-      assert(processed == inferring - 1,
-        s"processBatch ran $processed jobs; with schema inference $inferring")
-      assert(spark.read.parquet(s"$root/inferred").as[(Long, String, Long)]
-        .collect().toSet ==
-        graft.streaming.StreamingCdc.currentState(spark, state, schema)
-          .select($"k", $"name", $"bal").as[(Long, String, Long)].collect().toSet)
-    } finally sc.removeSparkListener(listener)
+    val processed = jobsStartedBy(run(b1, 1L))
+    assert(processed == inferring - 1,
+      s"processBatch ran $processed jobs; with schema inference $inferring")
+    assert(spark.read.parquet(s"$root/inferred").as[(Long, String, Long)]
+      .collect().toSet ==
+      graft.streaming.StreamingCdc.currentState(spark, state, schema)
+        .select($"k", $"name", $"bal").as[(Long, String, Long)].collect().toSet)
   }
 
   test("applyCdc is idempotent over its own result for randomized change batches") {
