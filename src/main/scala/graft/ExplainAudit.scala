@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Prints formatted physical plans of key queries — the judge-facing and
-  * self-check surface for pushdown/broadcast/codegen verification. */
+/** Prints formatted physical plans of key queries, [[normalize]]d — the
+  * judge-facing and self-check surface for pushdown/broadcast/codegen
+  * verification. */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
@@ -31,9 +32,17 @@ object ExplainAudit {
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")
-      println(SparkEntry.queries(n)(spark, dir).queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+      println(normalize(SparkEntry.queries(n)(spark, dir).queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)))
     }
     spark.stop()
   }
+
+  /** `plan` without its run-to-run noise, so two runs of one commit print
+    * the same text: Spark's global `[plan_id=N]` counter, and the JVM
+    * class names typed-Dataset lambdas print with
+    * (`Retrieval$$$Lambda$5217/0x00007f8d15456c30@20eee47c`). */
+  def normalize(plan: String): String =
+    plan.replaceAll("""\[plan_id=\d+\]""", "[plan_id=_]")
+      .replaceAll("""\$\$Lambda(\$\d+)?/0x[0-9a-f]+@[0-9a-f]+""", "\\$\\$Lambda")
 }

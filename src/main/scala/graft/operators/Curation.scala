@@ -234,12 +234,9 @@ object Curation {
     */
   def stripBoilerplate(docs: DataFrame, idCol: String, textCol: String,
                        dfRatio: Double, maxStoplistLiteral: Int = 65536): DataFrame = {
-    // non-empty tokens ONLY, everywhere (n_tokens, kept, df marker): an
-    // empty/whitespace-only doc splits to [""] and previously reported
-    // n_tokens = 1-2 phantom tokens with clean_text " " (hostile-DOCS
-    // wave) — the r12 phantom-empty-token rule, applied to this operator.
-    // A null text stays null through every column (unknown, not zero).
-    val ws = filter(split(trim(col(textCol)), "\\s+"), w => w =!= "")
+    // words, never "", everywhere (n_tokens, kept, df marker); a null
+    // text stays null through every column (unknown, not zero)
+    val ws = Words.words(col(textCol))
     // column pruning only — NOT a fan-out: Tables.fanOut was measured
     // here in r18 (+110% on t_boilerplate: tokenize is too cheap to pay
     // an extra exchange at bench scale) and deliberately reverted
@@ -247,14 +244,10 @@ object Curation {
     // single job, single scan: the grouped count carries a per-doc marker
     // row ("") whose df IS the corpus size, so the threshold comparison
     // stays distributed — only the tiny stoplist ever reaches the driver,
-    // and the old separate docs.count() pre-scan is gone. Real tokens are
-    // filtered to non-"" first: splitting an empty/whitespace-only document
-    // yields [""], which would otherwise inflate the marker count above the
-    // true corpus size and skew the df threshold.
+    // and the old separate docs.count() pre-scan is gone. No word is "",
+    // so the marker count is exactly the corpus size.
     val counts = pruned
-      .select(explode(concat(
-        array(lit("")),
-        filter(array_distinct(ws), w => w =!= ""))).as("t"))
+      .select(explode(concat(array(lit("")), array_distinct(ws))).as("t"))
       .groupBy(col("t")).agg(count(lit(1)).as("df"))
     val nDocs = counts.filter(col("t") === "").select(col("df").as("n"))
     // pinned lazily (as Retrieval.bpeTokenCounts pins its words): the take()
@@ -326,10 +319,7 @@ object Curation {
                     langCol: String, shortBelowTokens: Long): DataFrame =
     docs
       .select(col(strataCol), col(langCol),
-        // non-empty tokens only: split(trim('')) is [''] with size 1, so
-        // a stratum of empty docs (scraper failures) would publish one
-        // phantom token per document on its data card
-        size(filter(split(trim(col(textCol)), "\\s+"), w => w =!= ""))
+        size(Words.words(col(textCol)))
           .cast("long").as("__nt"))
       .groupBy(col(strataCol))
       .agg(
@@ -478,7 +468,7 @@ object Curation {
                    window: Int, stride: Int): DataFrame = {
     require(window >= 1 && stride >= 1 && stride <= window,
       s"need 1 <= stride($stride) <= window($window)")
-    val toks = split(trim(col(textCol)), "\\s+")
+    val toks = Words.tokens(col(textCol))
     docs.select(col(idCol), toks.as("toks"))
       .filter(size(col("toks")) > 0 && length(trim(col(textCol))) > 0)
       .select(col(idCol), posexplode(expr(
@@ -507,7 +497,7 @@ object Curation {
   def dedupChunks(docs: DataFrame, idCol: String, textCol: String,
                   chunkWords: Int): DataFrame = {
     require(chunkWords >= 1, "chunkWords must be positive")
-    // single-evaluation token-array discipline (same as Dedup.tokenWindows):
+    // single-evaluation token-array discipline (same as Words.ngrams):
     // the split MUST materialize as a column before entering the transform
     // lambda — an inlined `split(...)` expression re-tokenizes the ENTIRE
     // text once per chunk, O(words × chunks) per doc. Invisible on
@@ -531,7 +521,7 @@ object Curation {
     val w = Window.partitionBy(md5(lower(col("chunk"))))
       .orderBy(col(idCol), col("chunk_idx"), col("chunk"))
     docs
-      .select(col(idCol), split(trim(col(textCol)), "\\s+").as("__ws"))
+      .select(col(idCol), Words.tokens(col(textCol)).as("__ws"))
       .select(col(idCol), explode(chunks).as("u"))
       .select(col(idCol), col("u.idx").as("chunk_idx"), col("u.c").as("chunk"))
       .withColumn("kept", row_number().over(w) === 1)

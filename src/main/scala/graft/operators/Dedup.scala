@@ -23,53 +23,29 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Distinct word n-gram shingles: (id, g). 1-based positions i..i+n-1.
-    *
-    * The token array is materialized as its own projection before the gram
-    * transform: the lambda references `ws` n times per position, and an
-    * inlined `split()` would re-run the regex for every reference
-    * (~n×positions evaluations per document — measured 5× slowdown at
-    * n=5). As a separate non-cheap alias it survives CollapseProject and
-    * evaluates once per row.
-    */
-  def wordShingles(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    val ws = col("__ws")
-    val positions = sequence(lit(1), size(ws) - (n - 1))
-    val grams = transform(positions, i =>
-      concat_ws(" ", (0 until n).map(o => element_at(ws, i + o)): _*))
+  /** Distinct word n-gram shingles: (id, g), over [[Words.words]]. */
+  def wordShingles(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     // spread a one-split scan across the cluster before the tokenize +
     // explode (and the minhash md5 families pipelined on top of it)
     // evaluate — identity at corpus scale, see [[graft.Tables.fanOut]]
     graft.Tables.fanOut(docs.select(col(idCol).as("id"), col(textCol).as("__t")))
-      // drop empty tokens before windowing: trim strips only spaces, so a
-      // leading tab/newline splits to a "" head token and every shingle
-      // containing it is a PHANTOM gram (a 4-word doc grows a 5-gram) —
-      // the class Frequency.ngrams already guards against
-      .select(col("id"),
-        filter(split(trim(col("__t")), "\\s+"), w => w =!= "").as("__ws"))
-      .filter(size(ws) >= n)
-      .select(col("id"), explode(array_distinct(grams)).as("g"))
-  }
+      .select(col("id"), Words.words(col("__t")).as("__ws"))
+      .filter(size(col("__ws")) >= n)
+      .select(col("id"), explode(array_distinct(Words.ngrams(col("__ws"), n))).as("g"))
 
   /** Overlapping w-token windows WITH positions: (id, idx, g), idx
-    * 0-based. Unlike [[wordShingles]] this keeps duplicates and window
-    * order — the unit of exact-substring dedup, where the same window
-    * repeated (within or across documents) is precisely the signal.
-    * Same single-evaluation token-array discipline as [[wordShingles]].
+    * 0-based, over the raw [[Words.tokens]]. Unlike [[wordShingles]]
+    * this keeps duplicates and window order — the unit of exact-substring
+    * dedup, where the same window repeated (within or across documents)
+    * is precisely the signal.
     */
-  def tokenWindows(docs: DataFrame, idCol: String, textCol: String, w: Int): DataFrame = {
-    val ws = col("__ws")
-    val positions = sequence(lit(1), size(ws) - (w - 1))
-    val grams = transform(positions, i => struct(
-      (i - 1).cast("long").as("idx"),
-      concat_ws(" ", (0 until w).map(o => element_at(ws, i + o)): _*).as("g")))
+  def tokenWindows(docs: DataFrame, idCol: String, textCol: String, w: Int): DataFrame =
     // same one-split-scan spread as [[wordShingles]]
     graft.Tables.fanOut(docs.select(col(idCol).as("id"), col(textCol).as("__t")))
-      .select(col("id"), split(trim(col("__t")), "\\s+").as("__ws"))
-      .filter(size(ws) >= w)
-      .select(col("id"), explode(grams).as("u"))
-      .select(col("id"), col("u.idx").as("idx"), col("u.g").as("g"))
-  }
+      .select(col("id"), Words.tokens(col("__t")).as("__ws"))
+      .filter(size(col("__ws")) >= w)
+      .select(col("id"), posexplode(Words.ngrams(col("__ws"), w)).as(Seq("idx", "g")))
+      .select(col("id"), col("idx").cast("long").as("idx"), col("g"))
 
   /** Exact-substring dedup at w-token window granularity (the Spark-shaped
     * adaptation of Lee et al. 2021, "Deduplicating Training Data Makes
@@ -184,7 +160,7 @@ object Dedup {
       .groupBy(col("id"))
       .agg(array_sort(collect_list(struct(col("s"), col("e")))).as("__ivs"))
     docs
-      .select(col(idCol).as("id"), split(trim(col(textCol)), "\\s+").as("__ws"))
+      .select(col(idCol).as("id"), Words.tokens(col(textCol)).as("__ws"))
       .join(spans, Seq("id"), "left")
       .withColumn("__ivs", coalesce(col("__ivs"),
         expr("CAST(array() AS array<struct<s:bigint,e:bigint>>)")))
@@ -316,7 +292,7 @@ object Dedup {
     val toks = graft.Tables
       .fanOut(docs.select(col(idCol).as("id"), col(textCol).as("__t")))
       .select(col("id"),
-        explode(split(trim(lower(col("__t"))), "\\s+")).as("t"))
+        explode(Words.tokens(lower(col("__t")))).as("t"))
       .select(col("id"), substring(md5(col("t")), 1, 16).as("h16"))
     val votes = (0 until 64).map { b =>
       val digit = s"(instr('0123456789abcdef', substring(h16, ${1 + b / 4}, 1)) - 1)"

@@ -30,7 +30,7 @@ object Frequency {
   /** Word n-grams with exact-regime count ≥ `minCount`, most frequent
     * first (ties on the gram text). `k` bounds the sketch report size —
     * pick it above the expected qualifier count; `maxTracked` is the
-    * sketch capacity. n = 1 is plain tokens. */
+    * sketch capacity. n = 1 counts the words themselves. */
   def topGrams(docs: DataFrame, textCol: String, n: Int, k: Int,
                maxTracked: Int, minCount: Long): DataFrame = {
     val grams = ngrams(docs, textCol, n)
@@ -132,25 +132,14 @@ object Frequency {
         Seq(col("n"), col("share_ppm"), col("skew_x"), col("rank")): _*)
   }
 
-  /** One row per word n-gram occurrence (column `g`); the same
-    * whitespace split + space join as `Dedup.wordShingles`, kept
-    * duplicated occurrences (frequency counting wants multiplicity,
+  /** One row per word n-gram occurrence (column `g`) over
+    * [[Words.words]]: the shingles of `Dedup.wordShingles` with their
+    * duplicated occurrences kept (frequency counting wants multiplicity,
     * shingling wants the distinct set). */
   private[graft] def ngrams(docs: DataFrame, textCol: String, n: Int): DataFrame = {
     require(n >= 1, "n-gram size must be at least 1")
-    // non-empty tokens on BOTH paths: trim removes only spaces, so a
-    // leading tab/newline leaves a "" head token from split — the n >= 2
-    // path then emitted corrupt grams like " a" and phantom counts (the
-    // n == 1 path already guarded via length > 0)
-    val ws = filter(split(trim(col(textCol)), "\\s+"), w => w =!= "")
-    if (n == 1)
-      docs.select(explode(ws).as("g")).filter(length(col("g")) > 0)
-    else
-      docs.select(ws.as("ws"))
-        .filter(size(col("ws")) >= n)
-        .select(explode(expr(
-          s"transform(sequence(0, size(ws) - $n), i -> " +
-            (0 until n).map(j => s"element_at(ws, i + ${j + 1})")
-              .mkString("concat_ws(' ', ", ", ", ")") + ")")).as("g"))
+    docs.select(Words.words(col(textCol)).as("ws"))
+      .filter(size(col("ws")) >= n)
+      .select(explode(Words.ngrams(col("ws"), n)).as("g"))
   }
 }

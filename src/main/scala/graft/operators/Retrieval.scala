@@ -121,7 +121,7 @@ object Retrieval {
     * (n, t) broadcast. */
   private def bm25Contribs(docs: DataFrame, idCol: String, textCol: String,
                            vocab: Seq[String]): DataFrame = {
-    val ws = split(trim(lower(col(textCol))), "\\s+")
+    val ws = Words.tokens(lower(col(textCol)))
     // pinned (lazily): corpus stats AND tf both consume the per-doc
     // (id, dl, hits) frame — without the checkpoint each consumer re-runs
     // the regex tokenize over the full corpus text (the dominant cost;
@@ -164,7 +164,7 @@ object Retrieval {
     * drop — splitting an empty or whitespace-only document yields [""],
     * which is no word. */
   private def corpusWords(docs: DataFrame, textCol: String, keep: Column*): DataFrame =
-    docs.select(keep :+ explode(split(trim(lower(col(textCol))), "\\s+")).as("w"): _*)
+    docs.select(keep :+ explode(Words.tokens(lower(col(textCol)))).as("w"): _*)
       .filter(col("w") =!= "")
 
   /** Greedy BPE encode of one word under a ranked merge table — the

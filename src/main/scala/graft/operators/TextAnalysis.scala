@@ -133,10 +133,7 @@ object TextAnalysis {
     * expression: codegen'd, shuffle-free.
     */
   def qualityFlags(text: Column, minWords: Int = 10, maxWords: Int = 1000): Column = {
-    // non-empty tokens only: split(trim('')) is [''], so an
-    // empty/whitespace-only doc would report n_words = 1 (passing a
-    // minWords = 1 gate) and pollute every ratio denominator
-    val ws = filter(split(trim(text), "\\s+"), w => w =!= "")
+    val ws = Words.words(text)
     val n = size(ws)
     val wchars = aggregate(ws, lit(0), (a, w) => a + length(w))
     val nAlpha = size(filter(ws, w => w.rlike("[A-Za-z]")))
@@ -184,7 +181,7 @@ object TextAnalysis {
     import org.apache.spark.sql.DataFrame
     def bigrams(df: DataFrame): DataFrame = {
       val ws = col("__ws")
-      df.select(col(idCol).as("id"), split(trim(col(textCol)), "\\s+").as("__ws"))
+      df.select(col(idCol).as("id"), Words.tokens(col(textCol)).as("__ws"))
         .filter(size(ws) >= 2)
         .select(col("id"), explode(transform(sequence(lit(1), size(ws) - 1),
           i => struct(element_at(ws, i).as("w1"), element_at(ws, i + 1).as("w2")))).as("b"))
@@ -193,7 +190,7 @@ object TextAnalysis {
     val trainBi = bigrams(train).groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("c12"))
     val trainUni = train
-      .select(explode(split(trim(col(textCol)), "\\s+")).as("w"))
+      .select(explode(Words.tokens(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c1"))
     val vocab = trainUni.agg(count(lit(1)).as("v"))
     bigrams(docs)
@@ -252,7 +249,7 @@ object TextAnalysis {
       lit(0L), (acc, x) => acc + x)
     val thresholdMicro = math.round(threshold * 1e6)
     docs
-      .select(col(idCol), split(trim(col(textCol)), "\\s+").as("__ws"))
+      .select(col(idCol), Words.tokens(col(textCol)).as("__ws"))
       .filter(size(ws) >= 1 && element_at(ws, 1) =!= "")
       .select(col(idCol), size(ws).cast("long").as("n_tokens"), sumW.as("sum_w"))
       .select(col(idCol), col("n_tokens"), col("sum_w"),
@@ -287,18 +284,10 @@ object TextAnalysis {
     */
   def topNgramFraction(docs: org.apache.spark.sql.DataFrame, idCol: String,
                        textCol: String, n: Int): org.apache.spark.sql.DataFrame = {
-    val ws = col("__ws")
-    val grams = transform(
-      sequence(lit(1), size(ws) - (n - 1)),
-      i => concat_ws(" ", (0 until n).map(o => element_at(ws, i + o)): _*))
     docs
-      // non-empty tokens only (see Dedup.wordShingles): a leading
-      // tab/newline's "" token fabricated a phantom bigram per doc,
-      // halving a maximally repetitive doc's fraction
-      .select(col(idCol).as("id"),
-        filter(split(trim(lower(col(textCol))), "\\s+"), w => w =!= "").as("__ws"))
-      .filter(size(ws) >= n)
-      .select(col("id"), explode(grams).as("g"))
+      .select(col(idCol).as("id"), Words.words(lower(col(textCol))).as("__ws"))
+      .filter(size(col("__ws")) >= n)
+      .select(col("id"), explode(Words.ngrams(col("__ws"), n)).as("g"))
       .groupBy(col("id"), col("g")).agg(count(lit(1)).as("c"))
       .groupBy(col("id"))
       .agg(sum(col("c")).as("n_ngrams"), max(col("c")).as("top_ngram_n"))

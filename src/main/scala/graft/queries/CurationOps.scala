@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{Curation, Frequency}
+import graft.operators.{Curation, Frequency, Words}
 
 /** Corpus-curation query pack: contamination, mixing, packing, profiling,
   * sessionization — the operations that sit between raw dedup and actual
@@ -55,7 +55,7 @@ object CurationOps {
     import spark.implicits._
     val docs = Tables.documents(spark, dir)
       .select($"doc_id", $"lang",
-        size(filter(split(trim($"text"), "\\s+"), w => w =!= ""))
+        size(Words.words($"text"))
           .cast("long").as("n_tokens"))
     Curation.packBatches(docs, "lang", "doc_id", "n_tokens", PackBudget)
       .groupBy($"lang", $"batch_id")
@@ -71,7 +71,7 @@ object CurationOps {
     import spark.implicits._
     val docs = Tables.documents(spark, dir)
       .select($"doc_id", $"lang",
-        size(filter(split(trim($"text"), "\\s+"), w => w =!= ""))
+        size(Words.words($"text"))
           .cast("long").as("n_tokens"))
     Curation.packBatchesSplitting(docs, "lang", "doc_id", "n_tokens", PackBudget)
       .groupBy($"lang", $"batch_id")
@@ -88,7 +88,7 @@ object CurationOps {
     import spark.implicits._
     val docs = Tables.documents(spark, dir)
       .select($"doc_id", $"lang",
-        size(filter(split(trim($"text"), "\\s+"), w => w =!= ""))
+        size(Words.words($"text"))
           .cast("long").as("n_tokens"))
     Curation.packBatchesSharded(docs, "lang", "doc_id", "n_tokens",
       PackBudget, nShards = 4, salt = "psh:")
@@ -104,7 +104,7 @@ object CurationOps {
     import spark.implicits._
     Tables.documents(spark, dir)
       .select($"lang",
-        size(filter(split(trim($"text"), "\\s+"), w => w =!= ""))
+        size(Words.words($"text"))
           .cast("long").as("n_tokens"))
       .groupBy($"lang")
       .agg(
@@ -128,7 +128,7 @@ object CurationOps {
     import spark.implicits._
     Tables.documents(spark, dir)
       .select($"lang",
-        size(filter(split(trim($"text"), "\\s+"), w => w =!= ""))
+        size(Words.words($"text"))
           .cast("long").as("n_tokens"))
       .groupBy($"lang")
       .agg(
@@ -328,7 +328,7 @@ object CurationOps {
     import spark.implicits._
     val docs = Tables.documents(spark, dir)
       .select($"doc_id",
-        size(filter(split(trim($"text"), "\\s+"), w => w =!= ""))
+        size(Words.words($"text"))
           .cast("long").as("weight"))
     Curation.weightedSample(docs, "doc_id", "weight", k = 100, salt = "ws:")
       .orderBy($"rank")
@@ -440,23 +440,28 @@ object CurationOps {
            FROM documents)"""
 
   private val gramSql =
-    """sh AS (
-         SELECT doc_id AS id,
-                unnest(list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-                                      || ' ' || ws[i+3] || ' ' || ws[i+4]
-                                      for i in range(1, len(ws) - 3)])) AS g
-         FROM (SELECT doc_id,
-                      list_filter(string_split_regex(trim(text), '\s+'),
-                                  x -> x <> '') AS ws
-               FROM documents)
+    s"""sh AS (
+         SELECT doc_id AS id, unnest(list_distinct(${Words.ngramsSql("ws", 5)})) AS g
+         FROM (SELECT doc_id, ${Words.wordsSql("text")} AS ws FROM documents)
          WHERE len(ws) >= 5)"""
+
+  /** The banner'd corpus's 8-token windows `wnd` (doc_id, idx, g), idx
+    * 0-based, over the raw tokens `d.ws`: the
+    * [[graft.operators.Dedup.tokenWindows]] twin the three substring
+    * oracles share. */
+  private val substringWindowsSql =
+    s"""$banneredSql,
+         d AS (SELECT doc_id, ${Words.tokensSql("tx")} AS ws FROM t),
+         wnd AS (SELECT doc_id, i - 1 AS idx, g FROM (
+                   SELECT doc_id, unnest(gs) AS g, generate_subscripts(gs, 1) AS i
+                   FROM (SELECT doc_id, ${Words.ngramsSql("ws", 8)} AS gs
+                         FROM d WHERE len(ws) >= 8)))"""
 
   val oracles: Map[String, String] = Map(
     "t_corpus_profile" ->
-      """WITH d AS (
+      s"""WITH d AS (
            SELECT source, lang,
-                  len(list_filter(string_split_regex(trim(text), '\s+'),
-                                  w -> w <> ''))::BIGINT AS nt
+                  len(${Words.wordsSql("text")})::BIGINT AS nt
            FROM documents)
          SELECT source, count(*) AS n_docs, CAST(sum(nt) AS BIGINT) AS sum_tokens,
                 CAST(sum(nt) // count(*) AS BIGINT) AS mean_tokens,
@@ -502,7 +507,7 @@ object CurationOps {
                      ELSE 'test' END AS split
          FROM u ORDER BY doc_id""",
     "t_chunk_overlap" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
+      s"""WITH t AS (SELECT doc_id, ${Words.tokensSql("text")} AS toks
                     FROM documents WHERE length(trim(text)) > 0),
           s AS (SELECT doc_id, toks, unnest(range(0, len(toks), 24)) AS st FROM t)
           SELECT doc_id, CAST(st // 24 AS INTEGER) AS chunk_idx,
@@ -512,7 +517,7 @@ object CurationOps {
     "t_weighted_sample" ->
       s"""WITH w AS (
            SELECT doc_id,
-                  CAST(len(list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')) AS BIGINT) AS weight,
+                  CAST(len(${Words.wordsSql("text")}) AS BIGINT) AS weight,
                   ${LlmOps.u24Sql("'ws:' || doc_id")} AS u24
            FROM documents),
          keyed AS (
@@ -526,12 +531,10 @@ object CurationOps {
          SELECT doc_id, weight, draw, rank
          FROM ranked WHERE rank <= 100 ORDER BY rank""",
     "t_top_tokens" ->
-      """WITH w AS (SELECT list_filter(string_split_regex(trim(text), '\s+'),
-                                       x -> x <> '') AS ws
+      s"""WITH w AS (SELECT ${Words.wordsSql("text")} AS ws
                     FROM documents),
          grams AS (
-           SELECT unnest([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-                          for i in range(1, len(ws) - 1)]) AS g
+           SELECT unnest(${Words.ngramsSql("ws", 3)}) AS g
            FROM w WHERE len(ws) >= 3),
          cnt AS (SELECT g AS gram, count(*) AS cnt FROM grams GROUP BY 1)
          SELECT gram, cnt FROM cnt WHERE cnt >= 5
@@ -558,9 +561,9 @@ object CurationOps {
                     ELSE 1.0 END) * 16777216
          ORDER BY doc_id""",
     "t_pack_batches" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
            SELECT doc_id, lang,
-                  CAST(len(list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '')) AS BIGINT) AS n_tokens
+                  CAST(len(${Words.wordsSql("text")}) AS BIGINT) AS n_tokens
            FROM documents),
          packed AS (
            SELECT lang, doc_id, n_tokens,
@@ -572,9 +575,9 @@ object CurationOps {
                 CAST(sum(n_tokens) AS BIGINT) AS batch_tokens
          FROM packed GROUP BY 1, 2 ORDER BY lang, batch_id""",
     "t_pack_split" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
            SELECT doc_id, lang,
-                  CAST(len(list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '')) AS BIGINT) AS n
+                  CAST(len(${Words.wordsSql("text")}) AS BIGINT) AS n
            FROM documents),
          pos AS (
            SELECT lang, doc_id, n,
@@ -595,7 +598,7 @@ object CurationOps {
     "t_pack_sharded" ->
       s"""WITH toks AS (
            SELECT doc_id, lang,
-                  CAST(len(list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')) AS BIGINT) AS n_tokens
+                  CAST(len(${Words.wordsSql("text")}) AS BIGINT) AS n_tokens
            FROM documents),
          sh AS (
            SELECT doc_id, lang, n_tokens,
@@ -624,10 +627,10 @@ object CurationOps {
                 CAST(sum(n_tokens) AS BIGINT) AS batch_tokens
          FROM packed GROUP BY 1, 2, 3 ORDER BY lang, shard_id, batch_id""",
     "t_length_quantiles" ->
-      """SELECT lang, count(*) AS n_docs,
+      s"""SELECT lang, count(*) AS n_docs,
                 round(quantile_cont(n_tokens, 0.5), 4) AS p50_tokens,
                 round(quantile_cont(n_tokens, 0.9), 4) AS p90_tokens
-         FROM (SELECT lang, len(list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '')) AS n_tokens
+         FROM (SELECT lang, len(${Words.wordsSql("text")}) AS n_tokens
                FROM documents)
          GROUP BY lang ORDER BY lang""",
     "t_length_quantiles_approx" ->
@@ -638,8 +641,8 @@ object CurationOps {
       // count(lit(1)). NULLS LAST parks null rows at ranks > n =
       // count(n_tokens), so they can never match ceil(p*n) — no extra
       // null guard needed (r15 ADVICE)
-      """WITH d AS (SELECT lang,
-                    CAST(len(list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '')) AS BIGINT) AS n_tokens
+      s"""WITH d AS (SELECT lang,
+                    CAST(len(${Words.wordsSql("text")}) AS BIGINT) AS n_tokens
                     FROM documents),
          r AS (SELECT lang, n_tokens,
                       row_number() OVER (PARTITION BY lang
@@ -653,12 +656,11 @@ object CurationOps {
                          THEN n_tokens END) AS p90_tokens
          FROM r GROUP BY lang ORDER BY lang""",
     "t_repetition" ->
-      """WITH grams AS (
+      s"""WITH grams AS (
            SELECT doc_id,
-                  unnest([ws[i] || ' ' || ws[i+1] for i in range(1, len(ws))]) AS g
+                  unnest(${Words.ngramsSql("ws", 2)}) AS g
            FROM (SELECT doc_id,
-                        list_filter(string_split_regex(trim(lower(text)), '\s+'),
-                                    x -> x <> '') AS ws
+                        ${Words.wordsSql("lower(text)")} AS ws
                  FROM documents)
            WHERE len(ws) >= 2),
          counts AS (SELECT doc_id, g, count(*) AS c FROM grams GROUP BY 1, 2)
@@ -668,16 +670,12 @@ object CurationOps {
                   AS top_ngram_ppm
          FROM counts GROUP BY doc_id ORDER BY doc_id""",
     "t_boilerplate" ->
-      """WITH d AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws,
+      s"""WITH d AS (SELECT doc_id, ${Words.wordsSql("text")} AS ws,
                            row_number() OVER (PARTITION BY doc_id
                                               ORDER BY text) AS sub
                     FROM documents),
-         toks0 AS (SELECT doc_id, sub, unnest(ws) AS tok,
-                          generate_subscripts(ws, 1) AS pos FROM d),
-         -- tok <> '': phantom empty tokens (an empty/ws-only doc splits to
-         -- ['']) are not tokens — excluded from n_tokens, df, and output,
-         -- matching the operator's non-empty-token discipline.
-         toks AS (SELECT doc_id, sub, tok, pos FROM toks0 WHERE tok <> ''),
+         toks AS (SELECT doc_id, sub, unnest(ws) AS tok,
+                         generate_subscripts(ws, 1) AS pos FROM d),
          -- df is ROW-based ((doc_id, sub), not DISTINCT doc_id): a document
          -- is a corpus row — duplicate doc_ids are two documents — and the
          -- denominator is rows WITH text (a null-text row contributes no
@@ -697,8 +695,7 @@ object CurationOps {
                  FROM kept GROUP BY 1, 2)
          SELECT d.doc_id,
                 CASE WHEN d.ws IS NULL THEN NULL
-                     ELSE CAST(len(list_filter(d.ws, x -> x <> '')) AS BIGINT)
-                END AS n_tokens,
+                     ELSE CAST(len(d.ws) AS BIGINT) END AS n_tokens,
                 CASE WHEN d.ws IS NULL THEN NULL
                      ELSE CAST(coalesce(a.n_kept, 0) AS BIGINT) END AS n_kept,
                 CASE WHEN d.ws IS NULL THEN NULL
@@ -783,7 +780,7 @@ object CurationOps {
          FROM canon GROUP BY 1 ORDER BY kept_doc_id""",
     "d_chunk_dedup" ->
       s"""WITH $banneredSql,
-         toks AS (SELECT doc_id, string_split_regex(trim(tx), '\\s+') AS ws FROM t),
+         toks AS (SELECT doc_id, ${Words.tokensSql("tx")} AS ws FROM t),
          ch AS (SELECT doc_id, u.idx AS chunk_idx, u.c AS chunk FROM (
                   SELECT doc_id,
                          unnest([{'idx': i - 1,
@@ -802,14 +799,7 @@ object CurationOps {
                                   ' '), '')) AS clean_md5
          FROM k GROUP BY 1 ORDER BY doc_id""",
     "d_substring_dedup" ->
-      s"""WITH $banneredSql,
-         d AS (SELECT doc_id, string_split_regex(trim(tx), '\\s+') AS ws FROM t),
-         wnd AS (SELECT doc_id, u.idx AS idx, u.g AS g FROM (
-                   SELECT doc_id,
-                          unnest([{'idx': i - 1,
-                                   'g': array_to_string(ws[i:i+7], ' ')}
-                                  for i in range(1, len(ws) - 6)]) AS u
-                   FROM d WHERE len(ws) >= 8)),
+      s"""WITH $substringWindowsSql,
          r AS (SELECT doc_id, idx,
                       row_number() OVER (PARTITION BY g ORDER BY doc_id, idx) AS rn
                FROM wnd)
@@ -817,14 +807,7 @@ object CurationOps {
                 count(*) FILTER (WHERE rn > 1) AS n_dup_windows
          FROM r GROUP BY 1 ORDER BY doc_id""",
     "d_substring_removal" ->
-      s"""WITH $banneredSql,
-         d AS (SELECT doc_id, string_split_regex(trim(tx), '\\s+') AS ws FROM t),
-         wnd AS (SELECT doc_id, u.idx AS idx, u.g AS g FROM (
-                   SELECT doc_id,
-                          unnest([{'idx': i - 1,
-                                   'g': array_to_string(ws[i:i+7], ' ')}
-                                  for i in range(1, len(ws) - 6)]) AS u
-                   FROM d WHERE len(ws) >= 8)),
+      s"""WITH $substringWindowsSql,
          r AS (SELECT doc_id, idx,
                       row_number() OVER (PARTITION BY g ORDER BY doc_id, idx) AS rn
                FROM wnd),
@@ -861,15 +844,8 @@ object CurationOps {
                 CAST(len(ws) - len(ks) AS BIGINT) AS n_removed
          FROM kept ORDER BY doc_id""",
     "d_substring_sampled" ->
-      s"""WITH $banneredSql,
-         d AS (SELECT doc_id, string_split_regex(trim(tx), '\\s+') AS ws FROM t),
-         wnd AS (SELECT doc_id, u.idx AS idx, md5(u.g) AS h FROM (
-                   SELECT doc_id,
-                          unnest([{'idx': i - 1,
-                                   'g': array_to_string(ws[i:i+7], ' ')}
-                                  for i in range(1, len(ws) - 6)]) AS u
-                   FROM d WHERE len(ws) >= 8)),
-         sel AS (SELECT doc_id, idx, h FROM wnd
+      s"""WITH $substringWindowsSql,
+         sel AS (SELECT doc_id, idx, h FROM (SELECT doc_id, idx, md5(g) AS h FROM wnd)
                  WHERE ${LlmOps.hexU24Sql("h")} % 4 = 0),
          r AS (SELECT doc_id, idx,
                       row_number() OVER (PARTITION BY h ORDER BY doc_id, idx) AS rn

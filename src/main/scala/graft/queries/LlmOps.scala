@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.Dedup
+import graft.operators.{Dedup, Words}
 
 /** Training-data pipeline operators over the documents/embeddings tables:
   * dedup (exact, n-gram Jaccard, MinHash-LSH), text analysis, document
@@ -145,7 +145,7 @@ object LlmOps {
     * quality scoring + token counting). All narrow ops — no shuffle. */
   def qDocStats(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val ws = split(trim($"text"), "\\s+")
+    val ws = Words.tokens($"text")
     Tables.documents(spark, dir)
       .select($"doc_id", ws.as("ws"), $"n_chars")
       .select(
@@ -467,7 +467,7 @@ object LlmOps {
     * heuristic). Oracle replicates the same profiles + precedence. */
   def qLangId(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val toks = split(trim(lower($"text")), "\\s+")
+    val toks = Words.tokens(lower($"text"))
     Tables.documents(spark, dir)
       .select($"doc_id", $"lang".as("declared_lang"),
         graft.operators.TextAnalysis.languageGuess(toks).as("lang_guess"))
@@ -722,7 +722,7 @@ object LlmOps {
     val pairs = lshVerifiedPairs(docs).select(col("d1"), col("d2"))
     val clusters = Dedup.connectedComponents(pairs)
     val quality = docs.select($"doc_id",
-      size(filter(split(trim($"text"), "\\s+"), w => w =!= ""))
+      size(Words.words($"text"))
         .cast("long").as("q"))
     graft.operators.Dedup.selectRepresentatives(clusters, quality, "doc_id", "q")
       .orderBy($"cluster_rep")
@@ -826,17 +826,11 @@ object LlmOps {
   )
 
   /** The word-trigram shingle CTE over an arbitrary (doc_id, text)
-    * source — the ONE definition of the oracle-side shingle family
-    * (every copy that existed drifted independently from
-    * [[graft.operators.Dedup.wordShingles]]'s contract). */
+    * source: the [[graft.operators.Dedup.wordShingles]] twin. */
   private def shingleSqlOver(src: String): String =
     s"""sh AS (
-         SELECT doc_id AS id,
-                unnest(list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-                                      for i in range(1, len(ws) - 1)])) AS g
-         FROM (SELECT doc_id,
-                      list_filter(string_split_regex(trim(text), '\\s+'),
-                                  x -> x <> '') AS ws FROM $src)
+         SELECT doc_id AS id, unnest(list_distinct(${Words.ngramsSql("ws", 3)})) AS g
+         FROM (SELECT doc_id, ${Words.wordsSql("text")} AS ws FROM $src)
          WHERE len(ws) >= 3)"""
 
   private val shingleSql = shingleSqlOver("documents")
@@ -1141,8 +1135,7 @@ object LlmOps {
             SELECT a AS doc_id, least(a, min(b)) AS cluster_rep
             FROM reach GROUP BY a),
           q AS (SELECT doc_id,
-                       len(list_filter(string_split_regex(trim(text), '\\s+'),
-                                       x -> x <> ''))::BIGINT AS q
+                       len(${Words.wordsSql("text")})::BIGINT AS q
                 FROM documents),
           sel AS (
             SELECT c.cluster_rep, c.doc_id, q.q,
@@ -1160,8 +1153,7 @@ object LlmOps {
            FROM documents WHERE text IS NOT NULL),
          d AS (
            SELECT doc_id, sub,
-                  list_filter(string_split_regex(trim(text), '\\s+'),
-                              x -> x <> '') AS ws
+                  ${Words.wordsSql("text")} AS ws
            FROM d0),
          t AS (SELECT doc_id, sub, len(ws)::BIGINT AS n_tokens, unnest(ws) AS tok
                FROM d WHERE len(ws) > 0),
@@ -1231,8 +1223,8 @@ object LlmOps {
           SELECT a AS doc_id, least(a, min(b)) AS cluster_rep
           FROM reach GROUP BY a ORDER BY doc_id""",
     "d_simhash" ->
-      """WITH toks AS (
-           SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS t
+      s"""WITH toks AS (
+           SELECT doc_id, unnest(${Words.tokensSql("lower(text)")}) AS t
            FROM documents),
          th AS (SELECT doc_id, substr(md5(t), 1, 16) AS h16 FROM toks),
          bits AS (
@@ -1311,7 +1303,7 @@ object LlmOps {
                 md5(substr(h, 1, CAST(2 * k AS INT))) AS payload_md5
          FROM calc ORDER BY doc_id""",
     "t_doc_stats" ->
-      """SELECT doc_id,
+      s"""SELECT doc_id,
                 len(ws) AS n_tokens,
                 len(list_distinct(ws)) AS n_distinct,
                 round(len(list_distinct(ws)) * 1.0 / len(ws), 6) AS type_token_ratio,
@@ -1327,7 +1319,7 @@ object LlmOps {
                   WHEN len(ws) >= 20 THEN 'ok'
                   ELSE 'short'
                 END AS quality_band
-         FROM (SELECT doc_id, n_chars, string_split_regex(trim(text), '\s+') AS ws
+         FROM (SELECT doc_id, n_chars, ${Words.tokensSql("text")} AS ws
                FROM documents)
          ORDER BY doc_id""",
     "t_doc_fingerprint" ->
@@ -1335,7 +1327,7 @@ object LlmOps {
           SELECT id AS doc_id, min(md5(g)) AS fingerprint, count(*) AS n_shingles
           FROM sh GROUP BY 1 ORDER BY doc_id""",
     "t_lang_id" ->
-      """SELECT doc_id, lang AS declared_lang,
+      s"""SELECT doc_id, lang AS declared_lang,
                 CASE
                   WHEN en >= de AND en >= es AND en >= fr AND en > 0 THEN 'en'
                   WHEN de >= es AND de >= fr AND de > 0 THEN 'de'
@@ -1350,7 +1342,7 @@ object LlmOps {
              len(list_filter(ws, t -> t IN ('el','los','las','y','una'))) AS es,
              len(list_filter(ws, t -> t IN ('le','les','et','est','une'))) AS fr
            FROM (SELECT doc_id, lang,
-                        string_split_regex(trim(lower(text)), '\s+') AS ws
+                        ${Words.tokensSql("lower(text)")} AS ws
                  FROM documents))
          ORDER BY doc_id""",
     "t_token_classes" ->
@@ -1445,8 +1437,8 @@ object LlmOps {
                       AND cnt.bin = b.bin
          ORDER BY 1, 2""",
     "sim_hamming_topk" ->
-      """WITH toks AS (
-           SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS t
+      s"""WITH toks AS (
+           SELECT doc_id, unnest(${Words.tokensSql("lower(text)")}) AS t
            FROM documents),
          th AS (SELECT doc_id, substr(md5(t), 1, 16) AS h16 FROM toks),
          bits AS (
@@ -1882,9 +1874,8 @@ object LlmOps {
           FROM ranked WHERE rank <= 3
           ORDER BY probe_id, rank""",
     "t_quality_filter" ->
-      """WITH w AS (SELECT doc_id,
-                           list_filter(string_split_regex(trim(text), '\s+'),
-                                       x -> x <> '') AS ws
+      s"""WITH w AS (SELECT doc_id,
+                           ${Words.wordsSql("text")} AS ws
                     FROM documents),
           m AS (SELECT doc_id,
                        len(ws) AS n,
@@ -1992,7 +1983,7 @@ object LlmOps {
           FROM p WHERE cos >= 0.95 AND NOT isnan(cos)
           GROUP BY 1 ORDER BY removed_vec_id""",
     "t_lm_score" ->
-      """WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws
+      s"""WITH toks AS (SELECT doc_id, ${Words.tokensSql("text")} AS ws
                        FROM documents),
           tr AS (SELECT * FROM toks WHERE doc_id % 10 = 0),
           trbi AS (SELECT u.w1, u.w2, count(*) AS c12 FROM (

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{Curation, Retrieval, Temporal}
+import graft.operators.{Curation, Retrieval, Temporal, Words}
 
 /** Retrieval / temporal / training-shuffle query pack: BM25 lexical
   * retrieval, BPE merge-pair counting, the deterministic shard plan, and
@@ -231,7 +231,7 @@ object RetrievalOps {
       s"""SELECT $i AS merge_rank, $a AS left_sym, $b AS right_sym,
                  cnt AS n_occurrences FROM b$i""")
       .mkString("\n UNION ALL ")
-    s"""WITH wt AS (SELECT unnest(string_split_regex(trim(lower(text)), '\\s+')) AS w
+    s"""WITH wt AS (SELECT unnest(${Words.tokensSql("lower(text)")}) AS w
                     FROM documents),
        vv AS (SELECT w, count(*) AS n FROM wt WHERE w <> '' GROUP BY 1),
        v0 AS (SELECT array_to_string(
@@ -332,9 +332,9 @@ object RetrievalOps {
     * per-word token count + the doc-word explode) shared by the
     * t_bpe_apply and t_fertility oracles. */
   private val bpeEncodeCtes: String =
-    """mt(pairs) AS (SELECT ['t h','th e','i n','a n','an d','e r','o n','r e',
+    s"""mt(pairs) AS (SELECT ['t h','th e','i n','a n','an d','e r','o n','r e',
                                'the </w>','er </w>','o u','in g']),
-         wt AS (SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS w
+         wt AS (SELECT unnest(${Words.tokensSql("lower(text)")}) AS w
                 FROM documents),
          v AS (SELECT DISTINCT w FROM wt WHERE w <> ''),
          init AS (SELECT w, list_append([w[i] for i in range(1, length(w)+1)],
@@ -356,7 +356,7 @@ object RetrievalOps {
              FROM enc, mt)
            WHERE best IS NOT NULL),
          wtok AS (SELECT w, min(len(syms)) AS wtok FROM enc GROUP BY 1),
-         dw AS (SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS w
+         dw AS (SELECT doc_id, unnest(${Words.tokensSql("lower(text)")}) AS w
                 FROM documents)"""
 
   /** The shared BM25-lexical + dense-cosine -> reciprocal-rank-fusion
@@ -364,7 +364,7 @@ object RetrievalOps {
     * oracle publishes it directly; the sim_hybrid_mmr oracle appends
     * the normalization + recursive-CTE greedy-MMR replay on top. */
   private val hybridRrfCtes: String =
-    """d AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS ws
+    s"""d AS (SELECT doc_id, ${Words.tokensSql("lower(text)")} AS ws
                     FROM documents),
          toks AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS dl,
                          list_filter(ws, w -> w IN ('spark','window','hash','vector')) AS hit
@@ -469,11 +469,11 @@ object RetrievalOps {
     * replay the single-query oracle uses (that recursion was written
     * per-qid from the start — only the retrieval front end changes). */
   private val hybridMmrMultiOracle: String =
-    """WITH RECURSIVE
+    s"""WITH RECURSIVE
          q(query_id, term) AS (VALUES
            (CAST(1 AS BIGINT), 'spark'), (1, 'window'), (1, 'hash'), (1, 'vector'),
            (2, 'hash'), (2, 'data'), (2, 'model')),
-         d AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS ws
+         d AS (SELECT doc_id, ${Words.tokensSql("lower(text)")} AS ws
                FROM documents),
          toks AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS dl,
                          list_filter(ws, w -> w IN ('spark','window','hash',
@@ -542,7 +542,7 @@ object RetrievalOps {
   // same valid-vector guard as the LlmOps family (one definition)
   val oracles: Map[String, String] = LlmOps.guardVecs(Map(
     "sim_bm25_topk" ->
-      """WITH d AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS ws
+      s"""WITH d AS (SELECT doc_id, ${Words.tokensSql("lower(text)")} AS ws
                     FROM documents),
          toks AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS dl,
                          list_filter(ws, w -> w IN ('spark','window','hash','vector')) AS hit
@@ -580,11 +580,11 @@ object RetrievalOps {
       MmrGreedyReplaySql),
     "sim_hybrid_mmr_multi" -> hybridMmrMultiOracle,
     "sim_bm25_multi" ->
-      """WITH q(query_id, term) AS (VALUES
+      s"""WITH q(query_id, term) AS (VALUES
            (CAST(1 AS BIGINT), 'spark'), (1, 'window'), (1, 'hash'), (1, 'vector'),
            (2, 'hash'), (2, 'data'), (2, 'model'),
            (3, 'the'), (3, 'zzzunseen')),
-         d AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS ws
+         d AS (SELECT doc_id, ${Words.tokensSql("lower(text)")} AS ws
                FROM documents),
          toks AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS dl,
                          list_filter(ws, w -> w IN ('spark','window','hash','vector',
@@ -618,7 +618,7 @@ object RetrievalOps {
          FROM ranked WHERE rank <= 15
          ORDER BY query_id, rank""",
     "t_bpe_pairs" ->
-      """WITH wt AS (SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS wd
+      s"""WITH wt AS (SELECT unnest(${Words.tokensSql("lower(text)")}) AS wd
                      FROM documents),
          v AS (SELECT wd, count(*) AS n FROM wt WHERE wd <> '' GROUP BY 1),
          s AS (SELECT n, list_append([wd[i] for i in range(1, length(wd) + 1)],

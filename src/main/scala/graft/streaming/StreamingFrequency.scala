@@ -29,8 +29,7 @@ object StreamingFrequency {
     docs
       .withWatermark(tsCol, delay)
       .select(col(tsCol),
-        explode(split(trim(col(textCol)), "\\s+")).as("g"))
-      .filter(length(col("g")) > 0)
+        explode(graft.operators.Words.words(col(textCol))).as("g"))
       .groupBy(window(col(tsCol), windowDur))
       .agg(expr(s"approx_top_k(g, $k, $maxTracked)").as("tk"))
       .select(col("window.start").as("window_start"),

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 
+import graft.operators.Words
+
 /** Streaming near-duplicate CANDIDATE detection — the online form of the
   * batch MinHash+LSH pipeline (`Dedup.minhashSignaturesFast` →
   * `lshBandsFast` → `bucketPairs`), for an ingest that must flag "this
@@ -41,18 +43,16 @@ object StreamingNearDup {
   // public: the state encoder's generated code constructs/reads it
   case class BucketState(firstId: Long, lastMs: Long)
 
-  /** (doc_id, ts, band_id, code) — k minhashes over `shingleN`-word
-    * shingles, banded; the streaming-side mirror of
-    * minhashSignaturesFast + lshBandsFast (same xxhash64(i, g) family,
-    * same band coding), as one shuffle-free projection. */
+  /** (doc_id, ts, band_id, code) — k minhashes over the
+    * `Dedup.wordShingles` shingles (n = `shingleN`), banded; the
+    * streaming-side mirror of minhashSignaturesFast + lshBandsFast (same
+    * xxhash64(i, g) family, same band coding), as one shuffle-free
+    * projection. */
   private[graft] def bandCodes(docs: DataFrame, k: Int, bands: Int,
                                shingleN: Int): DataFrame = {
     val rowsPerBand = k / bands
     require(bands * rowsPerBand == k, s"bands=$bands must divide k=$k")
-    val ws = split(trim(col("text")), "\\s+")
-    val grams = expr(
-      s"""array_distinct(transform(sequence(1, size(__ws) - ${shingleN - 1}),
-            i -> concat_ws(' ', ${(0 until shingleN).map(o => s"element_at(__ws, i + $o)").mkString(", ")})))""")
+    val grams = array_distinct(Words.ngrams(col("__ws"), shingleN))
     val sigs = (0 until k).map(i =>
       expr(s"array_min(transform(__g, g -> xxhash64($i, g)))").as(s"s$i"))
     val bandCols = (0 until bands).map { b =>
@@ -60,7 +60,7 @@ object StreamingNearDup {
       struct(lit(b).as("band_id"), xxhash64(lit(b) +: sigCols: _*).as("code"))
     }
     docs
-      .select(col("doc_id"), col("ts"), ws.as("__ws"))
+      .select(col("doc_id"), col("ts"), Words.words(col("text")).as("__ws"))
       .filter(size(col("__ws")) >= shingleN)
       .select(col("doc_id"), col("ts"), grams.as("__g"))
       .select(col("doc_id") +: col("ts") +: sigs: _*)

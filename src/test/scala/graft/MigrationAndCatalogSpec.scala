@@ -479,6 +479,17 @@ class MigrationAndCatalogSpec extends SparkTestBase {
     }
   }
 
+  test("source guard: text splits into words only through Words.scala") {
+    // one home for the word rule and its oracle twin, so a fix to it
+    // lands for Spark and DuckDB together
+    val home = "graft/operators/Words.scala"
+    assert(mainSources.exists(_._1.endsWith(home)), s"$home not found under src/main/scala")
+    val split = """\bsplit\(trim\(|string_split_regex\(""".r
+    val stray = mainSources.collect { case (path, text)
+      if !path.endsWith(home) && split.findFirstIn(text).isDefined => path }
+    assert(stray.isEmpty, s"tokenize through graft.operators.Words, found in $stray")
+  }
+
   test("source guard: queries read vectors only through Tables.validEmbeddings") {
     // a raw read would hand NULL, NaN, wrong-dimension and duplicate-id
     // vectors to the ANN and hybrid operators

@@ -16,6 +16,19 @@ class PlanSpec extends SparkTestBase {
     SparkEntry.queries(name)(spark, dir)
       .queryExecution.explainString(FormattedMode)
 
+  test("ExplainAudit.normalize masks plan ids and lambda class names, nothing else") {
+    val raw =
+      """(7) Exchange [plan_id=186]
+        |Arguments: hashpartitioning(id#12L, 4), ENSURE_REQUIREMENTS, [plan_id=1042]
+        |Arguments: graft.operators.Retrieval$$$Lambda$5217/0x00007f8d15456c30@20eee47c, obj#88
+        |Arguments: graft.operators.Multimodal$$$Lambda/0x00007f8d15456c30@7a1b""".stripMargin
+    assert(ExplainAudit.normalize(raw) ==
+      """(7) Exchange [plan_id=_]
+        |Arguments: hashpartitioning(id#12L, 4), ENSURE_REQUIREMENTS, [plan_id=_]
+        |Arguments: graft.operators.Retrieval$$$Lambda, obj#88
+        |Arguments: graft.operators.Multimodal$$$Lambda""".stripMargin)
+  }
+
   test("q_keyset_scan pushes its pk-range filters into the parquet scan") {
     val p = planOf("q_keyset_scan")
     assert(p.contains("PushedFilters"), s"no pushdown section in plan:\n$p")

@@ -608,7 +608,11 @@ class StreamingSpec extends SparkTestBase {
     val docs = Seq(
       StreamingNearDup.Doc(1L, t(1), "alpha beta gamma delta epsilon zeta"),
       StreamingNearDup.Doc(2L, t(2), "one two three four five six seven"),
-      StreamingNearDup.Doc(3L, t(3), "alpha beta gamma delta epsilon zeta")).toDF()
+      StreamingNearDup.Doc(3L, t(3), "alpha beta gamma delta epsilon zeta"),
+      // tab-led: a raw split's "" head token would give the 2-word doc a
+      // shingle and the 6-word doc a phantom " one two"
+      StreamingNearDup.Doc(4L, t(4), "\tx y"),
+      StreamingNearDup.Doc(5L, t(5), "\tone two three four five six")).toDF()
     val stream = StreamingNearDup.bandCodes(docs, k = 8, bands = 4, shingleN = 3)
       .select($"doc_id", $"band_id", $"code").as[(Long, Int, Long)].collect().toSet
     val batch = Dedup.lshBandsFast(

@@ -1,0 +1,65 @@
+package graft
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions.{col, size}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+
+import graft.operators.Words
+
+/** The word rule the text operators share: tokens, words and word
+  * n-gram windows, pinned on the texts where they differ. */
+class WordsSpec extends SparkTestBase {
+
+  private val texts = Seq(
+    1L -> "",
+    2L -> "   ",
+    3L -> "\ta b",
+    4L -> "a\n\nb",
+    5L -> "a  b c",
+    // non-ASCII words; U+3000 is no whitespace to the rule
+    6L -> "naïve café\tüber 日本\u3000語 ünï",
+    7L -> "  x1 x2 x3 x4 x5 x6 ",
+    8L -> null)
+
+  /** An RDD-built frame: a `Seq.toDF` frame folds into a local relation
+    * evaluated on the driver, so it would never run the generated code
+    * the queries run. */
+  private lazy val docs = spark.createDataFrame(
+    spark.sparkContext.parallelize(texts.map { case (i, t) => Row(i, t) }, 2),
+    StructType(Seq(StructField("id", LongType), StructField("text", StringType))))
+
+  private def byId(df: DataFrame, c: Column): Map[Long, Seq[String]] =
+    df.select(col("id"), c).collect()
+      .map(r => r.getLong(0) -> Option(r.getSeq[String](1)).map(_.toSeq).orNull).toMap
+
+  test("Words.tokens: the raw split keeps a \"\" head token and [\"\"] for blank text") {
+    assert(byId(docs, Words.tokens(col("text"))) == Map(
+      1L -> Seq(""), 2L -> Seq(""), 3L -> Seq("", "a", "b"), 4L -> Seq("a", "b"),
+      5L -> Seq("a", "b", "c"), 6L -> Seq("naïve", "café", "über", "日本\u3000語", "ünï"),
+      7L -> Seq("x1", "x2", "x3", "x4", "x5", "x6"), 8L -> null))
+  }
+
+  test("Words.words: tokens without \"\"") {
+    assert(byId(docs, Words.words(col("text"))) == Map(
+      1L -> Seq(), 2L -> Seq(), 3L -> Seq("a", "b"), 4L -> Seq("a", "b"),
+      5L -> Seq("a", "b", "c"), 6L -> Seq("naïve", "café", "über", "日本\u3000語", "ünï"),
+      7L -> Seq("x1", "x2", "x3", "x4", "x5", "x6"), 8L -> null))
+  }
+
+  test("Words.ngrams: ordered n-word windows over the words, n = 1, 3, 5") {
+    val ws = docs.select(col("id"), Words.words(col("text")).as("ws"))
+    def grams(n: Int) =
+      byId(ws.filter(size(col("ws")) >= n), Words.ngrams(col("ws"), n))
+    assert(grams(1) == Map(
+      3L -> Seq("a", "b"), 4L -> Seq("a", "b"), 5L -> Seq("a", "b", "c"),
+      6L -> Seq("naïve", "café", "über", "日本\u3000語", "ünï"),
+      7L -> Seq("x1", "x2", "x3", "x4", "x5", "x6")))
+    assert(grams(3) == Map(
+      5L -> Seq("a b c"),
+      6L -> Seq("naïve café über", "café über 日本\u3000語", "über 日本\u3000語 ünï"),
+      7L -> Seq("x1 x2 x3", "x2 x3 x4", "x3 x4 x5", "x4 x5 x6")))
+    assert(grams(5) == Map(
+      6L -> Seq("naïve café über 日本\u3000語 ünï"),
+      7L -> Seq("x1 x2 x3 x4 x5", "x2 x3 x4 x5 x6")))
+  }
+}
