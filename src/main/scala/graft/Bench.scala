@@ -256,8 +256,7 @@ object Bench {
       }
 
     import org.apache.spark.sql.functions._
-    def vectors(): DataFrame = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    def vectors(): DataFrame = Tables.asVectors(Tables.embeddings(spark, sfDir))
     def docTexts(every: Int): DataFrame = Tables.documents(spark, sfDir)
       .filter(col("doc_id") % every === 0).select(col("text")).repartition(cpusN).cache()
     def centroidsOf(vecs: DataFrame): Array[(Int, Seq[Double])] =
@@ -439,9 +438,7 @@ object Bench {
   private def recallBlock(spark: SparkSession, sfDir: String, recallK: Int): Seq[(String, Double)] = {
     import org.apache.spark.sql.functions._
     import graft.operators.Similarity
-    val vecs = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .cache()
+    val vecs = Tables.asVectors(Tables.embeddings(spark, sfDir)).cache()
     try {
       val probes = vecs.filter(col("vec_id") < 5)
         .select(col("vec_id").as("probe_id"), col("v").as("p"))

@@ -137,6 +137,22 @@ object Tables {
     validate(spark.read.schema(probes.schema).parquet(s"$dir/embeddings.parquet"), probes)
   }
 
+  /** The vector read of the similarity queries: (vec_id, v:
+    * array<double>) over [[validEmbeddings]]. */
+  def vectors(spark: SparkSession, dir: String): DataFrame =
+    asVectors(validEmbeddings(spark, dir))
+
+  /** The (vec_id, v) projection of an embeddings frame, validated or
+    * raw. */
+  private[graft] def asVectors(embeddings: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    embeddings.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+  }
+
+  /** DuckDB twin of [[vectors]], (vec_id, e). Its `FROM embeddings` is
+    * guarded like every oracle's (`LlmOps.guardVecs`). */
+  val VectorsSql: String = "SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings"
+
   /** What [[validEmbeddings]] learns from a corpus before validating it:
     * the raw schema, the modal dimensionality (None: no usable vector)
     * and whether the dimension-valid rows repeat a vec_id. */

@@ -19,8 +19,8 @@ import org.apache.spark.sql.types._
   * candidate pair; this expression is one fused primitive loop (dot and
   * both norms accumulate in index order, each with the same left-to-right
   * `acc + x·y` / `acc + x·x` sequence as its SQL fold), so the quotient
-  * is the bit-identical double. Rounding stays OUTSIDE at the call sites
-  * (`round(cosine_sim(v, p), k)`), exactly where it was.
+  * is the bit-identical double. Rounding stays OUTSIDE, in the one
+  * rounded rule [[graft.operators.Vectors.cosine]].
   *
   * Null parity with the HOF form: any null element, a null array, or
   * length-mismatched inputs (zip_with pads the shorter side with null)

@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   * codes ([[graft.functions.L2Argmin]]), reconstruction, the probe
   * distance table ([[graft.functions.PqDistTable]]) and the ADC lookup
   * ([[graft.functions.PqAdc]]); the codebooks ride on the expressions
-  * (m·ksub·subDim doubles). */
+  * (m·ksub·subDim doubles). Their DuckDB twins, and the twin of
+  * [[Similarity.pqFit]], are on the companion object. */
 private[graft] final class Codebook private (val subs: Array[Array[(Int, Seq[Double])]]) {
   val m: Int = subs.length
   val subDim: Int = subs(0)(0)._2.size
@@ -77,4 +78,56 @@ private[graft] object Codebook {
     * or per-subspace. */
   def centroidMap(rows: Array[(Int, Seq[Double])]): Column =
     map(rows.flatMap { case (id, c) => Seq(lit(id), typedLit(c)) }.toIndexedSeq: _*)
+
+  /** Oracle twins. A codebook CTE is (sub, cluster, cv); `v` a list
+    * expression, `sub` and `cv` expressions over the codebook row. */
+
+  /** The 6-dp squared L2 between subspace `sub` of `v` and centroid `cv`
+    * — the [[code]] and [[distTable]] distance. */
+  def subL2Sql(v: String, sub: String, cv: String, subDim: Int): String =
+    s"""round(list_sum([($v[$sub * $subDim + i] - $cv[i]) *
+                                 ($v[$sub * $subDim + i] - $cv[i])
+                                 for i in range(1, ${subDim + 1})]), 6)"""
+
+  /** The [[code]]s of FROM item `src` (vec_id, e) under codebook `cb`:
+    * (sub, vec_id, code, e), ties to the lower cluster id. */
+  def pqEncodeSql(src: String, cb: String, subDim: Int): String =
+    s"""SELECT sub, vec_id, code, e FROM (
+              SELECT c.sub, v.vec_id, c.cluster AS code, v.e,
+                     row_number() OVER (PARTITION BY c.sub, v.vec_id ORDER BY
+                       ${subL2Sql("v.e", "c.sub", "c.cv", subDim)} ASC,
+                       c.cluster ASC) AS rn
+              FROM $src v, $cb c) WHERE rn = 1"""
+
+  /** [[Similarity.pqFit]] over CTE `sample` (vec_id, e) as CTEs prefixed
+    * `p`: the ksub lowest-id vectors seed every subspace, then `iters − 1`
+    * rounds of codes and 6-dp sub-vector means. The codebook is CTE
+    * `{p}cb`. */
+  def pqLloydSql(p: String, sample: String, m: Int, subDim: Int, ksub: Int,
+                 iters: Int): String = {
+    require(iters >= 1, "PQ training needs at least one assignment round")
+    def cb(r: Int) = if (r == iters - 1) s"${p}cb" else s"${p}c$r"
+    val seeds =
+      s"""${cb(0)} AS (
+            SELECT t.sub,
+                   row_number() OVER (PARTITION BY t.sub ORDER BY sd.vec_id) - 1 AS cluster,
+                   [sd.e[t.sub * $subDim + i] for i in range(1, ${subDim + 1})] AS cv
+            FROM (SELECT vec_id, e FROM $sample ORDER BY vec_id LIMIT $ksub) sd,
+                 range(0, $m) t(sub))"""
+    val rounds = (1 until iters).map { r =>
+      s"""${p}a$r AS (
+            SELECT sub, code AS cluster, e[sub * $subDim + 1:(sub + 1) * $subDim] AS sv
+            FROM (${pqEncodeSql(sample, cb(r - 1), subDim)})),
+          ${cb(r)} AS (${graft.operators.Vectors.dimMeansSql(s"${p}a$r",
+            Seq("sub", "cluster"), "sv", subDim, Some(6))})"""
+    }
+    (seeds +: rounds).mkString(",\n          ")
+  }
+
+  /** [[distTable]] rows of FROM item `probes` (keys…, p) under codebook
+    * `cb`: (keys…, sub, cluster, d). */
+  def distTableSql(probes: String, keys: Seq[String], cb: String, subDim: Int): String =
+    s"""SELECT ${keys.map("q." + _).mkString(", ")}, c.sub, c.cluster,
+                   ${subL2Sql("q.p", "c.sub", "c.cv", subDim)} AS d
+            FROM $probes q, $cb c"""
 }

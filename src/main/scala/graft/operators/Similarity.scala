@@ -20,13 +20,6 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   */
 object Similarity {
 
-  /** cosine(a, b) over array<double> columns named `v` and `p` — the
-    * native [[graft.functions.CosineSim]] expression (bit-identical to
-    * the interpreted HOF formulation it replaced; CosineSimSpec pins the
-    * equivalence element for element). */
-  private val cosineExpr: Column =
-    graft.functions.CosineSim.cosine_sim(col("v"), col("p"))
-
   /** Top-k by `score` per `parts` key (per probe unless given), ties to
     * the lower vec_id, through the one bounded cut [[TopK.cut]]. A null
     * OR NaN score can only arise from out-of-contract input (a null probe
@@ -48,21 +41,15 @@ object Similarity {
                      roundTo: Int = 4): DataFrame = {
     val scored = vectors.crossJoin(broadcast(probes))
       .filter(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"), round(cosineExpr, roundTo).as("cosine"))
+      .select(col("probe_id"), col("vec_id"), Vectors.cosine(col("v"), col("p"), roundTo).as("cosine"))
     scoreTopK(scored, k, col("cosine"), ascending = false)
   }
 
-  /** Elementwise-mean centroids per cluster: (cluster, c:array<double>).
-    * posexplode → per-dimension avg → re-assemble; one shuffle keyed on
-    * (cluster, dim) — dimension count bounds the state, not row count. */
+  /** Elementwise-mean centroids per cluster: (cluster, c:array<double>),
+    * the unrounded [[Vectors.dimMeans]]. */
   def centroids(vectors: DataFrame, clusterCol: String): DataFrame =
-    vectors
-      .select(col(clusterCol).as("cluster"), posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy(col("cluster"), col("dim"))
-      .agg(avg(col("x")).as("m"))
-      .groupBy(col("cluster"))
-      .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("pairs"))
-      .select(col("cluster"), expr("transform(pairs, q -> q.m)").as("c"))
+    Vectors.dimMeans(vectors, Seq(col(clusterCol).as("cluster")), col("v"), None)
+      .select(col("cluster"), col("c"))
 
   /** Deterministic ±1 hyperplane components from md5-hex parity — portable
     * across engines (the DuckDB oracle regenerates the identical planes
@@ -198,8 +185,7 @@ object Similarity {
     // shape precomputed norms per vector to dodge interpreted HOF cost —
     // the native loop makes that moot, and the fold sequences are the
     // same, so the 4-dp rounded cosine is bit-identical either way).
-    val cos = round(
-      graft.functions.CosineSim.cosine_sim(col("va"), col("vb")), roundTo)
+    val cos = Vectors.cosine(col("va"), col("vb"), roundTo)
     cands
       .join(vectors.select(col("vec_id").as("v1"), col("v").as("va")), "v1")
       .join(vectors.select(col("vec_id").as("v2"), col("v").as("vb")), "v2")
@@ -270,13 +256,9 @@ object Similarity {
     var cents: Array[(Int, Seq[Double])] =
       seedRows.zipWithIndex.map { case (v, i) => (i, v) }
     for (_ <- 1 until iters) {
-      cents = assignClusters(sample, cents)
-        .select(col("cluster"), posexplode(col("v")).as(Seq("dim", "x")))
-        .groupBy(col("cluster"), col("dim"))
-        .agg(round(avg(col("x")), 6).as("m"))
-        .groupBy(col("cluster"))
-        .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("pairs"))
-        .select(col("cluster").cast("int"), expr("transform(pairs, q -> q.m)").as("c"))
+      cents = Vectors.dimMeans(assignClusters(sample, cents), Seq(col("cluster")),
+          col("v"), Some(6))
+        .select(col("cluster").cast("int"), col("c"))
         .collect()
         .map(r => (r.getInt(0), r.getSeq[Double](1)))
         .sortBy(_._1)
@@ -401,7 +383,7 @@ object Similarity {
                           nprobe: Int): DataFrame = {
     val probeCent = probes.crossJoin(broadcast(cents))
       .select(col("probe_id"), col("p"), col("cluster"),
-        round(graft.functions.CosineSim.cosine_sim(col("c"), col("p")), 6).as("ccos"))
+        Vectors.cosine(col("c"), col("p"), 6).as("ccos"))
       // NaN guard (the r11 zero-norm class, at the ROUTING rank): a
       // degenerate centroid — the cluster −1 a zero-norm corpus vector
       // forms under assignClusters, or an all-zero mean — has ccos =
@@ -427,7 +409,7 @@ object Similarity {
     val scored = labeled
       .join(broadcast(routeProbes(probes, cents, nprobe)), "cluster")
       .filter(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"), round(cosineExpr, roundTo).as("cosine"))
+      .select(col("probe_id"), col("vec_id"), Vectors.cosine(col("v"), col("p"), roundTo).as("cosine"))
     scoreTopK(scored, k, col("cosine"), ascending = false)
   }
 
@@ -480,16 +462,9 @@ object Similarity {
           struct(lit(j).as("sub"), cb.code(col("v"), j).as("cluster"),
             expr(s"slice(v, ${j * subDim + 1}, $subDim)").as("sv"))
         }
-        val updated = pinned
-          .select(explode(array(perSubCols: _*)).as("e"))
-          .select(col("e.sub").as("sub"), col("e.cluster").as("cluster"),
-            posexplode(col("e.sv")).as(Seq("dim", "x")))
-          .groupBy(col("sub"), col("cluster"), col("dim"))
-          .agg(round(avg(col("x")), 6).as("mn"))
-          .groupBy(col("sub"), col("cluster"))
-          .agg(array_sort(collect_list(struct(col("dim"), col("mn")))).as("pairs"))
-          .select(col("sub"), col("cluster").cast("int"),
-            expr("transform(pairs, q -> q.mn)").as("c"))
+        val updated = Vectors.dimMeans(pinned.select(explode(array(perSubCols: _*)).as("e")),
+            Seq(col("e.sub").as("sub"), col("e.cluster").as("cluster")), col("e.sv"), Some(6))
+          .select(col("sub"), col("cluster").cast("int"), col("c"))
           .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
         cb = fitted(Array.tabulate(m) { j =>
           updated.collect { case (s, cid, c) if s == j => (cid, c) }
@@ -896,8 +871,8 @@ object Similarity {
     val centRows = collectCents(cents)
     val scored = assignClusters(vectors, centRows)
       .select(col("vec_id"), col("cluster"),
-        round(graft.functions.CosineSim.cosine_sim(col("v"),
-          element_at(Codebook.centroidMap(centRows), col("cluster"))), 6).as("__c6"))
+        Vectors.cosine(col("v"),
+          element_at(Codebook.centroidMap(centRows), col("cluster")), 6).as("__c6"))
       // NaN-guard BEFORE the ANSI cast (hostile-VECTORS wave): a
       // zero-norm vector's cosine is NaN by CosineSim's documented
       // contract, and CAST(NaN AS BIGINT) kills the whole job under
@@ -1015,7 +990,7 @@ object Similarity {
     val scored = vectors.select(col("vec_id"), col("v"))
       .join(broadcast(cleaned), "vec_id")
       .join(broadcast(probes.select(col("probe_id"), col("p"))), "probe_id")
-      .select(col("probe_id"), col("vec_id"), round(cosineExpr, roundTo).as("cosine"))
+      .select(col("probe_id"), col("vec_id"), Vectors.cosine(col("v"), col("p"), roundTo).as("cosine"))
     scoreTopK(scored, k, col("cosine"), ascending = false)
   }
 
@@ -1120,21 +1095,13 @@ object Similarity {
   /** Chunk→document mean pooling: many chunk embeddings per `docCol`
     * collapse to one per-dimension mean vector (the standard way a
     * long document gets ONE embedding from its chunk embeddings before
-    * doc-level similarity/dedup). Same (id, dim) aggregation shape as
-    * [[centroids]]: posexplode → avg per (doc, dim) rounded to `roundTo`
-    * (cross-engine determinism under any partial-agg order) →
-    * re-assemble — one shuffle whose state is bounded by docs·dim
-    * scalars, never whole vectors. Compose with [[l2Normalize]] for
-    * unit-length doc embeddings. */
+    * doc-level similarity/dedup): [[Vectors.dimMeans]] rounded to
+    * `roundTo` (cross-engine determinism under any partial-agg order).
+    * Compose with [[l2Normalize]] for unit-length doc embeddings. */
   def meanPool(chunks: DataFrame, docCol: String, vecCol: String = "v",
                roundTo: Int = 6): DataFrame =
-    chunks
-      .select(col(docCol).as("__doc"), posexplode(col(vecCol)).as(Seq("dim", "x")))
-      .groupBy(col("__doc"), col("dim"))
-      .agg(round(avg(col("x")), roundTo).as("m"))
-      .groupBy(col("__doc"))
-      .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("pairs"))
-      .select(col("__doc").as(docCol), expr("transform(pairs, q -> q.m)").as(vecCol))
+    Vectors.dimMeans(chunks, Seq(col(docCol).as("__doc")), col(vecCol), Some(roundTo))
+      .select(col("__doc").as(docCol), col("c").as(vecCol))
 
   /** Embedding-distribution drift between two corpus versions — the
     * monitoring number a continuously-ingesting pipeline publishes per
@@ -1152,21 +1119,14 @@ object Similarity {
     * Returns (strataCol, n_old, n_new, drift_cos). */
   /** Per-stratum centroid + count in ONE scan — the distribution profile
     * the drift operators compare: (strataCol, c: array<double> of
-    * `roundTo`-rounded dim means, n: stratum row count). Centroid AND
-    * count come out of the same (strata, dim) aggregation (the dim-0
-    * count IS the stratum's vector count — a separate groupBy-count
-    * branch would re-run the whole lineage); state is |strata|·dim,
-    * never corpus-sized. Store this as the reference profile a
+    * `roundTo`-rounded dim means, n: stratum row count), exactly
+    * [[Vectors.dimMeans]] (its dim-0 count IS the stratum's vector count
+    * — a separate groupBy-count branch would re-run the whole lineage).
+    * Store this as the reference profile a
     * [[graft.streaming.StreamingDrift]] monitor checks batches against. */
   def strataCentroids(df: DataFrame, strataCol: String,
                       vecCol: String = "v", roundTo: Int = 6): DataFrame =
-    df.select(col(strataCol), posexplode(col(vecCol)).as(Seq("dim", "x")))
-      .groupBy(col(strataCol), col("dim"))
-      .agg(round(avg(col("x")), roundTo).as("m"), count(lit(1)).as("c"))
-      .groupBy(col(strataCol))
-      .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("pairs"),
-        max(when(col("dim") === 0, col("c"))).as("n"))
-      .select(col(strataCol), expr("transform(pairs, q -> q.m)").as("c"), col("n"))
+    Vectors.dimMeans(df, Seq(col(strataCol)), col(vecCol), Some(roundTo))
 
   def embeddingDrift(oldV: DataFrame, newV: DataFrame, strataCol: String,
                      roundTo: Int = 6): DataFrame = {
@@ -1189,8 +1149,7 @@ object Similarity {
         // column; CollapseProject keeps a twice-referenced non-cheap
         // alias in its own Project rather than re-inlining it into both
         // branches of the NaN guard below
-        round(graft.functions.CosineSim.cosine_sim(col("__co"), col("__cn")),
-          roundTo).as("__dc"))
+        Vectors.cosine(col("__co"), col("__cn"), roundTo).as("__dc"))
       // undefined drift is NULL, never NaN: a zero-norm centroid (a
       // stratum of all-zero embeddings — a broken encoder, exactly
       // what this monitor watches for) gives cosine 0/0 = NaN, which
@@ -1241,7 +1200,7 @@ object Similarity {
     val hi = labeled.select(col("cluster"), col("vec_id").as("hi_id"), col("v").as("p"))
     lo.join(hi, Seq("cluster"))
       .filter(col("lo_id") < col("hi_id"))
-      .select(col("cluster"), col("hi_id"), round(cosineExpr, 6).as("cos"))
+      .select(col("cluster"), col("hi_id"), Vectors.cosine(col("v"), col("p"), 6).as("cos"))
       .filter(col("cos") >= threshold && !isnan(col("cos")))
       .groupBy(col("hi_id").as("removed_vec_id"))
       .agg(max(col("cluster")).as("cluster"),

@@ -249,8 +249,8 @@ object TextAnalysis {
       lit(0L), (acc, x) => acc + x)
     val thresholdMicro = math.round(threshold * 1e6)
     docs
-      .select(col(idCol), Words.tokens(col(textCol)).as("__ws"))
-      .filter(size(ws) >= 1 && element_at(ws, 1) =!= "")
+      .select(col(idCol), Words.words(col(textCol)).as("__ws"))
+      .filter(size(ws) >= 1)
       .select(col(idCol), size(ws).cast("long").as("n_tokens"), sumW.as("sum_w"))
       .select(col(idCol), col("n_tokens"), col("sum_w"),
         round(col("sum_w") / (col("n_tokens") * 1000.0), 6).as("score"),

@@ -8,7 +8,9 @@ import org.apache.spark.sql.functions._
   * [[graft.queries.Micros]]: how text becomes whitespace tokens, words
   * and word n-grams.
   *
-  *  - tokens: `split(trim(e), '\s+')`, raw. `trim` strips only spaces,
+  *  - tokens: `split(trim(e), '[ \t\n\f\r]+')`, raw. The class is
+  *    spelled out because the engines' `\s` differ: Java's holds the
+  *    vertical tab U+000B, RE2's does not. `trim` strips only spaces,
   *    so a text led by a tab or newline splits to a "" head token, and an
   *    empty or whitespace-only text splits to [""] (size 1, not 0).
   *  - words: the tokens without "". This is the rule for counts, grams
@@ -23,7 +25,7 @@ import org.apache.spark.sql.functions._
   * raw split) or is an open item; its oracle twin reads the same rule.
   */
 object Words {
-  def tokens(e: Column): Column = split(trim(e), "\\s+")
+  def tokens(e: Column): Column = split(trim(e), "[ \\t\\n\\f\\r]+")
 
   def words(e: Column): Column = filter(tokens(e), w => w =!= "")
 
@@ -38,7 +40,7 @@ object Words {
       i => concat_ws(" ", (0 until n).map(o => element_at(ws, i + o)): _*))
 
   /** Oracle twins; `e` and `ws` are self-contained SQL expressions. */
-  def tokensSql(e: String): String = s"string_split_regex(trim($e), '\\s+')"
+  def tokensSql(e: String): String = s"string_split_regex(trim($e), '[ \\t\\n\\f\\r]+')"
 
   def wordsSql(e: String): String = s"list_filter(${tokensSql(e)}, x -> x <> '')"
 

@@ -132,7 +132,9 @@ object EnvelopeOps {
         expr("cast(aes_decrypt(ciphertext, '0123456789abcdef', 'CBC', 'PKCS') as string)")
           .as("decrypted"),
         $"text")
-      .select($"doc_id", $"decrypted", ($"decrypted" === $"text").as("matches"))
+      // null-safe: a null text encrypts and decrypts to null, a round
+      // trip (the oracle reports true)
+      .select($"doc_id", $"decrypted", ($"decrypted" <=> $"text").as("matches"))
       .orderBy($"doc_id")
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{Dedup, Words}
+import graft.operators.{Codebook, Dedup, Vectors, Words}
 
 /** Training-data pipeline operators over the documents/embeddings tables:
   * dedup (exact, n-gram Jaccard, MinHash-LSH), text analysis, document
@@ -18,6 +18,13 @@ object LlmOps {
   private val MinhashK = 12
   private val LshBands = 4
   private val JaccardThreshold = 0.6
+
+  /** The fixtures' embedding width (their modal dimension): the one
+    * dimension every vector oracle reads. */
+  private[queries] final val EmbDim = 64
+
+  private def cosSql(a: String, b: String, dp: Int): String =
+    Vectors.cosineSql(a, b, EmbDim, dp)
 
   /** Exact dedup by content hash (SURVEY north-star: exact dedup).
     * Input is documents ∪ a re-keyed copy of every 7th doc — planted
@@ -134,8 +141,7 @@ object LlmOps {
     * and banding, checking algorithmic parity end to end. */
   def qEmbeddingCosineNearDups(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val vecs = Tables.validEmbeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    val vecs = Tables.vectors(spark, dir)
     graft.operators.Similarity.cosineNearDups(vecs, threshold = 0.4, dim = 64)
       .orderBy($"v1", $"v2")
   }
@@ -198,8 +204,7 @@ object LlmOps {
     * the ordered fold. */
   def qJlProject(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val vecs = Tables.validEmbeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    val vecs = Tables.vectors(spark, dir)
     graft.operators.Similarity.jlProject(vecs, inDim = 64, outDim = 16, seed = "r8")
       .select($"vec_id", posexplode($"y").as(Seq("j", "yj")))
       .orderBy($"vec_id", $"j")
@@ -209,8 +214,7 @@ object LlmOps {
     * vs full-dimension cosine is published by the Bench harness). */
   def qJlTopK(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val vecs = Tables.validEmbeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    val vecs = Tables.vectors(spark, dir)
     val probes = vecs.filter($"vec_id" < 5)
       .select($"vec_id".as("probe_id"), $"v".as("p"))
     graft.operators.Similarity.jlTopK(vecs, probes, inDim = 64, outDim = 16,
@@ -225,8 +229,7 @@ object LlmOps {
     * so ordering is reproducible across engines. */
   def qKnnCosine(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val vecs = Tables.validEmbeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    val vecs = Tables.vectors(spark, dir)
     val probes = vecs.filter($"vec_id" < 5)
       .select($"vec_id".as("probe_id"), $"v".as("p"))
     graft.operators.Similarity.bruteForceTopK(vecs, probes, k = 3)
@@ -243,8 +246,7 @@ object LlmOps {
     * scoring, and the per-cell ascending rank step for step. */
   def qClusterOutliers(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val vecs = Tables.validEmbeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v")).cache()
+    val vecs = Tables.vectors(spark, dir).cache()
     val cents = graft.operators.Similarity
       .kmeansFit(vecs.filter($"vec_id" % 4 === 0), k = 8, iters = 2)
     graft.operators.Similarity.clusterOutliers(vecs, cents, k = 5)
@@ -262,8 +264,7 @@ object LlmOps {
     * recursive CTE step for step. */
   def qMmrSelect(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val vecs = Tables.validEmbeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v")).cache()
+    val vecs = Tables.vectors(spark, dir).cache()
     val probes = vecs.filter($"vec_id" < 3)
       .select($"vec_id".as("probe_id"), $"v".as("p"))
     val top = graft.operators.Similarity.bruteForceTopK(vecs, probes, k = 15)
@@ -288,8 +289,7 @@ object LlmOps {
     // cached: k-means references the vector table once per iteration
     // (assignment) plus the final centroid/search passes — at cluster
     // scale this is persist(DISK_ONLY) or train-on-sample
-    val vecs = Tables.validEmbeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v")).cache()
+    val vecs = Tables.vectors(spark, dir).cache()
     val probes = vecs.filter($"vec_id" < 5)
       .select($"vec_id".as("probe_id"), $"v".as("p"))
     val labeled = graft.operators.Similarity
@@ -309,8 +309,7 @@ object LlmOps {
     * step. */
   def qIvfSampleTopK(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val vecs = Tables.validEmbeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v")).cache()
+    val vecs = Tables.vectors(spark, dir).cache()
     val cents = graft.operators.Similarity
       .kmeansFit(vecs.filter($"vec_id" % 4 === 0), k = 8, iters = 2)
     val probes = vecs.filter($"vec_id" < 5)
@@ -330,8 +329,7 @@ object LlmOps {
     * step for step. */
   def qPqTopK(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val vecs = Tables.validEmbeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v")).cache()
+    val vecs = Tables.vectors(spark, dir).cache()
     val cb = graft.operators.Similarity.pqFit(
       vecs.filter($"vec_id" % 4 === 0), m = 4, subDim = 16, ksub = 8, iters = 2)
     val enc = graft.operators.Similarity.pqEncode(vecs, cb)
@@ -381,8 +379,7 @@ object LlmOps {
     * ADC candidate cut, and the exact re-rank step for step. */
   def qPqRerank(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val vecs = Tables.validEmbeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v")).cache()
+    val vecs = Tables.vectors(spark, dir).cache()
     val cb = graft.operators.Similarity.pqFit(
       vecs.filter($"vec_id" % 4 === 0), m = 4, subDim = 16, ksub = 8, iters = 2)
     val enc = graft.operators.Similarity.pqEncode(vecs, cb)
@@ -405,8 +402,7 @@ object LlmOps {
     * cluster-pruned ADC sums step for step. */
   def qIvfPqTopK(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val vecs = Tables.validEmbeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v")).cache()
+    val vecs = Tables.vectors(spark, dir).cache()
     val sample = vecs.filter($"vec_id" % 4 === 0)
     val cents = graft.operators.Similarity.kmeansFit(sample, k = 8, iters = 2)
     val cb = graft.operators.Similarity.pqFit(sample, m = 4, subDim = 16, ksub = 8, iters = 2)
@@ -431,8 +427,7 @@ object LlmOps {
     * sums step for step. */
   def qIvfPqResTopK(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val vecs = Tables.validEmbeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v")).cache()
+    val vecs = Tables.vectors(spark, dir).cache()
     val sample = vecs.filter($"vec_id" % 4 === 0)
     val cents = graft.operators.Similarity.kmeansFit(sample, k = 8, iters = 2)
     val cb = graft.operators.Similarity.pqFitResidual(sample, cents,
@@ -453,8 +448,7 @@ object LlmOps {
     * agrees to the last bit before the one rounded division. */
   def qInt8TopK(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val vecs = Tables.validEmbeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    val vecs = Tables.vectors(spark, dir)
     val quant = graft.operators.Similarity.quantizeInt8(vecs).cache()
     val probes = quant.filter($"vec_id" < 5)
       .select($"vec_id".as("probe_id"), $"q".as("pq"))
@@ -623,8 +617,7 @@ object LlmOps {
     * and the within-cluster removal rule. */
   def qSemanticDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val vecs = Tables.validEmbeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    val vecs = Tables.vectors(spark, dir)
     val planted = vecs.filter($"vec_id" % 10 === 0)
       .select(($"vec_id" + 100000L).as("vec_id"),
         transform($"v", x => round(x + lit(0.01), 6)).as("v"))
@@ -642,8 +635,7 @@ object LlmOps {
     * within-cluster removal rule. */
   def qSemanticSample(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val vecs = Tables.validEmbeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    val vecs = Tables.vectors(spark, dir)
     val planted = vecs.filter($"vec_id" % 10 === 0)
       .select(($"vec_id" + 100000L).as("vec_id"),
         transform($"v", x => round(x + lit(0.01), 6)).as("v"))
@@ -853,43 +845,12 @@ object LlmOps {
     * per-candidate summed distance-table lookups) shared by the raw
     * ADC oracle and the exact-re-rank oracle. */
   private val pqAdcCtes: String =
-    """v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+    s"""v AS (${Tables.VectorsSql}),
           s AS (SELECT * FROM v WHERE vec_id % 4 = 0),
-          seeds AS (SELECT vec_id, e FROM s ORDER BY vec_id LIMIT 8),
-          c0 AS (
-            SELECT t.sub,
-                   row_number() OVER (PARTITION BY t.sub ORDER BY seeds.vec_id) - 1 AS cluster,
-                   [seeds.e[t.sub * 16 + i] for i in range(1, 17)] AS cv
-            FROM seeds, range(0, 4) t(sub)),
-          a1 AS (
-            SELECT sub, vec_id, e, cluster FROM (
-              SELECT c0.sub, s.vec_id, s.e, c0.cluster,
-                     row_number() OVER (PARTITION BY c0.sub, s.vec_id ORDER BY
-                       round(list_sum([(s.e[c0.sub * 16 + i] - c0.cv[i]) *
-                                       (s.e[c0.sub * 16 + i] - c0.cv[i])
-                                       for i in range(1, 17)]), 6) ASC,
-                       c0.cluster ASC) AS rn
-              FROM s, c0) WHERE rn = 1),
-          d1 AS (SELECT sub, cluster, i, round(avg(e[sub * 16 + i]), 6) AS mn
-                 FROM a1, range(1, 17) t(i) GROUP BY 1, 2, 3),
-          c1 AS (SELECT sub, cluster, list(mn ORDER BY i) AS cv
-                 FROM d1 GROUP BY 1, 2),
-          enc AS (
-            SELECT sub, vec_id, cluster AS code FROM (
-              SELECT c1.sub, v.vec_id, c1.cluster,
-                     row_number() OVER (PARTITION BY c1.sub, v.vec_id ORDER BY
-                       round(list_sum([(v.e[c1.sub * 16 + i] - c1.cv[i]) *
-                                       (v.e[c1.sub * 16 + i] - c1.cv[i])
-                                       for i in range(1, 17)]), 6) ASC,
-                       c1.cluster ASC) AS rn
-              FROM v, c1) WHERE rn = 1),
+          ${Codebook.pqLloydSql("", "s", 4, 16, 8, 2)},
+          enc AS (${Codebook.pqEncodeSql("v", "cb", 16)}),
           probes AS (SELECT vec_id AS pid, e AS p FROM v WHERE vec_id < 5),
-          ptab AS (
-            SELECT pid, sub, cluster,
-                   round(list_sum([(p[sub * 16 + i] - cv[i]) *
-                                   (p[sub * 16 + i] - cv[i])
-                                   for i in range(1, 17)]), 6) AS d
-            FROM probes, c1),
+          ptab AS (${Codebook.distTableSql("probes", Seq("pid"), "cb", 16)}),
           approx AS (
             SELECT t.pid AS probe_id, enc.vec_id, round(sum(t.d), 6) AS adist
             FROM enc JOIN ptab t ON enc.sub = t.sub AND enc.code = t.cluster
@@ -911,43 +872,12 @@ object LlmOps {
     }.mkString(",\n                   ")
     s"""ov AS (SELECT vec_id,
                    [$rotatedList] AS e
-            FROM (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)),
+            FROM (${Tables.VectorsSql})),
           os AS (SELECT * FROM ov WHERE vec_id % 4 = 0),
-          oseeds AS (SELECT vec_id, e FROM os ORDER BY vec_id LIMIT 8),
-          oc0 AS (
-            SELECT t.sub,
-                   row_number() OVER (PARTITION BY t.sub ORDER BY oseeds.vec_id) - 1 AS cluster,
-                   [oseeds.e[t.sub * 4 + i] for i in range(1, 5)] AS cv
-            FROM oseeds, range(0, 4) t(sub)),
-          oa1 AS (
-            SELECT sub, vec_id, e, cluster FROM (
-              SELECT oc0.sub, os.vec_id, os.e, oc0.cluster,
-                     row_number() OVER (PARTITION BY oc0.sub, os.vec_id ORDER BY
-                       round(list_sum([(os.e[oc0.sub * 4 + i] - oc0.cv[i]) *
-                                       (os.e[oc0.sub * 4 + i] - oc0.cv[i])
-                                       for i in range(1, 5)]), 6) ASC,
-                       oc0.cluster ASC) AS rn
-              FROM os, oc0) WHERE rn = 1),
-          od1 AS (SELECT sub, cluster, i, round(avg(e[sub * 4 + i]), 6) AS mn
-                 FROM oa1, range(1, 5) t(i) GROUP BY 1, 2, 3),
-          oc1 AS (SELECT sub, cluster, list(mn ORDER BY i) AS cv
-                 FROM od1 GROUP BY 1, 2),
-          oenc AS (
-            SELECT sub, vec_id, cluster AS code FROM (
-              SELECT oc1.sub, ov.vec_id, oc1.cluster,
-                     row_number() OVER (PARTITION BY oc1.sub, ov.vec_id ORDER BY
-                       round(list_sum([(ov.e[oc1.sub * 4 + i] - oc1.cv[i]) *
-                                       (ov.e[oc1.sub * 4 + i] - oc1.cv[i])
-                                       for i in range(1, 5)]), 6) ASC,
-                       oc1.cluster ASC) AS rn
-              FROM ov, oc1) WHERE rn = 1),
+          ${Codebook.pqLloydSql("o", "os", 4, 4, 8, 2)},
+          oenc AS (${Codebook.pqEncodeSql("ov", "ocb", 4)}),
           oprobes AS (SELECT vec_id AS pid, e AS p FROM ov WHERE vec_id < 5),
-          optab AS (
-            SELECT pid, sub, cluster,
-                   round(list_sum([(p[sub * 4 + i] - cv[i]) *
-                                   (p[sub * 4 + i] - cv[i])
-                                   for i in range(1, 5)]), 6) AS d
-            FROM oprobes, oc1),
+          optab AS (${Codebook.distTableSql("oprobes", Seq("pid"), "ocb", 4)}),
           oapprox AS (
             SELECT t.pid AS probe_id, oenc.vec_id, round(sum(t.d), 6) AS adist
             FROM oenc JOIN optab t ON oenc.sub = t.sub AND oenc.code = t.cluster
@@ -955,47 +885,19 @@ object LlmOps {
             GROUP BY 1, 2)"""
   }
 
-  /** The coarse (kc-prefixed, sample-trained) k-means + full-corpus
+  /** The coarse (k-prefixed, sample-trained) k-means + full-corpus
     * assignment + nprobe=2 routing CTE chain appended to the PQ encode
-    * chain for the IVFADC oracle — identical training arithmetic to the
-    * sim_ivf_sample oracle, names prefixed so the two chains coexist. */
+    * chain for the IVFADC oracles — the sim_ivf_sample fit, names
+    * prefixed so the two chains coexist. */
   private val ivfCoarseCtes: String =
-    """kc0 AS (
-            SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cluster, e AS cv
-            FROM s ORDER BY vec_id LIMIT 8),
-          ka1 AS (
-            SELECT vec_id, e, cluster FROM (
-              SELECT s.vec_id, s.e, kc.cluster,
-                     row_number() OVER (PARTITION BY s.vec_id ORDER BY
-                       round(
-                         list_sum([s.e[i] * kc.cv[i] for i in range(1, 65)]) /
-                         (sqrt(list_sum([s.e[i] * s.e[i] for i in range(1, 65)])) *
-                          sqrt(list_sum([kc.cv[i] * kc.cv[i] for i in range(1, 65)]))), 6)
-                       DESC, kc.cluster ASC) AS rn
-              FROM s, kc0 kc) WHERE rn = 1),
-          kd1 AS (SELECT cluster, i, round(avg(e[i]), 6) AS m
-                 FROM ka1, range(1, 65) t(i) GROUP BY 1, 2),
-          kc1 AS (SELECT cluster, list(m ORDER BY i) AS cv FROM kd1 GROUP BY 1),
-          ka2 AS (
-            SELECT vec_id, cluster FROM (
-              SELECT v.vec_id, kc.cluster,
-                     row_number() OVER (PARTITION BY v.vec_id ORDER BY
-                       round(
-                         list_sum([v.e[i] * kc.cv[i] for i in range(1, 65)]) /
-                         (sqrt(list_sum([v.e[i] * v.e[i] for i in range(1, 65)])) *
-                          sqrt(list_sum([kc.cv[i] * kc.cv[i] for i in range(1, 65)]))), 6)
-                       DESC, kc.cluster ASC) AS rn
-              FROM v, kc1 kc) WHERE rn = 1),
+    s"""${Vectors.lloydSql("k", "v", "s", 8, 2, EmbDim)},
           routed AS (
             SELECT pid, cluster FROM (
               SELECT p.pid, kc.cluster,
                      row_number() OVER (PARTITION BY p.pid ORDER BY
-                       round(
-                         list_sum([kc.cv[i] * p.p[i] for i in range(1, 65)]) /
-                         (sqrt(list_sum([kc.cv[i] * kc.cv[i] for i in range(1, 65)])) *
-                          sqrt(list_sum([p.p[i] * p.p[i] for i in range(1, 65)]))), 6)
+                       ${cosSql("kc.cv", "p.p", 6)}
                        DESC, kc.cluster ASC) AS crank
-              FROM probes p, kc1 kc) WHERE crank <= 2)"""
+              FROM probes p, kcents kc) WHERE crank <= 2)"""
 
   /** The shingle→signature→band CTE chain over an arbitrary (doc_id,
     * text) source CTE — same md5 minhash family as [[minhashPairCtes]],
@@ -1060,38 +962,30 @@ object LlmOps {
 
   val oracles: Map[String, String] = guardVecs(Map(
     "sim_drift" ->
-      """WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-         om AS (SELECT label, i, round(avg(v[i]), 6) AS m
-                FROM e, range(1, 65) r(i) WHERE vec_id % 2 = 0 GROUP BY label, i),
-         oc AS (SELECT label, list(m ORDER BY i) AS c FROM om GROUP BY label),
-         nm AS (SELECT label, i, round(avg(v[i]), 6) AS m
-                FROM e, range(1, 65) r(i) WHERE vec_id % 2 = 1 GROUP BY label, i),
-         nc AS (SELECT label, list(m ORDER BY i) AS c FROM nm GROUP BY label),
+      s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
+         eo AS (SELECT * FROM e WHERE vec_id % 2 = 0),
+         en AS (SELECT * FROM e WHERE vec_id % 2 = 1),
+         oc AS (${Vectors.dimMeansSql("eo", Seq("label"), "v", EmbDim, Some(6))}),
+         nc AS (${Vectors.dimMeansSql("en", Seq("label"), "v", EmbDim, Some(6))}),
          cnt AS (SELECT label,
                         count(*) FILTER (vec_id % 2 = 0) AS n_old,
                         count(*) FILTER (vec_id % 2 = 1) AS n_new
                  FROM e GROUP BY label)
          SELECT cnt.label, cnt.n_old, cnt.n_new,
-                round(list_sum([oc.c[i] * nc.c[i] for i in range(1, 65)]) /
-                      (sqrt(list_sum([oc.c[i] * oc.c[i] for i in range(1, 65)])) *
-                       sqrt(list_sum([nc.c[i] * nc.c[i] for i in range(1, 65)]))), 6)
-                  AS drift_cos
+                ${cosSql("oc.cv", "nc.cv", 6)} AS drift_cos
          FROM cnt LEFT JOIN oc ON cnt.label IS NOT DISTINCT FROM oc.label
                   LEFT JOIN nc ON cnt.label IS NOT DISTINCT FROM nc.label
          ORDER BY cnt.label""",
     "sim_mean_pool" ->
-      """WITH c AS (SELECT vec_id // 4 AS doc_id, embedding::DOUBLE[] AS e
+      s"""WITH c AS (SELECT vec_id // 4 AS doc_id, embedding::DOUBLE[] AS e
                     FROM embeddings),
-         md AS (SELECT doc_id, i, round(avg(e[i]), 6) AS m
-                FROM c, range(1, 65) r(i) GROUP BY doc_id, i),
-         mv AS (SELECT doc_id, list(m ORDER BY i) AS v FROM md GROUP BY doc_id),
-         nv AS (SELECT doc_id, v,
-                       sqrt(list_sum([v[i] * v[i] for i in range(1, 65)])) AS nrm
+         mv AS (${Vectors.dimMeansSql("c", Seq("doc_id"), "e", EmbDim, Some(6))}),
+         nv AS (SELECT doc_id, cv AS v, ${Vectors.normSql("cv", EmbDim)} AS nrm
                 FROM mv)
          SELECT doc_id, CAST(ri - 1 AS INTEGER) AS i,
                 CASE WHEN nrm = 0 THEN v[ri]
                      ELSE round(v[ri] / nrm, 6) END + 0.0 AS vi
-         FROM nv, range(1, 65) r(ri)
+         FROM nv, range(1, ${EmbDim + 1}) r(ri)
          ORDER BY doc_id, i""",
     "d_incr_exact" ->
       """WITH corpus AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 != 0),
@@ -1243,20 +1137,20 @@ object LlmOps {
          WHERE bit_count(xor(a.f, b.f)) <= 3
          ORDER BY d1, d2""",
     "d_embedding_cosine" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+      s"""WITH v AS (${Tables.VectorsSql}),
          hp AS (
            SELECT p, i,
                   CASE WHEN (strpos('0123456789abcdef',
                              substr(md5('hp:' || p || ':' || i), 1, 1)) - 1) % 2 = 0
                        THEN 1.0 ELSE -1.0 END AS s
-           FROM range(0, 16) r(p), range(0, 64) q(i)),
+           FROM range(0, 16) r(p), range(0, $EmbDim) q(i)),
          hpl AS (SELECT p, list(s ORDER BY i) AS sv FROM hp GROUP BY p),
          bits AS (
            -- per-row sequential list fold (i ascending), matching Spark's
            -- aggregate() order exactly — a group-sum over unnested dims
            -- would be summation-order-dependent under parallel aggregation
            SELECT v.vec_id, hpl.p,
-                  CASE WHEN round(list_sum([hpl.sv[i] * v.e[i] for i in range(1, 65)]), 6) >= 0
+                  CASE WHEN round(${Vectors.dotSql("hpl.sv", "v.e", EmbDim)}, 6) >= 0
                        THEN 1 ELSE 0 END AS bit
            FROM v, hpl),
          codes AS (
@@ -1269,9 +1163,7 @@ object LlmOps {
              ON a.band = b.band AND a.code = b.code AND a.vec_id < b.vec_id),
          verified AS (
            SELECT c.v1, c.v2,
-                  round(list_sum([a.e[i] * b.e[i] for i in range(1, 65)]) /
-                        (sqrt(list_sum([a.e[i] * a.e[i] for i in range(1, 65)])) *
-                         sqrt(list_sum([b.e[i] * b.e[i] for i in range(1, 65)]))), 4) AS cosine
+                  ${cosSql("a.e", "b.e", 4)} AS cosine
            FROM cand c JOIN v a ON a.vec_id = c.v1 JOIN v b ON b.vec_id = c.v2)
          SELECT v1, v2, cosine FROM verified
          WHERE cosine >= 0.4 AND NOT isnan(cosine) ORDER BY v1, v2""",
@@ -1466,40 +1358,37 @@ object LlmOps {
          FROM ranked WHERE rank <= 3
          ORDER BY probe_id, rank""",
     "sim_jl_project" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+      s"""WITH v AS (${Tables.VectorsSql}),
           jm AS (
             SELECT j, i,
                    (CASE WHEN (strpos('0123456789abcdef',
                                substr(md5('jl:r8:' || j || ':' || i), 1, 1)) - 1) % 2 = 0
                          THEN 1.0 ELSE -1.0 END) / sqrt(16) AS s
-            FROM range(0, 16) r(j), range(0, 64) q(i)),
+            FROM range(0, 16) r(j), range(0, $EmbDim) q(i)),
           jml AS (SELECT j, list(s ORDER BY i) AS sv FROM jm GROUP BY j)
           -- per-row sequential list fold (i ascending), matching the
           -- MatVec/aggregate() accumulation order exactly
           SELECT v.vec_id, CAST(jml.j AS INTEGER) AS j,
-                 round(list_sum([jml.sv[i] * v.e[i] for i in range(1, 65)]), 6) AS yj
+                 round(${Vectors.dotSql("jml.sv", "v.e", EmbDim)}, 6) AS yj
           FROM v, jml ORDER BY vec_id, j""",
     "sim_jl_topk" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+      s"""WITH v AS (${Tables.VectorsSql}),
           jm AS (
             SELECT j, i,
                    (CASE WHEN (strpos('0123456789abcdef',
                                substr(md5('jl:r8:' || j || ':' || i), 1, 1)) - 1) % 2 = 0
                          THEN 1.0 ELSE -1.0 END) / sqrt(16) AS s
-            FROM range(0, 16) r(j), range(0, 64) q(i)),
+            FROM range(0, 16) r(j), range(0, $EmbDim) q(i)),
           jml AS (SELECT j, list(s ORDER BY i) AS sv FROM jm GROUP BY j),
           proj AS (
             SELECT v.vec_id, jml.j,
-                   round(list_sum([jml.sv[i] * v.e[i] for i in range(1, 65)]), 6) AS yj
+                   round(${Vectors.dotSql("jml.sv", "v.e", EmbDim)}, 6) AS yj
             FROM v, jml),
           py AS (SELECT vec_id, list(yj ORDER BY j) AS y FROM proj GROUP BY vec_id),
           probes AS (SELECT vec_id AS probe_id, y AS p FROM py WHERE vec_id < 5),
           scored AS (
             SELECT probe_id, py.vec_id,
-                   round(
-                     list_sum([p[i] * y[i] for i in range(1, 17)]) /
-                     (sqrt(list_sum([y[i] * y[i] for i in range(1, 17)])) *
-                      sqrt(list_sum([p[i] * p[i] for i in range(1, 17)]))), 4) AS cosine
+                   ${Vectors.cosineSql("p", "y", 16, 4)} AS cosine
             FROM py, probes WHERE py.vec_id <> probe_id),
           ranked AS (
             SELECT probe_id, vec_id, cosine,
@@ -1510,14 +1399,10 @@ object LlmOps {
           FROM ranked WHERE rank <= 3
           ORDER BY probe_id, rank""",
     "sim_knn_cosine" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+      s"""WITH v AS (${Tables.VectorsSql}),
           probes AS (SELECT vec_id AS probe_id, e AS p FROM v WHERE vec_id < 5),
           scored AS (
-            SELECT probe_id, vec_id,
-                   round(
-                     list_sum([p[i] * e[i] for i in range(1, 65)]) /
-                     (sqrt(list_sum([e[i] * e[i] for i in range(1, 65)])) *
-                      sqrt(list_sum([p[i] * p[i] for i in range(1, 65)]))), 4) AS cosine
+            SELECT probe_id, vec_id, ${cosSql("p", "e", 4)} AS cosine
             FROM v, probes WHERE vec_id <> probe_id),
           ranked AS (
             SELECT probe_id, vec_id, cosine,
@@ -1528,15 +1413,11 @@ object LlmOps {
           FROM ranked WHERE rank <= 3
           ORDER BY probe_id, rank""",
     "sim_mmr_select" ->
-      """WITH RECURSIVE
-          v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+      s"""WITH RECURSIVE
+          v AS (${Tables.VectorsSql}),
           probes AS (SELECT vec_id AS probe_id, e AS p FROM v WHERE vec_id < 3),
           scored AS (
-            SELECT probe_id, vec_id,
-                   round(
-                     list_sum([p[i] * e[i] for i in range(1, 65)]) /
-                     (sqrt(list_sum([e[i] * e[i] for i in range(1, 65)])) *
-                      sqrt(list_sum([p[i] * p[i] for i in range(1, 65)]))), 4) AS cosine
+            SELECT probe_id, vec_id, ${cosSql("p", "e", 4)} AS cosine
             FROM v, probes WHERE vec_id <> probe_id),
           knn AS (
             SELECT probe_id, vec_id, cosine FROM (
@@ -1549,11 +1430,7 @@ object LlmOps {
                    FROM knn),
           ps AS (
             SELECT a.qid, a.id AS a, b.id AS b,
-                   CAST(round(round(
-                     list_sum([va.e[i] * vb.e[i] for i in range(1, 65)]) /
-                     (sqrt(list_sum([va.e[i] * va.e[i] for i in range(1, 65)])) *
-                      sqrt(list_sum([vb.e[i] * vb.e[i] for i in range(1, 65)]))),
-                     6) * 1000000, 0) AS BIGINT) AS sp
+                   CAST(round(${cosSql("va.e", "vb.e", 6)} * 1000000, 0) AS BIGINT) AS sp
             FROM cand a
             JOIN cand b ON a.qid = b.qid AND a.id <> b.id
             JOIN v va ON va.vec_id = a.id
@@ -1588,45 +1465,13 @@ object LlmOps {
           WHERE r <= len(chosen)
           ORDER BY probe_id, sel_rank""",
     "sim_ivf_topk" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-          c0 AS (
-            SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cluster, e AS cv
-            FROM v ORDER BY vec_id LIMIT 8),
-          a1 AS (
-            SELECT vec_id, e, cluster FROM (
-              SELECT v.vec_id, v.e, kc.cluster,
-                     row_number() OVER (PARTITION BY v.vec_id ORDER BY
-                       round(
-                         list_sum([v.e[i] * kc.cv[i] for i in range(1, 65)]) /
-                         (sqrt(list_sum([v.e[i] * v.e[i] for i in range(1, 65)])) *
-                          sqrt(list_sum([kc.cv[i] * kc.cv[i] for i in range(1, 65)]))), 6)
-                       DESC, kc.cluster ASC) AS rn
-              FROM v, c0 kc) WHERE rn = 1),
-          d1 AS (SELECT cluster, i, round(avg(e[i]), 6) AS m
-                 FROM a1, range(1, 65) t(i) GROUP BY 1, 2),
-          c1 AS (SELECT cluster, list(m ORDER BY i) AS cv FROM d1 GROUP BY 1),
-          a2 AS (
-            SELECT vec_id, e, cluster FROM (
-              SELECT v.vec_id, v.e, kc.cluster,
-                     row_number() OVER (PARTITION BY v.vec_id ORDER BY
-                       round(
-                         list_sum([v.e[i] * kc.cv[i] for i in range(1, 65)]) /
-                         (sqrt(list_sum([v.e[i] * v.e[i] for i in range(1, 65)])) *
-                          sqrt(list_sum([kc.cv[i] * kc.cv[i] for i in range(1, 65)]))), 6)
-                       DESC, kc.cluster ASC) AS rn
-              FROM v, c1 kc) WHERE rn = 1),
-          dims AS (
-            SELECT cluster, i, avg(e[i]) AS m
-            FROM a2, range(1, 65) t(i) GROUP BY 1, 2),
-          cents AS (SELECT cluster, list(m ORDER BY i) AS cv FROM dims GROUP BY 1),
+      s"""WITH v AS (${Tables.VectorsSql}),
+          ${Vectors.lloydSql("", "v", "v", 8, 2, EmbDim)},
+          means AS (${Vectors.dimMeansSql("labels", Seq("cluster"), "e", EmbDim, None)}),
           probes AS (SELECT vec_id AS pid, e AS p FROM v WHERE vec_id < 5),
           probe_cent AS (
-            SELECT pid, p, cluster,
-                   round(
-                     list_sum([cv[i] * p[i] for i in range(1, 65)]) /
-                     (sqrt(list_sum([cv[i] * cv[i] for i in range(1, 65)])) *
-                      sqrt(list_sum([p[i] * p[i] for i in range(1, 65)]))), 6) AS ccos
-            FROM probes, cents),
+            SELECT pid, p, cluster, ${cosSql("cv", "p", 6)} AS ccos
+            FROM probes, means),
           routed AS (
             SELECT pid, p, cluster FROM (
               SELECT pid, p, cluster,
@@ -1634,12 +1479,8 @@ object LlmOps {
                                         ORDER BY ccos DESC, cluster ASC) AS crank
               FROM probe_cent) WHERE crank <= 1),
           scored AS (
-            SELECT r.pid AS probe_id, a.vec_id,
-                   round(
-                     list_sum([a.e[i] * r.p[i] for i in range(1, 65)]) /
-                     (sqrt(list_sum([a.e[i] * a.e[i] for i in range(1, 65)])) *
-                      sqrt(list_sum([r.p[i] * r.p[i] for i in range(1, 65)]))), 4) AS cosine
-            FROM a2 a JOIN routed r ON a.cluster = r.cluster AND a.vec_id <> r.pid),
+            SELECT r.pid AS probe_id, a.vec_id, ${cosSql("a.e", "r.p", 4)} AS cosine
+            FROM labels a JOIN routed r ON a.cluster = r.cluster AND a.vec_id <> r.pid),
           ranked AS (
             SELECT probe_id, vec_id, cosine,
                    row_number() OVER (PARTITION BY probe_id
@@ -1649,42 +1490,13 @@ object LlmOps {
           FROM ranked WHERE rank <= 3
           ORDER BY probe_id, rank""",
     "sim_ivf_sample" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+      s"""WITH v AS (${Tables.VectorsSql}),
           s AS (SELECT * FROM v WHERE vec_id % 4 = 0),
-          c0 AS (
-            SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cluster, e AS cv
-            FROM s ORDER BY vec_id LIMIT 8),
-          a1 AS (
-            SELECT vec_id, e, cluster FROM (
-              SELECT s.vec_id, s.e, kc.cluster,
-                     row_number() OVER (PARTITION BY s.vec_id ORDER BY
-                       round(
-                         list_sum([s.e[i] * kc.cv[i] for i in range(1, 65)]) /
-                         (sqrt(list_sum([s.e[i] * s.e[i] for i in range(1, 65)])) *
-                          sqrt(list_sum([kc.cv[i] * kc.cv[i] for i in range(1, 65)]))), 6)
-                       DESC, kc.cluster ASC) AS rn
-              FROM s, c0 kc) WHERE rn = 1),
-          d1 AS (SELECT cluster, i, round(avg(e[i]), 6) AS m
-                 FROM a1, range(1, 65) t(i) GROUP BY 1, 2),
-          c1 AS (SELECT cluster, list(m ORDER BY i) AS cv FROM d1 GROUP BY 1),
-          a2 AS (
-            SELECT vec_id, e, cluster FROM (
-              SELECT v.vec_id, v.e, kc.cluster,
-                     row_number() OVER (PARTITION BY v.vec_id ORDER BY
-                       round(
-                         list_sum([v.e[i] * kc.cv[i] for i in range(1, 65)]) /
-                         (sqrt(list_sum([v.e[i] * v.e[i] for i in range(1, 65)])) *
-                          sqrt(list_sum([kc.cv[i] * kc.cv[i] for i in range(1, 65)]))), 6)
-                       DESC, kc.cluster ASC) AS rn
-              FROM v, c1 kc) WHERE rn = 1),
+          ${Vectors.lloydSql("", "v", "s", 8, 2, EmbDim)},
           probes AS (SELECT vec_id AS pid, e AS p FROM v WHERE vec_id < 5),
           probe_cent AS (
-            SELECT pid, p, kc.cluster,
-                   round(
-                     list_sum([kc.cv[i] * p[i] for i in range(1, 65)]) /
-                     (sqrt(list_sum([kc.cv[i] * kc.cv[i] for i in range(1, 65)])) *
-                      sqrt(list_sum([p[i] * p[i] for i in range(1, 65)]))), 6) AS ccos
-            FROM probes, c1 kc),
+            SELECT pid, p, kc.cluster, ${cosSql("kc.cv", "p", 6)} AS ccos
+            FROM probes, cents kc),
           routed AS (
             SELECT pid, p, cluster FROM (
               SELECT pid, p, cluster,
@@ -1692,12 +1504,8 @@ object LlmOps {
                                         ORDER BY ccos DESC, cluster ASC) AS crank
               FROM probe_cent) WHERE crank <= 1),
           scored AS (
-            SELECT r.pid AS probe_id, a.vec_id,
-                   round(
-                     list_sum([a.e[i] * r.p[i] for i in range(1, 65)]) /
-                     (sqrt(list_sum([a.e[i] * a.e[i] for i in range(1, 65)])) *
-                      sqrt(list_sum([r.p[i] * r.p[i] for i in range(1, 65)]))), 4) AS cosine
-            FROM a2 a JOIN routed r ON a.cluster = r.cluster AND a.vec_id <> r.pid),
+            SELECT r.pid AS probe_id, a.vec_id, ${cosSql("a.e", "r.p", 4)} AS cosine
+            FROM labels a JOIN routed r ON a.cluster = r.cluster AND a.vec_id <> r.pid),
           ranked AS (
             SELECT probe_id, vec_id, cosine,
                    row_number() OVER (PARTITION BY probe_id
@@ -1729,9 +1537,9 @@ object LlmOps {
           ivfapprox AS (
             SELECT t.pid AS probe_id, enc.vec_id, round(sum(t.d), 6) AS adist
             FROM enc
-            JOIN ka2 ON ka2.vec_id = enc.vec_id
+            JOIN klabels l ON l.vec_id = enc.vec_id
             JOIN ptab t ON enc.sub = t.sub AND enc.code = t.cluster
-            JOIN routed r ON r.pid = t.pid AND r.cluster = ka2.cluster
+            JOIN routed r ON r.pid = t.pid AND r.cluster = l.cluster
             WHERE enc.vec_id <> t.pid
             GROUP BY 1, 2),
           ranked AS (
@@ -1745,17 +1553,13 @@ object LlmOps {
     "sim_outliers" -> s"""WITH $pqAdcCtes,
           $ivfCoarseCtes,
           osc AS (
-            SELECT ka2.cluster, ka2.vec_id,
-                   CASE WHEN list_sum([v.e[i] * v.e[i] for i in range(1, 65)]) = 0
-                          OR list_sum([kc.cv[i] * kc.cv[i] for i in range(1, 65)]) = 0
+            SELECT l.cluster, l.vec_id,
+                   CASE WHEN ${Vectors.dotSql("l.e", "l.e", EmbDim)} = 0
+                          OR ${Vectors.dotSql("kc.cv", "kc.cv", EmbDim)} = 0
                         THEN NULL
-                        ELSE CAST(round(round(
-                     list_sum([v.e[i] * kc.cv[i] for i in range(1, 65)]) /
-                     (sqrt(list_sum([v.e[i] * v.e[i] for i in range(1, 65)])) *
-                      sqrt(list_sum([kc.cv[i] * kc.cv[i] for i in range(1, 65)]))),
-                     6) * 1000000, 0) AS BIGINT) END AS cos_ppm
-            FROM ka2 JOIN v USING (vec_id)
-                     JOIN kc1 kc ON kc.cluster = ka2.cluster),
+                        ELSE CAST(round(${cosSql("l.e", "kc.cv", 6)} * 1000000, 0) AS BIGINT)
+                   END AS cos_ppm
+            FROM klabels l JOIN kcents kc ON kc.cluster = l.cluster),
           oranked AS (
             SELECT cluster, vec_id, cos_ppm,
                    row_number() OVER (PARTITION BY cluster
@@ -1767,53 +1571,24 @@ object LlmOps {
     "sim_ivfpq_res_topk" -> s"""WITH $pqAdcCtes,
           $ivfCoarseCtes,
           rres AS (
-            SELECT v.vec_id, ka2.cluster AS ccl,
-                   [v.e[i] - kc.cv[i] for i in range(1, 65)] AS e
-            FROM v JOIN ka2 ON ka2.vec_id = v.vec_id
-                   JOIN kc1 kc ON kc.cluster = ka2.cluster),
+            SELECT l.vec_id, [l.e[i] - kc.cv[i] for i in range(1, ${EmbDim + 1})] AS e
+            FROM klabels l JOIN kcents kc ON kc.cluster = l.cluster),
           rs AS (SELECT vec_id, e FROM rres WHERE vec_id % 4 = 0),
-          rseeds AS (SELECT vec_id, e FROM rs ORDER BY vec_id LIMIT 8),
-          rc0 AS (
-            SELECT t.sub,
-                   row_number() OVER (PARTITION BY t.sub ORDER BY rseeds.vec_id) - 1 AS cluster,
-                   [rseeds.e[t.sub * 16 + i] for i in range(1, 17)] AS cv
-            FROM rseeds, range(0, 4) t(sub)),
-          ra1 AS (
-            SELECT sub, vec_id, e, cluster FROM (
-              SELECT rc0.sub, rs.vec_id, rs.e, rc0.cluster,
-                     row_number() OVER (PARTITION BY rc0.sub, rs.vec_id ORDER BY
-                       round(list_sum([(rs.e[rc0.sub * 16 + i] - rc0.cv[i]) *
-                                       (rs.e[rc0.sub * 16 + i] - rc0.cv[i])
-                                       for i in range(1, 17)]), 6) ASC,
-                       rc0.cluster ASC) AS rn
-              FROM rs, rc0) WHERE rn = 1),
-          rd1 AS (SELECT sub, cluster, i, round(avg(e[sub * 16 + i]), 6) AS mn
-                 FROM ra1, range(1, 17) t(i) GROUP BY 1, 2, 3),
-          rc1 AS (SELECT sub, cluster, list(mn ORDER BY i) AS cv
-                 FROM rd1 GROUP BY 1, 2),
-          renc AS (
-            SELECT sub, vec_id, ccl, cluster AS code FROM (
-              SELECT rc1.sub, rres.vec_id, rres.ccl, rc1.cluster,
-                     row_number() OVER (PARTITION BY rc1.sub, rres.vec_id ORDER BY
-                       round(list_sum([(rres.e[rc1.sub * 16 + i] - rc1.cv[i]) *
-                                       (rres.e[rc1.sub * 16 + i] - rc1.cv[i])
-                                       for i in range(1, 17)]), 6) ASC,
-                       rc1.cluster ASC) AS rn
-              FROM rres, rc1) WHERE rn = 1),
-          rptab AS (
-            SELECT r.pid, r.cluster AS ccl, c.sub, c.cluster,
-                   round(list_sum([(p.p[c.sub * 16 + i] - kc.cv[c.sub * 16 + i] - c.cv[i]) *
-                                   (p.p[c.sub * 16 + i] - kc.cv[c.sub * 16 + i] - c.cv[i])
-                                   for i in range(1, 17)]), 6) AS d
+          ${Codebook.pqLloydSql("r", "rs", 4, 16, 8, 2)},
+          renc AS (${Codebook.pqEncodeSql("rres", "rcb", 16)}),
+          rprobes AS (
+            SELECT r.pid, r.cluster AS ccl,
+                   [p.p[i] - kc.cv[i] for i in range(1, ${EmbDim + 1})] AS p
             FROM routed r
             JOIN probes p ON p.pid = r.pid
-            JOIN kc1 kc ON kc.cluster = r.cluster
-            CROSS JOIN rc1 c),
+            JOIN kcents kc ON kc.cluster = r.cluster),
+          rptab AS (${Codebook.distTableSql("rprobes", Seq("pid", "ccl"), "rcb", 16)}),
           rapprox AS (
             SELECT t.pid AS probe_id, renc.vec_id, round(sum(t.d), 6) AS adist
             FROM renc
+            JOIN klabels l ON l.vec_id = renc.vec_id
             JOIN rptab t ON renc.sub = t.sub AND renc.code = t.cluster
-                        AND renc.ccl = t.ccl
+                        AND l.cluster = t.ccl
             WHERE renc.vec_id <> t.pid
             GROUP BY 1, 2),
           rranked AS (
@@ -1832,11 +1607,7 @@ object LlmOps {
                                         ORDER BY adist ASC, vec_id ASC) AS crank
               FROM approx) WHERE crank <= 50),
           rescored AS (
-            SELECT c.probe_id, c.vec_id,
-                   round(
-                     list_sum([p.p[i] * b.e[i] for i in range(1, 65)]) /
-                     (sqrt(list_sum([b.e[i] * b.e[i] for i in range(1, 65)])) *
-                      sqrt(list_sum([p.p[i] * p.p[i] for i in range(1, 65)]))), 4) AS cosine
+            SELECT c.probe_id, c.vec_id, ${cosSql("p.p", "b.e", 4)} AS cosine
             FROM cand c JOIN v b ON b.vec_id = c.vec_id
                         JOIN probes p ON p.pid = c.probe_id),
           rranked AS (
@@ -1848,7 +1619,7 @@ object LlmOps {
           FROM rranked WHERE rank <= 3
           ORDER BY probe_id, rank""",
     "sim_int8_topk" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+      s"""WITH v AS (${Tables.VectorsSql}),
           s AS (SELECT vec_id, e,
                        list_max([abs(x) for x in e]) / 127 AS scale
                 FROM v),
@@ -1859,11 +1630,7 @@ object LlmOps {
                  FROM s),
           probes AS (SELECT vec_id AS pid, q AS pq FROM qt WHERE vec_id < 5),
           scored AS (
-            SELECT p.pid AS probe_id, t.vec_id,
-                   round(list_sum([t.q[i] * p.pq[i] for i in range(1, 65)]) /
-                         (sqrt(list_sum([t.q[i] * t.q[i] for i in range(1, 65)])) *
-                          sqrt(list_sum([p.pq[i] * p.pq[i] for i in range(1, 65)]))),
-                     4) AS cosine
+            SELECT p.pid AS probe_id, t.vec_id, ${cosSql("t.q", "p.pq", 4)} AS cosine
             FROM qt t, probes p WHERE t.vec_id <> p.pid),
           ranked AS (
             SELECT probe_id, vec_id, cosine,
@@ -1898,86 +1665,28 @@ object LlmOps {
                    AS keep
           FROM m ORDER BY doc_id""",
     "d_semantic_dedup" ->
-      """WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+      s"""WITH base AS (${Tables.VectorsSql}),
           pl AS (SELECT vec_id + 100000 AS vec_id, [round(x + 0.01, 6) for x in e] AS e
                  FROM base WHERE vec_id % 10 = 0),
           v AS (SELECT * FROM base UNION ALL SELECT * FROM pl),
-          c0 AS (
-            SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cluster, e AS cv
-            FROM v ORDER BY vec_id LIMIT 8),
-          a1 AS (
-            SELECT vec_id, e, cluster FROM (
-              SELECT v.vec_id, v.e, kc.cluster,
-                     row_number() OVER (PARTITION BY v.vec_id ORDER BY
-                       round(
-                         list_sum([v.e[i] * kc.cv[i] for i in range(1, 65)]) /
-                         (sqrt(list_sum([v.e[i] * v.e[i] for i in range(1, 65)])) *
-                          sqrt(list_sum([kc.cv[i] * kc.cv[i] for i in range(1, 65)]))), 6)
-                       DESC, kc.cluster ASC) AS rn
-              FROM v, c0 kc) WHERE rn = 1),
-          d1 AS (SELECT cluster, i, round(avg(e[i]), 6) AS m
-                 FROM a1, range(1, 65) t(i) GROUP BY 1, 2),
-          c1 AS (SELECT cluster, list(m ORDER BY i) AS cv FROM d1 GROUP BY 1),
-          a2 AS (
-            SELECT vec_id, e, cluster FROM (
-              SELECT v.vec_id, v.e, kc.cluster,
-                     row_number() OVER (PARTITION BY v.vec_id ORDER BY
-                       round(
-                         list_sum([v.e[i] * kc.cv[i] for i in range(1, 65)]) /
-                         (sqrt(list_sum([v.e[i] * v.e[i] for i in range(1, 65)])) *
-                          sqrt(list_sum([kc.cv[i] * kc.cv[i] for i in range(1, 65)]))), 6)
-                       DESC, kc.cluster ASC) AS rn
-              FROM v, c1 kc) WHERE rn = 1),
+          ${Vectors.lloydSql("", "v", "v", 8, 2, EmbDim)},
           p AS (
-            SELECT x.cluster, y.vec_id AS hi_id,
-                   round(
-                     list_sum([x.e[i] * y.e[i] for i in range(1, 65)]) /
-                     (sqrt(list_sum([x.e[i] * x.e[i] for i in range(1, 65)])) *
-                      sqrt(list_sum([y.e[i] * y.e[i] for i in range(1, 65)]))), 6) AS cos
-            FROM a2 x JOIN a2 y ON x.cluster = y.cluster AND x.vec_id < y.vec_id)
+            SELECT x.cluster, y.vec_id AS hi_id, ${cosSql("x.e", "y.e", 6)} AS cos
+            FROM labels x JOIN labels y ON x.cluster = y.cluster AND x.vec_id < y.vec_id)
           SELECT hi_id AS removed_vec_id, max(cluster) AS cluster,
                  count(*) AS n_near, max(cos) AS max_cos
           FROM p WHERE cos >= 0.95 AND NOT isnan(cos)
           GROUP BY 1 ORDER BY removed_vec_id""",
     "d_semantic_sample" ->
-      """WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+      s"""WITH base AS (${Tables.VectorsSql}),
           pl AS (SELECT vec_id + 100000 AS vec_id, [round(x + 0.01, 6) for x in e] AS e
                  FROM base WHERE vec_id % 10 = 0),
           v AS (SELECT * FROM base UNION ALL SELECT * FROM pl),
           s AS (SELECT * FROM v WHERE vec_id % 4 = 0),
-          c0 AS (
-            SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cluster, e AS cv
-            FROM s ORDER BY vec_id LIMIT 8),
-          a1 AS (
-            SELECT vec_id, e, cluster FROM (
-              SELECT s.vec_id, s.e, kc.cluster,
-                     row_number() OVER (PARTITION BY s.vec_id ORDER BY
-                       round(
-                         list_sum([s.e[i] * kc.cv[i] for i in range(1, 65)]) /
-                         (sqrt(list_sum([s.e[i] * s.e[i] for i in range(1, 65)])) *
-                          sqrt(list_sum([kc.cv[i] * kc.cv[i] for i in range(1, 65)]))), 6)
-                       DESC, kc.cluster ASC) AS rn
-              FROM s, c0 kc) WHERE rn = 1),
-          d1 AS (SELECT cluster, i, round(avg(e[i]), 6) AS m
-                 FROM a1, range(1, 65) t(i) GROUP BY 1, 2),
-          c1 AS (SELECT cluster, list(m ORDER BY i) AS cv FROM d1 GROUP BY 1),
-          a2 AS (
-            SELECT vec_id, e, cluster FROM (
-              SELECT v.vec_id, v.e, kc.cluster,
-                     row_number() OVER (PARTITION BY v.vec_id ORDER BY
-                       round(
-                         list_sum([v.e[i] * kc.cv[i] for i in range(1, 65)]) /
-                         (sqrt(list_sum([v.e[i] * v.e[i] for i in range(1, 65)])) *
-                          sqrt(list_sum([kc.cv[i] * kc.cv[i] for i in range(1, 65)]))), 6)
-                       DESC, kc.cluster ASC) AS rn
-              FROM v, c1 kc) WHERE rn = 1),
+          ${Vectors.lloydSql("", "v", "s", 8, 2, EmbDim)},
           p AS (
-            SELECT x.cluster, y.vec_id AS hi_id,
-                   round(
-                     list_sum([x.e[i] * y.e[i] for i in range(1, 65)]) /
-                     (sqrt(list_sum([x.e[i] * x.e[i] for i in range(1, 65)])) *
-                      sqrt(list_sum([y.e[i] * y.e[i] for i in range(1, 65)]))), 6) AS cos
-            FROM a2 x JOIN a2 y ON x.cluster = y.cluster AND x.vec_id < y.vec_id)
+            SELECT x.cluster, y.vec_id AS hi_id, ${cosSql("x.e", "y.e", 6)} AS cos
+            FROM labels x JOIN labels y ON x.cluster = y.cluster AND x.vec_id < y.vec_id)
           SELECT hi_id AS removed_vec_id, max(cluster) AS cluster,
                  count(*) AS n_near, max(cos) AS max_cos
           FROM p WHERE cos >= 0.95 AND NOT isnan(cos)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{Curation, Retrieval, Temporal, Words}
+import graft.operators.{Curation, Retrieval, Temporal, Vectors, Words}
 
 /** Retrieval / temporal / training-shuffle query pack: BM25 lexical
   * retrieval, BPE merge-pair counting, the deterministic shard plan, and
@@ -54,8 +54,7 @@ object RetrievalOps {
     val lex = Retrieval.bm25TopKMulti(Tables.documents(spark, dir),
         "doc_id", "text", queries, "query_id", k = Bm25K)
       .select($"query_id", $"doc_id", $"rank")
-    val vecs = Tables.validEmbeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    val vecs = Tables.vectors(spark, dir)
     val probeIds = queries.map(_._1 - 1L).distinct.sorted
     val probes = vecs.filter($"vec_id".isin(probeIds: _*))
       .select($"vec_id".as("probe_id"), $"v".as("p"))
@@ -391,14 +390,11 @@ object RetrievalOps {
          lex AS (SELECT doc_id,
                         row_number() OVER (ORDER BY score_ppm DESC, doc_id) AS r
                  FROM bm),
-         v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+         v AS (${Tables.VectorsSql}),
          p AS (SELECT e AS pe FROM v WHERE vec_id = 0),
          scored AS (
            SELECT vec_id,
-                  round(
-                    list_sum([pe[i] * e[i] for i in range(1, 65)]) /
-                    (sqrt(list_sum([e[i] * e[i] for i in range(1, 65)])) *
-                     sqrt(list_sum([pe[i] * pe[i] for i in range(1, 65)]))), 4) AS cosine
+                  ${Vectors.cosineSql("pe", "e", LlmOps.EmbDim, 4)} AS cosine
            FROM v, p WHERE vec_id <> 0),
          dense AS (
            SELECT doc_id, r FROM (
@@ -423,14 +419,11 @@ object RetrievalOps {
     * one-sided edit would hash-red one query and silently diverge the
     * other. */
   private val MmrGreedyReplaySql: String =
-    """
+    s"""
          ps AS (
            SELECT a.qid, a.id AS a, b.id AS b,
-                  CAST(round(round(
-                    list_sum([a.e[i] * b.e[i] for i in range(1, 65)]) /
-                    (sqrt(list_sum([a.e[i] * a.e[i] for i in range(1, 65)])) *
-                     sqrt(list_sum([b.e[i] * b.e[i] for i in range(1, 65)]))),
-                    6) * 1000000, 0) AS BIGINT) AS sp
+                  CAST(round(${Vectors.cosineSql("a.e", "b.e", LlmOps.EmbDim, 6)} * 1000000, 0)
+                       AS BIGINT) AS sp
            FROM cand a JOIN cand b ON a.qid = b.qid AND a.id <> b.id),
          sel AS (
            SELECT qid, 0 AS step, CAST([] AS BIGINT[]) AS chosen
@@ -504,16 +497,13 @@ object RetrievalOps {
                           row_number() OVER (PARTITION BY query_id
                                              ORDER BY score_ppm DESC, doc_id) AS r
                    FROM pq) WHERE r <= 15),
-         v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+         v AS (${Tables.VectorsSql}),
          pm(query_id, pvec) AS (VALUES (CAST(1 AS BIGINT), 0), (2, 1)),
          p AS (SELECT pm.query_id, pm.pvec, v.e AS pe
                FROM v JOIN pm ON v.vec_id = pm.pvec),
          scored AS (
            SELECT p.query_id, v.vec_id,
-                  round(
-                    list_sum([pe[i] * e[i] for i in range(1, 65)]) /
-                    (sqrt(list_sum([e[i] * e[i] for i in range(1, 65)])) *
-                     sqrt(list_sum([pe[i] * pe[i] for i in range(1, 65)]))), 4) AS cosine
+                  ${Vectors.cosineSql("pe", "e", LlmOps.EmbDim, 4)} AS cosine
            FROM v, p WHERE v.vec_id <> p.pvec),
          dense AS (
            SELECT query_id, doc_id, r FROM (

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.Similarity
+import graft.operators.{Similarity, Vectors}
 
 /** Streaming embedding-distribution drift monitor — the online form of
   * the batch `Similarity.embeddingDrift` corpus comparison (reference
@@ -49,8 +49,7 @@ object StreamingDrift {
       .select(coalesce(col("__sr"), col("__sb")).as(strataCol),
         coalesce(col("n_ref"), lit(0L)).as("n_ref"),
         coalesce(col("n_batch"), lit(0L)).as("n_batch"),
-        round(graft.functions.CosineSim.cosine_sim(col("__cr"), col("__cb")),
-          roundTo).as("drift_cos"))
+        Vectors.cosine(col("__cr"), col("__cb"), roundTo).as("drift_cos"))
 
   /** The alert cut over a [[driftVsProfile]] frame: batch-present strata
     * that are unknown to the profile (n_ref = 0), whose centroid drifted

@@ -1993,6 +1993,24 @@ class CurationSpec extends SparkTestBase {
     assert(!plan.contains("Exchange"), s"classifier must not shuffle:\n$plan")
   }
 
+  test("hashedLinearScore: tab-led, tab-trailed and newline-only docs score their words") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val w = graft.operators.TextAnalysis.pseudoWeights("lw:", 64)
+    // RDD-built: a Seq.toDF frame would fold into a driver-side local
+    // relation and never run the generated code the query runs
+    val docs = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(1L, "\ta b"), Row(2L, "a b\t"),
+        Row(3L, "\n"), Row(4L, "a b")), 2),
+      StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
+    val got = graft.operators.TextAnalysis
+      .hashedLinearScore(docs, "doc_id", "text", w, "fh:", threshold = 0.0)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert(got.keySet == Set(1L, 2L, 4L), s"a word-less doc drops, the others stay: $got")
+    // the edge whitespace is no token: each doc scores exactly "a b"
+    assert(got(1L) == got(4L) && got(2L) == got(4L) && got(4L)._1 == 2L, got)
+  }
+
   // --- salted skew join --------------------------------------------------
 
   test("saltedJoin ≡ plain join on a skewed fixture (hot key across all salts)") {

@@ -174,4 +174,17 @@ class EncryptionSpec extends SparkTestBase {
         }
     }
   }
+
+  test("env_encrypt_roundtrip: a null text round-trips, as its oracle reports") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val dir = java.nio.file.Files.createTempDirectory("enc_docs").toString
+    spark.createDataFrame(
+        spark.sparkContext.parallelize(Seq(Row(1L, "plain text"), Row(2L, null)), 1),
+        StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val got = graft.queries.EnvelopeOps.qEncryptRoundtrip(spark, dir)
+      .collect().map(r => r.getLong(0) -> (Option(r.getString(1)), r.get(2))).toMap
+    assert(got == Map(1L -> (Some("plain text"), true), 2L -> (None, true)), got)
+  }
 }

@@ -490,12 +490,26 @@ class MigrationAndCatalogSpec extends SparkTestBase {
     assert(stray.isEmpty, s"tokenize through graft.operators.Words, found in $stray")
   }
 
+  test("source guard: vector rules are spelled only in Vectors.scala and Codebook.scala") {
+    // one home for cosine, dimension means and the fixtures' dimension,
+    // each beside its DuckDB twin, so a fix lands in both engines at once
+    val homes = Seq("graft/operators/Vectors.scala", "graft/operators/Codebook.scala")
+    homes.foreach(h => assert(mainSources.exists(_._1.endsWith(h)), s"$h not found under src/main/scala"))
+    // the fixture dimension's 1-based range, the SQL norm, and the
+    // posexplode of a dimension mean
+    Seq("""range\(1, 65\)""", """sqrt\(list_sum\(""", """posexplode\(.*\)\.as\(Seq\("dim"""").foreach { p =>
+      val stray = mainSources.collect { case (path, text)
+        if !homes.exists(path.endsWith) && p.r.findFirstIn(text).isDefined => path }
+      assert(stray.isEmpty, s"spell $p through graft.operators.Vectors, found in $stray")
+    }
+  }
+
   test("source guard: queries read vectors only through Tables.validEmbeddings") {
     // a raw read would hand NULL, NaN, wrong-dimension and duplicate-id
     // vectors to the ANN and hybrid operators
     val queries = mainSources.filter(_._1.contains("graft/queries/"))
-    assert(queries.exists(_._2.contains("Tables.validEmbeddings(")),
-      "no query under graft/queries reads Tables.validEmbeddings")
+    assert(queries.exists(_._2.contains("Tables.vectors(")),
+      "no query under graft/queries reads Tables.vectors")
     val raw = queries.collect { case (path, text) if text.contains("Tables.embeddings(") => path }
     assert(raw.isEmpty, s"read vectors through Tables.validEmbeddings, not Tables.embeddings, in $raw")
   }

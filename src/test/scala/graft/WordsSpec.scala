@@ -19,7 +19,9 @@ class WordsSpec extends SparkTestBase {
     // non-ASCII words; U+3000 is no whitespace to the rule
     6L -> "naïve café\tüber 日本\u3000語 ünï",
     7L -> "  x1 x2 x3 x4 x5 x6 ",
-    8L -> null)
+    8L -> null,
+    // a vertical tab is no whitespace to the rule: RE2's \s lacks it
+    9L -> "a\u000Bb")
 
   /** An RDD-built frame: a `Seq.toDF` frame folds into a local relation
     * evaluated on the driver, so it would never run the generated code
@@ -36,14 +38,14 @@ class WordsSpec extends SparkTestBase {
     assert(byId(docs, Words.tokens(col("text"))) == Map(
       1L -> Seq(""), 2L -> Seq(""), 3L -> Seq("", "a", "b"), 4L -> Seq("a", "b"),
       5L -> Seq("a", "b", "c"), 6L -> Seq("naïve", "café", "über", "日本\u3000語", "ünï"),
-      7L -> Seq("x1", "x2", "x3", "x4", "x5", "x6"), 8L -> null))
+      7L -> Seq("x1", "x2", "x3", "x4", "x5", "x6"), 8L -> null, 9L -> Seq("a\u000Bb")))
   }
 
   test("Words.words: tokens without \"\"") {
     assert(byId(docs, Words.words(col("text"))) == Map(
       1L -> Seq(), 2L -> Seq(), 3L -> Seq("a", "b"), 4L -> Seq("a", "b"),
       5L -> Seq("a", "b", "c"), 6L -> Seq("naïve", "café", "über", "日本\u3000語", "ünï"),
-      7L -> Seq("x1", "x2", "x3", "x4", "x5", "x6"), 8L -> null))
+      7L -> Seq("x1", "x2", "x3", "x4", "x5", "x6"), 8L -> null, 9L -> Seq("a\u000Bb")))
   }
 
   test("Words.ngrams: ordered n-word windows over the words, n = 1, 3, 5") {
@@ -53,7 +55,7 @@ class WordsSpec extends SparkTestBase {
     assert(grams(1) == Map(
       3L -> Seq("a", "b"), 4L -> Seq("a", "b"), 5L -> Seq("a", "b", "c"),
       6L -> Seq("naïve", "café", "über", "日本\u3000語", "ünï"),
-      7L -> Seq("x1", "x2", "x3", "x4", "x5", "x6")))
+      7L -> Seq("x1", "x2", "x3", "x4", "x5", "x6"), 9L -> Seq("a\u000Bb")))
     assert(grams(3) == Map(
       5L -> Seq("a b c"),
       6L -> Seq("naïve café über", "café über 日本\u3000語", "über 日本\u3000語 ünï"),
