@@ -29,7 +29,8 @@ object Vectors {
 
   /** Per-key dimension means of vector column `v`: (keys…, c, n), `c`
     * the means in dim order (each rounded to `roundTo` places, if given)
-    * and `n` the key's dim-0 row count, its vector count. `keys` are
+    * and `n` the key's dim-0 row count, its vector count (the optimizer
+    * prunes the count from the plan of a caller that drops it). `keys` are
     * selected as given (alias them to plain names other than dim, x, m,
     * c, n and pairs). A null or empty vector adds nothing; a ragged row
     * adds only to the dims it has. */
