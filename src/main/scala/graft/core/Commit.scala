@@ -18,14 +18,21 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *    committer config (`marksuccessfuljobs=false` would hide every
   *    commit), and an object store whose rename copies object by object
   *    can land it before the data files;
-  *  - a one-line pointer file (the dir to read, a high-water mark) is
-  *    replaced by write-temp, delete, rename ([[writePointer]]), so a
-  *    reader never sees a partial pointer. A crash between the delete
-  *    and the rename leaves only `<name>.tmp`, which [[readPointer]]
-  *    reads in its place;
+  *  - a one-line pointer file (the dir a consumer reads) is replaced by
+  *    write-temp, delete, rename ([[writePointer]]), so a reader never
+  *    sees a partial pointer. A crash between the delete and the rename
+  *    leaves only `<name>.tmp`, which [[readPointer]] reads in its
+  *    place. This is the only rename of the library;
   *  - [[vacuum]] counts COMMITTED dirs against its retention, so debris
   *    from a dead attempt never pushes out the copy a crash fallback
   *    depends on.
+  *
+  * The streaming state machines add the as-of-batch rule: batch b reads
+  * only the committed dirs strictly older than b, never a pointer, and
+  * [[fence]] refuses b while a newer committed dir exists. A replay
+  * (same id) reads exactly what its first attempt read and overwrites
+  * the same dirs in place. A seed or backfill is a batch too, so the
+  * stream's ids must come after its ids.
   *
   * What a missing pointer or a dangling target means is the caller's
   * policy; the protocol only reports what is on disk. */
@@ -52,6 +59,15 @@ object Commit {
     * marker. */
   def committed(fs: FileSystem, root: Path, prefix: String): Seq[Long] =
     ids(fs, root, prefix).filter(n => isCommitted(fs, new Path(root, s"${prefix}_$n")))
+
+  /** The as-of-batch run fence: a committed id `newest` above `batchId`
+    * means another run (a reset checkpoint restarting ids at 0) drives
+    * the state, which would read around its newest state and mix runs. */
+  def fence(newest: Option[Long], batchId: Long, root: String): Unit =
+    newest.foreach(n => require(batchId >= n,
+      s"state at $root was built by a run that already processed batch $n; " +
+        s"refusing batch $batchId — a reset checkpoint must get a fresh state " +
+        "directory, or it silently corrupts the state"))
 
   /** Replace `root/<name>` with `value`: write `<name>.tmp`, delete the
     * old pointer, rename the temp onto it. A refused rename throws — it

@@ -53,14 +53,6 @@ object Curation {
         round(col("i") / col("bn"), 6).as("coverage"))
   }
 
-  /** First 6 hex digits of md5(salt || key) as a long in [0, 16^6) — the
-    * engine-portable uniform draw shared by sampling ([[sampleKeep]]) and
-    * shard assignment ([[packBatchesSharded]]); [[shardAssign]] applies
-    * the same digits to its materialized sort_key. One definition so the
-    * cross-engine formula can't drift between call sites. */
-  private def md5Draw(salt: String, key: Column): Column =
-    conv(substring(md5(concat(lit(salt), key)), 1, 6), 16, 10).cast("long")
-
   /** Deterministic keep/drop decision for hash-based stratified sampling
     * (language/domain mixing): keep a row iff the uniform draw derived
     * from md5(salt || key) is below the stratum's rate. The hash is the
@@ -71,7 +63,7 @@ object Curation {
                  strataCol: org.apache.spark.sql.Column,
                  rates: Map[String, Double], defaultRate: Double,
                  salt: String): org.apache.spark.sql.Column = {
-    val u = md5Draw(salt, keyExpr)
+    val u = HashDraw.u24(salt, keyExpr)
     val rate = rates.foldLeft(lit(defaultRate)) { case (acc, (k, r)) =>
       when(strataCol === k, lit(r)).otherwise(acc)
     }
@@ -100,7 +92,7 @@ object Curation {
     */
   def weightedSample(docs: DataFrame, idCol: String, weightCol: String,
                      k: Int, salt: String): DataFrame = {
-    val u = (md5Draw(salt, col(idCol).cast("string")) + lit(1L)).cast("double") /
+    val u = (HashDraw.u24(salt, col(idCol).cast("string")) + lit(1L)).cast("double") /
       lit((1L << 24).toDouble)
     val keyed = docs
       .filter(col(weightCol) > 0)
@@ -186,7 +178,7 @@ object Curation {
                          salt: String): DataFrame = {
     require(nShards >= 1, "nShards must be positive")
     require(budget > 0, s"token budget must be positive, got $budget")
-    val shard = md5Draw(salt, col(orderCol).cast("string")) % nShards
+    val shard = HashDraw.u24(salt, col(orderCol).cast("string")) % nShards
     val w = Window.partitionBy(col(strataCol), col("shard_id"))
       .orderBy(col(orderCol)).rowsBetween(Window.unboundedPreceding, 0)
     val sharded = rows.withColumn("shard_id", shard)
@@ -370,7 +362,7 @@ object Curation {
       floor(col("weight") * totalK).cast("long").as("__kg")))
     val keyed = docs.select(col(strataCol), col(idCol))
       .join(quotas, strataCol)
-      .withColumn("__u", md5Draw(salt, col(idCol).cast("string")))
+      .withColumn("__u", HashDraw.u24(salt, col(idCol).cast("string")))
     // a rank never exceeds Int.MaxValue, so the clamp keeps every quota
     TopK.cut(keyed, totalK.max(0L).min(Int.MaxValue).toInt, Seq(col(strataCol)),
         Seq(col("__u").desc, col(idCol).asc), "rank")
@@ -442,7 +434,7 @@ object Curation {
       s"fractions must sum to 1, got ${fractions.map(_._2).sum}")
     val thresholds = fractions.map(_._2).scanLeft(0.0)(_ + _).drop(1)
       .map(c => math.floor(c * (1L << 24)).toLong)
-    val u = md5Draw(salt, col(idCol).cast("string"))
+    val u = HashDraw.u24(salt, col(idCol).cast("string"))
     val first = when(u < thresholds.head, fractions.head._1)
     val split = fractions.tail.init.zip(thresholds.tail.init)
       .foldLeft(first) { case (acc, ((n, _), t)) => acc.when(u < t, n) }
@@ -547,7 +539,7 @@ object Curation {
     docs
       .withColumn("sort_key", md5(concat(lit(salt), col(idCol).cast("string"))))
       .withColumn("shard_id",
-        conv(substring(col("sort_key"), 1, 6), 16, 10).cast("long") % nShards)
+        HashDraw.hexU24(col("sort_key")) % nShards)
   }
 
   /** Gap-based sessionization: a new session starts when the time since

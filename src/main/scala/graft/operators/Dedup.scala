@@ -105,8 +105,7 @@ object Dedup {
     val sampled =
       if (selectMod == 1) hashed
       else if (portableHash)
-        hashed.filter(
-          conv(substring(col("h"), 1, 6), 16, 10).cast("long") % selectMod === 0)
+        hashed.filter(HashDraw.hexU24(col("h")) % selectMod === 0)
       else hashed.filter(pmod(col("h"), lit(selectMod.toLong)) === 0)
     sampled
       .withColumn("__rn", row_number().over(first))

@@ -42,12 +42,14 @@ object TextAnalysis {
 
   /** BPE-ish token classing over raw text: alphabetic words, numbers,
     * and symbol tokens, counted separately (token-count estimation
-    * without a real tokenizer in the loop). */
+    * without a real tokenizer in the loop). A symbol is any character
+    * but a letter, a digit or [[Words]]' whitespace class, spelled out
+    * because Java's `\s` holds the vertical tab and RE2's does not. */
   def tokenClassCounts(text: Column): (Column, Column, Column) = {
     val lowered = lower(text)
     (size(regexp_extract_all(lowered, lit("[a-z]+"), lit(0))).cast("long"),
       size(regexp_extract_all(lowered, lit("[0-9]+"), lit(0))).cast("long"),
-      size(regexp_extract_all(lowered, lit("[^a-z0-9\\s]"), lit(0))).cast("long"))
+      size(regexp_extract_all(lowered, lit("[^a-z0-9 \\t\\n\\f\\r]"), lit(0))).cast("long"))
   }
 
   /** Free-text PII patterns: deliberately simple regexes (no lookaround,
@@ -217,8 +219,8 @@ object TextAnalysis {
     * place — the text never leaves its scan partition).
     *
     * Determinism contract (what makes an SQL oracle replay it exactly):
-    * the bucket is the portable md5-u24 draw (`u24(salt ‖ token) mod
-    * buckets` — same family as [[graft.operators.Curation]]'s sampling),
+    * the bucket is the portable md5-u24 draw (`HashDraw.u24(salt, token)
+    * mod buckets` — the draw of [[graft.operators.Curation]]'s sampling),
     * weights are INTEGERS (a learned float model quantizes to
     * `round(w·1000)` — the same trick [[lmScore]] uses with ppm), so the
     * fold sum `sum_w` is exact in any order, and `label` is decided by
@@ -242,8 +244,7 @@ object TextAnalysis {
     val ws = col("__ws")
     val w = typedLit(weights.toSeq)
     val bucket = (t: Column) =>
-      pmod(conv(substring(md5(concat(lit(salt), t)), 1, 6), 16, 10).cast("long"),
-        lit(nb.toLong))
+      pmod(HashDraw.u24(salt, t), lit(nb.toLong))
     val sumW = aggregate(
       transform(ws, t => element_at(w, (bucket(t) + 1).cast("int")).cast("long")),
       lit(0L), (acc, x) => acc + x)

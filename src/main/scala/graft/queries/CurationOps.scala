@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{Curation, Frequency, Words}
+import graft.operators.{Curation, Frequency, HashDraw, Words}
 
 /** Corpus-curation query pack: contamination, mixing, packing, profiling,
   * sessionization — the operations that sit between raw dedup and actual
@@ -486,7 +486,7 @@ object CurationOps {
                 FROM s, d),
          k AS (SELECT source, CAST(floor(weight * 200) AS BIGINT) AS kg FROM wt),
          u AS (SELECT doc_id, source,
-                      ${LlmOps.u24Sql("'rb8:' || doc_id")} AS u24
+                      ${HashDraw.u24Sql("rb8:", "doc_id")} AS u24
                FROM documents),
          r AS (SELECT source, doc_id,
                       row_number() OVER (PARTITION BY source
@@ -499,7 +499,7 @@ object CurationOps {
     "t_split_hash" ->
       s"""WITH u AS (
            SELECT doc_id,
-                  ${LlmOps.u24Sql("'sp8:' || doc_id")} AS u24
+                  ${HashDraw.u24Sql("sp8:", "doc_id")} AS u24
            FROM documents)
          SELECT doc_id,
                 CASE WHEN u24 < 13421772 THEN 'train'
@@ -518,7 +518,7 @@ object CurationOps {
       s"""WITH w AS (
            SELECT doc_id,
                   CAST(len(${Words.wordsSql("text")}) AS BIGINT) AS weight,
-                  ${LlmOps.u24Sql("'ws:' || doc_id")} AS u24
+                  ${HashDraw.u24Sql("ws:", "doc_id")} AS u24
            FROM documents),
          keyed AS (
            SELECT doc_id, weight,
@@ -555,7 +555,7 @@ object CurationOps {
       s"""SELECT doc_id, lang
          FROM (
            SELECT doc_id, lang,
-                  ${LlmOps.u24Sql("'smp:' || doc_id")} AS u
+                  ${HashDraw.u24Sql("smp:", "doc_id")} AS u
            FROM documents)
          WHERE u < (CASE lang WHEN 'en' THEN 0.3 WHEN 'zh' THEN 0.0
                     ELSE 1.0 END) * 16777216
@@ -602,7 +602,7 @@ object CurationOps {
            FROM documents),
          sh AS (
            SELECT doc_id, lang, n_tokens,
-                  ${LlmOps.u24Sql("'psh:' || doc_id")} % 4 AS shard_id
+                  ${HashDraw.u24Sql("psh:", "doc_id")} % 4 AS shard_id
            FROM toks),
          loc AS (
            SELECT lang, shard_id, doc_id, n_tokens,
@@ -846,7 +846,7 @@ object CurationOps {
     "d_substring_sampled" ->
       s"""WITH $substringWindowsSql,
          sel AS (SELECT doc_id, idx, h FROM (SELECT doc_id, idx, md5(g) AS h FROM wnd)
-                 WHERE ${LlmOps.hexU24Sql("h")} % 4 = 0),
+                 WHERE ${HashDraw.hexU24Sql("h")} % 4 = 0),
          r AS (SELECT doc_id, idx,
                       row_number() OVER (PARTITION BY h ORDER BY doc_id, idx) AS rn
                FROM sel)

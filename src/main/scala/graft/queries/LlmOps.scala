@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{Codebook, Dedup, Vectors, Words}
+import graft.operators.{Codebook, Dedup, HashDraw, Vectors, Words}
 
 /** Training-data pipeline operators over the documents/embeddings tables:
   * dedup (exact, n-gram Jaccard, MinHash-LSH), text analysis, document
@@ -923,17 +923,6 @@ object LlmOps {
          UNION ALL
          SELECT id, 3, md5(s9 || ',' || s10 || ',' || s11) FROM sig)"""
 
-  /** The portable md5-u24 draw as a DuckDB scalar over an expression —
-    * the strpos hex ladder every sampling oracle uses. */
-  private[queries] def u24Sql(e: String): String = hexU24Sql(s"md5($e)")
-
-  /** [[u24Sql]] over a hex digest already in hand: its first 6 digits as
-    * an integer in [0, 2^24). */
-  private[queries] def hexU24Sql(hex: String): String =
-    s"""list_sum([(strpos('0123456789abcdef', substr($hex, i, 1)) - 1)
-                  * power(16, 6 - i)::BIGINT
-                  for i in range(1, 7)])::BIGINT"""
-
   /** DuckDB twin of [[graft.Tables.validEmbeddings]] — the embedding
     * ingest guard, substituted for every `FROM embeddings` in the oracle
     * map below so BOTH engines score the identical valid set. The
@@ -1052,10 +1041,10 @@ object LlmOps {
          t AS (SELECT doc_id, sub, len(ws)::BIGINT AS n_tokens, unnest(ws) AS tok
                FROM d WHERE len(ws) > 0),
          b AS (SELECT doc_id, sub, n_tokens,
-                      (${u24Sql("'fh8:' || tok")}) % 4096 AS bk
+                      (${HashDraw.u24Sql("fh8:", "tok")}) % 4096 AS bk
                FROM t),
          w AS (SELECT doc_id, sub, n_tokens,
-                      (${u24Sql("'lw8:' || bk")}) % 2001 - 1000 AS wt
+                      (${HashDraw.u24Sql("lw8:", "bk")}) % 2001 - 1000 AS wt
                FROM b),
          s AS (SELECT doc_id, sub, min(n_tokens) AS n_tokens,
                       CAST(sum(wt) AS BIGINT) AS sum_w
@@ -1241,7 +1230,7 @@ object LlmOps {
       """SELECT doc_id,
                 len(regexp_extract_all(lower(text), '[a-z]+')) AS n_word_tokens,
                 len(regexp_extract_all(lower(text), '[0-9]+')) AS n_num_tokens,
-                len(regexp_extract_all(lower(text), '[^a-z0-9\s]')) AS n_sym_tokens
+                len(regexp_extract_all(lower(text), '[^a-z0-9 \t\n\f\r]')) AS n_sym_tokens
          FROM documents ORDER BY doc_id""",
     "t_pii_redact" ->
       """WITH pii AS (

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{Curation, Retrieval, Temporal, Vectors, Words}
+import graft.operators.{Curation, HashDraw, Retrieval, Temporal, Vectors, Words}
 
 /** Retrieval / temporal / training-shuffle query pack: BM25 lexical
   * retrieval, BPE merge-pair counting, the deterministic shard plan, and
@@ -640,7 +640,7 @@ object RetrievalOps {
     "t_shard_plan" ->
       s"""WITH a AS (SELECT doc_id, md5('shard:' || doc_id) AS sk FROM documents),
          b AS (SELECT doc_id, sk,
-                      ${LlmOps.hexU24Sql("sk")} % 8 AS shard_id
+                      ${HashDraw.hexU24Sql("sk")} % 8 AS shard_id
                FROM a)
          SELECT shard_id, count(*) AS n_docs,
                 md5(string_agg(doc_id::VARCHAR, ',' ORDER BY sk, doc_id)) AS perm_md5

@@ -36,18 +36,20 @@ import graft.operators.{Checkpoint, Dedup}
   *    ≤ id. Amortized write cost O(index / compactEvery) per batch.
   *
   * State-as-of-batch-b = newest `c_j` with j < b, plus every `d_i` with
-  * j < i < b. Replay safety is by construction: batch b always reads
-  * versions STRICTLY OLDER than b (never a `_latest` pointer, which a
-  * half-finished first attempt of b itself may have advanced) — a
-  * re-run of b reads the identical state-as-of-(b−1), recomputes the
-  * identical admissions, and overwrites its own `d_b`/`c_b` in place.
+  * j < i < b: [[graft.core.Commit]]'s as-of-batch rule. Replay safety is
+  * by construction: batch b always reads versions STRICTLY OLDER than b
+  * (never a pointer, which a half-finished first attempt of b itself
+  * may have advanced) — a re-run of b reads the identical
+  * state-as-of-(b−1), recomputes the identical admissions, and
+  * overwrites its own `d_b`/`c_b` in place. The run fence is the same
+  * listing: a committed `c_`/`d_` id above b means another run drives
+  * the directory, and the batch fails.
   *
   * Every `c_`, `d_` and output `batch_` dir is committed by
-  * [[graft.core.Commit]] once its parquet job returns, and the
-  * `_max_batch` high-water is a Commit pointer. The streaming path never
-  * reads a partial dir on its own (a batch's files are strictly older
-  * than it, and Structured Streaming replays the failed batch before
-  * advancing); the marker guards a BACKFILL caller driving
+  * [[graft.core.Commit]] once its parquet job returns. The streaming
+  * path never reads a partial dir on its own (a batch's files are
+  * strictly older than it, and Structured Streaming replays the failed
+  * batch before advancing); the marker guards a BACKFILL caller driving
   * [[processBatch]] past a crashed batch and any reader racing a
   * replay's overwrite.
   *
@@ -85,18 +87,6 @@ object StreamingIncrementalDedup {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     (Commit.committed(fs, dir, "c"), Commit.committed(fs, dir, "d"))
   }
-
-  /** The highest batchId whose body completed against this state dir —
-    * monotone within any legitimate run (Structured Streaming replays at
-    * most the last batch). An incoming batchId BELOW it means a
-    * different run is driving the directory (a reset/repointed
-    * checkpoint restarting ids at 0): continuing would silently hide the
-    * whole index from `indexBefore`'s strictly-older reads, mix deltas
-    * of two runs, and let vacuum destroy live state — so the batch
-    * fails loudly instead. */
-  private def highWater(fs: org.apache.hadoop.fs.FileSystem,
-                        dir: Path): Option[Long] =
-    Commit.readPointer(fs, dir, "_max_batch").flatMap(_.toLongOption)
 
   /** The index state strictly older than `batchId`: newest compacted
     * base `c_j` (j < batchId) unioned with every delta in (j, batchId).
@@ -147,11 +137,8 @@ object StreamingIncrementalDedup {
     val spark = batch.sparkSession
     val stateDir = new Path(statePath)
     val fs = stateDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    highWater(fs, stateDir).foreach(hw => require(batchId >= hw,
-      s"state at $statePath was built by a run that already processed " +
-        s"batch $hw; refusing batch $batchId — a reset checkpoint must " +
-        "get a fresh state directory, or it silently corrupts the index"))
     val versions = listVersions(spark, statePath)
+    Commit.fence((versions._1 ++ versions._2).maxOption, batchId, statePath)
     vacuum(fs, stateDir, versions, batchId)
     val index = readIndex(spark, statePath, versions, batchId)
     // the batch feeds the anti-join AND the admitted-doc join back;
@@ -180,8 +167,6 @@ object StreamingIncrementalDedup {
         .parquet(baseDir.toString)
       Commit.mark(fs, baseDir)
     }
-    // a refused rename throws: no high-water would disarm the run fence
-    Commit.writePointer(fs, stateDir, "_max_batch", batchId.toString)
   }
 
   /** Start corpus-lifetime dedup of a streaming (doc_id, text) frame. */

@@ -441,6 +441,11 @@ class MigrationAndCatalogSpec extends SparkTestBase {
     assert(cuts.isEmpty, s"cut lineage through Checkpoint.cut, not localCheckpoint, in $cuts")
     val markers = outside("\"_COMMITTED\"", "graft/core/Commit.scala")
     assert(markers.isEmpty, s"commit through graft.core.Commit, not a marker of its own, in $markers")
+    // state is committed in place under the as-of-batch rule; the pointer
+    // swap is the one rename, and a staging rename would bring back its
+    // crash windows
+    val renames = outside(".rename(", "graft/core/Commit.scala")
+    assert(renames.isEmpty, s"rename only in graft.core.Commit's pointer swap, found in $renames")
   }
 
   test("source guard: rank cuts only through TopK.scala, nSalts only on the salted join") {
@@ -502,6 +507,16 @@ class MigrationAndCatalogSpec extends SparkTestBase {
         if !homes.exists(path.endsWith) && p.r.findFirstIn(text).isDefined => path }
       assert(stray.isEmpty, s"spell $p through graft.operators.Vectors, found in $stray")
     }
+  }
+
+  test("source guard: the md5-u24 draw is spelled only in HashDraw.scala") {
+    // one home for the draw and its oracle twin, so a sample, a shard or
+    // a bucket cannot drift between engines or call sites
+    val home = "graft/operators/HashDraw.scala"
+    assert(mainSources.exists(_._1.endsWith(home)), s"$home not found under src/main/scala")
+    val stray = mainSources.collect { case (path, text)
+      if !path.endsWith(home) && text.contains("conv(substring(") => path }
+    assert(stray.isEmpty, s"draw through graft.operators.HashDraw, found in $stray")
   }
 
   test("source guard: queries read vectors only through Tables.validEmbeddings") {

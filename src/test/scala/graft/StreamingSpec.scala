@@ -249,10 +249,9 @@ class StreamingSpec extends SparkTestBase {
     run(b1, 1L)
     val afterB1 = snap()
     assert(afterB1 == Set((2L, "bob", 200L), (3L, "carol", 300L)))
-    // window 2 (the nasty one): batch 2 commits fully — pointer already
-    // names its own v_2 — then the batch REPLAYS on top of its own
-    // output. Every upsert rewrites its identical winning row, the
-    // delete re-deletes an absent key: byte-identical state.
+    // window 2: batch 2 commits fully — pointer already names its own
+    // v_2 — then the batch REPLAYS. It reads v_1, the snapshot its first
+    // attempt read, never its own v_2, so it rewrites identical state.
     val b2 = batchDf((2L, "u", "bob9", 290L, 1L), (3L, "d", "", 0L, 1L),
       (4L, "u", "dave", 400L, 1L), (4L, "u", "dave2", 410L, 2L))
     run(b2, 2L)
@@ -265,10 +264,10 @@ class StreamingSpec extends SparkTestBase {
     val versions = new java.io.File(state).list()
       .filter(_.startsWith("v_")).toSet
     assert(versions == Set("v_1", "v_2"), s"got $versions")
-    // window 3: die between the v_b delete and the staging rename — the
-    // pointer names a MISSING dir; readers must fall back to the
-    // retained previous version, and the replay must rebuild v_2 from
-    // that same fallback snapshot
+    // window 3: the published v_2 is lost (a replay's in-place overwrite
+    // dies after clearing it) — the pointer names a MISSING dir; readers
+    // must fall back to the retained previous version, and the replay
+    // must rebuild v_2 from that same snapshot
     val fs = new org.apache.hadoop.fs.Path(state)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(state, "v_2"), true)
@@ -335,6 +334,87 @@ class StreamingSpec extends SparkTestBase {
       .collect().toSet ==
       graft.streaming.StreamingCdc.currentState(spark, state, schema)
         .select($"k", $"name", $"bal").as[(Long, String, Long)].collect().toSet)
+  }
+
+  /** The CDC state machine over one fresh state dir, as the crash-window
+    * specs drive it. */
+  private class CdcState(name: String) {
+    import spark.implicits._
+    val state: String = java.nio.file.Files.createTempDirectory(name).toString + "/state"
+    val schema: org.apache.spark.sql.types.StructType =
+      org.apache.spark.sql.types.StructType.fromDDL("k BIGINT, name STRING, bal BIGINT")
+    lazy val fs: org.apache.hadoop.fs.FileSystem = new org.apache.hadoop.fs.Path(state)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def run(id: Long, rows: (Long, String, String, Long, Long)*): Unit = runFlip(id, flip = true, rows: _*)
+    def runFlip(id: Long, flip: Boolean, rows: (Long, String, String, Long, Long)*): Unit =
+      graft.streaming.StreamingCdc.processBatch(rows.toDF("k", "op", "name", "bal", "seq"), id,
+        state, keyCol = "k", seqCols = Seq("seq"), opCol = "op",
+        payloadCols = Seq("name", "bal"), flipPointer = flip)
+    def snap(): Set[(Long, String, Long)] = graft.streaming.StreamingCdc
+      .currentState(spark, state, schema)
+      .select($"k", $"name", $"bal").as[(Long, String, Long)].collect().toSet
+    def versions(): Set[String] = new java.io.File(state).list().filter(_.startsWith("v_")).toSet
+  }
+
+  test("streaming CDC backfill: unflipped batches feed the published snapshot") {
+    val s = new CdcState("cdc_backfill")
+    // a backfill writes batches 0 and 1 without publishing them, then
+    // publishes batch 2: each batch merges onto the committed version
+    // before it, published or not
+    s.runFlip(0L, flip = false, (1L, "u", "alice", 100L, 1L))
+    s.runFlip(1L, flip = false, (2L, "u", "bob", 200L, 1L))
+    assert(s.snap() == Set.empty, "unpublished versions must not leak to readers")
+    s.run(2L, (3L, "u", "carol", 300L, 1L))
+    assert(s.snap() == Set((1L, "alice", 100L), (2L, "bob", 200L), (3L, "carol", 300L)),
+      "the published snapshot must hold every backfilled key")
+  }
+
+  test("streaming CDC run fence: a batch below the newest version throws") {
+    val s = new CdcState("cdc_fence")
+    s.run(0L, (1L, "u", "alice", 100L, 1L))
+    s.run(1L, (2L, "u", "bob", 200L, 1L))
+    s.run(2L, (3L, "u", "carol", 300L, 1L))
+    val before = s.snap()
+    // a reset checkpoint restarting ids at 0 against this state dir must
+    // fail loudly, never merge old changes over the newest snapshot
+    val e = intercept[IllegalArgumentException] { s.run(0L, (9L, "u", "zed", 900L, 1L)) }
+    assert(e.getMessage.contains("fresh state directory"), e.getMessage)
+    assert(s.snap() == before && s.versions() == Set("v_1", "v_2"))
+    // a replay of the newest batch is no reset: it runs
+    s.run(2L, (3L, "u", "carol", 300L, 1L))
+    assert(s.snap() == before)
+  }
+
+  test("streaming CDC torn version: readers and the replay skip it") {
+    val s = new CdcState("cdc_torn")
+    s.run(0L, (1L, "u", "alice", 100L, 1L))
+    s.run(1L, (2L, "u", "bob", 200L, 1L))
+    val afterB1 = s.snap()
+    // a torn dir: data files of a dead attempt, no commit marker; its
+    // row would show if anything read it
+    def tear(v: String): Unit = {
+      import spark.implicits._
+      Seq((99L, "torn", 9L)).toDF("k", "name", "bal").write.mode("overwrite")
+        .parquet(s"${s.state}/$v")
+    }
+    // the first attempt of batch 2 died mid-write, pointer still on v_1
+    tear("v_2")
+    assert(s.snap() == afterB1)
+    // the replay reads v_1, not the torn v_2, and rebuilds v_2
+    s.run(2L, (3L, "u", "carol", 300L, 1L))
+    val afterB2 = afterB1 + ((3L, "carol", 300L))
+    assert(s.snap() == afterB2)
+    assert(graft.core.Commit.isCommitted(s.fs, new org.apache.hadoop.fs.Path(s.state, "v_2")))
+    // a replay of batch 3 died mid-overwrite of its published v_3: the
+    // pointer names the torn dir, and readers fall back to v_2
+    s.run(3L, (4L, "u", "dave", 400L, 1L))
+    tear("v_3")
+    assert(s.snap() == afterB2, "a torn published version must fall back to the committed one")
+    // a caller driving past the crashed batch reads v_2, not the torn
+    // v_3, and the vacuum clears the debris
+    s.run(4L, (5L, "u", "erin", 500L, 1L))
+    assert(s.snap() == afterB2 + ((5L, "erin", 500L)))
+    assert(s.versions() == Set("v_2", "v_4"), s"got ${s.versions()}")
   }
 
   test("applyCdc is idempotent over its own result for randomized change batches") {
@@ -833,7 +913,7 @@ class StreamingSpec extends SparkTestBase {
     run(0L, (1L, "u", "alice", 100L, 1L))
     // a reader resolves v_0 and holds the frame WITHOUT materializing —
     // the lazy-consumer shape (a downstream join planned but not yet
-    // executed) the staging-then-rename discipline exists for
+    // executed) the retention grace exists for
     val reader = graft.streaming.StreamingCdc.currentState(spark, state, schema)
     run(1L, (2L, "u", "bob", 200L, 1L))
     // one flip later the grace copy still serves the READER'S version:
@@ -981,20 +1061,20 @@ class StreamingSpec extends SparkTestBase {
     assert(corpus == Set(1L, 2L, 3L), s"got $corpus")
   }
 
-  test("incremental dedup: a refused high-water rename fails the batch instead of disarming the run fence") {
+  test("streaming CDC: a refused pointer rename fails the batch") {
     import spark.implicits._
     val conf = spark.sparkContext.hadoopConfiguration
-    conf.set("fs.norename.impl", classOf[RefuseHighWaterRenameFs].getName)
+    conf.set("fs.norename.impl", classOf[RefusePointerRenameFs].getName)
     try {
       // the state dir lives on the refusing scheme; everything but the
-      // final high-water rename goes through as on the local disk
-      val state = "norename://" + java.nio.file.Files.createTempDirectory("hw_state")
-      val out = java.nio.file.Files.createTempDirectory("hw_out").toString
+      // `_latest` rename goes through as on the local disk
+      val state = "norename://" + java.nio.file.Files.createTempDirectory("ptr_state")
       val e = intercept[java.io.IOException] {
-        graft.streaming.StreamingIncrementalDedup.processBatch(
-          Seq((1L, "a")).toDF("doc_id", "text"), 0L, state, out)
+        graft.streaming.StreamingCdc.processBatch(
+          Seq((1L, "u", "alice", 100L, 1L)).toDF("k", "op", "name", "bal", "seq"), 0L, state,
+          keyCol = "k", seqCols = Seq("seq"), opCol = "op", payloadCols = Seq("name", "bal"))
       }
-      assert(e.getMessage.contains("_max_batch"), e.getMessage)
+      assert(e.getMessage.contains("_latest"), e.getMessage)
     } finally conf.unset("fs.norename.impl")
   }
 
@@ -1018,25 +1098,6 @@ class StreamingSpec extends SparkTestBase {
       assert(listings == 2,
         s"expected one listing per version prefix (c_, d_), got $listings")
     } finally conf.unset("fs.countls.impl")
-  }
-
-  test("incremental dedup crash window: a high-water left only as its temp file still fences a reset run") {
-    import spark.implicits._
-    val state = java.nio.file.Files.createTempDirectory("hw_tmp_state").toString
-    val out = java.nio.file.Files.createTempDirectory("hw_tmp_out").toString
-    def run(id: Long, rows: (Long, String)*): Unit =
-      graft.streaming.StreamingIncrementalDedup.processBatch(
-        rows.toDF("doc_id", "text"), id, state, out)
-    run(0L, (1L, "a")); run(5L, (2L, "b"))
-    // die between the high-water delete and its rename: only the temp
-    // file, fully written, holds the mark
-    val fs = new org.apache.hadoop.fs.Path(state)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = fs.create(new org.apache.hadoop.fs.Path(state, "_max_batch.tmp"), true)
-    try tmp.write("5".getBytes("UTF-8")) finally tmp.close()
-    fs.delete(new org.apache.hadoop.fs.Path(state, "_max_batch"), false)
-    val e = intercept[IllegalArgumentException] { run(0L, (9L, "z")) }
-    assert(e.getMessage.contains("fresh state directory"), e.getMessage)
   }
 
   test("incremental dedup crash window: compaction batch dies after d_b, before c_b; replay converges to the clean run") {
@@ -1172,12 +1233,12 @@ class StreamingSpec extends SparkTestBase {
 }
 
 /** A local file system under the test-only `norename:` scheme that
-  * refuses every rename onto a `_max_batch` high-water file. */
-class RefuseHighWaterRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  * refuses every rename onto a `_latest` pointer file. */
+class RefusePointerRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("norename:///")
   override def rename(src: org.apache.hadoop.fs.Path,
                       dst: org.apache.hadoop.fs.Path): Boolean =
-    dst.getName != "_max_batch" && super.rename(src, dst)
+    dst.getName != "_latest" && super.rename(src, dst)
 }
 
 /** A local file system under the test-only `countls:` scheme that

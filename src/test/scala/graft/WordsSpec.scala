@@ -64,4 +64,14 @@ class WordsSpec extends SparkTestBase {
       6L -> Seq("naïve café über 日本\u3000語 ünï"),
       7L -> Seq("x1 x2 x3 x4 x5", "x2 x3 x4 x5 x6")))
   }
+
+  test("TextAnalysis.tokenClassCounts: a vertical tab is a symbol, as to the oracle") {
+    // the symbol class spells out Words' whitespace, so Java counts
+    // U+000B as RE2 does
+    val text = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row("a\u000Bb c d")), 1),
+      StructType(Seq(StructField("text", StringType))))
+    val (words, nums, syms) = graft.operators.TextAnalysis.tokenClassCounts(col("text"))
+    assert(text.select(words, nums, syms).head() == Row(4L, 0L, 1L))
+  }
 }
