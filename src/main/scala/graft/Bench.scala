@@ -265,8 +265,8 @@ object Bench {
         .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1)
 
     val rateRows: Seq[(String, Measured, Double)] = Seq(
-      // the Spark envelope round trip (encode → pack → unpack → decode)
-      // over ≥4M rows, so fixed job overhead amortizes
+      // the Spark envelope round trip (encode → pack → consume) over ≥4M
+      // rows, so fixed job overhead amortizes
       rates("serde_rows_per_sec") {
         val reg = new graft.schema.SchemaRegistry
         val entry = reg.registerSchema("bench", "event", queries.EnvelopeOps.eventSchemaJson)
@@ -275,21 +275,12 @@ object Bench {
         val factor = math.max(1, (4000000 / math.max(1L, base.count())).toInt)
         val big = base.withColumn("rep", explode(lit((0 until factor).toArray)))
           .repartition(cpusN).cache()
-        val env = struct(
-          unhex(md5(col("event_id").cast("string"))).as("uuid"),
-          lit("create").as("message_type"),
-          lit(entry.schemaId).as("schema_id"),
-          graft.functions.encode_payload(
-            struct(col("event_id"), col("user_id"), col("event_type"), col("value")),
-            queries.EnvelopeOps.eventSchemaJson).as("payload"),
-          lit(null).cast("binary").as("previous_payload"),
-          lit(null).cast(graft.core.Envelope.sparkType("meta").dataType).as("meta"),
-          lit(null).cast("string").as("encryption_type"),
-          unix_timestamp(col("ts")).cast("int").as("timestamp"))
-        val roundTrip = big.select(graft.functions.pack_envelope(env).as("value"))
-          .select(graft.functions.unpack_envelope(col("value")).as("env"))
-          .select(graft.functions.decode_payload(
-            col("env.payload"), col("env.schema_id"), reg, entry.schemaId).as("p"))
+        val transport = big.select(graft.streaming.Pipeline.envelopeFor(
+          struct(col("event_id"), col("user_id"), col("event_type"), col("value")),
+          "create", entry, unix_timestamp(col("ts")),
+          uuid = unhex(md5(col("event_id").cast("string")))).as("value"))
+        val roundTrip = graft.streaming.Pipeline.consume(transport, reg, entry.schemaId)
+          .select(col("payload"))
         (big, big.count().toDouble, Seq(roundTrip))
       },
       // minhash signatures: portable md5-hex family vs in-engine xxhash64

@@ -1,5 +1,7 @@
 package graft.queries
 
+import java.nio.charset.StandardCharsets
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -7,6 +9,7 @@ import graft.Tables
 import graft.core.Envelope
 import graft.functions._
 import graft.schema.SchemaRegistry
+import graft.streaming.{Encryption, Pipeline}
 
 /** Envelope/payload serde exercised as oracle-checkable queries.
   *
@@ -42,23 +45,15 @@ object EnvelopeOps {
     (reg, v1.schemaId, v2.schemaId)
   }
 
-  /** The one envelope-construction contract for the events fixture —
-    * every envelope query (round-trip, evolution, dead-letter) builds
-    * through here so a shape change (new field, different uuid
-    * derivation) can never diverge the fixtures. `schemaId`/`payload`
-    * are columns so the dead-letter query can plant per-row corruption. */
-  private def eventEnvelope(schemaId: Column, payload: Column): Column = {
-    val metaType = Envelope.sparkType("meta").dataType
-    struct(
-      unhex(md5(col("event_id").cast("string"))).as("uuid"),
-      lit("create").as("message_type"),
-      schemaId.as("schema_id"),
-      payload.as("payload"),
-      lit(null).cast("binary").as("previous_payload"),
-      lit(null).cast(metaType).as("meta"),
-      lit(null).cast("string").as("encryption_type"),
-      graft.core.Envelope.timestampInt(unix_timestamp(col("ts"))).as("timestamp"))
-  }
+  /** The events fixture's envelope: [[graft.streaming.Pipeline]]'s one
+    * envelope with a deterministic uuid, so every envelope query
+    * (round-trip, evolution, dead-letter) replays bit for bit.
+    * `schemaId`/`payload` are columns so the dead-letter query can plant
+    * per-row corruption. */
+  private def eventEnvelope(schemaId: Column, payload: Column,
+                            ascii: Boolean = false): Column =
+    Pipeline.envelope(payload, "create", schemaId, unix_timestamp(col("ts")),
+      uuid = unhex(md5(col("event_id").cast("string"))), ascii = ascii)
 
   /** The canonical v1 payload encoding of an events row. */
   private def eventPayload(spark: SparkSession): Column = {
@@ -72,65 +67,71 @@ object EnvelopeOps {
     * the envelope or payload schema requires (id, user, type, value, ts)
     * cannot produce a message — pack_envelope/encode_payload would
     * dead-letter it to NULL (their per-row contract; spec-pinned), and
-    * the identity oracles replay only producible rows. ONE definition so
-    * every envelope fixture agrees on the survivor set. */
-  private def validEvents(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    (Tables.events(spark, dir).filter(
-      $"event_id".isNotNull && $"user_id".isNotNull &&
-        $"event_type".isNotNull && $"value".isNotNull && $"ts".isNotNull &&
-        // the envelope timestamp is Avro int (Y2038-bounded): a source
-        // row outside the int range cannot produce a message — it
-        // dead-letters at pack (Envelope.timestampInt nulls the
-        // required ordinal), so the identity oracles exclude it too
-        unix_timestamp($"ts").between(Int.MinValue.toLong, Int.MaxValue.toLong)))
-  }
+    * the identity oracles replay only producible rows. The envelope
+    * timestamp is Avro int (Y2038-bounded): a ts outside the int range
+    * dead-letters at pack ([[Envelope.timestampInt]] nulls the required
+    * ordinal), so the gate is that same rule. */
+  private def producible: Column =
+    col("event_id").isNotNull && col("user_id").isNotNull &&
+      col("event_type").isNotNull && col("value").isNotNull &&
+      Envelope.timestampInt(unix_timestamp(col("ts"))).isNotNull
+
+  /** [[producible]]'s DuckDB twin, the WHERE clause of every envelope
+    * oracle. */
+  private val producibleSql: String =
+    "event_id IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL AND " +
+      "value IS NOT NULL AND ts IS NOT NULL AND " +
+      s"floor(epoch(ts)) BETWEEN ${Int.MinValue} AND ${Int.MaxValue}"
+
+  /** The producible events: ONE definition so every envelope fixture
+    * agrees on the survivor set. */
+  private def validEvents(spark: SparkSession, dir: String): DataFrame =
+    Tables.events(spark, dir).filter(producible)
 
   private def packEvents(spark: SparkSession, dir: String, schemaId: Int,
-                         ascii: Boolean): DataFrame = {
-    val env = eventEnvelope(lit(schemaId), eventPayload(spark))
-    val packer = if (ascii) pack_envelope_ascii(env) else pack_envelope(env)
-    validEvents(spark, dir).select(packer.as("value"))
-  }
+                         ascii: Boolean): DataFrame =
+    validEvents(spark, dir).select(
+      eventEnvelope(lit(schemaId), eventPayload(spark), ascii).as("value"))
 
-  /** encode → pack(binary) → unpack → decode(v1 reader) ≡ identity. */
+  /** encode → pack(binary) → consume(v1 reader) ≡ identity. */
   def qEnvelopeRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val (reg, v1, _) = registryForEvents
-    packEvents(spark, dir, v1, ascii = false)
-      .select(unpack_envelope($"value").as("env"))
-      .select(decode_payload($"env.payload", $"env.schema_id", reg, v1).as("p"))
-      .select($"p.event_id", $"p.user_id", $"p.event_type", $"p.value")
+    Pipeline.consume(packEvents(spark, dir, v1, ascii = false), reg, v1)
+      .select($"payload.event_id", $"payload.user_id", $"payload.event_type",
+        $"payload.value")
       .orderBy($"event_id")
   }
 
   /** ASCII/Scribe transport variant + schema-evolution read: v1-written
-    * payloads decoded under the v2 reader schema (defaults filled). */
+    * payloads consumed under the v2 reader schema (defaults filled). */
   def qEnvelopeEvolution(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val (reg, v1, v2) = registryForEvents
-    packEvents(spark, dir, v1, ascii = true)
-      .select(unpack_envelope($"value").as("env"))
-      .select(decode_payload($"env.payload", $"env.schema_id", reg, v2).as("p"))
-      .select($"p.event_id", $"p.user_id", $"p.event_type", $"p.value", $"p.channel")
+    Pipeline.consume(packEvents(spark, dir, v1, ascii = true), reg, v2)
+      .select($"payload.event_id", $"payload.user_id", $"payload.event_type",
+        $"payload.value", $"payload.channel")
       .orderBy($"event_id")
   }
 
   /** AES-CBC payload encryption round trip (SURVEY §2.2 P7 — reference
-    * _encryption_helper.py:108-198) using Spark's builtin aes_encrypt /
-    * aes_decrypt with a fixed key + IV (the IV rides as a meta attribute in
-    * the real flow; fixed here so the query is deterministic).
+    * _encryption_helper.py:108-198) through the shipped wire layout:
+    * [[Encryption.encryptDF]] (raw CBC blocks, IV in meta), then
+    * [[Encryption.decrypt]]. The IV is fixed here so the query is
+    * deterministic; the key rides as a plan-opaque secret.
     */
   def qEncryptRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables.documents(spark, dir)
+    val ivSchemaId = Encryption.registerIvSchema(new SchemaRegistry).schemaId
+    val key = "0123456789abcdef"
+    Encryption.encryptDF(
+        Tables.documents(spark, dir)
+          .select($"doc_id", $"text", $"text".cast("binary").as("ciphertext")),
+        "ciphertext", key, keyId = 1, ivSchemaId = ivSchemaId,
+        iv = lit("fedcba9876543210".getBytes(StandardCharsets.UTF_8)))
       .select($"doc_id",
-        expr("aes_encrypt(text, '0123456789abcdef', 'CBC', 'PKCS', binary('fedcba9876543210'))")
-          .as("ciphertext"),
-        $"text")
-      .select($"doc_id",
-        expr("cast(aes_decrypt(ciphertext, '0123456789abcdef', 'CBC', 'PKCS') as string)")
-          .as("decrypted"),
+        Encryption.decrypt($"ciphertext", $"encryption_type", $"meta",
+          ivSchemaId, Map(1 -> key)).cast("string").as("decrypted"),
         $"text")
       // null-safe: a null text encrypts and decrypts to null, a round
       // trip (the oracle reports true)
@@ -148,7 +149,7 @@ object EnvelopeOps {
     * continuation bit set and no continuation, so the decode always
     * hits EOF), 2: unknown schema_id (valid envelope + payload, id
     * 9999 absent from the registry), everything else clean — then
-    * [[graft.streaming.Pipeline.consumeWithDeadLetters]] must route
+    * [[Pipeline.consumeWithDeadLetters]] must route
     * each class to the dead frame as a NULL-payload row with its raw
     * envelope retained (n_raw = n; the good frame drops raw_envelope,
     * so its n_raw is 0) while every clean row decodes (the ok bucket's
@@ -176,9 +177,8 @@ object EnvelopeOps {
     // change cannot move a result bit.
     val transport = Tables.fanOut(validEvents(spark, dir)).select(
       when(cls === 0, lit(Array.fill(3)(0xFF.toByte)))
-        .otherwise(pack_envelope(env)).as("value"))
-    val (good, dead) = graft.streaming.Pipeline
-      .consumeWithDeadLetters(transport, reg, v1)
+        .otherwise(env).as("value"))
+    val (good, dead) = Pipeline.consumeWithDeadLetters(transport, reg, v1)
     val okRow = good
       .agg(count(lit(1)).as("n"), sum($"payload.event_id").as("event_id_sum"))
       .select(lit("ok").as("bucket"), $"n", lit(0L).as("n_raw"),
@@ -206,13 +206,13 @@ object EnvelopeOps {
 
   val oracles: Map[String, String] = Map(
     "env_roundtrip" ->
-      """SELECT event_id, user_id, event_type, value FROM events
-         WHERE event_id IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL AND value IS NOT NULL AND ts IS NOT NULL AND floor(epoch(ts)) BETWEEN -2147483648 AND 2147483647 ORDER BY event_id""",
+      s"""SELECT event_id, user_id, event_type, value FROM events
+         WHERE $producibleSql ORDER BY event_id""",
     "env_evolution" ->
-      """SELECT event_id, user_id, event_type, value,
+      s"""SELECT event_id, user_id, event_type, value,
                 'unknown' AS channel
          FROM events
-         WHERE event_id IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL AND value IS NOT NULL AND ts IS NOT NULL AND floor(epoch(ts)) BETWEEN -2147483648 AND 2147483647 ORDER BY event_id""",
+         WHERE $producibleSql ORDER BY event_id""",
     "env_encrypt_roundtrip" ->
       """SELECT doc_id, text AS decrypted, true AS matches
          FROM documents ORDER BY doc_id""",
@@ -224,9 +224,9 @@ object EnvelopeOps {
     // omitting empty dead buckets (the ok row is a global aggregate —
     // one row on both sides even over an empty class).
     "env_dead_letter" ->
-      """WITH cls AS (SELECT event_id,
+      s"""WITH cls AS (SELECT event_id,
                              ((event_id % 10) + 10) % 10 AS c FROM events
-                      WHERE event_id IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL AND value IS NOT NULL AND ts IS NOT NULL AND floor(epoch(ts)) BETWEEN -2147483648 AND 2147483647)
+                      WHERE $producibleSql)
          SELECT 'ok' AS bucket, COUNT(*) AS n, CAST(0 AS BIGINT) AS n_raw,
                 CAST(SUM(event_id) AS BIGINT) AS event_id_sum
          FROM cls WHERE c > 2

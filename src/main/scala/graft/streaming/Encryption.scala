@@ -32,6 +32,14 @@ object Encryption {
 
   val EncryptionTypePrefix = "AES_MODE_CBC-"
 
+  /** A consumer's key material: AES keys by key id, and the schema id of
+    * the IV meta attribute ([[registerIvSchema]]). `toString` names the
+    * key ids only, so a logged argument never prints a key. */
+  final case class Keys(byId: Map[Int, String], ivSchemaId: Int) {
+    override def toString: String =
+      s"Keys(ids=${byId.keys.toSeq.sorted.mkString(",")}, ivSchemaId=$ivSchemaId)"
+  }
+
   /** Register the IV meta-attribute schema (fixed 16). */
   def registerIvSchema(registry: SchemaRegistry): registry.SchemaEntry =
     registry.registerSchema("graft.crypto", "initialization_vector",

@@ -23,7 +23,9 @@ import graft.schema.SchemaRegistry
   */
 object Pipeline {
 
-  /** Wrap payload columns into enveloped transport bytes.
+  /** Wrap payload columns into enveloped transport bytes:
+    * [[envelopeForBytes]] over the [[graft.functions.encode_payload]]
+    * encoding of `payload` (and of `previousPayload`, for an update).
     *
     * @param payload     struct column of the payload fields (must match the
     *                    registered writer schema)
@@ -42,21 +44,10 @@ object Pipeline {
       entry: SchemaRegistry#SchemaEntry,
       timestamp: Column,
       uuid: Column = uuid4_binary(),
-      ascii: Boolean = false,
-      previousPayload: Option[Column] = None): Column = {
-    val metaType = Envelope.sparkType("meta").dataType
-    val env = struct(
-      uuid.as("uuid"),
-      lit(messageType).as("message_type"),
-      lit(entry.schemaId).as("schema_id"),
-      encode_payload(payload, entry.schemaJson).as("payload"),
-      previousPayload.map(encode_payload(_, entry.schemaJson))
-        .getOrElse(lit(null).cast("binary")).as("previous_payload"),
-      lit(null).cast(metaType).as("meta"),
-      lit(null).cast("string").as("encryption_type"),
-      graft.core.Envelope.timestampInt(timestamp).as("timestamp"))
-    if (ascii) pack_envelope_ascii(env) else pack_envelope(env)
-  }
+      previousPayload: Option[Column] = None): Column =
+    envelopeForBytes(encode_payload(payload, entry.schemaJson), messageType,
+      entry.schemaId, timestamp, uuid,
+      previousPayload = previousPayload.map(encode_payload(_, entry.schemaJson)))
 
   /** Envelope over PRE-ENCODED payload bytes — the producer half of the
     * encryption integration (reference: message.py:465-468 — encrypt the
@@ -65,7 +56,9 @@ object Pipeline {
     * [[graft.functions.encode_payload]], run
     * [[Encryption.encryptDF]] over the bytes column, then envelope the
     * ciphertext with the meta/encryption_type columns it added.
-    * [[consumeEncrypted]] is the inverse. */
+    * [[consume]] with [[Encryption.Keys]] is the inverse.
+    * `previousPayload` is encoded bytes too; `ascii` packs for the
+    * ASCII-only (Scribe) transport. */
   def envelopeForBytes(
       payloadBytes: Column,
       messageType: String,
@@ -74,17 +67,34 @@ object Pipeline {
       uuid: Column = uuid4_binary(),
       meta: Option[Column] = None,
       encryptionType: Option[Column] = None,
-      ascii: Boolean = false): Column = {
+      ascii: Boolean = false,
+      previousPayload: Option[Column] = None): Column =
+    envelope(payloadBytes, messageType, lit(schemaId), timestamp, uuid, meta,
+      encryptionType, ascii, previousPayload)
+
+  /** The one spelling of the eight envelope fields (SURVEY §1.2,
+    * envelope.py:29-121). The schema id is a column so a fixture can
+    * plant an unknown id row by row. */
+  private[graft] def envelope(
+      payloadBytes: Column,
+      messageType: String,
+      schemaId: Column,
+      timestamp: Column,
+      uuid: Column,
+      meta: Option[Column] = None,
+      encryptionType: Option[Column] = None,
+      ascii: Boolean = false,
+      previousPayload: Option[Column] = None): Column = {
     val metaType = Envelope.sparkType("meta").dataType
     val env = struct(
       uuid.as("uuid"),
       lit(messageType).as("message_type"),
-      lit(schemaId).as("schema_id"),
+      schemaId.as("schema_id"),
       payloadBytes.as("payload"),
-      lit(null).cast("binary").as("previous_payload"),
+      previousPayload.getOrElse(lit(null).cast("binary")).as("previous_payload"),
       meta.getOrElse(lit(null).cast(metaType)).as("meta"),
       encryptionType.getOrElse(lit(null).cast("string")).as("encryption_type"),
-      graft.core.Envelope.timestampInt(timestamp).as("timestamp"))
+      Envelope.timestampInt(timestamp).as("timestamp"))
     if (ascii) pack_envelope_ascii(env) else pack_envelope(env)
   }
 
@@ -143,67 +153,37 @@ object Pipeline {
     * create_from_kafka_message; reader-schema forcing
     * base_consumer.py:291-313). Keeps envelope metadata columns alongside
     * the decoded struct — column pruning drops whatever the query doesn't
-    * project. */
+    * project.
+    *
+    * With `decryption`, a stream that may carry AES-CBC-encrypted payloads
+    * decrypts BEFORE the Avro decode (reference: message.py:489-550): the
+    * key comes from encryption_type's key id, the IV from meta; a
+    * wrong/rotated key or corrupt ciphertext degrades through
+    * `try_aes_decrypt` → null → the Avro decode's own null → the
+    * dead-letter split, never a task failure. Without it, encrypted
+    * payloads decode to null (ciphertext is not decodable Avro) rather
+    * than crashing. */
   def consume(
       transport: DataFrame,
       registry: SchemaRegistry,
       readerSchemaId: Int,
-      valueCol: String = "value"): DataFrame =
-    consumeDecrypted(transport, registry, readerSchemaId, valueCol,
-      decryptPayload = None).drop("raw_envelope")
+      valueCol: String = "value",
+      decryption: Option[Encryption.Keys] = None): DataFrame =
+    consumeDecrypted(transport, registry, readerSchemaId, valueCol, decryption)
+      .drop("raw_envelope")
 
-  /** Consumer for a stream that may carry AES-CBC-encrypted payloads
-    * (reference: message.py:489-550 — decrypt BEFORE the Avro decode):
-    * encrypted rows decrypt with the provided key map (IV from meta, key
-    * id from encryption_type), then decode; a wrong/rotated key or
-    * corrupt ciphertext degrades through `try_aes_decrypt` → null → the
-    * Avro decode's own null → the dead-letter split, never a task
-    * failure. Plain [[consume]] leaves encrypted payloads as null
-    * (ciphertext is not decodable Avro) rather than crashing on them. */
-  def consumeEncrypted(
-      transport: DataFrame,
-      registry: SchemaRegistry,
-      readerSchemaId: Int,
-      keys: Map[Int, String],
-      ivSchemaId: Int,
-      valueCol: String = "value"): DataFrame =
-    consumeDecrypted(transport, registry, readerSchemaId, valueCol,
-      decryptPayload = Some(decryptWith(keys, ivSchemaId))).drop("raw_envelope")
-
-  /** [[consumeEncrypted]] with the dead-letter split — the composition
-    * an encrypted stream actually runs: good rows decrypt+decode, while
-    * wrong-key / corrupt / unknown-schema rows land in the dead frame
-    * WITH their raw transport bytes, so they replay verbatim once the
-    * key or registry is fixed (the plain consumeWithDeadLetters would
-    * dead-letter every encrypted row, good ones included). */
-  def consumeEncryptedWithDeadLetters(
-      transport: DataFrame,
-      registry: SchemaRegistry,
-      readerSchemaId: Int,
-      keys: Map[Int, String],
-      ivSchemaId: Int,
-      valueCol: String = "value"): (DataFrame, DataFrame) =
-    deadLetterSplit(consumeDecrypted(transport, registry, readerSchemaId,
-      valueCol, decryptPayload = Some(decryptWith(keys, ivSchemaId))))
-
-  private def decryptWith(keys: Map[Int, String],
-                          ivSchemaId: Int): (Column, Column) => Column =
-    (bytes, env) => Encryption.decrypt(bytes, env.getField("encryption_type"),
-      env.getField("meta"), ivSchemaId, keys)
-
-  // private[graft]: PlanSpec pins the generator-barrier plan shape (one
-  // unpack, one decode per row) on the un-truncated frame — the public
-  // split checkpoints it, which hides the chain from explain output
-  private[graft] def consumeDecrypted(
+  private def consumeDecrypted(
       transport: DataFrame,
       registry: SchemaRegistry,
       readerSchemaId: Int,
       valueCol: String,
-      decryptPayload: Option[(Column, Column) => Column]): DataFrame = {
+      decryption: Option[Encryption.Keys]): DataFrame = {
     val env = col("env")
-    def payloadBytes(raw: Column): Column = decryptPayload match {
-      case Some(d) =>
-        when(env.getField("encryption_type").isNotNull, d(raw, env))
+    def payloadBytes(raw: Column): Column = decryption match {
+      case Some(k) =>
+        when(env.getField("encryption_type").isNotNull,
+          Encryption.decrypt(raw, env.getField("encryption_type"),
+            env.getField("meta"), k.ivSchemaId, k.byId))
           .otherwise(raw)
       case None =>
         // without key material, ciphertext must not reach the Avro
@@ -267,14 +247,20 @@ object Pipeline {
     * corrupt bytes → null) route to the second frame with the raw envelope
     * intact for replay, instead of silently vanishing or killing the task.
     * Both frames read ONE shared decode pass — see [[deadLetterSplit]].
+    * On an encrypted stream pass `decryption` (as for [[consume]]): good
+    * rows decrypt+decode, while wrong-key / corrupt / unknown-schema rows
+    * land in the dead frame WITH their raw transport bytes, so they
+    * replay verbatim once the key or registry is fixed; without it every
+    * encrypted row dead-letters, good ones included.
     */
   def consumeWithDeadLetters(
       transport: DataFrame,
       registry: SchemaRegistry,
       readerSchemaId: Int,
-      valueCol: String = "value"): (DataFrame, DataFrame) =
+      valueCol: String = "value",
+      decryption: Option[Encryption.Keys] = None): (DataFrame, DataFrame) =
     deadLetterSplit(consumeDecrypted(transport, registry, readerSchemaId,
-      valueCol, decryptPayload = None))
+      valueCol, decryption))
 
   /** The two-branch split over one shared decode pass. A dead-letter split
     * BY DEFINITION consumes both halves, and Spark has no cross-branch

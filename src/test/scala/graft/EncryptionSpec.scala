@@ -92,9 +92,9 @@ class EncryptionSpec extends SparkTestBase {
         org.apache.spark.sql.functions.lit(1700000000L),
         meta = Some($"meta"), encryptionType = Some($"encryption_type"))
         .as("value"))
+    def keys(k: String) = Some(Encryption.Keys(Map(1 -> k), ivEntry.schemaId))
     // right key: decrypt-then-decode round-trips the payload
-    val good = Pipeline.consumeEncrypted(enveloped, reg, entry.schemaId,
-      keys = Map(1 -> key), ivSchemaId = ivEntry.schemaId)
+    val good = Pipeline.consume(enveloped, reg, entry.schemaId, decryption = keys(key))
       .select($"payload.event_id", $"payload.body", $"encryption_type")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).sortBy(_._1)
     assert(good.toSeq == Seq((1L, "alpha", "AES_MODE_CBC-1"),
@@ -104,29 +104,26 @@ class EncryptionSpec extends SparkTestBase {
       enveloped, reg, entry.schemaId)
     assert(ok.count() == 0 && dead.count() == 2,
       "without key material, encrypted payloads must dead-letter")
-    val wrong = Pipeline.consumeEncrypted(enveloped, reg, entry.schemaId,
-      keys = Map(1 -> "1111222233334444"), ivSchemaId = ivEntry.schemaId)
+    val wrong = Pipeline.consume(enveloped, reg, entry.schemaId,
+      decryption = keys("1111222233334444"))
     assert(wrong.filter($"payload".isNotNull).count() == 0,
       "a wrong key must dead-letter, never return garbage or crash")
     // the ENCRYPTED dead-letter composition: wrong-key rows land in the
     // dead frame WITH raw bytes, and replay verbatim once the right key
     // is restored
-    val (okW, deadW) = Pipeline.consumeEncryptedWithDeadLetters(
-      enveloped, reg, entry.schemaId,
-      keys = Map(1 -> "1111222233334444"), ivSchemaId = ivEntry.schemaId)
+    val (okW, deadW) = Pipeline.consumeWithDeadLetters(
+      enveloped, reg, entry.schemaId, decryption = keys("1111222233334444"))
     assert(okW.count() == 0 && deadW.count() == 2)
     val rawLetters = deadW.select($"raw_envelope").as[Array[Byte]].collect()
-    val healed = Pipeline.consumeEncrypted(
-      rawLetters.toSeq.toDF("value"), reg, entry.schemaId,
-      keys = Map(1 -> key), ivSchemaId = ivEntry.schemaId)
+    val healed = Pipeline.consume(
+      rawLetters.toSeq.toDF("value"), reg, entry.schemaId, decryption = keys(key))
       .select($"payload.body").as[String].collect().sorted
     assert(healed.toSeq == Seq("alpha", "beta"),
       "dead letters must replay once the right key is restored")
     // permanent misconfiguration fails FAST at plan build, never a
     // silent full-stream dead-letter drain
     intercept[IllegalArgumentException] {
-      Pipeline.consumeEncrypted(enveloped, reg, entry.schemaId,
-        keys = Map(1 -> "tooshort"), ivSchemaId = ivEntry.schemaId)
+      Pipeline.consume(enveloped, reg, entry.schemaId, decryption = keys("tooshort"))
         .count()
     }
     // foreign scheme + missing IV degrade to null (ANSI-safe guards)
@@ -186,5 +183,27 @@ class EncryptionSpec extends SparkTestBase {
     val got = graft.queries.EnvelopeOps.qEncryptRoundtrip(spark, dir)
       .collect().map(r => r.getLong(0) -> (Option(r.getString(1)), r.get(2))).toMap
     assert(got == Map(1L -> (Some("plain text"), true), 2L -> (None, true)), got)
+  }
+
+  test("env_encrypt_roundtrip: the key never prints in its plan") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val dir = java.nio.file.Files.createTempDirectory("enc_plan").toString
+    spark.createDataFrame(
+        spark.sparkContext.parallelize(Seq(Row(1L, "plain text")), 1),
+        StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    // the logical plans print a string literal as text, the physical
+    // plan folds it to binary and prints its bytes in hex
+    val qe = graft.queries.EnvelopeOps.qEncryptRoundtrip(spark, dir).queryExecution
+    val plans = qe.toString + qe.explainString(org.apache.spark.sql.execution.FormattedMode)
+    val keyHex = key.getBytes("UTF-8").map(b => f"$b%02x").mkString
+    assert(!plans.contains(key) && !plans.toLowerCase.contains(keyHex),
+      s"the AES key prints in the plan:\n$plans")
+  }
+
+  test("Keys names its key ids, never the keys") {
+    val shown = Encryption.Keys(Map(2 -> key, 1 -> "fedcba9876543210"), 7).toString
+    assert(shown == "Keys(ids=1,2, ivSchemaId=7)", shown)
   }
 }

@@ -519,6 +519,25 @@ class MigrationAndCatalogSpec extends SparkTestBase {
     assert(stray.isEmpty, s"draw through graft.operators.HashDraw, found in $stray")
   }
 
+  test("source guard: envelopes pack and unpack only in Pipeline.scala, AES runs only in Encryption.scala") {
+    // one envelope codec and one decrypt-before-decode step, so the
+    // oracle queries, the bench and a consumer all run the shipped path.
+    // Comments are stripped first: the guard matches calls, not prose
+    def code(text: String): String =
+      text.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+    def stray(call: scala.util.matching.Regex, homes: Seq[String]): Seq[String] = {
+      homes.foreach(h =>
+        assert(mainSources.exists(_._1.contains(h)), s"$h not found under src/main/scala"))
+      mainSources.collect { case (path, text)
+        if !homes.exists(path.contains) && call.findFirstIn(code(text)).isDefined => path }
+    }
+    val envelopes = stray("""\b(un)?pack_envelope(_ascii)?\(""".r,
+      Seq("graft/streaming/Pipeline.scala", "graft/functions/"))
+    assert(envelopes.isEmpty, s"build and read envelopes through graft.streaming.Pipeline, found in $envelopes")
+    val aes = stray("""\b(try_)?aes_(en|de)crypt["(]""".r, Seq("graft/streaming/Encryption.scala"))
+    assert(aes.isEmpty, s"encrypt and decrypt through graft.streaming.Encryption, found in $aes")
+  }
+
   test("source guard: queries read vectors only through Tables.validEmbeddings") {
     // a raw read would hand NULL, NaN, wrong-dimension and duplicate-id
     // vectors to the ANN and hybrid operators

@@ -155,25 +155,14 @@ class PlanSpec extends SparkTestBase {
     // the inline generator), and never inside a Filter condition.
     import org.apache.spark.sql.functions._
     val reg = new graft.schema.SchemaRegistry
-    val v1 = reg.registerSchema("plan", "event",
-      queries.EnvelopeOps.eventSchemaJson).schemaId
+    val entry = reg.registerSchema("plan", "event", queries.EnvelopeOps.eventSchemaJson)
     import spark.implicits._
-    val env = struct(
-      unhex(md5($"id".cast("string"))).as("uuid"),
-      lit("create").as("message_type"),
-      lit(v1).as("schema_id"),
-      graft.functions.encode_payload(
+    val transport = spark.range(8).toDF("id")
+      .select(graft.streaming.Pipeline.envelopeFor(
         struct($"id".as("event_id"), $"id".as("user_id"),
           lit("t").as("event_type"), lit(1.0).as("value")),
-        queries.EnvelopeOps.eventSchemaJson).as("payload"),
-      lit(null).cast("binary").as("previous_payload"),
-      lit(null).cast(graft.core.Envelope.sparkType("meta").dataType).as("meta"),
-      lit(null).cast("string").as("encryption_type"),
-      lit(0).as("timestamp"))
-    val transport = spark.range(8).toDF("id")
-      .select(graft.functions.pack_envelope(env).as("value"))
-    val consumed = graft.streaming.Pipeline
-      .consumeDecrypted(transport, reg, v1, "value", None)
+        "create", entry, lit(0L), unhex(md5($"id".cast("string")))).as("value"))
+    val consumed = graft.streaming.Pipeline.consume(transport, reg, entry.schemaId)
       // a consumer filter on the decoded column must NOT push the decode
       // below the projection — the barrier property under test
       .filter(col("payload").isNotNull)
