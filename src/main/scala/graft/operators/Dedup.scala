@@ -26,7 +26,7 @@ object Dedup {
   /** Distinct word n-gram shingles: (id, g), over [[Words.words]]. */
   def wordShingles(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     // spread a one-split scan across the cluster before the tokenize +
-    // explode (and the minhash md5 families pipelined on top of it)
+    // explode (and the MinHash md5 signatures pipelined on top of it)
     // evaluate — identity at corpus scale, see [[graft.Tables.fanOut]]
     graft.Tables.fanOut(docs.select(col(idCol).as("id"), col(textCol).as("__t")))
       .select(col("id"), Words.words(col("__t")).as("__ws"))
@@ -88,8 +88,8 @@ object Dedup {
     * `portableHash = true` swaps the window hash family from xxhash64 to
     * md5 (identity = the hex digest, selection = the first 6 hex digits
     * as an integer, mod p) — the cross-engine-replicable family the
-    * DuckDB oracle regenerates digit for digit (the minhash md5/xxh64
-    * split, here for the sampled path). Production stays on xxhash64:
+    * DuckDB oracle regenerates digit for digit, for the sampled path.
+    * Production stays on xxhash64:
     * pure long arithmetic, no hex-string materialization in the shuffle.
     */
   def substringDupWindows(docs: DataFrame, idCol: String, textCol: String,
@@ -169,51 +169,6 @@ object Dedup {
         concat_ws(" ", col("__kept")).as("clean_text"),
         size(col("__ws")).cast("long").as("n_tokens"),
         (size(col("__ws")) - size(col("__kept"))).cast("long").as("n_removed"))
-  }
-
-  /** k md5-based minhash signature columns s0..s{k-1} per id. */
-  def minhashSignatures(shingles: DataFrame, k: Int): DataFrame =
-    shingles.groupBy(col("id"))
-      .agg(
-        min(md5(concat(col("g"), lit("#0")))).as("s0"),
-        (1 until k).map(i => min(md5(concat(col("g"), lit(s"#$i")))).as(s"s$i")): _*)
-
-  /** k xxhash64-based minhash signature columns s0..s{k-1} per id — the
-    * in-engine fast path. Each hash family member is `xxhash64(i, g)`:
-    * pure codegen'd long arithmetic, no md5 hex-string materialization
-    * (the md5 variant exists for cross-engine oracle replay; at corpus
-    * scale this one cuts the signature stage's CPU and shrinks the
-    * shuffle rows from k×32-byte hex strings to k×8-byte longs). Same
-    * banding/candidate semantics downstream via [[lshBandsFast]]. */
-  def minhashSignaturesFast(shingles: DataFrame, k: Int): DataFrame =
-    shingles.groupBy(col("id"))
-      .agg(
-        min(xxhash64(lit(0), col("g"))).as("s0"),
-        (1 until k).map(i => min(xxhash64(lit(i), col("g"))).as(s"s$i")): _*)
-
-  /** LSH banding over long signatures: band hash = xxhash64 of the band's
-    * signature row — no string concat in the loop. */
-  def lshBandsFast(signatures: DataFrame, k: Int, bands: Int): DataFrame = {
-    val rowsPerBand = k / bands
-    require(bands * rowsPerBand == k, s"bands=$bands must divide k=$k")
-    val bandCols = (0 until bands).map { b =>
-      val sigCols = (0 until rowsPerBand).map(r => col(s"s${b * rowsPerBand + r}"))
-      struct(lit(b).as("band_id"), xxhash64(lit(b) +: sigCols: _*).as("h"))
-    }
-    signatures.select(col("id"), explode(array(bandCols: _*)).as("band"))
-      .select(col("id"), col("band.band_id"), col("band.h"))
-  }
-
-  /** LSH banding: (id, band_id, h) with rows-per-band = k / bands. */
-  def lshBands(signatures: DataFrame, k: Int, bands: Int): DataFrame = {
-    val rowsPerBand = k / bands
-    require(bands * rowsPerBand == k, s"bands=$bands must divide k=$k")
-    val bandCols = (0 until bands).map { b =>
-      val sigCols = (0 until rowsPerBand).map(r => col(s"s${b * rowsPerBand + r}"))
-      struct(lit(b).as("band_id"), md5(concat_ws(",", sigCols: _*)).as("h"))
-    }
-    signatures.select(col("id"), explode(array(bandCols: _*)).as("band"))
-      .select(col("id"), col("band.band_id"), col("band.h"))
   }
 
   /** Unordered within-bucket pairs via collect_list + pair explode.
@@ -474,20 +429,20 @@ object Dedup {
       .union(survivors.select(col("content_md5"), col("kept_id")))
 
   /** Near-dup band index: the (band_id, h, id) LSH bucket table of the
-    * corpus under the md5 minhash family — the persistent state of
+    * corpus under the [[MinHash]] rule — the persistent state of
     * incremental NEAR-dup detection. Same storage advice as
     * [[buildExactIndex]]: bucket the stored table by (band_id, h) so
     * delta probes co-locate without shuffling the index. */
   def buildBandIndex(docs: DataFrame, idCol: String, textCol: String,
                      n: Int, k: Int, bands: Int): DataFrame =
-    lshBands(minhashSignatures(wordShingles(docs, idCol, textCol, n), k), k, bands)
+    MinHash.bands(MinHash.signatures(wordShingles(docs, idCol, textCol, n), k), Seq("id"), k, bands)
 
   /** Incremental near-dup candidates: a delta batch's documents banded
     * with the SAME minhash family as the stored [[buildBandIndex]] frame,
     * then joined against it on (band_id, h) — each (corpus_id, delta_id)
     * pair that collides in ≥ 1 band, distinct. Only the delta pays the
     * shingle→signature→band pipeline; the corpus contributes stored
-    * 8-byte-code rows. Verify exactly afterwards with [[verifyJaccard]]
+    * (band_id, 32-hex md5 code, id) rows. Verify exactly afterwards with [[verifyJaccard]]
     * over the union's shingles (same contract as the batch LSH path —
     * banding proposes, Jaccard disposes). */
   def incrementalNearDupCandidates(index: DataFrame, delta: DataFrame,

@@ -159,13 +159,10 @@ object Retrieval {
         expr("(cast(idf_ppm as decimal(38,0)) * sat_ppm) div 1000000L").as("contrib"))
   }
 
-  /** The BPE family's corpus word stream: every lower-cased whitespace
-    * token of `textCol` as `w`, beside the `keep` columns. Empty tokens
-    * drop — splitting an empty or whitespace-only document yields [""],
-    * which is no word. */
+  /** The BPE family's corpus word stream: every lower-cased
+    * [[Words.words]] word of `textCol` as `w`, beside the `keep` columns. */
   private def corpusWords(docs: DataFrame, textCol: String, keep: Column*): DataFrame =
-    docs.select(keep :+ explode(Words.tokens(lower(col(textCol)))).as("w"): _*)
-      .filter(col("w") =!= "")
+    docs.select(keep :+ explode(Words.words(lower(col(textCol)))).as("w"): _*)
 
   /** Greedy BPE encode of one word under a ranked merge table — the
     * standard lowest-rank-first loop (Sennrich et al. 2016 `apply_bpe`):

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{Codebook, Dedup, HashDraw, Vectors, Words}
+import graft.operators.{Codebook, Dedup, HashDraw, MinHash, Vectors, Words}
 
 /** Training-data pipeline operators over the documents/embeddings tables:
   * dedup (exact, n-gram Jaccard, MinHash-LSH), text analysis, document
@@ -109,8 +109,7 @@ object LlmOps {
     * candidate pairs → exact Jaccard verification. */
   private def lshVerifiedPairs(docs: DataFrame): DataFrame = {
     val sh = Dedup.wordShingles(docs, "doc_id", "text", ShingleN).cache()
-    val sigs = Dedup.minhashSignatures(sh, MinhashK)
-    val bands = Dedup.lshBands(sigs, MinhashK, LshBands)
+    val bands = MinHash.bands(MinHash.signatures(sh, MinhashK), Seq("id"), MinhashK, LshBands)
     Dedup.verifyJaccard(Dedup.lshCandidatePairs(bands), sh, JaccardThreshold)
   }
 
@@ -900,28 +899,13 @@ object LlmOps {
               FROM probes p, kcents kc) WHERE crank <= 2)"""
 
   /** The shingle→signature→band CTE chain over an arbitrary (doc_id,
-    * text) source CTE — same md5 minhash family as [[minhashPairCtes]],
+    * text) source CTE — the [[MinHash]] twins, shared with [[minhashPairCtes]],
     * reused by the incremental-LSH oracle where the source is a tagged
     * corpus ∪ delta union instead of the raw documents table. */
   private def minhashBandCtesOver(src: String): String =
     s"""${shingleSqlOver(src)},
-       sig AS (
-         SELECT id,
-                min(md5(g || '#0')) AS s0, min(md5(g || '#1')) AS s1,
-                min(md5(g || '#2')) AS s2, min(md5(g || '#3')) AS s3,
-                min(md5(g || '#4')) AS s4, min(md5(g || '#5')) AS s5,
-                min(md5(g || '#6')) AS s6, min(md5(g || '#7')) AS s7,
-                min(md5(g || '#8')) AS s8, min(md5(g || '#9')) AS s9,
-                min(md5(g || '#10')) AS s10, min(md5(g || '#11')) AS s11
-         FROM sh GROUP BY id),
-       bands AS (
-         SELECT id, 0 AS band_id, md5(s0 || ',' || s1 || ',' || s2) AS h FROM sig
-         UNION ALL
-         SELECT id, 1, md5(s3 || ',' || s4 || ',' || s5) FROM sig
-         UNION ALL
-         SELECT id, 2, md5(s6 || ',' || s7 || ',' || s8) FROM sig
-         UNION ALL
-         SELECT id, 3, md5(s9 || ',' || s10 || ',' || s11) FROM sig)"""
+       sig AS (${MinHash.signaturesSql("sh", MinhashK)}),
+       bands AS (${MinHash.bandsSql(MinhashK, LshBands)})"""
 
   /** DuckDB twin of [[graft.Tables.validEmbeddings]] — the embedding
     * ingest guard, substituted for every `FROM embeddings` in the oracle

@@ -230,9 +230,9 @@ object RetrievalOps {
       s"""SELECT $i AS merge_rank, $a AS left_sym, $b AS right_sym,
                  cnt AS n_occurrences FROM b$i""")
       .mkString("\n UNION ALL ")
-    s"""WITH wt AS (SELECT unnest(${Words.tokensSql("lower(text)")}) AS w
+    s"""WITH wt AS (SELECT unnest(${Words.wordsSql("lower(text)")}) AS w
                     FROM documents),
-       vv AS (SELECT w, count(*) AS n FROM wt WHERE w <> '' GROUP BY 1),
+       vv AS (SELECT w, count(*) AS n FROM wt GROUP BY 1),
        v0 AS (SELECT array_to_string(
                        list_transform(
                          list_append([w[i] for i in range(1, length(w)+1)], '</w>'),
@@ -333,9 +333,9 @@ object RetrievalOps {
   private val bpeEncodeCtes: String =
     s"""mt(pairs) AS (SELECT ['t h','th e','i n','a n','an d','e r','o n','r e',
                                'the </w>','er </w>','o u','in g']),
-         wt AS (SELECT unnest(${Words.tokensSql("lower(text)")}) AS w
+         wt AS (SELECT unnest(${Words.wordsSql("lower(text)")}) AS w
                 FROM documents),
-         v AS (SELECT DISTINCT w FROM wt WHERE w <> ''),
+         v AS (SELECT DISTINCT w FROM wt),
          init AS (SELECT w, list_append([w[i] for i in range(1, length(w)+1)],
                                         '</w>') AS syms
                   FROM v),
@@ -355,7 +355,7 @@ object RetrievalOps {
              FROM enc, mt)
            WHERE best IS NOT NULL),
          wtok AS (SELECT w, min(len(syms)) AS wtok FROM enc GROUP BY 1),
-         dw AS (SELECT doc_id, unnest(${Words.tokensSql("lower(text)")}) AS w
+         dw AS (SELECT doc_id, unnest(${Words.wordsSql("lower(text)")}) AS w
                 FROM documents)"""
 
   /** The shared BM25-lexical + dense-cosine -> reciprocal-rank-fusion
@@ -622,14 +622,14 @@ object RetrievalOps {
     "t_bpe_apply" -> s"""WITH RECURSIVE
          $bpeEncodeCtes
          SELECT doc_id, count(*) AS n_words, CAST(sum(wtok) AS BIGINT) AS n_bpe_tokens
-         FROM (SELECT doc_id, w FROM dw WHERE w <> '') d
+         FROM dw
          JOIN wtok USING (w)
          GROUP BY doc_id ORDER BY doc_id""",
     "t_fertility" -> s"""WITH RECURSIVE
          $bpeEncodeCtes,
          f AS (SELECT doc_id, count(*) AS n_words,
                       CAST(sum(wtok) AS BIGINT) AS n_bpe_tokens
-               FROM (SELECT doc_id, w FROM dw WHERE w <> '') d
+               FROM dw
                JOIN wtok USING (w)
                GROUP BY doc_id)
          SELECT doc_id, n_words, n_bpe_tokens,

@@ -6,31 +6,31 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 
-import graft.operators.Words
+import graft.operators.{MinHash, Words}
 
 /** Streaming near-duplicate CANDIDATE detection — the online form of the
-  * batch MinHash+LSH pipeline (`Dedup.minhashSignaturesFast` →
-  * `lshBandsFast` → `bucketPairs`), for an ingest that must flag "this
-  * document collides with something already seen" while data is still
-  * arriving.
+  * batch MinHash+LSH pipeline (`MinHash.signatures` → `MinHash.bands` →
+  * `bucketPairs`), for an ingest that must flag "this document collides
+  * with something already seen" while data is still arriving.
   *
-  * Same banding math as batch: per document, k xxhash64 minhash
-  * signatures over its word shingles, cut into bands; two documents
-  * sharing any band code are candidates. The streaming twist is state:
-  * instead of a corpus-wide bucket-join, each (band, code) key holds the
-  * FIRST document that produced it — `flatMapGroupsWithState` with an
-  * event-time timeout, so a bucket's state lives exactly one lateness
-  * horizon past its last update and the store is bounded by the distinct
-  * band codes inside the horizon, never corpus history. A later arrival
-  * in the bucket emits a (first_id, new_id, band) candidate row.
+  * Same rule as batch ([[graft.operators.MinHash]]): per document, k md5
+  * minhash signatures over its word shingles, cut into bands; two
+  * documents sharing any band code are candidates. The streaming twist is
+  * state: instead of a corpus-wide bucket-join, each (band, code) key
+  * holds the FIRST document that produced it — `flatMapGroupsWithState`
+  * with an event-time timeout, so a bucket's state lives exactly one
+  * lateness horizon past its last update and the store is bounded by the
+  * distinct band codes inside the horizon, never corpus history. A later
+  * arrival in the bucket emits a (first_id, new_id, band) candidate row.
   *
-  * Only (8-byte code key → first doc id + timestamp) enters the state
-  * store — never text, never signatures (the StreamingDedup discipline).
-  * Candidates are exactly the batch `bucketPairs` pairs restricted to
-  * "vs the bucket's first occupant" — the O(bucket) candidate fan-out a
-  * stream can afford; verification (exact Jaccard / cosine) belongs
-  * downstream in `foreachBatch` against a vector store, the same split
-  * the batch pipeline makes between bucketPairs and its verify stage.
+  * Only ((band_id, 32-hex md5 code) key → first doc id + timestamp)
+  * enters the state store — never text, never signatures (the
+  * StreamingDedup discipline). Candidates are exactly the batch
+  * `bucketPairs` pairs restricted to "vs the bucket's first occupant" —
+  * the O(bucket) candidate fan-out a stream can afford; verification
+  * (exact Jaccard / cosine) belongs downstream in `foreachBatch` against
+  * a vector store, the same split the batch pipeline makes between
+  * bucketPairs and its verify stage.
   */
 object StreamingNearDup {
 
@@ -43,29 +43,24 @@ object StreamingNearDup {
   // public: the state encoder's generated code constructs/reads it
   case class BucketState(firstId: Long, lastMs: Long)
 
-  /** (doc_id, ts, band_id, code) — k minhashes over the
-    * `Dedup.wordShingles` shingles (n = `shingleN`), banded; the
-    * streaming-side mirror of minhashSignaturesFast + lshBandsFast (same
-    * xxhash64(i, g) family, same band coding), as one shuffle-free
-    * projection. */
+  /** (doc_id, ts, band_id, code): the `Dedup.wordShingles` shingles
+    * (n = `shingleN`) of each arriving row, signed with
+    * [[graft.operators.MinHash.rowSignature]] and banded with
+    * [[graft.operators.MinHash.bands]], as one shuffle-free projection.
+    * A document's codes are its batch `Dedup.buildBandIndex` rows, with
+    * one difference: the stream bands each arriving row on its own,
+    * while the batch merges the shingles of rows that share an id. */
   private[graft] def bandCodes(docs: DataFrame, k: Int, bands: Int,
                                shingleN: Int): DataFrame = {
-    val rowsPerBand = k / bands
-    require(bands * rowsPerBand == k, s"bands=$bands must divide k=$k")
     val grams = array_distinct(Words.ngrams(col("__ws"), shingleN))
-    val sigs = (0 until k).map(i =>
-      expr(s"array_min(transform(__g, g -> xxhash64($i, g)))").as(s"s$i"))
-    val bandCols = (0 until bands).map { b =>
-      val sigCols = (0 until rowsPerBand).map(r => col(s"s${b * rowsPerBand + r}"))
-      struct(lit(b).as("band_id"), xxhash64(lit(b) +: sigCols: _*).as("code"))
-    }
-    docs
+    val sigs = docs
       .select(col("doc_id"), col("ts"), Words.words(col("text")).as("__ws"))
       .filter(size(col("__ws")) >= shingleN)
       .select(col("doc_id"), col("ts"), grams.as("__g"))
-      .select(col("doc_id") +: col("ts") +: sigs: _*)
-      .select(col("doc_id"), col("ts"), explode(array(bandCols: _*)).as("b"))
-      .select(col("doc_id"), col("ts"), col("b.band_id"), col("b.code"))
+      .select(col("doc_id") +: col("ts") +:
+        (0 until k).map(i => MinHash.rowSignature(col("__g"), i).as(s"s$i")): _*)
+    MinHash.bands(sigs, Seq("doc_id", "ts"), k, bands)
+      .select(col("doc_id"), col("ts"), col("band_id"), col("h").as("code"))
   }
 
   /** Candidate pairs against each band bucket's first occupant, within
@@ -79,10 +74,10 @@ object StreamingNearDup {
     import docs.sparkSession.implicits._
     bandCodes(docs.toDF(), k, bands, shingleN)
       .withWatermark("ts", delay)
-      .as[(Long, Timestamp, Int, Long)]
+      .as[(Long, Timestamp, Int, String)]
       .groupByKey { case (_, _, bandId, code) => (bandId, code) }
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (key: (Int, Long), rows: Iterator[(Long, Timestamp, Int, Long)],
+        (key: (Int, String), rows: Iterator[(Long, Timestamp, Int, String)],
          state: GroupState[BucketState]) => {
           if (state.hasTimedOut) {
             state.remove()

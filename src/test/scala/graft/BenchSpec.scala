@@ -53,6 +53,19 @@ class BenchSpec extends SparkTestBase {
     assert(d.comparable == 2 && d.flagged == Seq("b") && d.warning.isEmpty)
   }
 
+  test("the headline line for the full key set parses and stays under 2,000 characters") {
+    // the widest plausible medians, and one failed key
+    val results = Bench.headline.map(_ -> m(1000.0)) :+ ("broken" -> Failed)
+    val d = Bench.drift(results, None)
+    val line = Bench.obj(Bench.headlineFields(results, d, 12.34))
+    assert(line.length < 2000, s"${line.length} characters")
+    val j = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(j.path("metric").asText == "total" && j.path("value").asDouble == d.total)
+    assert(j.path("queries").size == Bench.headline.size + 1)
+    assert(j.path("failed_queries").get(0).asText == "broken")
+    assert(j.path("serde_uuid_vs_gate").asDouble == 12.34)
+  }
+
   test("measure records d_chunk_dedup's 3 exchanges (as PlanSpec pins) and its jobs") {
     val r = Bench.measure(spark)(SparkEntry.queries("d_chunk_dedup")(spark, sf()))
     assert(r.work.exchanges == 3, s"work block: ${r.work}")

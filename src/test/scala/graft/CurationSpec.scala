@@ -1877,8 +1877,8 @@ class CurationSpec extends SparkTestBase {
     // the delta probe agrees with what the batch path would find across
     // the same corpus∪delta union (restricted to cross corpus-delta pairs)
     val batchPairs: Set[(Long, Long)] = Dedup.lshCandidatePairs(
-      Dedup.lshBands(Dedup.minhashSignatures(
-        Dedup.wordShingles(corpus.union(delta), "doc_id", "text", 3), 12), 12, 4))
+      graft.operators.MinHash.bands(graft.operators.MinHash.signatures(
+        Dedup.wordShingles(corpus.union(delta), "doc_id", "text", 3), 12), Seq("id"), 12, 4))
       .as[(Long, Long)].collect().toSet
     val batch = batchPairs.filter { case (a, b) => a < 10 && b >= 10 }
     assert(got == batch, s"incremental $got != batch cross pairs $batch")

@@ -519,6 +519,21 @@ class MigrationAndCatalogSpec extends SparkTestBase {
     assert(stray.isEmpty, s"draw through graft.operators.HashDraw, found in $stray")
   }
 
+  test("source guard: the MinHash member is spelled only in MinHash.scala, the stream runs no xxhash64") {
+    // one md5 family for the batch, the stream and the oracle, so a
+    // streaming bucket is a batch LSH bucket
+    val home = "graft/operators/MinHash.scala"
+    assert(mainSources.exists(_._1.endsWith(home)), s"$home not found under src/main/scala")
+    val member = """concat\([^;\n]*?, lit\(s?"#|\|\| '#""".r
+    assert(mainSources.exists { case (path, text) =>
+      path.endsWith(home) && member.findAllIn(text).size == 2 }, "the guard must match both twins")
+    val stray = mainSources.collect { case (path, text)
+      if !path.endsWith(home) && member.findFirstIn(text).isDefined => path }
+    assert(stray.isEmpty, s"hash shingles through graft.operators.MinHash, found in $stray")
+    val stream = mainSources.find(_._1.endsWith("graft/streaming/StreamingNearDup.scala"))
+    assert(stream.exists(!_._2.contains("xxhash64(")), "the stream bands with MinHash, not xxhash64")
+  }
+
   test("source guard: envelopes pack and unpack only in Pipeline.scala, AES runs only in Encryption.scala") {
     // one envelope codec and one decrypt-before-decode step, so the
     // oracle queries, the bench and a consumer all run the shipped path.

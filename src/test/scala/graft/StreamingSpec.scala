@@ -685,21 +685,27 @@ class StreamingSpec extends SparkTestBase {
     import graft.operators.Dedup
     import graft.streaming.StreamingNearDup
     def t(sec: Long) = new Timestamp(sec * 1000)
-    val docs = Seq(
+    // built from an RDD, not folded into a local relation, so both sides
+    // run the optimizer rules and generated code a real stream runs
+    val docs = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
       StreamingNearDup.Doc(1L, t(1), "alpha beta gamma delta epsilon zeta"),
       StreamingNearDup.Doc(2L, t(2), "one two three four five six seven"),
       StreamingNearDup.Doc(3L, t(3), "alpha beta gamma delta epsilon zeta"),
       // tab-led: a raw split's "" head token would give the 2-word doc a
       // shingle and the 6-word doc a phantom " one two"
       StreamingNearDup.Doc(4L, t(4), "\tx y"),
-      StreamingNearDup.Doc(5L, t(5), "\tone two three four five six")).toDF()
+      StreamingNearDup.Doc(5L, t(5), "\tone two three four five six"),
+      // non-ASCII: md5 digests the UTF-8 bytes in both shapes
+      StreamingNearDup.Doc(6L, t(6), "naïve café 東京 Ελλάδα \uD83D\uDE00 über"),
+      // shorter than n: no shingle, so no band row on either side
+      StreamingNearDup.Doc(7L, t(7), "two words")), 2))
     val stream = StreamingNearDup.bandCodes(docs, k = 8, bands = 4, shingleN = 3)
-      .select($"doc_id", $"band_id", $"code").as[(Long, Int, Long)].collect().toSet
-    val batch = Dedup.lshBandsFast(
-      Dedup.minhashSignaturesFast(
-        Dedup.wordShingles(docs, "doc_id", "text", 3), k = 8), k = 8, bands = 4)
-      .select($"id", $"band_id", $"h").as[(Long, Int, Long)].collect().toSet
-    assert(stream == batch, "streaming band family diverged from the batch pipeline")
+      .select($"doc_id", $"band_id", $"code").as[(Long, Int, String)].collect().toSet
+    val batch = Dedup.buildBandIndex(docs, "doc_id", "text", n = 3, k = 8, bands = 4)
+      .select($"id", $"band_id", $"h").as[(Long, Int, String)].collect().toSet
+    assert(stream.map(_._1) == Set(1L, 2L, 3L, 5L, 6L), s"banded docs: ${stream.map(_._1)}")
+    assert(stream.size == 5 * 4)
+    assert(stream == batch, "streaming band codes diverged from the batch pipeline")
   }
 
   test("streaming near-dup emits candidates against each bucket's first occupant") {
@@ -756,7 +762,7 @@ class StreamingSpec extends SparkTestBase {
     val codes = StreamingNearDup
       .bandCodes(Seq(StreamingNearDup.Doc(1L, t(1), textA),
         StreamingNearDup.Doc(3L, t(3), textC)).toDF(), k = 8, bands = 4, shingleN = 3)
-      .select($"doc_id", $"band_id", $"code").as[(Long, Int, Long)].collect()
+      .select($"doc_id", $"band_id", $"code").as[(Long, Int, String)].collect()
     val shared = codes.filter(_._1 == 1L).map(c => (c._2, c._3)).toSet
       .intersect(codes.filter(_._1 == 3L).map(c => (c._2, c._3)).toSet)
     assert(shared.nonEmpty, "fixture must plant a band collision for the false positive")

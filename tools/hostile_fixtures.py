@@ -9,7 +9,8 @@ tools/oracle_check.py) over inputs a 100 TB crawl actually contains:
   hostile_docs/documents.parquet  — 0-length doc, null text, whitespace-only
     text, embedded NULs, astral-plane + zero-width + BiDi chars, a multi-MB
     doc, duplicate doc_ids (same AND different text), null lang/source, a
-    lying n_chars, an exact content dup of doc 0
+    lying n_chars, an exact content dup of doc 0, and tab-led, tab-trailed,
+    newline-only, newline-led and vertical-tab texts
   hostile_vecs/embeddings.parquet — zero-norm vector, NaN / +Inf / -Inf
     components, wrong-dim strays (short and long), null embedding, empty
     array, duplicate vec_ids (same AND different vector), null label
@@ -105,6 +106,17 @@ def hostile_docs(base, out):
         (9009, "text present but n_chars null", "en", "src_h",
          None),                                             # null n_chars
         (9008, doc0_text, "es", "src_h", len(doc0_text)),   # content dup of 0
+    ] + [
+        # whitespace edges: a raw split of a tab- or newline-led text has
+        # a "" head token, and Java's \s holds the vertical tab (U+000B)
+        # where RE2's does not
+        (doc_id, t, "en", "src_edge", len(t)) for doc_id, t in [
+            (9010, "\talpha beta gamma delta"),                # tab-led
+            (9011, "alpha beta gamma delta\t"),                # tab-trailed
+            (9012, "\n"),                                      # newline-only
+            (9013, "\nalpha beta gamma delta"),                # newline-led
+            (9014, "a\x0Bb c d"),                              # vertical tab
+        ]
     ]
     con.execute("""CREATE TABLE d (doc_id BIGINT, text VARCHAR, lang VARCHAR,
                    source VARCHAR, n_chars BIGINT)""")
